@@ -592,14 +592,16 @@ def main() -> int:
         _jvm_gc()
         pq_art: dict[str, object] = {}
 
-        def _pq_train() -> None:
-            codes, pqcents = SIM.pq_train(emb, "vec_id", "embedding")
+        def _train_pq() -> None:
+            *_, codes, pqcents = SIM.ivfpq_train(
+                emb, "vec_id", "embedding", iters=0
+            )
             pq_art["pq"] = (
                 codes.localCheckpoint(eager=True),
                 pqcents.localCheckpoint(eager=True),
             )
 
-        _time_stage("knn_pq_train", _pq_train)
+        _time_stage("knn_pq_train", _train_pq)
         _jvm_gc()  # three trainings leave dead checkpoint blocks behind
         _time_stage(
             "knn_pq_serve",

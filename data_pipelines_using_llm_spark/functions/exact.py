@@ -37,7 +37,3 @@ def exact_sum(c: str | Column, typ: str = MONEY) -> Column:
 def exact_avg(c: str | Column, typ: str = MONEY) -> Column:
     """Average derived as exact-sum / count — bit-identical across engines."""
     return F.sum(dec(c, typ)).cast("double") / F.count(dec(c, typ))
-
-
-def round4(c: Column) -> Column:
-    return F.round(c, 4)

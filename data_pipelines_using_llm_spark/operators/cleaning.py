@@ -16,15 +16,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def any_null_predicate(cols: list[str]) -> Column:
-    """F2 OR-chain: "any of these columns is null".
-
-    Reference folds this by hand (``First experiment/GPT 5.py:129-135``) or
-    via ``functools.reduce`` (``First experiment/GPT 5 NANO.py:78``).
-    """
-    return reduce(or_, [F.col(c).isNull() for c in cols])
-
-
 def all_present_predicate(cols: list[str]) -> Column:
     """F2 AND-chain: "all of these columns are non-null"."""
     return reduce(and_, [F.col(c).isNotNull() for c in cols])

@@ -36,36 +36,6 @@ MINHASH_COEFFS: list[tuple[int, int]] = [
 DEFAULT_BANDS = 4  # 16 hashes → 4 bands × 4 rows
 
 
-def ngram_set(c: str | Column, n: int = 3) -> Column:
-    """Distinct word n-gram strings (the shingle set).
-
-    Word-level shingles: ``slice`` over the token array — all JVM-side.
-    Docs with fewer than ``n`` tokens produce an EMPTY set (guarded
-    explicitly: Spark's ``sequence(1, 0)`` counts DOWN, it isn't empty).
-    """
-    toks = tokens(c)
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        )
-    )
-    return F.when(F.size(toks) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def ngram_hashes(c: str | Column, n: int = 3) -> Column:
-    """Distinct n-gram shingle hashes as an inline column expression.
-
-    Prefer :func:`gram_hash_df` in DataFrame pipelines — this inline form
-    re-evaluates the whole tokenize+hash chain wherever the column is
-    referenced (Catalyst collapses projections), which measured ~50x slower
-    in the LSH pipeline.
-    """
-    return _gram_fold(F.transform(tokens(c), char_hash), n)
-
-
 def _gram_fold(th: Column, n: int = 3, distinct: bool = True) -> Column:
     """Shingle hashes from a token-hash array: each gram combines ``n``
     consecutive token hashes with the same 31-polynomial used for chars

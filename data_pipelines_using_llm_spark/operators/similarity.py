@@ -594,40 +594,32 @@ def kmeans_assign(
     with the ``k`` lowest ids) and ORDER-INDEPENDENT centroid updates
     (decimal-exact per-dimension means, see :func:`ivf_centroids`).
 
-    The iterative shape on Spark (r14 optimization — the literal-centroid
-    formulation): centroids are CONTROL-PLANE state (k·d doubles — the
-    quantizer, never the corpus), so each Lloyd round collects the k
-    updated mean vectors to the driver and embeds them as literals in the
-    next round's argmin expression (:func:`_least_assign`).  A round is
-    then ONE job: corpus scan → map-side argmin → map-side partial
-    decimal sums → one k-row exchange → collect.  The previous
-    formulation (broadcast-join the centroid table, min(struct) argmin
-    aggregation, posexplode mean update) ran 3 exchanges and ~7 AQE
-    stage-jobs per round for the identical arithmetic; at 100 TB the
-    collect is still k·d scalars (the same size the broadcast shipped)
-    and the corpus still moves zero times per round.
+    Centroids are CONTROL-PLANE state (k·d doubles — the quantizer, never
+    the corpus), so each Lloyd round (:func:`_lloyd_rounds`, the loop the
+    IVFPQ trainer runs too) collects the k updated mean vectors to the
+    driver and embeds them as literals in the next round's argmin
+    expression.  A round is ONE job: corpus scan → map-side argmin →
+    map-side partial decimal sums → one k-row exchange → collect; the
+    corpus moves zero times per round.
 
-    Arithmetic is unchanged and bit-identical: sequential-fold squared
-    distances, (d2, lowest-cid) argmin tie-break, per-dimension
-    decimal(28,10) sums with the double division applied after the cast
-    — collected doubles re-enter the plan exactly (IEEE round-trip).
-    Assumes fixed-dimension (``DIM``) non-null vectors, which every
-    caller guarantees (the embeddings corpus contract).
+    Arithmetic is bit-identical to the joined SQL formulation the oracle
+    states: sequential-fold squared distances, (d2, lowest-cid) argmin
+    tie-break, per-dimension decimal(28,10) sums with the double division
+    applied after the cast — collected doubles re-enter the plan exactly
+    (IEEE round-trip).  Assumes fixed-dimension (``DIM``) non-null
+    vectors, which every caller guarantees (the embeddings corpus
+    contract).  A corpus with no seedable id yields an empty assignment.
     """
-    base = barrier(
-        _spread(
-            df.select(
-                F.col(id_col).alias("vec_id"), to_double(vec_col).alias("v")
-            )
-        )
-    )
-    cents = _kmeans_rounds(base, k, iters)
-    if cents is None:  # no seedable vectors: the joined formulation yielded 0 rows
+    base = _train_base(df, id_col, vec_col)
+    seed = base.filter(F.col("vec_id") < k).select("vec_id", "v").collect()
+    if not seed:
         return base.select(
             "vec_id",
             F.lit(None).cast("long").alias("cluster_id"),
             F.lit(None).cast("double").alias("dist"),
         ).filter(F.lit(False))
+    cents = sorted((int(r["vec_id"]), list(r["v"])) for r in seed)
+    cents, _ = _lloyd_rounds(base, cents, iters, None, 0)
     # final assignment against the last updated centroids — a pure map
     dc = F.expr(_least_assign_sql("v", cents))
     return base.select(
@@ -637,156 +629,94 @@ def kmeans_assign(
     )
 
 
-def _kmeans_rounds(base: DataFrame, k: int, iters: int) -> list | None:
-    """The Lloyd-round loop of :func:`kmeans_assign` over a persisted
-    (vec_id, v) base — seed collect + ``iters`` literal-centroid rounds;
-    returns the final ``[(cid, cv)]`` list (None when no seedable
-    vectors exist).  Factored out (r15) so callers that only need the
-    CENTROIDS as control-plane literals (the self-trained IVF rows —
-    the final assignment is then a projected column, no assignment
-    table, no join) share the exact round arithmetic."""
-    seed = base.filter(F.col("vec_id") < k).select("vec_id", "v").collect()
-    cents = sorted((int(r["vec_id"]), list(r["v"])) for r in seed)
-    if not cents:
-        return None
-    dim = len(cents[0][1])  # fixture dims vary; the corpus contract is DIM
-    for _ in range(iters):
-        # v IS NOT NULL before the mean aggregation (r14 ADVICE): the
-        # exploded form excluded NULL vectors from BOTH sum and count
-        # (posexplode of NULL yields no rows); count(1) alone would
-        # silently inflate the mean divisor.  Free at any scale.
-        sums = (
-            base.filter(F.col("v").isNotNull())
-            .select(
-                F.expr(f"({_least_assign_sql('v', cents)}).cid").alias("cid"),
-                "v",
-            )
-            .groupBy("cid")
-            .agg(*_mean_aggs(_try_elem("v"), dim))
-        )
-        rows = sums.select("cid", _means_array(dim).alias("cv")).collect()
-        cents = sorted((int(r["cid"]), list(r["cv"])) for r in rows)
-    return cents
-
-
-def kmeans_cents_literals(
-    df: DataFrame, id_col: str, vec_col: str, k: int = 10, iters: int = 2
-) -> tuple[list, DataFrame] | None:
-    """Final k-means centroids as a literal list — :func:`kmeans_assign`
-    minus the assignment table: callers project the cell id as a column
-    (``_least_assign_sql`` over the final centroids) instead of joining
-    a materialized assignment, which removes the persist+count
-    materialization job AND the corpus-wide assignment join from the
-    self-trained IVF serve paths.  Same seed collect, same rounds, same
-    IEEE round-trip — centroid values are bit-identical to
-    :func:`kmeans_assign`'s.  Returns ``(cents, base)`` — the persisted
-    (vec_id, v) base is handed back so the serve side reuses the
-    materialized doubles instead of re-scanning the source (``v`` is
-    already array<double>; ``to_double`` over it is value-identity) —
-    or None when no seedable vectors exist."""
-    base = barrier(
+def _train_base(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The persisted (vec_id, v) base every Lloyd round of a trainer
+    scans — spread to the cores, so the argmin kernels are not
+    single-task on a small file."""
+    return barrier(
         _spread(
             df.select(
                 F.col(id_col).alias("vec_id"), to_double(vec_col).alias("v")
             )
         )
     )
-    cents = _kmeans_rounds(base, k, iters)
-    if cents is None:
-        return None
-    return cents, base
 
 
-def kmeans_assign_arrow(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 10,
-    iters: int = 2,
-) -> DataFrame:
-    """Arrow/numpy Lloyd's k-means — the 100 TB execution path for the
-    clustering family (:func:`kmeans_assign` is the oracle-exact JVM-fold
-    twin, kept for the cross-engine hash gates).
+def _sub_sql(mi: int, subdim: int) -> str:
+    """Subspace ``mi`` of ``v`` — the slice a PQ family quantizes."""
+    return f"slice(v, {mi * subdim + 1}, {subdim})"
 
-    Same semantics: deterministic seeding (the ``k`` lowest ids),
-    argmin assignment with lowest-cluster-id tie-break, and the SAME
-    decimal-exact per-dimension centroid update on the JVM side — so the
-    per-round centroids match the exact variant to the last ulp of the
-    double cast.  What changes is the assignment kernel: centroids ride
-    in the task closure (k×d doubles, re-collected once per round — a
-    control-plane read bounded by the quantizer size, never the corpus)
-    and each partition computes ONE ``|batch| × k`` squared-distance
-    GEMM inside ``mapInPandas`` instead of evaluating interpreted
-    higher-order-function folds per (vector, centroid) pair.  numpy's
-    pairwise summation can differ from the sequential fold in the last
-    ulp, so assignments may flip on exact distance near-ties — the
-    agreement test (tests/test_similarity.py) pins ≥99% assignment
-    agreement and the registered gates keep using the fold variant.
-    """
-    import numpy as np
-    import pandas as pd
 
-    base = barrier(
-        df.select(F.col(id_col).alias("vec_id"), to_double(vec_col).alias("v"))
-    )
-    cent_rows = (
-        base.filter(F.col("vec_id") < k)
-        .orderBy("vec_id")
-        .collect()
-    )
-    cids = np.array([r["vec_id"] for r in cent_rows], dtype=np.int64)
-    C = np.array([r["v"] for r in cent_rows], dtype=np.float64)
+def _lloyd_rounds(
+    src: DataFrame,
+    coarse: list | None,
+    iters: int,
+    pqc: dict | None,
+    pq_iters: int,
+    subdim: int = 0,
+) -> tuple[list | None, dict | None]:
+    """The literal-centroid Lloyd loop over a (vec_id, v) frame: the
+    full-space coarse family ``coarse`` ``[(cid, cv)]`` runs ``iters``
+    rounds and the PQ families ``pqc`` ``{mi: [(cid, sub_cv)]}`` (one
+    per ``subdim``-wide subspace) run ``pq_iters`` rounds.  Every
+    family present in a round is evaluated MAP-SIDE in one pass — its
+    argmin against literal centroids (:func:`_least_assign_sql`) — and
+    their decimal partials are grouped under one (family, cid) key
+    (family -1 is coarse, 0..m-1 the subspaces), so a round is ONE
+    corpus-scan job and one collect whatever the family count.
 
-    def assigner(cids_: "np.ndarray", C_: "np.ndarray"):
-        def assign(batches):
-            c_sq = (C_ * C_).sum(axis=1)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.stack(pdf["v"].to_numpy())
-                # ||v-c||^2 = |v|^2 - 2 v.c + |c|^2 ; |v|^2 constant per row
-                d2 = -2.0 * (V @ C_.T) + c_sq
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"],
-                        "v": pdf["v"],
-                        "cid": cids_[np.argmin(d2, axis=1)],
-                        "d2": ((V * V).sum(axis=1) + d2.min(axis=1)),
-                    }
+    The groups are disjoint, so each family aggregates exactly the value
+    multiset a loop of its own would: cast-decimal(28,10)-then-sum, s/n
+    double division, (d2, lowest-cid) tie-break, IEEE round-trip of the
+    collected doubles.  NULL vectors are excluded from sums AND counts
+    (the exploded form's semantics).  Returns the final
+    ``(coarse, pqc)``."""
+    dim = len(coarse[0][1]) if coarse else 0  # fixture dims vary
+    for it in range(max(iters, pq_iters)):
+        fams = []
+        if it < iters:
+            fams.append((-1, "v", coarse))
+        if it < pq_iters:
+            fams += [(mi, _sub_sql(mi, subdim), cc) for mi, cc in pqc.items()]
+        width = max(dim if it < iters else 0, subdim if it < pq_iters else 0)
+
+        def elem(i: int) -> str:
+            # family -1 reads position i of the full vector, family mi
+            # position mi·subdim+i up to subdim; beyond a family's width
+            # the CASE yields NULL, which the decimal sum skips
+            whens = []
+            if it < iters:
+                whens.append(f"WHEN fam = -1 THEN try_element_at(v, {i})")
+            if it < pq_iters and i <= subdim:
+                whens.append(
+                    "WHEN fam >= 0 THEN "
+                    f"try_element_at(v, CAST(fam * {subdim} + {i} AS INT))"
                 )
+            return f"CASE {' '.join(whens)} END"
 
-        return assign
-
-    schema = "vec_id long, v array<double>, cid long, d2 double"
-    for _ in range(iters):
-        assigned = base.mapInPandas(assigner(cids, C), schema=schema)
-        comp = assigned.select("cid", F.posexplode("v").alias("pos", "x"))
-        cents = (
-            comp.groupBy("cid", "pos")
-            .agg(
-                F.sum(F.col("x").cast("decimal(28,10)")).cast("double").alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .select("cid", "pos", (F.col("s") / F.col("n")).alias("c"))
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                    lambda s: s["c"],
-                ).alias("cv")
-            )
-            .orderBy("cid")
+        entries = ",".join(
+            f"named_struct('fam', {fam}, 'cid', ({_least_assign_sql(vexpr, cc)}).cid)"
+            for fam, vexpr, cc in fams
+        )
+        rows = (
+            src.filter(F.col("v").isNotNull())
+            .select("v", F.expr(f"inline(array({entries}))"))
+            .groupBy("fam", "cid")
+            .agg(*_mean_aggs(elem, width))
+            .select("fam", "cid", _means_array(width).alias("cv"))
             .collect()
         )
-        cids = np.array([r["cid"] for r in cents], dtype=np.int64)
-        C = np.array([r["cv"] for r in cents], dtype=np.float64)
-
-    final = base.mapInPandas(assigner(cids, C), schema=schema)
-    return final.select(
-        "vec_id",
-        F.col("cid").alias("cluster_id"),
-        F.round(F.sqrt(F.greatest(F.col("d2"), F.lit(0.0))), 6).alias("dist"),
-    )
+        nxt: dict = {fam: [] for fam, _, _ in fams}
+        for r in rows:
+            fam = int(r["fam"])
+            nxt[fam].append(
+                (int(r["cid"]), list(r["cv"])[: dim if fam == -1 else subdim])
+            )
+        if it < iters:
+            coarse = sorted(nxt.pop(-1))
+        if it < pq_iters:
+            pqc = {mi: sorted(v) for mi, v in nxt.items()}
+    return coarse, pqc
 
 
 def farthest_point_sample(
@@ -1347,183 +1277,67 @@ PQ_M = 4  # subspaces
 PQ_SUBDIM = DIM // PQ_M  # 16 dims each
 PQ_K = 16  # codewords per sub-codebook (codes fit 4 bits)
 PQ_ITERS = 2
-
-
-def pq_train(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    iters: int = PQ_ITERS,
-) -> tuple[DataFrame, DataFrame]:
-    """Product-quantization training (Jégou et al., "Product Quantization
-    for Nearest Neighbor Search", TPAMI 2011): split each vector into
-    ``m`` contiguous subvectors and run an independent deterministic
-    k-means (:func:`kmeans_assign`: lowest-id seeding, decimal-exact
-    centroid means) in each subspace.
-
-    Returns ``(codes, cents)``:
-    - ``codes`` (vec_id, m, code) — the compressed corpus: m small ints
-      per vector (m·log2(k) bits ≈ 2 bytes here vs 256 bytes float32 —
-      the 100 TB corpus becomes ~1 TB of codes).
-    - ``cents`` (m, code, cv, cn2) — sub-codebooks re-derived from the
-      FINAL assignment by decimal-exact per-dimension means (the same
-      assignment→centroid convention :func:`ivf_centroids` uses), plus
-      each codeword's exact-fold squared norm for reconstruction norms.
-
-    The m sub-quantizers are mathematically independent, so they are
-    trained JOINTLY over one exploded (vec_id, m, sv) table: every
-    Lloyd round is ONE broadcast-centroid argmin (the m x k centroid
-    table is k·DIM doubles total — same bytes as one full-space k-means)
-    plus ONE (m, code, pos) centroid-update shuffle, instead of m
-    sequential k-means jobs.  Per-(vec, m) argmin ties break to the
-    lowest code id and centroid means are decimal-exact, bit-identical
-    to running :func:`kmeans_assign` per subspace (the oracle unrolls
-    the per-subspace formulation and the gate agrees).
-    """
-    subdim = DIM // m
-    base = barrier(
-        _spread(
-            df.select(
-                F.col(id_col).alias("vec_id"), to_double(vec_col).alias("v")
-            )
-        )
-    )
-    seed = base.filter(F.col("vec_id") < k).select("vec_id", "v").collect()
-    if not seed:  # no seedable vectors (r14 ADVICE): the joined
-        # formulation degraded to empty results; the literal argmin
-        # would emit a zero-arg least() — an AnalysisException.  Mirror
-        # kmeans_assign's empty early return with the same schemas.
-        codes = base.select(
-            "vec_id",
-            F.lit(None).cast("int").alias("m"),
-            F.lit(None).cast("long").alias("code"),
-        ).filter(F.lit(False))
-        cents_df = base.select(
-            F.lit(None).cast("int").alias("m"),
-            F.lit(None).cast("long").alias("code"),
-            F.lit(None).cast("array<double>").alias("cv"),
-            F.lit(None).cast("double").alias("cn2"),
-        ).filter(F.lit(False))
-        return codes, cents_df
-    # per-subspace literal codebooks: cents[mi] = [(cid, subvector), ...]
-    cents = {
-        mi: sorted(
-            (int(r["vec_id"]), list(r["v"])[mi * subdim : (mi + 1) * subdim])
-            for r in seed
-        )
-        for mi in range(m)
-    }
-
-    def codes_arr(cc: dict) -> Column:
-        # one (m-long) array of per-subspace argmin codes, computed
-        # MAP-SIDE against literal codebooks (:func:`_least_assign_sql`)
-        # — the joint m-subspace Lloyd round with zero joins
-        return F.expr(_pq_codes_arr_sql(cc, m, subdim))
-
-    # per-round: explode the m codes (map-side), ONE (m, cid) exchange of
-    # per-dimension decimal partials, collect the m·k updated sub-means
-    def round_means(cc: dict) -> dict:
-        # NULL vectors excluded from sums AND counts (r14 ADVICE — the
-        # exploded form's semantics; see kmeans_assign)
-        ex = base.filter(F.col("v").isNotNull()).select(
-            "v", F.posexplode(codes_arr(cc)).alias("m", "cid")
-        )
-        sums = ex.groupBy("m", "cid").agg(
-            *_mean_aggs(
-                lambda i: f"try_element_at(v, CAST(m * {subdim} + {i} AS INT))",
-                subdim,
-            )
-        )
-        rows = sums.select("m", "cid", _means_array(subdim).alias("cv")).collect()
-        out: dict = {mi: [] for mi in range(m)}
-        for r in rows:
-            out[int(r["m"])].append((int(r["cid"]), list(r["cv"])))
-        return {mi: sorted(v) for mi, v in out.items()}
-
-    for _ in range(iters):
-        cents = round_means(cents)
-    # final code table: a pure map over the persisted base (no exchange)
-    codes = barrier(
-        base.select(
-            "vec_id", F.posexplode(codes_arr(cents)).alias("m", "code")
-        )
-    )
-    # sub-codebooks re-derived from the FINAL assignment — same fused
-    # one-exchange decimal-mean shape, kept in-engine (m·k rows out)
-    ex = base.filter(F.col("v").isNotNull()).select(
-        "v", F.posexplode(codes_arr(cents)).alias("m", "code")
-    )
-    sums = ex.groupBy("m", "code").agg(
-        *_mean_aggs(
-            lambda i: f"try_element_at(v, CAST(m * {subdim} + {i} AS INT))",
-            subdim,
-        )
-    )
-    cents_df = sums.select(
-        "m", "code", _means_array(subdim).alias("cv")
-    ).select("m", "code", "cv", dot(F.col("cv"), F.col("cv")).alias("cn2"))
-    return codes, barrier(cents_df)
+IVF_CELLS = 10  # coarse cells of the IVFPQ trainer
 
 
 def _pq_codes_arr_sql(cc: dict, m: int, subdim: int) -> str:
     """The m-long array of per-subspace argmin codes as ONE SQL string —
     map-side against literal codebooks (:func:`_least_assign_sql`), the
-    joint m-subspace assignment with zero joins.  Shared by
-    :func:`pq_train` and the fused trainer so the expression text (and
-    therefore every bit of the assignment) has one definition."""
+    joint m-subspace assignment with zero joins."""
     parts = ",".join(
-        f"({_least_assign_sql(f'slice(v, {mi * subdim + 1}, {subdim})', cc[mi])}).cid"
+        f"({_least_assign_sql(_sub_sql(mi, subdim), cc[mi])}).cid"
         for mi in range(m)
     )
     return f"array({parts})"
 
 
-def ivfpq_train_literals(
+def ivfpq_train(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    k: int = 10,
+    residual: bool = False,
     iters: int = 2,
-    m: int = PQ_M,
-    kcodes: int = PQ_K,
-    pq_iters: int = PQ_ITERS,
-) -> tuple[list, dict, DataFrame] | None:
-    """FUSED coarse-k-means + PQ training over ONE persisted base —
-    the r15 cut of the self-contained IVFPQ rows' training floor
-    (guide §1.2-1, §2.4, §2.6): the coarse quantizer and the m
-    sub-quantizers are mathematically independent, but the r14 code ran
-    them as two sequential Lloyd chains over the SAME corpus (one seed
-    collect + one aggregation job per family per round ≈ 6 sequential
-    jobs).  Both are control-plane state (k·d + m·k·subdim doubles), so
-    each fused round evaluates BOTH argmin families map-side in one
-    pass and groups their decimal partials under one (family, cid) key
-    — ONE corpus-scan job per round, one seed collect total.
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """THE IVFPQ trainer: a coarse k-means quantizer (``IVF_CELLS``
+    cells, ``iters`` rounds) and a product quantizer (Jégou et al.,
+    "Product Quantization for Nearest Neighbor Search", TPAMI 2011:
+    ``PQ_M`` contiguous subspaces, ``PQ_K`` codewords each,
+    ``PQ_ITERS`` rounds), both seeded deterministically from the lowest
+    ids and trained by :func:`_lloyd_rounds` over ONE persisted base
+    after ONE seed collect.
 
-    Bit-exactness: the per-family groups are disjoint (family = -1 for
-    coarse, 0..m-1 for PQ), so each group aggregates exactly the value
-    multiset the unfused round aggregated, with the same expressions —
-    cast-decimal(28,10)-then-sum, s/n double division, the
-    (d2, lowest-cid) literal-argmin tie-break, IEEE round-trip of the
-    collected doubles (all unchanged from r14's literal-centroid
-    formulation; proven by the oracle gates).
+    Returns ``(cells, icents, codes, pqcents)`` — every part a lazy
+    projection or in-plan aggregation of that base, with the trained
+    centroids riding in the expressions as literals (no lineage to cut,
+    no eager checkpoint):
 
-    Returns ``(coarse, pqc, base)`` — the final coarse centroid list
-    ``[(cid, cv)]``, the per-subspace codebooks ``{mi: [(cid, cv)]}``,
-    and the persisted (vec_id, v) base for the serve side to reuse — or
-    ``None`` when either seed set is empty (the caller falls back to
-    the unfused formulations, which carry the degenerate-input
-    semantics).
+    - ``cells`` (vec_id, cell): the final coarse argmin;
+    - ``icents`` (cell, cv, cnrm): the cells' means under that
+      assignment (:func:`ivf_centroids`);
+    - ``codes`` (vec_id, m, code): the final per-subspace argmin — the
+      compressed corpus, PQ_M·log2(PQ_K) bits per vector;
+    - ``pqcents`` (m, code, cv, cn2): sub-codebooks re-derived from the
+      final assignment by the same decimal-exact means, plus each
+      codeword's exact-fold squared norm.
+
+    Regimes.  Raw (``residual=False``): the coarse and PQ families are
+    independent, so they run FUSED — one corpus-scan job per round.
+    ``residual=True`` (the FAISS ``IndexIVFPQ`` default, Jégou §IV): the
+    PQ encodes ``v − c_cell``, so the coarse rounds run first, one more
+    round yields the cell means (``icents``, k·d doubles) as literals,
+    and the residual becomes a map-side expression that the PQ rounds
+    then run over through the same loop (their seeds are the residuals
+    of the lowest ids).  ``iters=0`` is the PQ-only trainer
+    (:func:`knn_pq`): no coarse Lloyd round runs, and callers drop the
+    coarse parts.
+
+    Raises ``ValueError`` when the corpus has no id below ``IVF_CELLS``
+    or below ``PQ_K`` (an empty corpus included): there is nothing to
+    seed from, and an empty index must not be published.
     """
+    k, m, kcodes = IVF_CELLS, PQ_M, PQ_K
     subdim = DIM // m
-    base = barrier(
-        _spread(
-            df.select(
-                F.col(id_col).alias("vec_id"), to_double(vec_col).alias("v")
-            )
-        )
-    )
+    base = _train_base(df, id_col, vec_col)
     seed = (
         base.filter(F.col("vec_id") < max(k, kcodes))
         .select("vec_id", "v")
@@ -1532,69 +1346,63 @@ def ivfpq_train_literals(
     coarse = sorted(
         (int(r["vec_id"]), list(r["v"])) for r in seed if r["vec_id"] < k
     )
-    pq_seed = [r for r in seed if r["vec_id"] < kcodes]
-    if not coarse or not pq_seed:
-        return None
-    pqc = {
-        mi: sorted(
-            (int(r["vec_id"]), list(r["v"])[mi * subdim : (mi + 1) * subdim])
-            for r in pq_seed
+    if not coarse or not any(r["vec_id"] < kcodes for r in seed):
+        raise ValueError(
+            f"ivfpq_train: no seed vectors — the corpus has no {id_col} "
+            f"below {k} (coarse seeds) or below {kcodes} (PQ seeds); it "
+            "is empty or its ids do not start at 0"
         )
-        for mi in range(m)
-    }
-    dim = len(coarse[0][1])  # fixture dims vary; the corpus contract is DIM
-    width = max(dim, subdim)
 
-    def fused_elem(i: int) -> str:
-        # family -1 reads position i of the full vector (kmeans_assign's
-        # elem); families 0..m-1 read position fam·subdim+i (pq_train's
-        # elem) for i <= subdim and contribute nothing beyond it — NULL
-        # is excluded from the decimal sum exactly like the absent
-        # column of the narrower unfused aggregation.
-        if i <= subdim:
-            return (
-                f"CASE WHEN fam = -1 THEN try_element_at(v, {i}) "
-                f"ELSE try_element_at(v, CAST(fam * {subdim} + {i} AS INT)) "
-                "END"
-            )
-        return f"CASE WHEN fam = -1 THEN try_element_at(v, {i}) END"
-
-    rounds = max(iters, pq_iters)
-    for it in range(rounds):
-        entries = []
-        if it < iters:
-            entries.append(
-                "named_struct('fam', -1, 'cid', "
-                f"({_least_assign_sql('v', coarse)}).cid)"
-            )
-        if it < pq_iters:
-            for mi in range(m):
-                entries.append(
-                    f"named_struct('fam', {mi}, 'cid', "
-                    f"({_least_assign_sql(f'slice(v, {mi * subdim + 1}, {subdim})', pqc[mi])}).cid)"
-                )
-        ex = base.filter(F.col("v").isNotNull()).select(
-            "v", F.expr(f"inline(array({','.join(entries)}))")
-        )
-        sums = ex.groupBy("fam", "cid").agg(*_mean_aggs(fused_elem, width))
-        rows = sums.select(
-            "fam", "cid", _means_array(width).alias("cv")
-        ).collect()
-        if it < iters:
-            coarse = sorted(
-                (int(r["cid"]), list(r["cv"])[:dim])
+    def pq_seeds(rows: list) -> dict:
+        return {
+            mi: sorted(
+                (int(r["vec_id"]), list(r["v"])[mi * subdim : (mi + 1) * subdim])
                 for r in rows
-                if r["fam"] == -1
+                if r["vec_id"] < kcodes
             )
-        if it < pq_iters:
-            nxt: dict = {mi: [] for mi in range(m)}
-            for r in rows:
-                if r["fam"] >= 0:
-                    nxt[int(r["fam"])].append(
-                        (int(r["cid"]), list(r["cv"])[:subdim])
-                    )
-            pqc = {mi: sorted(v) for mi, v in nxt.items()}
-    return coarse, pqc, base
+            for mi in range(m)
+        }
+
+    src = base
+    if residual:
+        coarse, _ = _lloyd_rounds(base, coarse, iters, None, 0)
+        cell_means, _ = _lloyd_rounds(base, coarse, 1, None, 0)
+        lookup = ",".join(
+            f"CAST({cid} AS BIGINT), {_sql_vec_lit(cv)}" for cid, cv in cell_means
+        )
+        src = base.select(
+            "vec_id",
+            F.expr(
+                f"zip_with(v, element_at(map({lookup}), "
+                f"({_least_assign_sql('v', coarse)}).cid), (a, b) -> a - b)"
+            ).alias("v"),
+        )
+        seed = src.filter(F.col("vec_id") < kcodes).collect()
+        _, pqc = _lloyd_rounds(src, None, 0, pq_seeds(seed), PQ_ITERS, subdim)
+    else:
+        coarse, pqc = _lloyd_rounds(
+            base, coarse, iters, pq_seeds(seed), PQ_ITERS, subdim
+        )
+    cell = F.expr(f"({_least_assign_sql('v', coarse)}).cid").alias("cell")
+    cells = base.select("vec_id", cell)
+    icents = ivf_centroids(base.select("v", cell), "cell")
+    codes_arr = F.expr(_pq_codes_arr_sql(pqc, m, subdim))
+    codes = src.select("vec_id", F.posexplode(codes_arr).alias("m", "code"))
+    sums = (
+        src.filter(F.col("v").isNotNull())
+        .select("v", F.posexplode(codes_arr).alias("m", "code"))
+        .groupBy("m", "code")
+        .agg(
+            *_mean_aggs(
+                lambda i: f"try_element_at(v, CAST(m * {subdim} + {i} AS INT))",
+                subdim,
+            )
+        )
+    )
+    pqcents = sums.select(
+        "m", "code", _means_array(subdim).alias("cv")
+    ).select("m", "code", "cv", dot(F.col("cv"), F.col("cv")).alias("cn2"))
+    return cells, icents, codes, pqcents
 
 
 def knn_ivfpq_selftrained(
@@ -1604,103 +1412,29 @@ def knn_ivfpq_selftrained(
     query_mod: int = 100,
     k: int = DEFAULT_K,
     nprobe: int = 2,
-    m: int = PQ_M,
-    kcodes: int = PQ_K,
-    iters: int = PQ_ITERS,
-    coarse_k: int = 10,
-    coarse_iters: int = 2,
     refine_factor: int | None = None,
     n_queries: int | None = None,
 ) -> DataFrame:
-    """The self-contained IVFPQ rows' train+serve composition with the
-    FUSED trainer (:func:`ivfpq_train_literals`) and every serve-side
-    artifact derived MAP-SIDE from the one persisted base — no
-    kmeans-output join, no eager checkpoints (the artifacts are literal
-    expressions, so the serve plan carries no training lineage to cut):
-
-    - membership: the final coarse argmin as a projected column;
-    - probe centroids: :func:`ivf_centroids`'s exact aggregation shape
-      over that projection (in-plan — referenced once, broadcast);
-    - code table: the final PQ argmin array posexploded (pure map);
-    - sub-codebooks: pq_train's final re-derivation aggregation
-      verbatim (in-plan — referenced once, broadcast in the LUT).
-
-    Every expression is textually shared with the unfused path
-    (``_least_assign_sql`` / ``_pq_codes_arr_sql`` / ``_mean_aggs`` /
-    ``ivfpq_serve``), so the result is bit-identical to the r14
-    composition — the checkpoint/collect choreography was the only
-    thing removed.  ``refine_factor`` composes the exact re-rank
-    (:func:`_refine_exact`) over the widened candidate list exactly as
-    :func:`knn_ivfpq_refined`."""
-    trained = ivfpq_train_literals(
-        df, id_col, vec_col, coarse_k, coarse_iters, m, kcodes, iters
-    )
-    if trained is None:
-        # degenerate corpus (no seedable vectors): the unfused
-        # formulations own the empty-input semantics
-        cells = (
-            kmeans_assign(df, id_col, vec_col, k=coarse_k, iters=coarse_iters)
-            .select(
-                F.col("vec_id").alias(id_col),
-                F.col("cluster_id").alias("__cell"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        codes, pqcents = pq_train(df, id_col, vec_col, m, kcodes, iters)
-        pq = (
-            codes.localCheckpoint(eager=True),
-            pqcents.localCheckpoint(eager=True),
-        )
-        joined = df.join(cells, id_col)
-        if refine_factor is None:
-            return knn_ivfpq(
-                joined, id_col, vec_col, "__cell", query_mod, k, nprobe,
-                m, kcodes, iters, pq=pq,
-            )
-        return knn_ivfpq_refined(
-            joined, id_col, vec_col, "__cell", query_mod, k, nprobe,
-            refine_factor, m, kcodes, iters, pq=pq, n_queries=n_queries,
-        )
-    coarse, pqc, base = trained
-    subdim = DIM // m
-    cell_sql = f"({_least_assign_sql('v', coarse)}).cid"
-    with_cell = base.select("vec_id", "v", F.expr(cell_sql).alias("cell"))
-    membership = with_cell.select("vec_id", "cell")
-    icents = ivf_centroids(with_cell, "cell")
-    codes_sql = _pq_codes_arr_sql(pqc, m, subdim)
-    codes = base.select(
-        "vec_id", F.posexplode(F.expr(codes_sql)).alias("m", "code")
-    )
-    pex = base.filter(F.col("v").isNotNull()).select(
-        "v", F.posexplode(F.expr(codes_sql)).alias("m", "code")
-    )
-    psums = pex.groupBy("m", "code").agg(
-        *_mean_aggs(
-            lambda i: f"try_element_at(v, CAST(m * {subdim} + {i} AS INT))",
-            subdim,
-        )
-    )
-    pqcents = psums.select(
-        "m", "code", _means_array(subdim).alias("cv")
-    ).select("m", "code", "cv", dot(F.col("cv"), F.col("cv")).alias("cn2"))
-    queries = (
-        base.filter(F.col("vec_id") % query_mod == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            norm(F.col("v")).alias("qnrm"),
-        )
+    """The self-contained IVFPQ rows' train+serve composition:
+    :func:`ivfpq_train`'s four parts (literal-centroid expressions over
+    one persisted base, so the serve plan carries no training lineage to
+    cut) served by :func:`ivfpq_serve`.  ``refine_factor`` composes the
+    exact re-rank (:func:`_refine_exact`) over the widened candidate list
+    exactly as :func:`knn_ivfpq_refined`."""
+    cells, icents, codes, pqcents = ivfpq_train(df, id_col, vec_col)
+    base = normed(df, id_col, vec_col)
+    queries = base.filter(F.col("vec_id") % query_mod == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qnrm"),
     )
     ncand = k if refine_factor is None else refine_factor * k
-    out = ivfpq_serve(
-        queries, membership, icents, codes, pqcents, ncand, nprobe, m
-    )
+    out = ivfpq_serve(queries, cells, icents, codes, pqcents, ncand, nprobe)
     if refine_factor is None:
         return out
     cands = out.select("query_id", "neighbor_id")
     return _refine_exact(
-        normed(df, id_col, vec_col), cands, query_mod, k, ncand,
-        n_queries=n_queries,
+        base, cands, query_mod, k, ncand, n_queries=n_queries
     )
 
 
@@ -1725,9 +1459,8 @@ def knn_pq(
     query_mod: int = 100,
     k: int = DEFAULT_K,
     m: int = PQ_M,
-    kcodes: int = PQ_K,
-    iters: int = PQ_ITERS,
-    pq: tuple[DataFrame, DataFrame] | None = None,
+    *,
+    pq: tuple[DataFrame, DataFrame],
     base: DataFrame | None = None,
 ) -> DataFrame:
     """Exhaustive PQ search with ASYMMETRIC DISTANCE COMPUTATION (ADC) —
@@ -1740,7 +1473,8 @@ def knn_pq(
     broadcast), the corpus-side scan is an equi-join of the (vec_id, m,
     code) table against it on (m, code), then a per-(query, vector)
     fold of exactly m partials.  The full-precision corpus is never
-    read at serve time — only ``pq_train``'s code table — and nothing
+    read at serve time — only the ``pq=(codes, pqcents)`` parts of
+    :func:`ivfpq_train` — and nothing
     joins on an inequality.  Approximate cosine uses the reconstruction
     norm ``sqrt(Σ_m |c_{m,code}|²)`` (centroid cross-terms vanish:
     subspaces are disjoint coordinate blocks).
@@ -1754,9 +1488,7 @@ def knn_pq(
     """
     subdim = DIM // m
     base = base if base is not None else normed(df, id_col, vec_col)
-    codes, cents = (
-        pq if pq is not None else pq_train(df, id_col, vec_col, m, kcodes, iters)
-    )
+    codes, cents = pq
     queries = base.filter(F.col("vec_id") % query_mod == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -1826,9 +1558,8 @@ def knn_pq_refined(
     k: int = DEFAULT_K,
     refine_factor: int = PQ_REFINE_FACTOR,
     m: int = PQ_M,
-    kcodes: int = PQ_K,
-    iters: int = PQ_ITERS,
-    pq: tuple[DataFrame, DataFrame] | None = None,
+    *,
+    pq: tuple[DataFrame, DataFrame],
     n_queries: int | None = None,
 ) -> DataFrame:
     """PQ ADC candidate generation + exact re-rank — FAISS's
@@ -1869,8 +1600,7 @@ def knn_pq_refined(
     ncand = refine_factor * k
     base = normed(df, id_col, vec_col)
     cands = knn_pq(
-        df, id_col, vec_col, query_mod, ncand, m, kcodes, iters, pq=pq,
-        base=base,
+        df, id_col, vec_col, query_mod, ncand, m, pq=pq, base=base
     ).select("query_id", "neighbor_id")
     return _refine_exact(base, cands, query_mod, k, ncand, n_queries=n_queries)
 
@@ -1953,10 +1683,9 @@ def knn_ivfpq_refined(
     nprobe: int = 2,
     refine_factor: int = PQ_REFINE_FACTOR,
     m: int = PQ_M,
-    kcodes: int = PQ_K,
-    iters: int = PQ_ITERS,
-    pq: tuple[DataFrame, DataFrame] | None = None,
-    ivf: DataFrame | None = None,
+    *,
+    pq: tuple[DataFrame, DataFrame],
+    ivf: DataFrame,
     n_queries: int | None = None,
 ) -> DataFrame:
     """The full FAISS production serving stack as one dataflow —
@@ -1980,8 +1709,8 @@ def knn_ivfpq_refined(
     the fetch-join strategy falls to AQE, same rows either way."""
     ncand = refine_factor * k
     cands = knn_ivfpq(
-        df, id_col, vec_col, cell_col, query_mod, ncand, nprobe,
-        m, kcodes, iters, pq=pq, ivf=ivf,
+        df, id_col, vec_col, cell_col, query_mod, ncand, nprobe, m,
+        pq=pq, ivf=ivf,
     ).select("query_id", "neighbor_id")
     base = normed(df, id_col, vec_col)
     return _refine_exact(base, cands, query_mod, k, ncand, n_queries=n_queries)
@@ -1996,10 +1725,9 @@ def knn_ivfpq(
     k: int = DEFAULT_K,
     nprobe: int = 2,
     m: int = PQ_M,
-    kcodes: int = PQ_K,
-    iters: int = PQ_ITERS,
-    pq: tuple[DataFrame, DataFrame] | None = None,
-    ivf: DataFrame | None = None,
+    *,
+    pq: tuple[DataFrame, DataFrame],
+    ivf: DataFrame,
 ) -> DataFrame:
     """IVF + PQ — the FAISS ``IVFPQ`` layout, the standard billion-scale
     serving stack: a learned coarse quantizer bounds WHICH vectors are
@@ -2016,30 +1744,19 @@ def knn_ivfpq(
     every float reduction is a sequenced fold, so the whole stack
     hash-gates cross-engine like its factors.
 
-    Pass ``pq=(codes, cents)`` (from :func:`pq_train`, ideally behind a
-    ``localCheckpoint`` lineage cut) to serve from a pre-trained code
-    table — production trains once and amortizes, and without the cut
-    the serve plan drags five k-means lineages (coarse + m sub-spaces)
-    through analysis/codegen, which is driver-heap-hostile even though
-    execution hits the persisted blocks (measured: 41s/OOM-at-1g
-    composed vs seconds with checkpointed training artifacts).
-    ``ivf`` optionally supplies pre-trained coarse centroids
-    ``(cell, cv, cnrm)`` the same way (the persisted-index serve path,
-    plans/similarity_queries.py::knn_ivfpq_stored); by default they are
-    re-derived from the full-precision corpus per call.
+    The trained parts are passed in, never trained here: ``pq=(codes,
+    pqcents)`` and ``ivf`` (cell, cv, cnrm), from :func:`ivfpq_train`
+    or a loaded artifact (plans/similarity_queries.py::ann_index_load).
     """
     base = _normed_with_cell(df, id_col, vec_col, cell_col)
-    cents = ivf if ivf is not None else ivf_centroids(base, "cell")
-    codes, pqcents = (
-        pq if pq is not None else pq_train(df, id_col, vec_col, m, kcodes, iters)
-    )
+    codes, pqcents = pq
     queries = base.filter(F.col("vec_id") % query_mod == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.col("nrm").alias("qnrm"),
     )
     return ivfpq_serve(
-        queries, base.select("vec_id", "cell"), cents, codes, pqcents,
+        queries, base.select("vec_id", "cell"), ivf, codes, pqcents,
         k, nprobe, m,
     )
 
@@ -2058,7 +1775,7 @@ def ivfpq_serve(
     """The PURE IVFPQ serving dataflow — queries in, top-k out, every
     trained artifact passed in: ``queries`` (query_id, qv, qnrm),
     ``membership`` (vec_id, cell), ``cents`` (cell, cv, cnrm),
-    ``codes``/``pqcents`` from :func:`pq_train` or
+    ``codes``/``pqcents`` from :func:`ivfpq_train` or
     plans/similarity_queries.py::ann_index_load.  This is the function
     a production deployment calls per query batch (the ``knn_ivfpq*``
     registry rows wrap it with their self-contained training for the
@@ -2358,8 +2075,9 @@ def pq_residuals(
     oracle's ``v[i] - cv[i]``.  Scale: one broadcast of the centroid
     table over one corpus pass — no shuffle.  Returns
     ``(vec_id, v, cell)`` where ``v`` IS the residual (named ``v`` so
-    :func:`pq_train` and the oracle's subspace CTEs consume it
-    unchanged)."""
+    :func:`pq_assign` and the oracle's subspace CTEs consume it
+    unchanged).  :func:`ivfpq_train` computes the same subtraction
+    map-side against literal cell means."""
     base = df.select(
         F.col(id_col).alias("vec_id"), to_double(vec_col).alias("v")
     )

@@ -70,11 +70,6 @@ def fingerprint(c: str | Column) -> Column:
     return char_hash(normalized)
 
 
-def word_hashes(c: str | Column) -> Column:
-    """Distinct token hash set — the shingle base for MinHash/SimHash."""
-    return F.array_distinct(F.transform(tokens(c), char_hash))
-
-
 def stopword_hits(c: str | Column, lang: str) -> Column:
     """Number of tokens that are stopwords of ``lang`` (with repeats —
     ratio semantics need occurrence counts, not set overlap)."""
@@ -333,4 +328,3 @@ def quality_score(c: str | Column) -> Column:
         return (0.4 * len_ok + 0.3 * tok_ok + 0.3 * punct_ok).cast("double")
 
     return let(feats, score)
-

@@ -351,24 +351,20 @@ def knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     recommended IVF configuration; ``knn_ivf`` (label cells) stays as the
     metadata-partitioned variant.
 
-    r15: the headline row projects the cell id as a literal-centroid
-    column (operators/similarity.py::kmeans_cents_literals) instead of
-    materializing the assignment table and joining it back — same
-    centroids, same argmin, no persist+count job, no corpus join.  The
+    The assignment is :func:`SIM.kmeans_assign`'s projection over its
+    persisted base (literal centroids, no materialization job); the
     amortized train/serve split (:func:`knn_ivf_kmeans_train` /
-    :func:`knn_ivf_kmeans_serve`) keeps the materialized-assignment
-    shape the bench stages time.
+    :func:`knn_ivf_kmeans_serve`) adds the persist+count the bench
+    stages time.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    trained = SIM.kmeans_cents_literals(e, "vec_id", "embedding", k=10, iters=2)
-    if trained is None:  # degenerate corpus: the materialized path owns it
-        return knn_ivf_kmeans_serve(*knn_ivf_kmeans_train(spark, sf_dir))
-    cents, base = trained
-    bcell = base.withColumn(
-        "kcell", F.expr(f"({SIM._least_assign_sql('v', cents)}).cid")
-    )
-    return SIM.knn_ivf(
-        bcell, "vec_id", "v", "kcell", QUERY_MOD, K, IVF_KMEANS_NPROBE,
+    return knn_ivf_kmeans_serve(e, _kmeans_cells(e))
+
+
+def _kmeans_cells(e: DataFrame) -> DataFrame:
+    """(vec_id, kcell): the k-means IVF rows' coarse assignment."""
+    return SIM.kmeans_assign(e, "vec_id", "embedding", k=10, iters=2).select(
+        "vec_id", F.col("cluster_id").alias("kcell")
     )
 
 
@@ -493,34 +489,12 @@ FROM ranked WHERE rank <= {K}
 def knn_ivf_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (k-means coarse quantizer) + int8 candidate codes — the
     production serving stack: probe in float, score compressed.  See
-    operators/similarity.py::knn_ivf_int8.  r15: the cell id is a
-    literal-centroid projected column (same centroids via
-    kmeans_cents_literals, same argmin expression) instead of a
-    materialized assignment joined back — the persist+count job and the
-    corpus-wide join are gone; values are bit-identical."""
-    from pyspark.sql import functions as F
-
+    operators/similarity.py::knn_ivf_int8.  Same k-means assignment as
+    :func:`knn_ivf_kmeans`."""
     e = load_table(spark, sf_dir, "embeddings")
-    trained = SIM.kmeans_cents_literals(e, "vec_id", "embedding", k=10, iters=2)
-    if trained is None:  # degenerate corpus: empty assignment, empty serve
-        from data_pipelines_using_llm_spark.operators.caching import barrier
-
-        cells = barrier(
-            SIM.kmeans_assign(e, "vec_id", "embedding", k=10, iters=2).select(
-                "vec_id", F.col("cluster_id").alias("kcell")
-            )
-        )
-        cells.count()
-        return SIM.knn_ivf_int8(
-            e.join(cells, "vec_id"), "vec_id", "embedding", "kcell",
-            QUERY_MOD, K, IVF_KMEANS_NPROBE,
-        )
-    cents, base = trained
-    bcell = base.withColumn(
-        "kcell", F.expr(f"({SIM._least_assign_sql('v', cents)}).cid")
-    )
     return SIM.knn_ivf_int8(
-        bcell, "vec_id", "v", "kcell", QUERY_MOD, K, IVF_KMEANS_NPROBE,
+        e.join(_kmeans_cells(e), "vec_id"), "vec_id", "embedding", "kcell",
+        QUERY_MOD, K, IVF_KMEANS_NPROBE,
     )
 
 
@@ -853,9 +827,14 @@ def knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored against the 2-byte code table via a broadcast lookup table.
     See operators/similarity.py::knn_pq for the 100 TB plan argument."""
     e = load_table(spark, sf_dir, "embeddings")
-    codes, cents = SIM.pq_train(e, "vec_id", "embedding")
-    pq = (codes.localCheckpoint(eager=True), cents.localCheckpoint(eager=True))
-    return SIM.knn_pq(e, "vec_id", "embedding", QUERY_MOD, K, pq=pq)
+    return SIM.knn_pq(e, "vec_id", "embedding", QUERY_MOD, K, pq=_pq_parts(e))
+
+
+def _pq_parts(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(codes, pqcents) of the PQ-only rows: :func:`SIM.ivfpq_train` with
+    no coarse rounds."""
+    *_, codes, pqcents = SIM.ivfpq_train(e, "vec_id", "embedding", iters=0)
+    return codes, pqcents
 
 
 def _sql_dot_n(a: str, b: str, dim: int) -> str:
@@ -1023,10 +1002,8 @@ def knn_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     knn_pq floors at 0.15.  See operators/similarity.py::knn_pq_refined
     for the 100 TB plan argument and SCALE.md for the recall record."""
     e = load_table(spark, sf_dir, "embeddings")
-    codes, cents = SIM.pq_train(e, "vec_id", "embedding")
-    pq = (codes.localCheckpoint(eager=True), cents.localCheckpoint(eager=True))
     return SIM.knn_pq_refined(
-        e, "vec_id", "embedding", QUERY_MOD, K, pq=pq,
+        e, "vec_id", "embedding", QUERY_MOD, K, pq=_pq_parts(e),
         n_queries=_n_queries_cached(spark, sf_dir),
     )
 
@@ -1102,15 +1079,10 @@ FROM ranked WHERE rank <= {K}
 
 def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (k-means cells) + PQ codes — the FAISS IVFPQ serving stack:
-    probe float, score compressed via the ADC lookup table.  r15: the
-    coarse and PQ Lloyd chains train FUSED over one persisted base
-    (operators/similarity.py::ivfpq_train_literals — one corpus-scan
-    job per round instead of two sequential chains), and every serving
-    artifact is a literal-centroid expression over that base, so the
-    eager localCheckpoint cuts (and the k-means-output join) are gone —
-    there is no training lineage left to cut.  Bit-identical to the
-    checkpointed composition (same argmin/mean expressions, same serve
-    dataflow); the oracle is unchanged."""
+    probe float, score compressed via the ADC lookup table.  Trained by
+    operators/similarity.py::ivfpq_train (coarse and PQ Lloyd rounds
+    fused, one corpus-scan job per round); every serving artifact is a
+    literal-centroid expression over its persisted base."""
     e = load_table(spark, sf_dir, "embeddings")
     return SIM.knn_ivfpq_selftrained(
         e, "vec_id", "embedding", QUERY_MOD, K, IVF_KMEANS_NPROBE,
@@ -1192,8 +1164,7 @@ def knn_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full production ANN serving stack under one hash gate —
     FAISS ``IndexRefineFlat(IndexIVFPQ)``: k-means cells bound the scan,
     PQ codes bound the bytes, exact re-rank restores exact ordering
-    over each query's top-C survivors.  r15: fused literal-centroid
-    training, artifacts as expressions — see :func:`knn_ivfpq`."""
+    over each query's top-C survivors.  Trained as :func:`knn_ivfpq`."""
     e = load_table(spark, sf_dir, "embeddings")
     return SIM.knn_ivfpq_selftrained(
         e, "vec_id", "embedding", QUERY_MOD, K, IVF_KMEANS_NPROBE,
@@ -1294,36 +1265,19 @@ _RESIDUAL_PARTS_CACHE: dict[tuple[str, str], tuple] = {}
 def _residual_pq_parts(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Shared TRAIN stage of the residual-IVFPQ family: coarse k-means
-    cells, float cell centroids, then PQ codebooks trained on the
-    RESIDUALS ``x − c_cell`` (operators/similarity.py::pq_residuals) —
-    the standard FAISS ``IndexIVFPQ`` training semantics.  Returns
-    ``(e, cells, icents, codes, pqcents)`` with every trained artifact
-    behind an eager ``localCheckpoint`` lineage cut; cached per
-    (session, sf_dir) so the plain and refined residual gate rows share
-    one training (the r11-task-5 de-duplication discipline)."""
+    """Shared TRAIN stage of the residual-IVFPQ family:
+    :func:`SIM.ivfpq_train` with ``residual=True`` (PQ codebooks trained
+    on the RESIDUALS ``x − c_cell`` — the standard FAISS ``IndexIVFPQ``
+    training semantics).  Returns ``(e, cells, icents, codes,
+    pqcents)``; cached per (session, sf_dir) so the plain and refined
+    residual gate rows share one training (the r11-task-5
+    de-duplication discipline)."""
     key = (spark.sparkContext.applicationId, sf_dir)
     cached = _RESIDUAL_PARTS_CACHE.get(key)
     if cached is not None:
         return cached
     e = load_table(spark, sf_dir, "embeddings")
-    cells = (
-        SIM.kmeans_assign(e, "vec_id", "embedding", k=10, iters=2)
-        .select("vec_id", F.col("cluster_id").alias("cell"))
-        .localCheckpoint(eager=True)
-    )
-    icents = SIM.ivf_centroids(
-        SIM.normed(e, "vec_id", "embedding").join(cells, "vec_id"), "cell"
-    ).localCheckpoint(eager=True)
-    resid = SIM.pq_residuals(e, "vec_id", "embedding", cells, icents)
-    codes, pqcents = SIM.pq_train(resid, "vec_id", "v")
-    parts = (
-        e,
-        cells,
-        icents,
-        codes.localCheckpoint(eager=True),
-        pqcents.localCheckpoint(eager=True),
-    )
+    parts = (e, *SIM.ivfpq_train(e, "vec_id", "embedding", residual=True))
     _RESIDUAL_PARTS_CACHE[key] = parts
     return parts
 
@@ -1593,9 +1547,9 @@ def ann_index_train(
     membership, float coarse centroids, code table, sub-codebooks — as
     ONE versioned artifact (sinks/versioned.py: snapshot + atomic
     pointer flip), so a crash mid-train can never publish half an index
-    and yesterday's index stays time-travelable.  This is the durable
-    form of the ``localCheckpoint`` lineage cuts the in-plan
-    ``knn_ivfpq`` query applies: production trains once, then any
+    and yesterday's index stays time-travelable.  Training is
+    :func:`SIM.ivfpq_train`; its per-vector parts are computed inside
+    the single artifact-write job.  Production trains once, then any
     number of :func:`ann_index_load` serves amortize it.
 
     Artifact layout: one table, four row kinds under a unified schema
@@ -1617,8 +1571,9 @@ def ann_index_train(
     (:func:`ann_index_extend`) and serving know which ADC math applies
     — a residual index served with raw-PQ arithmetic (or extended with
     raw-encoded vectors) would be silently wrong, which is why the flag
-    lives IN the artifact rather than in the caller's head.  Returns
-    the artifact version."""
+    lives IN the artifact rather than in the caller's head.  Raises
+    ``ValueError`` on a corpus with nothing to seed from (see
+    :func:`SIM.ivfpq_train`).  Returns the artifact version."""
     from data_pipelines_using_llm_spark.sinks.versioned import (
         versioned_write,
     )
@@ -1628,105 +1583,11 @@ def ann_index_train(
         if source is not None
         else load_table(spark, sf_dir, "embeddings")
     )
-    # r15 (guide §1.2-1, §2.4): training artifacts are control-plane
-    # literals, so the raw path trains coarse+PQ FUSED over one
-    # persisted base (one scan job per Lloyd round, one seed collect)
-    # and the per-vector parts (cells, codes) are projected columns of
-    # that base computed INSIDE the single artifact-write job — the
-    # eager checkpoint of the assignment and the corpus-wide
-    # normed⋈cells join are gone.  Values are bit-identical (same
-    # argmin / decimal-mean expressions; the stored-serve gates share
-    # the in-plan oracles verbatim).
-    if not residual:
-        trained = SIM.ivfpq_train_literals(e, "vec_id", "embedding")
-        if trained is not None:
-            coarse, pqc, base = trained
-            subdim = SIM.DIM // SIM.PQ_M
-            cell_sql = f"({SIM._least_assign_sql('v', coarse)}).cid"
-            with_cell = base.select(
-                "vec_id", "v", F.expr(cell_sql).alias("cell")
-            )
-            cells = with_cell.select("vec_id", "cell")
-            icents = SIM.ivf_centroids(with_cell, "cell")
-            codes_sql = SIM._pq_codes_arr_sql(pqc, SIM.PQ_M, subdim)
-            codes = base.select(
-                "vec_id", F.posexplode(F.expr(codes_sql)).alias("m", "code")
-            )
-            pex = base.filter(F.col("v").isNotNull()).select(
-                "v", F.posexplode(F.expr(codes_sql)).alias("m", "code")
-            )
-            psums = pex.groupBy("m", "code").agg(
-                *SIM._mean_aggs(
-                    lambda i: (
-                        f"try_element_at(v, CAST(m * {subdim} + {i} AS INT))"
-                    ),
-                    subdim,
-                )
-            )
-            pqcents = psums.select(
-                "m", "code", SIM._means_array(subdim).alias("cv")
-            ).select(
-                "m", "code", "cv",
-                SIM.dot(F.col("cv"), F.col("cv")).alias("cn2"),
-            )
-            return versioned_write(
-                _ann_index_pack(
-                    cells, icents, codes, pqcents, residual=False
-                ),
-                table_dir,
-            )
-    if residual:
-        trained = SIM.kmeans_cents_literals(e, "vec_id", "embedding")
-        if trained is not None:
-            # residual regime (r15): the coarse quantizer is literal, so
-            # the cell id is a projected column of the persisted base —
-            # pq_residuals' corpus-wide base⋈cells join is gone; the
-            # residual subtraction is the same zip_with over the same
-            # broadcast centroid table.  icents stays an eager
-            # localCheckpoint (consumed by both the residual computation
-            # and the artifact pack).
-            coarse, base = trained
-            with_cell = base.select(
-                "vec_id", "v",
-                F.expr(f"({SIM._least_assign_sql('v', coarse)}).cid").alias(
-                    "cell"
-                ),
-            )
-            cells = with_cell.select("vec_id", "cell")
-            icents = SIM.ivf_centroids(with_cell, "cell").localCheckpoint(
-                eager=True
-            )
-            pq_src = with_cell.join(
-                F.broadcast(icents.select("cell", F.col("cv").alias("ccv"))),
-                "cell",
-            ).select(
-                "vec_id",
-                F.zip_with("v", "ccv", lambda a, b: a - b).alias("v"),
-                "cell",
-            )
-            codes, pqcents = SIM.pq_train(pq_src, "vec_id", "v")
-            return versioned_write(
-                _ann_index_pack(
-                    cells, icents, codes, pqcents, residual=True
-                ),
-                table_dir,
-            )
-    cells = (
-        SIM.kmeans_assign(e, "vec_id", "embedding", k=10, iters=2)
-        .select("vec_id", F.col("cluster_id").alias("cell"))
-        .localCheckpoint(eager=True)
-    )
-    icents = SIM.ivf_centroids(
-        SIM.normed(e, "vec_id", "embedding").join(cells, "vec_id"), "cell"
-    )
-    if residual:
-        icents = icents.localCheckpoint(eager=True)  # consumed twice
-        pq_src = SIM.pq_residuals(e, "vec_id", "embedding", cells, icents)
-        codes, pqcents = SIM.pq_train(pq_src, "vec_id", "v")
-    else:
-        codes, pqcents = SIM.pq_train(e, "vec_id", "embedding")
     return versioned_write(
-        _ann_index_pack(cells, icents, codes, pqcents, residual=residual),
+        _ann_index_pack(
+            *SIM.ivfpq_train(e, "vec_id", "embedding", residual),
+            residual=residual,
+        ),
         table_dir,
     )
 
@@ -1815,6 +1676,19 @@ def ann_index_meta(
         .first()
     )
     return {"residual": bool(row["m"]) if row is not None else False}
+
+
+def _require_regime(spark: SparkSession, table_dir: str, residual: bool) -> None:
+    """Raise ``ValueError`` unless the artifact at ``table_dir`` records
+    the expected encoding regime: the regime must round-trip IN the
+    artifact, or a seam that dropped the meta row would let every
+    consumer serve residual codes with raw ADC math."""
+    if ann_index_meta(spark, table_dir)["residual"] is not residual:
+        want = "residual" if residual else "raw"
+        raise ValueError(
+            f"ANN index at {table_dir}: expected the {want} encoding "
+            "regime, but its meta row records the other"
+        )
 
 
 def ann_index_extend(
@@ -2065,7 +1939,7 @@ def knn_ivfpq_residual_removed(
                 "vec_id"
             ),
         )
-        assert ann_index_meta(spark, tdir)["residual"]
+        _require_regime(spark, tdir, residual=True)
         cells, icents, codes, pqcents = (
             part.localCheckpoint(eager=True)
             for part in ann_index_load(spark, tdir)
@@ -2139,10 +2013,7 @@ def shared_index_parts(
         tdir = tempfile.mkdtemp(prefix="ann_shared_idx_")
         try:
             ann_index_train(spark, sf_dir, tdir, residual=residual)
-            # the encoding regime must round-trip IN the artifact —
-            # a seam that silently dropped the meta row would let every
-            # consumer serve residual codes with raw ADC math
-            assert ann_index_meta(spark, tdir)["residual"] is residual
+            _require_regime(spark, tdir, residual)
             parts = tuple(
                 part.localCheckpoint(eager=True)
                 for part in ann_index_load(spark, tdir)
@@ -2408,14 +2279,14 @@ _SKEW_CAND_PRED = (
 # its full membership is tiny, and the default depth leaves too few
 # same-tenant candidates per probed cell to fill k.
 #
-# _IVF_NCELLS MUST equal the trained index's cell count (the k=10 the
-# family trains with and the oracle generators' k default).  If the
+# _IVF_NCELLS MUST equal the trained index's cell count (SIM.IVF_CELLS,
+# which is also the oracle generators' k default).  If the
 # two drifted, the Spark policy and the oracle's probe bound would
 # still AGREE with each other — the hash gate stays green — while
 # "probe every cell" silently became a partial probe, so the tie is
 # pinned by tests/test_similarity.py::
 # test_skew_full_probe_covers_all_cells against the live artifact.
-_IVF_NCELLS = 10
+_IVF_NCELLS = SIM.IVF_CELLS
 _SKEW_HOT_SHARE = 0.05
 _SKEW_PROBE_BOUND = (
     "(CASE WHEN (SELECT count(*) FROM embeddings et WHERE "

@@ -37,12 +37,6 @@ def default_fetcher(url: str, timeout: float = DEFAULT_TIMEOUT_S) -> str:
         return resp.read().decode("utf-8")
 
 
-def fetch_payload(url: str, fetcher: Callable[[str], str] | None = None) -> str:
-    """S1 single-feed fetch (driver-side, one payload per run — the
-    reference's exact shape)."""
-    return (fetcher or default_fetcher)(url)
-
-
 def fetch_url_table(
     urls: DataFrame,
     url_col: str = "url",

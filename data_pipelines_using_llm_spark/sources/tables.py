@@ -10,6 +10,7 @@ predicate pushdown and column pruning for free.
 from __future__ import annotations
 
 import os
+import re
 from functools import lru_cache
 
 import pyarrow.parquet as pq
@@ -71,16 +72,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+_BYTE_SUFFIXES = {
+    "": 1, "b": 1,
+    "k": 1 << 10, "kb": 1 << 10,
+    "m": 1 << 20, "mb": 1 << 20,
+    "g": 1 << 30, "gb": 1 << 30,
+    "t": 1 << 40, "tb": 1 << 40,
+    "p": 1 << 50, "pb": 1 << 50,
+}
+
+
 def _size_suffix_bytes(v: str) -> int:
-    """Parse a Spark size conf value ("134217728", "128m", "1g") to bytes."""
-    s = v.strip().lower()
-    mult = 1
-    for suf, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1)):
-        if s.endswith(suf):
-            s = s[: -len(suf)]
-            mult = m
-            break
-    return int(float(s) * mult)
+    """Parse a Spark size conf value ("134217728", "128m", "128MB") to
+    bytes with the grammar of ``JavaUtils.byteStringAsBytes``: an integer
+    and an optional case-insensitive suffix from ``_BYTE_SUFFIXES``.
+    Anything else raises ``ValueError``."""
+    m = re.fullmatch(r"([0-9]+)([a-z]*)", v.strip().lower())
+    if m is None or m.group(2) not in _BYTE_SUFFIXES:
+        raise ValueError(f"invalid byte size {v!r}")
+    return int(m.group(1)) * _BYTE_SUFFIXES[m.group(2)]
 
 
 def spread_to_cores(df: DataFrame) -> DataFrame:
@@ -122,12 +132,9 @@ def spread_to_cores(df: DataFrame) -> DataFrame:
             total += os.path.getsize(path)
         except OSError:
             return df  # non-local / unstattable: assume scale, no-op
-    try:
-        max_pb = _size_suffix_bytes(
-            session.conf.get("spark.sql.files.maxPartitionBytes")
-        )
-    except Exception:
-        max_pb = 128 * 1024 * 1024
+    max_pb = _size_suffix_bytes(
+        session.conf.get("spark.sql.files.maxPartitionBytes")
+    )
     est_tasks = max(1, -(-total // max_pb))
     if est_tasks < want:
         return df.repartition(want)
@@ -143,9 +150,3 @@ def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TA
     """
     for name in names:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def table_exists(spark: SparkSession, name: str) -> bool:
-    """Catalog probe (S6) — ``spark.catalog.tableExists`` branch used by the
-    reference to pick create-vs-append (``Second Experiment/GPT 5 nano.py:114``)."""
-    return spark.catalog.tableExists(name)

@@ -144,13 +144,17 @@ def main() -> None:
             )
         )
 
-    # PQ family: codes trained once behind a lineage cut (the serve-time
-    # contract of knn_pq/knn_ivfpq), excluded from serve timings like IVF
-    codes, pqcents = SIM.pq_train(e, "vec_id", "embedding")
-    pq = (
-        codes.localCheckpoint(eager=True),
-        pqcents.localCheckpoint(eager=True),
-    )
+    # PQ family: the IVFPQ trainer's parts, materialized once and
+    # excluded from serve timings like IVF.  Its coarse quantizer is the
+    # same k-means (k=10, 2 rounds) that produced ``kcell``.
+    def train(residual: bool) -> list:
+        return [
+            part.localCheckpoint(eager=True)
+            for part in SIM.ivfpq_train(e, "vec_id", "embedding", residual)
+        ]
+
+    _, icents, codes, pqcents = train(False)
+    pq = (codes, pqcents)
     mk_pq = lambda: SIM.knn_pq(  # noqa: E731
         e, "vec_id", "embedding", SQ.QUERY_MOD, SQ.K, pq=pq
     )
@@ -158,7 +162,7 @@ def main() -> None:
     for nprobe in (4, 8):
         mk = lambda: SIM.knn_ivfpq(  # noqa: E731
             labeled, "vec_id", "embedding", "kcell", SQ.QUERY_MOD, SQ.K,
-            nprobe, pq=pq,
+            nprobe, pq=pq, ivf=icents,
         )
         rows.append(
             (
@@ -183,7 +187,7 @@ def main() -> None:
     for factor in (2, 8, 32):
         mk = lambda: SIM.knn_ivfpq_refined(  # noqa: E731
             labeled, "vec_id", "embedding", "kcell", SQ.QUERY_MOD, SQ.K,
-            8, refine_factor=factor, pq=pq,
+            8, refine_factor=factor, pq=pq, ivf=icents,
         )
         rows.append(
             (
@@ -195,17 +199,10 @@ def main() -> None:
         )
 
     # Residual-encoded IVFPQ (r11 verdict task 1): PQ over x - c_cell —
-    # the standard FAISS IndexIVFPQ semantics.  Same trained coarse
-    # quantizer; codebooks retrained on residuals (train cost excluded
-    # from serve timings like the rest of the PQ family).
-    cells_r = cells.select("vec_id", F.col("kcell").alias("cell"))
-    icents_r = SIM.ivf_centroids(
-        SIM.normed(e, "vec_id", "embedding").join(cells_r, "vec_id"), "cell"
-    ).localCheckpoint(eager=True)
-    resid = SIM.pq_residuals(e, "vec_id", "embedding", cells_r, icents_r)
-    codes_r, pqcents_r = SIM.pq_train(resid, "vec_id", "v")
-    codes_r = codes_r.localCheckpoint(eager=True)
-    pqcents_r = pqcents_r.localCheckpoint(eager=True)
+    # the standard FAISS IndexIVFPQ semantics.  Same coarse quantizer;
+    # codebooks trained on residuals (train cost excluded from serve
+    # timings like the rest of the PQ family).
+    cells_r, icents_r, codes_r, pqcents_r = train(True)
     queries = (
         SIM.normed(e, "vec_id", "embedding")
         .filter(F.col("vec_id") % SQ.QUERY_MOD == 0)

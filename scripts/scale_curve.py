@@ -217,7 +217,9 @@ def main() -> int:
 
         # PQ/ADC serve: codes trained once per factor OUTSIDE the timer
         # (production amortizes training; the curve measures the scan)
-        pq_codes, pq_cents = SIM.pq_train(emb, "vec_id", "embedding")
+        *_, pq_codes, pq_cents = SIM.ivfpq_train(
+            emb, "vec_id", "embedding", iters=0
+        )
         pq_state = (
             pq_codes.localCheckpoint(eager=True),
             pq_cents.localCheckpoint(eager=True),

@@ -390,3 +390,27 @@ def test_read_binary_dir_media_landing(spark, tmp_path):
     )
     stats = {r["media_id"]: r["n_bytes"] for r in decode_stats(media).collect()}
     assert sorted(stats.values()) == [2, 21]
+
+
+@pytest.mark.parametrize(
+    "value,expected",
+    [
+        ("134217728b", 134217728),
+        ("128m", 128 << 20),
+        ("128mb", 128 << 20),
+        ("64kb", 64 << 10),
+        ("1gb", 1 << 30),
+        ("12 parsecs", None),
+    ],
+)
+def test_size_suffix_bytes_accepts_spark_byte_strings(value, expected):
+    """Spark's byte-string grammar (``JavaUtils.byteStringAsBytes``),
+    two-letter suffixes included; anything else raises instead of being
+    replaced by a silent default."""
+    from data_pipelines_using_llm_spark.sources.tables import _size_suffix_bytes
+
+    if expected is None:
+        with pytest.raises(ValueError):
+            _size_suffix_bytes(value)
+    else:
+        assert _size_suffix_bytes(value) == expected

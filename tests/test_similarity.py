@@ -3,6 +3,7 @@ covered by test_oracle.py; these assert the queries return real work)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_pipelines_using_llm_spark.plans import similarity_queries as SQ
@@ -90,8 +91,8 @@ def test_knn_pq_structure_and_recall_floor(spark):
     assert per_q, "no queries produced"
     for q, ranks in per_q.items():
         assert sorted(ranks) == list(range(1, len(ranks) + 1)), q
-    codes, cents = SIM.pq_train(
-        load_table(spark, sf, "embeddings"), "vec_id", "embedding"
+    *_, codes, cents = SIM.ivfpq_train(
+        load_table(spark, sf, "embeddings"), "vec_id", "embedding", iters=0
     )
     cd = codes.toPandas()
     assert set(cd["m"]) == set(range(SIM.PQ_M))
@@ -638,33 +639,6 @@ def test_hard_negatives_below_threshold_and_ranked(spark):
         .collect()
     )
     assert all(r["mx"] == r["n"] <= HARD_NEG_K for r in ranks)
-
-
-def test_kmeans_assign_arrow_agrees_with_exact(spark):
-    """The GEMM assignment path must reproduce the fold-exact variant:
-    >=99% identical assignments at sf0.01 (flips possible only on exact
-    distance near-ties in the last ulp), distances equal to 1e-6 where
-    assignments agree."""
-    from data_pipelines_using_llm_spark.operators import similarity as SIM
-    from data_pipelines_using_llm_spark.sources.tables import load_table
-
-    sf = "/root/testdata/sf0.01"
-    e = load_table(spark, sf, "embeddings")
-    exact = {
-        r["vec_id"]: (r["cluster_id"], r["dist"])
-        for r in SIM.kmeans_assign(e, "vec_id", "embedding", 10, 2).collect()
-    }
-    arrow = {
-        r["vec_id"]: (r["cluster_id"], r["dist"])
-        for r in SIM.kmeans_assign_arrow(
-            e, "vec_id", "embedding", 10, 2
-        ).collect()
-    }
-    assert exact.keys() == arrow.keys()
-    same = [v for v in exact if exact[v][0] == arrow[v][0]]
-    assert len(same) / len(exact) >= 0.99
-    for v in same:
-        assert abs(exact[v][1] - arrow[v][1]) <= 1e-6, v
 
 
 def test_farthest_point_sample_properties(spark):
@@ -1283,3 +1257,42 @@ def test_residual_encoding_recall_floor_and_gain(spark):
     raw = recall(SQ.knn_ivfpq(spark, sf).collect())
     assert res >= 0.15, res
     assert res >= raw, (res, raw)
+
+
+@pytest.mark.parametrize("corpus", ["empty", "no_seed_ids"])
+def test_ivfpq_training_rejects_unseedable_corpus(spark, tmp_path, corpus):
+    """A corpus with nothing to seed from — an empty frame, or no
+    ``vec_id`` below the seed bound ``max(k, PQ_K)`` — must raise a
+    named ``ValueError`` from every training entry point, never publish
+    an empty index."""
+    from data_pipelines_using_llm_spark.operators import similarity as SIM
+    from data_pipelines_using_llm_spark.sources.tables import load_table
+
+    e = load_table(spark, SF_DIR, "embeddings")
+    bad = (
+        e.filter(F.lit(False))
+        if corpus == "empty"
+        else e.filter(F.col("vec_id") >= max(10, SIM.PQ_K))
+    )
+    for residual in (False, True):
+        tdir = str(tmp_path / f"idx_{residual}")
+        with pytest.raises(ValueError, match="no seed vectors"):
+            SQ.ann_index_train(
+                spark, SF_DIR, tdir, source=bad, residual=residual
+            )
+    with pytest.raises(ValueError, match="no seed vectors"):
+        SIM.knn_ivfpq_selftrained(bad, "vec_id", "embedding")
+
+
+@pytest.mark.parametrize("residual", [False, True])
+def test_shared_index_rejects_wrong_encoding_regime(
+    spark, monkeypatch, residual
+):
+    """An artifact whose meta row reports the other encoding regime must
+    raise ``ValueError`` (a bare ``assert`` vanishes under ``python -O``)."""
+    monkeypatch.setattr(SQ, "_SHARED_INDEX_CACHE", {})
+    monkeypatch.setattr(
+        SQ, "ann_index_meta", lambda *a, **k: {"residual": not residual}
+    )
+    with pytest.raises(ValueError, match="encoding regime"):
+        SQ.shared_index_parts(spark, SF_DIR, residual=residual)
