@@ -687,20 +687,20 @@ def main() -> int:
                 "ann_index_train",
                 lambda: ann_index_train(spark, sf_dir, tdir),
             )
-            idx: dict[str, object] = {}
 
-            def _ivfpq_stored_serve() -> None:
-                cells, icents, codes, pqcents = ann_index_load(spark, tdir)
+            def _stored_serve(index_dir: str, residual: bool) -> None:
                 emb2 = load_table(spark, sf_dir, "embeddings")
-                SIM2.knn_ivfpq(
-                    emb2.join(
-                        cells.withColumnRenamed("cell", "kcell"), "vec_id"
+                SIM2.ivfpq_serve(
+                    SIM2.query_block(
+                        SIM2.normed(emb2, "vec_id", "embedding"), SQ_MOD2
                     ),
-                    "vec_id", "embedding", "kcell", SQ_MOD2, SQ_K2,
-                    SQ_NPROBE, pq=(codes, pqcents), ivf=icents,
+                    *ann_index_load(spark, index_dir),
+                    SQ_K2, SQ_NPROBE, residual=residual,
                 ).write.format("noop").mode("overwrite").save()
 
-            _time_stage("knn_ivfpq_stored_serve", _ivfpq_stored_serve)
+            _time_stage(
+                "knn_ivfpq_stored_serve", lambda: _stored_serve(tdir, False)
+            )
 
             # append cost (the production daily-add number): extend the
             # stored index with a small batch of re-id'd vectors —
@@ -743,23 +743,9 @@ def main() -> int:
                 "ann_index_train_residual",
                 lambda: ann_index_train(spark, sf_dir, rdir, residual=True),
             )
-
-            def _residual_stored_serve() -> None:
-                cells, icents, codes, pqcents = ann_index_load(spark, rdir)
-                emb4 = load_table(spark, sf_dir, "embeddings")
-                queries = SIM2.normed(
-                    emb4.filter(F.col("vec_id") % SQ_MOD2 == 0),
-                    "vec_id", "embedding",
-                ).select(
-                    F.col("vec_id").alias("query_id"),
-                    F.col("v").alias("qv"),
-                    F.col("nrm").alias("qnrm"),
-                )
-                SIM2.ivfpq_residual_serve(
-                    queries, cells, icents, codes, pqcents, SQ_K2, SQ_NPROBE
-                ).write.format("noop").mode("overwrite").save()
-
-            _time_stage("knn_ivfpq_residual_serve", _residual_stored_serve)
+            _time_stage(
+                "knn_ivfpq_residual_serve", lambda: _stored_serve(rdir, True)
+            )
         finally:
             shutil.rmtree(rdir, ignore_errors=True)
         _safe_release()

@@ -113,44 +113,35 @@ def lsh_bucket(v: Column, table: int) -> Column:
     return bucket_from_planes(v, HYPERPLANES[table])
 
 
-def normed(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """Project to (vec_id, v: array<double>, nrm) — the shared base of every
-    operator below (norm computed once, not per pair)."""
+def normed(df: DataFrame, id_col: str, vec_col: str, *extra: Column) -> DataFrame:
+    """Project to (vec_id, v: array<double>, nrm, *extra) — the shared base
+    of every operator below (norm computed once, not per pair).  ``extra``
+    rides along in the SAME projection (a row's IVF cell or tenant label),
+    so no operator re-attaches an input column through a corpus self-join
+    on the unique id."""
     return df.select(
         F.col(id_col).alias("vec_id"),
         to_double(vec_col).alias("v"),
         norm(to_double(vec_col)).alias("nrm"),
+        *extra,
     )
 
 
-def knn_brute_force(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_mod: int = 100,
-    k: int = DEFAULT_K,
-) -> DataFrame:
-    """Exact cosine top-k: every vec_id divisible by ``query_mod`` is a
-    query; neighbors ranked by cosine desc (id asc tiebreak), self excluded.
-
-    The query side is explicitly broadcast — at 100 TB the corpus streams
-    through the executors once, and the only shuffle is the per-query
-    top-k window (small: |queries| × |corpus-partition| rows pre-filtered
-    to k per partition by the window's rank).
-    """
-    base = normed(df, id_col, vec_col)
-    queries = base.filter(F.col("vec_id") % query_mod == 0).select(
+def query_block(base: DataFrame, query_mod: int, *extra: Column) -> DataFrame:
+    """The query side of a ``(vec_id, v, nrm)`` base: every row whose id is
+    divisible by ``query_mod``, as ``(query_id, qv, qnrm, *extra)``."""
+    return base.filter(F.col("vec_id") % query_mod == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.col("nrm").alias("qnrm"),
+        *extra,
     )
-    scored = F.broadcast(queries).join(
-        base, F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))).alias("cos"),
-    )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The per-query top-k tail every kNN operator shares: rank
+    ``(query_id, neighbor_id, cos)`` rows by cosine desc (neighbor id asc
+    tiebreak), keep ranks <= ``k``, and round the score to 6 places."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id")
     )
@@ -164,6 +155,72 @@ def knn_brute_force(
             "rank",
         )
     )
+
+
+def _cos(a: str, b: str, na: str, nb: str) -> Column:
+    """Cosine of the vector columns ``a``, ``b`` given their norm columns
+    ``na``, ``nb``: the sequential-fold dot over the norm product."""
+    return dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb))
+
+
+def _probe(
+    queries: DataFrame, cents: DataFrame, nprobe: int | Column, *carry: str
+) -> DataFrame:
+    """The coarse IVF probe: each query's ``nprobe`` highest-cosine cells
+    (lowest cell id on ties) as ``(query_id, *carry, cell)`` rows, both
+    sides broadcast.  ``nprobe`` may be a per-query column."""
+    wprobe = Window.partitionBy("query_id").orderBy(
+        F.col("ccos").desc(), F.col("cell")
+    )
+    return (
+        F.broadcast(queries)
+        .crossJoin(F.broadcast(cents))
+        .select(
+            "query_id", *carry, "cell", _cos("qv", "cv", "qnrm", "cnrm").alias("ccos")
+        )
+        .withColumn("crank", F.row_number().over(wprobe))
+        .filter(F.col("crank") <= nprobe)
+        .select("query_id", *carry, "cell")
+    )
+
+
+def knn_brute_force(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    query_mod: int = 100,
+    k: int = DEFAULT_K,
+    label: Column | None = None,
+) -> DataFrame:
+    """Exact cosine top-k: every vec_id divisible by ``query_mod`` is a
+    query; neighbors ranked by cosine desc (id asc tiebreak), self excluded.
+
+    The query side is explicitly broadcast — at 100 TB the corpus streams
+    through the executors once, and the only shuffle is the per-query
+    top-k window (small: |queries| × |corpus-partition| rows pre-filtered
+    to k per partition by the window's rank).
+
+    ``label`` (a column expression over ``df``, e.g. a tenant id) makes
+    this the EXACT metadata-filtered top-k: each query ranks only the
+    vectors whose label equals its own — one extra equi-predicate on the
+    same pair join, the recall baseline of the filtered ANN family.
+    """
+    if label is None:
+        base = normed(df, id_col, vec_col)
+        queries = query_block(base, query_mod)
+        on = F.col("vec_id") != F.col("query_id")
+    else:
+        base = normed(df, id_col, vec_col, label.alias("label"))
+        queries = query_block(base, query_mod, F.col("label").alias("qlabel"))
+        on = (F.col("vec_id") != F.col("query_id")) & (
+            F.col("label") == F.col("qlabel")
+        )
+    scored = F.broadcast(queries).join(base, on).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        _cos("qv", "v", "qnrm", "nrm").alias("cos"),
+    )
+    return _top_k(scored, k)
 
 
 def _bucketed(base: DataFrame) -> DataFrame:
@@ -280,11 +337,9 @@ def knn_lsh(
         ]
     )
     probes = (
-        sig.filter(F.col("vec_id") % query_mod == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qnrm"),
+        query_block(
+            sig,
+            query_mod,
             F.col("bkts").alias("qbkts"),
             F.explode(probe_list).alias("c"),
         )
@@ -325,21 +380,9 @@ def knn_lsh(
     scored = cand.select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        (dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))).alias("cos"),
+        _cos("qv", "v", "qnrm", "nrm").alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 6).alias("cosine_sim"),
-            "rank",
-        )
-    )
+    return _top_k(scored, k)
 
 
 def ivf_centroids(base: DataFrame, cell_col: str) -> DataFrame:
@@ -364,21 +407,6 @@ def ivf_centroids(base: DataFrame, cell_col: str) -> DataFrame:
     )
 
 
-def _normed_with_cell(df: DataFrame, id_col: str, vec_col: str, cell_col: str) -> DataFrame:
-    """(vec_id, v, nrm, cell) as ONE projection — r15: previously every
-    IVF serve path built this as ``normed(df) ⋈ df[vec_id, cell]``, a
-    corpus SELF-join on a unique key whose only effect was re-attaching
-    a column the input row already carried.  The projection is
-    value-identical (ids are unique, so the join duplicated/dropped
-    nothing) and removes one corpus-wide exchange from every serve."""
-    return df.select(
-        F.col(id_col).alias("vec_id"),
-        to_double(vec_col).alias("v"),
-        norm(to_double(vec_col)).alias("nrm"),
-        F.col(cell_col).alias("cell"),
-    )
-
-
 def knn_ivf(
     df: DataFrame,
     id_col: str,
@@ -392,32 +420,10 @@ def knn_ivf(
     probe the ``nprobe`` nearest cell centroids, exact cosine within probed
     cells only.  At scale the corpus is hash-partitioned by cell and only
     probed cells are scanned; centroids + queries broadcast."""
-    base = _normed_with_cell(df, id_col, vec_col, cell_col)
+    base = normed(df, id_col, vec_col, F.col(cell_col).alias("cell"))
     cents = ivf_centroids(base, "cell")
-    queries = base.filter(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(
-        F.col("ccos").desc(), F.col("cell")
-    )
-    probes = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "qv",
-            "qnrm",
-            "cell",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("qnrm") * F.col("cnrm"))).alias(
-                "ccos"
-            ),
-        )
-        .withColumn("crank", F.row_number().over(wprobe))
-        .filter(F.col("crank") <= nprobe)
-        .select("query_id", "qv", "qnrm", "cell")
-    )
+    queries = query_block(base, query_mod)
+    probes = _probe(queries, cents, nprobe, "qv", "qnrm")
     scored = (
         F.broadcast(probes)
         .join(base, "cell")
@@ -425,24 +431,10 @@ def knn_ivf(
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            (dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))).alias(
-                "cos"
-            ),
+            _cos("qv", "v", "qnrm", "nrm").alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 6).alias("cosine_sim"),
-            "rank",
-        )
-    )
+    return _top_k(scored, k)
 
 
 def ivf_scan_stats(
@@ -458,28 +450,11 @@ def ivf_scan_stats(
     ``corpus_rows`` — the scan fraction that decides whether an IVF config
     actually beats brute force at scale.  Same probe selection as
     :func:`knn_ivf`, so the numbers are the real ones."""
-    base = _normed_with_cell(df, id_col, vec_col, cell_col)
+    base = normed(df, id_col, vec_col, F.col(cell_col).alias("cell"))
     cents = ivf_centroids(base, "cell")
     sizes = base.groupBy("cell").agg(F.count(F.lit(1)).alias("cell_rows"))
-    queries = base.filter(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(F.col("ccos").desc(), F.col("cell"))
-    probes = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "cell",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("qnrm") * F.col("cnrm"))).alias(
-                "ccos"
-            ),
-        )
-        .withColumn("crank", F.row_number().over(wprobe))
-        .filter(F.col("crank") <= nprobe)
-    )
+    queries = query_block(base, query_mod)
+    probes = _probe(queries, cents, nprobe)
     total = base.count()
     return (
         probes.join(sizes, "cell")
@@ -972,19 +947,7 @@ def knn_arrow(
     local = base.mapInPandas(
         part_topk, schema="query_id long, neighbor_id long, cos double"
     ).filter(F.col("cos") > float("-inf"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 6).alias("cosine_sim"),
-            "rank",
-        )
-    )
+    return _top_k(local, k)
 
 
 # ---- int8 scalar quantization (vector compression serving path) ----
@@ -1071,19 +1034,7 @@ def knn_int8(
             / (F.col("qqnrm") * F.col("qnrm"))
         ).alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 6).alias("cosine_sim"),
-            "rank",
-        )
-    )
+    return _top_k(scored, k)
 
 
 def knn_ivf_int8(
@@ -1110,7 +1061,7 @@ def knn_ivf_int8(
     Fully deterministic (float folds are sequential, int dots exact), so
     the whole stack hash-gates cross-engine — rare for an ANN pipeline.
     """
-    base = _normed_with_cell(df, id_col, vec_col, cell_col)
+    base = normed(df, id_col, vec_col, F.col(cell_col).alias("cell"))
     # int8 codes as columns of the SAME projection (r15): the previous
     # ``base ⋈ codes`` was a second corpus self-join on the unique id —
     # q/qnrm8 are per-row expressions of the input row, value-identical
@@ -1121,32 +1072,10 @@ def knn_ivf_int8(
         "qnrm8", F.sqrt(idot(F.col("q"), F.col("q")).cast("double"))
     )
     cents = ivf_centroids(base, "cell")
-    queries = base8.filter(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-        F.col("q").alias("qq"),
-        F.col("qnrm8").alias("qqnrm8"),
+    queries = query_block(
+        base8, query_mod, F.col("q").alias("qq"), F.col("qnrm8").alias("qqnrm8")
     )
-    wprobe = Window.partitionBy("query_id").orderBy(
-        F.col("ccos").desc(), F.col("cell")
-    )
-    probes = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "qq",
-            "qqnrm8",
-            "cell",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("qnrm") * F.col("cnrm"))).alias(
-                "ccos"
-            ),
-        )
-        .withColumn("crank", F.row_number().over(wprobe))
-        .filter(F.col("crank") <= nprobe)
-        .select("query_id", "qq", "qqnrm8", "cell")
-    )
+    probes = _probe(queries, cents, nprobe, "qq", "qqnrm8")
     scored = (
         F.broadcast(probes)
         .join(base8, "cell")
@@ -1160,19 +1089,7 @@ def knn_ivf_int8(
             ).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 6).alias("cosine_sim"),
-            "rank",
-        )
-    )
+    return _top_k(scored, k)
 
 
 DEFAULT_CELL_SIZE = 50
@@ -1280,13 +1197,13 @@ PQ_ITERS = 2
 IVF_CELLS = 10  # coarse cells of the IVFPQ trainer
 
 
-def _pq_codes_arr_sql(cc: dict, m: int, subdim: int) -> str:
-    """The m-long array of per-subspace argmin codes as ONE SQL string —
-    map-side against literal codebooks (:func:`_least_assign_sql`), the
-    joint m-subspace assignment with zero joins."""
+def _pq_codes_arr_sql(cc: dict) -> str:
+    """The PQ_M-long array of per-subspace argmin codes as ONE SQL string
+    — map-side against literal codebooks (:func:`_least_assign_sql`), the
+    joint PQ_M-subspace assignment with zero joins."""
     parts = ",".join(
-        f"({_least_assign_sql(_sub_sql(mi, subdim), cc[mi])}).cid"
-        for mi in range(m)
+        f"({_least_assign_sql(_sub_sql(mi, PQ_SUBDIM), cc[mi])}).cid"
+        for mi in range(PQ_M)
     )
     return f"array({parts})"
 
@@ -1335,8 +1252,7 @@ def ivfpq_train(
     or below ``PQ_K`` (an empty corpus included): there is nothing to
     seed from, and an empty index must not be published.
     """
-    k, m, kcodes = IVF_CELLS, PQ_M, PQ_K
-    subdim = DIM // m
+    k, m, kcodes, subdim = IVF_CELLS, PQ_M, PQ_K, PQ_SUBDIM
     base = _train_base(df, id_col, vec_col)
     seed = (
         base.filter(F.col("vec_id") < max(k, kcodes))
@@ -1386,7 +1302,7 @@ def ivfpq_train(
     cell = F.expr(f"({_least_assign_sql('v', coarse)}).cid").alias("cell")
     cells = base.select("vec_id", cell)
     icents = ivf_centroids(base.select("v", cell), "cell")
-    codes_arr = F.expr(_pq_codes_arr_sql(pqc, m, subdim))
+    codes_arr = F.expr(_pq_codes_arr_sql(pqc))
     codes = src.select("vec_id", F.posexplode(codes_arr).alias("m", "code"))
     sums = (
         src.filter(F.col("v").isNotNull())
@@ -1405,39 +1321,6 @@ def ivfpq_train(
     return cells, icents, codes, pqcents
 
 
-def knn_ivfpq_selftrained(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_mod: int = 100,
-    k: int = DEFAULT_K,
-    nprobe: int = 2,
-    refine_factor: int | None = None,
-    n_queries: int | None = None,
-) -> DataFrame:
-    """The self-contained IVFPQ rows' train+serve composition:
-    :func:`ivfpq_train`'s four parts (literal-centroid expressions over
-    one persisted base, so the serve plan carries no training lineage to
-    cut) served by :func:`ivfpq_serve`.  ``refine_factor`` composes the
-    exact re-rank (:func:`_refine_exact`) over the widened candidate list
-    exactly as :func:`knn_ivfpq_refined`."""
-    cells, icents, codes, pqcents = ivfpq_train(df, id_col, vec_col)
-    base = normed(df, id_col, vec_col)
-    queries = base.filter(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    ncand = k if refine_factor is None else refine_factor * k
-    out = ivfpq_serve(queries, cells, icents, codes, pqcents, ncand, nprobe)
-    if refine_factor is None:
-        return out
-    cands = out.select("query_id", "neighbor_id")
-    return _refine_exact(
-        base, cands, query_mod, k, ncand, n_queries=n_queries
-    )
-
-
 def _sorted_fold_sum(key: str, val: str) -> Column:
     """Order-exact sum of ``val`` over a group, sequenced by ``key`` —
     matches the oracle's ``list_reduce(list_prepend(0.0, array_agg(val
@@ -1452,13 +1335,65 @@ def _sorted_fold_sum(key: str, val: str) -> Column:
     )
 
 
+def _sub_dot(vec: str) -> Column:
+    """``Σ_i vec[m·PQ_SUBDIM + i] · cv[i]``: subspace ``m`` of the
+    full-width ``vec`` against the codeword ``cv``, left-folded in the
+    product order the oracle states — the ADC lookup-table entry (``vec``
+    a query) and the residual cross term (``vec`` a cell centroid)."""
+    return F.aggregate(
+        F.transform(
+            F.sequence(F.lit(1), F.lit(PQ_SUBDIM)),
+            lambda i: F.element_at(
+                F.col(vec), (F.col("m") * PQ_SUBDIM + i).cast("int")
+            )
+            * F.element_at(F.col("cv"), i.cast("int")),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _adc_lut(queries: DataFrame, pqcents: DataFrame) -> DataFrame:
+    """The ADC lookup table ``(query_id, qnrm, m, code, partial, cn2)``:
+    every (query, codeword) partial dot product computed ONCE,
+    |queries| x m x k rows, broadcast-size on both sides."""
+    return (
+        F.broadcast(queries)
+        .crossJoin(F.broadcast(pqcents))
+        .select(
+            "query_id", "qnrm", "m", "code", _sub_dot("qv").alias("partial"), "cn2"
+        )
+    )
+
+
+def _adc_aggs(*extra: Column) -> list[Column]:
+    """The per-(query, vector) fold of the m looked-up partials: the ADC
+    dot ``adc``, the reconstruction norm² ``rn2`` (``extra`` folds more
+    per-subspace terms) and the query norm."""
+    return [
+        _sorted_fold_sum("m", "partial").alias("adc"),
+        _sorted_fold_sum("m", "cn2").alias("rn2"),
+        *extra,
+        F.min("qnrm").alias("qnrm"),
+    ]
+
+
+def _adc_cos(agg: DataFrame) -> DataFrame:
+    """Raw-PQ approximate cosine ``adc / (qnrm · sqrt(rn2))`` as the
+    ``(query_id, neighbor_id, cos)`` input of :func:`_top_k`."""
+    return agg.select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        (F.col("adc") / (F.col("qnrm") * F.sqrt("rn2"))).alias("cos"),
+    )
+
+
 def knn_pq(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     query_mod: int = 100,
     k: int = DEFAULT_K,
-    m: int = PQ_M,
     *,
     pq: tuple[DataFrame, DataFrame],
     base: DataFrame | None = None,
@@ -1486,65 +1421,14 @@ def knn_pq(
     cells' codes) is the FAISS IVFPQ layout; the cell equi-join of
     :func:`knn_ivf_int8` composes unchanged with this scorer.
     """
-    subdim = DIM // m
     base = base if base is not None else normed(df, id_col, vec_col)
     codes, cents = pq
-    queries = base.filter(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    # LUT: partial = Σ_i qv[m·subdim + i] · cv[i] — the same product
-    # sequence the oracle states, left-folded
-    partial = F.aggregate(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(subdim)),
-            lambda i: F.element_at(
-                F.col("qv"), (F.col("m") * subdim + i).cast("int")
-            )
-            * F.element_at(F.col("cv"), i.cast("int")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    lut = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "qnrm",
-            "m",
-            "code",
-            partial.alias("partial"),
-            "cn2",
-        )
-    )
+    lut = _adc_lut(query_block(base, query_mod), cents)
     scored_parts = codes.join(F.broadcast(lut), ["m", "code"]).filter(
         F.col("vec_id") != F.col("query_id")
     )
-    agg = scored_parts.groupBy("query_id", "vec_id").agg(
-        _sorted_fold_sum("m", "partial").alias("adc"),
-        _sorted_fold_sum("m", "cn2").alias("rn2"),
-        F.min("qnrm").alias("qnrm"),
-    )
-    scored = agg.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (F.col("adc") / (F.col("qnrm") * F.sqrt("rn2"))).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 6).alias("cosine_sim"),
-            "rank",
-        )
-    )
+    scored = _adc_cos(scored_parts.groupBy("query_id", "vec_id").agg(*_adc_aggs()))
+    return _top_k(scored, k)
 
 
 PQ_REFINE_FACTOR = 8
@@ -1557,7 +1441,6 @@ def knn_pq_refined(
     query_mod: int = 100,
     k: int = DEFAULT_K,
     refine_factor: int = PQ_REFINE_FACTOR,
-    m: int = PQ_M,
     *,
     pq: tuple[DataFrame, DataFrame],
     n_queries: int | None = None,
@@ -1600,7 +1483,7 @@ def knn_pq_refined(
     ncand = refine_factor * k
     base = normed(df, id_col, vec_col)
     cands = knn_pq(
-        df, id_col, vec_col, query_mod, ncand, m, pq=pq, base=base
+        df, id_col, vec_col, query_mod, ncand, pq=pq, base=base
     ).select("query_id", "neighbor_id")
     return _refine_exact(base, cands, query_mod, k, ncand, n_queries=n_queries)
 
@@ -1637,11 +1520,7 @@ def _refine_exact(
     hint is attached and AQE picks the strategy from runtime stats at
     the shuffle boundary.  Same rows every way — the gate changes
     strategy, never results."""
-    queries = base.filter(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
+    queries = query_block(base, query_mod)
     cands_hinted = (
         F.broadcast(cands)
         if n_queries is not None
@@ -1654,111 +1533,9 @@ def _refine_exact(
     exact = fetched.join(F.broadcast(queries), "query_id").select(
         "query_id",
         "neighbor_id",
-        (dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm"))).alias(
-            "cos"
-        ),
+        _cos("qv", "v", "qnrm", "nrm").alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 6).alias("cosine_sim"),
-            "rank",
-        )
-    )
-
-
-def knn_ivfpq_refined(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    cell_col: str,
-    query_mod: int = 100,
-    k: int = DEFAULT_K,
-    nprobe: int = 2,
-    refine_factor: int = PQ_REFINE_FACTOR,
-    m: int = PQ_M,
-    *,
-    pq: tuple[DataFrame, DataFrame],
-    ivf: DataFrame,
-    n_queries: int | None = None,
-) -> DataFrame:
-    """The full FAISS production serving stack as one dataflow —
-    ``IndexRefineFlat(IndexIVFPQ)``: the coarse quantizer bounds WHICH
-    vectors are ADC-scored (:func:`knn_ivfpq`, nprobe cells), the PQ
-    codes bound the BYTES the candidate scan reads, and this refine
-    stage re-scores each query's top-C survivors exactly
-    (:func:`_refine_exact` — size-gated candidate join, one extra
-    full-precision pass restricted by the fetch join, O(|q|·C·d)
-    re-score).  Recall@k = the IVFPQ candidate recall@C, so the refine
-    converts the compressed index's weak ORDERING into exact ordering
-    while inheriting the IVF scan-fraction economics — the standard
-    billion-scale recipe.  Determinism: candidate ranks and exact
-    cosines are both sequenced folds, so the composition hash-gates
-    like its two factors.
-
-    ``n_queries`` (behavior change, r11→r12): as in
-    :func:`knn_pq_refined` — the refine stage's candidate-broadcast
-    hint fires only when the caller supplies the query count (pre-r12
-    an eager plan-time count attached it automatically); omit it and
-    the fetch-join strategy falls to AQE, same rows either way."""
-    ncand = refine_factor * k
-    cands = knn_ivfpq(
-        df, id_col, vec_col, cell_col, query_mod, ncand, nprobe, m,
-        pq=pq, ivf=ivf,
-    ).select("query_id", "neighbor_id")
-    base = normed(df, id_col, vec_col)
-    return _refine_exact(base, cands, query_mod, k, ncand, n_queries=n_queries)
-
-
-def knn_ivfpq(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    cell_col: str,
-    query_mod: int = 100,
-    k: int = DEFAULT_K,
-    nprobe: int = 2,
-    m: int = PQ_M,
-    *,
-    pq: tuple[DataFrame, DataFrame],
-    ivf: DataFrame,
-) -> DataFrame:
-    """IVF + PQ — the FAISS ``IVFPQ`` layout, the standard billion-scale
-    serving stack: a learned coarse quantizer bounds WHICH vectors are
-    scored (nprobe of the cells, float centroid probe exactly as
-    :func:`knn_ivf`), and product-quantized codes bound the BYTES per
-    scored vector (m·log2(k) bits via the :func:`knn_pq` ADC lookup
-    table).  The two factors compound: a query touches nprobe/k_cells of
-    a corpus that is itself ~128x compressed.
-
-    Serve-time reads: cell membership (vec_id, cell) and the code table
-    (vec_id, m, code) — never the float corpus; full-precision vectors
-    exist only in the two training paths.  Every join is an equi-join
-    (cell; vec_id; (query_id, m, code) against the broadcast LUT), and
-    every float reduction is a sequenced fold, so the whole stack
-    hash-gates cross-engine like its factors.
-
-    The trained parts are passed in, never trained here: ``pq=(codes,
-    pqcents)`` and ``ivf`` (cell, cv, cnrm), from :func:`ivfpq_train`
-    or a loaded artifact (plans/similarity_queries.py::ann_index_load).
-    """
-    base = _normed_with_cell(df, id_col, vec_col, cell_col)
-    codes, pqcents = pq
-    queries = base.filter(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    return ivfpq_serve(
-        queries, base.select("vec_id", "cell"), ivf, codes, pqcents,
-        k, nprobe, m,
-    )
+    return _top_k(exact, k)
 
 
 def ivfpq_serve(
@@ -1769,76 +1546,72 @@ def ivfpq_serve(
     pqcents: DataFrame,
     k: int = DEFAULT_K,
     nprobe: int = 2,
-    m: int = PQ_M,
     labels: DataFrame | None = None,
+    *,
+    residual: bool = False,
 ) -> DataFrame:
-    """The PURE IVFPQ serving dataflow — queries in, top-k out, every
-    trained artifact passed in: ``queries`` (query_id, qv, qnrm),
-    ``membership`` (vec_id, cell), ``cents`` (cell, cv, cnrm),
-    ``codes``/``pqcents`` from :func:`ivfpq_train` or
-    plans/similarity_queries.py::ann_index_load.  This is the function
-    a production deployment calls per query batch (the ``knn_ivfpq*``
-    registry rows wrap it with their self-contained training for the
-    hash gates; the streaming row serves each micro-batch through it) —
-    and because the scoring is sequenced folds + exact arithmetic, the
-    result for a given query is independent of WHICH batch it arrives
-    in.  The float corpus is never touched: candidates come from the
-    membership table, scores from the code table, queries carry their
-    own vectors.
+    """THE IVFPQ serving dataflow — FAISS ``IVFPQ`` as one plan, queries
+    in, top-k out, every trained artifact passed in: ``queries``
+    (query_id, qv, qnrm), ``membership`` (vec_id, cell), ``cents``
+    (cell, cv, cnrm), ``codes`` (vec_id, m, code) and ``pqcents`` (m,
+    code, cv, cn2) from :func:`ivfpq_train` or
+    plans/similarity_queries.py::ann_index_load.  A learned coarse
+    quantizer bounds WHICH vectors are scored (the ``nprobe``
+    highest-cosine cells, float probe exactly as :func:`knn_ivf`), and
+    the product-quantized codes bound the BYTES per scored vector (the
+    :func:`knn_pq` ADC lookup table).  This is the function a production
+    deployment calls per query batch: every ``knn_ivfpq*`` registry row
+    and the streaming serve go through it, and because the scoring is
+    sequenced folds + exact arithmetic, the result for a given query is
+    independent of WHICH batch it arrives in.  The float corpus is never
+    touched: candidates come from the membership table, scores from the
+    code table, queries carry their own vectors.  Every join is an
+    equi-join, so the whole stack hash-gates cross-engine like its
+    factors.
 
-    ``labels`` turns on METADATA-FILTERED search (the production
-    multi-tenant / attribute-filter shape every serving stack ships —
-    "search within my tenant"): pass ``(vec_id, label)`` and give each
-    query row a ``qlabel`` column, and candidates are PRE-filtered to
-    label-equal vectors INSIDE candidate generation — each query still
-    gets its full top-k among its own tenant, which a post-filter of
-    an unfiltered top-k cannot guarantee.  The filter is one equi-join
-    of the candidate pairs against the label table (O(corpus)
-    partition-friendly, never broadcast) plus a broadcast of the
-    per-query labels; candidates shrink BEFORE the ADC join, so
-    filtered serving reads fewer code rows, not more.  Default None
-    leaves every existing plan byte-identical.
+    ``residual`` picks the encoding regime the artifact was trained in
+    (:func:`ivfpq_train`).  Raw: ``x̂ = r̂``, score ``adc / (‖q‖·‖x̂‖)``.
+    Residual (the FAISS ``IndexIVFPQ`` default, Jégou et al. 2011 §IV):
+    ``x̂ = c_cell + r̂``, so the same trunk adds three centroid- or
+    codebook-sized broadcast tables —
 
-    PER-QUERY probe depth (r14, the skewed-tenant serving policy): if
+    - numerator ``q·x̂ = q·c_cell + Σ_m q_m·r̂_m``: the coarse term ``qc``
+      is ONE dot product per (query, cell), the residual term the same
+      ADC partials;
+    - ``‖x̂‖² = ‖c‖² + 2·Σ_m c_m·r̂_m + Σ_m ‖r̂_m‖²``: ``cinfo`` holds
+      ``‖c‖²`` per cell and ``ccross`` the centroid×codeword cross term
+      per (cell, m, code) (subspaces are disjoint blocks, so
+      cross-subspace terms vanish) —
+
+    and scores ``(qc + adc) / (qnrm · sqrt(cn2c + 2·crs + rn2))``, the
+    fixed-shape expression the oracle mirrors textually.
+
+    Tenant filters (METADATA-FILTERED search — "search within my
+    tenant"): give each query row a ``qlabel`` and either pass ``labels``
+    ``(vec_id, label)`` or serve a ``membership`` that carries ``label``
+    itself (the index written ``partitionBy("label")``, where the label
+    rides the membership scan and a single-tenant serve is a PRUNED
+    scan).  Candidates are PRE-filtered to label-equal vectors INSIDE
+    candidate generation — each query still gets its full top-k among
+    its own tenant, which a post-filter of an unfiltered top-k cannot
+    guarantee — and shrink BEFORE the ADC join.  The ``labels`` path is
+    one equi-join of the candidate pairs against the label table
+    (O(corpus), never broadcast) plus a broadcast of the per-query
+    labels; the partitioned path drops that join.  Both regimes share
+    the filter.
+
+    PER-QUERY probe depth (the skewed-tenant serving policy): if
     ``queries`` carries a ``qnprobe`` column, each query probes its own
-    number of cells instead of the scalar ``nprobe`` — the production
-    fix for filtered search over a SKEWED tenant distribution, where a
-    cold tenant's members are so sparse per cell that the default probe
-    depth cannot fill k (raise its qnprobe to the cell count: scanning
-    a tiny tenant's full membership is cheap) while the hot tenant
-    stays cell-pruned at the default.  Queries without the column are
-    untouched — the scalar path is byte-identical."""
-    subdim = DIM // m
-    wprobe = Window.partitionBy("query_id").orderBy(
-        F.col("ccos").desc(), F.col("cell")
+    number of cells instead of the scalar ``nprobe`` — a cold tenant's
+    members are so sparse per cell that the default depth cannot fill k
+    (raise its qnprobe to the cell count: scanning a tiny tenant's full
+    membership is cheap) while the hot tenant stays cell-pruned.
+    Without the column the scalar path is unchanged."""
+    qnprobe = ["qnprobe"] if "qnprobe" in queries.columns else []
+    probes = _probe(
+        queries, cents, F.col("qnprobe") if qnprobe else F.lit(nprobe), *qnprobe
     )
-    per_query_nprobe = "qnprobe" in queries.columns
-    probes = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            *(["qnprobe"] if per_query_nprobe else []),
-            "cell",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("qnrm") * F.col("cnrm"))).alias(
-                "ccos"
-            ),
-        )
-        .withColumn("crank", F.row_number().over(wprobe))
-        .filter(
-            F.col("crank")
-            <= (F.col("qnprobe") if per_query_nprobe else F.lit(nprobe))
-        )
-        .select("query_id", "cell")
-    )
-    # PARTITIONED tenant layout (r14): when the membership table itself
-    # carries a ``label`` column (written ``partitionBy("label")`` at
-    # index-build time) and queries carry ``qlabel``, the tenant filter
-    # costs NOTHING extra at serve — the label rides the membership
-    # rows (on disk it is a partition directory, so a single-tenant
-    # serve is a PRUNED scan), and the O(corpus) label-table equi-join
-    # of the ``labels=`` path disappears.  ``labels=`` still wins when
-    # the index layout cannot be changed.
+    keep = ["query_id", "vec_id", *(["cell"] if residual else [])]
     membership_label = (
         labels is None
         and "label" in membership.columns
@@ -1848,69 +1621,50 @@ def ivfpq_serve(
         F.broadcast(probes)
         .join(membership, "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id", "vec_id", *(["label"] if membership_label else [])
-        )
+        .select(*keep, *(["label"] if membership_label else []))
     )
     if labels is not None:
-        qlab = queries.select("query_id", "qlabel")
+        cand = cand.join(labels.select("vec_id", "label"), "vec_id")
+    if labels is not None or membership_label:
         cand = (
-            cand.join(labels.select("vec_id", "label"), "vec_id")
-            .join(F.broadcast(qlab), "query_id")
+            cand.join(F.broadcast(queries.select("query_id", "qlabel")), "query_id")
             .filter(F.col("label") == F.col("qlabel"))
-            .select("query_id", "vec_id")
+            .select(*keep)
         )
-    elif membership_label:
-        qlab = queries.select("query_id", "qlabel")
-        cand = (
-            cand.join(F.broadcast(qlab), "query_id")
-            .filter(F.col("label") == F.col("qlabel"))
-            .select("query_id", "vec_id")
-        )
-    partial = F.aggregate(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(subdim)),
-            lambda i: F.element_at(
-                F.col("qv"), (F.col("m") * subdim + i).cast("int")
-            )
-            * F.element_at(F.col("cv"), i.cast("int")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    lut = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(pqcents))
-        .select(
-            "query_id", "qnrm", "m", "code", partial.alias("partial"), "cn2"
-        )
-    )
     sp = cand.join(codes, "vec_id").join(
-        F.broadcast(lut), ["query_id", "m", "code"]
+        F.broadcast(_adc_lut(queries, pqcents)), ["query_id", "m", "code"]
     )
-    agg = sp.groupBy("query_id", "vec_id").agg(
-        _sorted_fold_sum("m", "partial").alias("adc"),
-        _sorted_fold_sum("m", "cn2").alias("rn2"),
-        F.min("qnrm").alias("qnrm"),
+    if not residual:
+        return _top_k(_adc_cos(sp.groupBy(*keep).agg(*_adc_aggs())), k)
+    qc = (
+        F.broadcast(queries)
+        .crossJoin(F.broadcast(cents))
+        .select("query_id", "cell", dot(F.col("qv"), F.col("cv")).alias("qc"))
     )
-    final = agg.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (F.col("adc") / (F.col("qnrm") * F.sqrt("rn2"))).alias("cos"),
+    cinfo = cents.select("cell", dot(F.col("cv"), F.col("cv")).alias("cn2c"))
+    ccross = (
+        F.broadcast(cents.select("cell", F.col("cv").alias("ccv")))
+        .crossJoin(F.broadcast(pqcents))
+        .select("cell", "m", "code", _sub_dot("ccv").alias("crs"))
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
+    agg = (
+        sp.join(F.broadcast(ccross), ["cell", "m", "code"])
+        .groupBy(*keep)
+        .agg(*_adc_aggs(_sorted_fold_sum("m", "crs").alias("crs")))
     )
-    return (
-        final.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
+    recon = F.col("cn2c") + F.lit(2.0) * F.col("crs") + F.col("rn2")
+    final = (
+        agg.join(F.broadcast(qc), ["query_id", "cell"])
+        .join(F.broadcast(cinfo), "cell")
         .select(
             "query_id",
-            "neighbor_id",
-            F.round("cos", 6).alias("cosine_sim"),
-            "rank",
+            F.col("vec_id").alias("neighbor_id"),
+            (
+                (F.col("qc") + F.col("adc")) / (F.col("qnrm") * F.sqrt(recon))
+            ).alias("cos"),
         )
     )
+    return _top_k(final, k)
 
 
 def ivf_assign(
@@ -1946,7 +1700,6 @@ def pq_assign(
     id_col: str,
     vec_col: str,
     pqcents: DataFrame,
-    m: int = PQ_M,
 ) -> DataFrame:
     """Encode vectors against EXISTING sub-codebooks — the FAISS
     ``add()`` path's PQ step: per subspace, argmin exact squared
@@ -1955,7 +1708,6 @@ def pq_assign(
     exploded pass of the new vectors; the codebooks are NOT updated
     (exactly FAISS semantics — re-centering on add would invalidate
     every previously stored code).  Returns ``(vec_id, m, code)``."""
-    subdim = DIM // m
     subs = df.select(
         F.col(id_col).alias("vec_id"), to_double(vec_col).alias("v")
     ).select(
@@ -1965,9 +1717,9 @@ def pq_assign(
                 *[
                     F.struct(
                         F.lit(mi).alias("m"),
-                        F.slice("v", mi * subdim + 1, subdim).alias("sv"),
+                        F.slice("v", mi * PQ_SUBDIM + 1, PQ_SUBDIM).alias("sv"),
                     )
-                    for mi in range(m)
+                    for mi in range(PQ_M)
                 ]
             )
         ).alias("ms"),
@@ -2091,172 +1843,6 @@ def pq_residuals(
             "vec_id",
             F.zip_with("v", "ccv", lambda a, b: a - b).alias("v"),
             "cell",
-        )
-    )
-
-
-def ivfpq_residual_serve(
-    queries: DataFrame,
-    membership: DataFrame,
-    icents: DataFrame,
-    codes: DataFrame,
-    pqcents: DataFrame,
-    k: int = DEFAULT_K,
-    nprobe: int = 2,
-    m: int = PQ_M,
-    labels: DataFrame | None = None,
-) -> DataFrame:
-    """The RESIDUAL-IVFPQ serving dataflow — :func:`ivfpq_serve` with
-    the reconstruction ``x̂ = c_cell + r̂`` instead of ``x̂ = r̂``:
-
-    - numerator  ``q·x̂ = q·c_cell + Σ_m q_m·r̂_m`` — the coarse term is
-      ONE dot product per (query, cell) (a broadcast-size table:
-      |queries| × n_cells), the residual term is the same per-(query,
-      m, code) ADC lookup as flat PQ;
-    - ‖x̂‖² ``= ‖c‖² + 2·Σ_m c_m·r̂_m + Σ_m ‖r̂_m‖²`` — the cross term is
-      a (cell, m, code) table (n_cells × m × k codewords, broadcast;
-      subspaces are disjoint blocks so cross-subspace terms vanish).
-
-    Serve-time reads are unchanged from :func:`ivfpq_serve` — cell
-    membership and the code table, never the float corpus; the three
-    new lookup tables are all centroid/codebook-sized (broadcast at any
-    corpus scale).  Every float reduction is a sequenced fold and the
-    final score is one fixed-shape expression
-    ``(qc + adc) / (qnrm · sqrt(cn2c + 2·crs + rn2))`` mirrored
-    textually in the oracle, so the stack hash-gates like the raw-PQ
-    family.  ``labels`` turns on the same metadata (multi-tenant)
-    pre-filter as :func:`ivfpq_serve` — label-equal candidates only,
-    applied inside candidate generation.  A ``qnprobe`` column on
-    ``queries`` gives each query its own probe depth (the skewed-tenant
-    policy), exactly as in :func:`ivfpq_serve`; without it the scalar
-    path is byte-identical."""
-    subdim = DIM // m
-    wprobe = Window.partitionBy("query_id").orderBy(
-        F.col("ccos").desc(), F.col("cell")
-    )
-    per_query_nprobe = "qnprobe" in queries.columns
-    probes = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(icents))
-        .select(
-            "query_id",
-            *(["qnprobe"] if per_query_nprobe else []),
-            "cell",
-            (
-                dot(F.col("qv"), F.col("cv"))
-                / (F.col("qnrm") * F.col("cnrm"))
-            ).alias("ccos"),
-        )
-        .withColumn("crank", F.row_number().over(wprobe))
-        .filter(
-            F.col("crank")
-            <= (F.col("qnprobe") if per_query_nprobe else F.lit(nprobe))
-        )
-        .select("query_id", "cell")
-    )
-    cand = (
-        F.broadcast(probes)
-        .join(membership, "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "cell")
-    )
-    if labels is not None:
-        # same metadata pre-filter as ivfpq_serve's (see its docstring):
-        # label-equal candidates only, shrunk BEFORE the ADC join
-        qlab = queries.select("query_id", "qlabel")
-        cand = (
-            cand.join(labels.select("vec_id", "label"), "vec_id")
-            .join(F.broadcast(qlab), "query_id")
-            .filter(F.col("label") == F.col("qlabel"))
-            .select("query_id", "vec_id", "cell")
-        )
-    partial = F.aggregate(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(subdim)),
-            lambda i: F.element_at(
-                F.col("qv"), (F.col("m") * subdim + i).cast("int")
-            )
-            * F.element_at(F.col("cv"), i.cast("int")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    lut = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(pqcents))
-        .select(
-            "query_id", "qnrm", "m", "code", partial.alias("partial"), "cn2"
-        )
-    )
-    # coarse term per (query, cell) and ‖c‖² per cell — broadcast-size
-    qc = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(icents))
-        .select(
-            "query_id", "cell", dot(F.col("qv"), F.col("cv")).alias("qc")
-        )
-    )
-    cinfo = icents.select(
-        "cell", dot(F.col("cv"), F.col("cv")).alias("cn2c")
-    )
-    # centroid×codeword cross term per (cell, m, code)
-    cross = F.aggregate(
-        F.transform(
-            F.sequence(F.lit(1), F.lit(subdim)),
-            lambda i: F.element_at(
-                F.col("ccv"), (F.col("m") * subdim + i).cast("int")
-            )
-            * F.element_at(F.col("cv"), i.cast("int")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    ccross = (
-        F.broadcast(icents.select("cell", F.col("cv").alias("ccv")))
-        .crossJoin(F.broadcast(pqcents))
-        .select("cell", "m", "code", cross.alias("crs"))
-    )
-    sp = (
-        cand.join(codes, "vec_id")
-        .join(F.broadcast(lut), ["query_id", "m", "code"])
-        .join(F.broadcast(ccross), ["cell", "m", "code"])
-    )
-    agg = sp.groupBy("query_id", "vec_id", "cell").agg(
-        _sorted_fold_sum("m", "partial").alias("adc"),
-        _sorted_fold_sum("m", "cn2").alias("rn2"),
-        _sorted_fold_sum("m", "crs").alias("crs"),
-        F.min("qnrm").alias("qnrm"),
-    )
-    final = (
-        agg.join(F.broadcast(qc), ["query_id", "cell"])
-        .join(F.broadcast(cinfo), "cell")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                (F.col("qc") + F.col("adc"))
-                / (
-                    F.col("qnrm")
-                    * F.sqrt(
-                        F.col("cn2c")
-                        + F.lit(2.0) * F.col("crs")
-                        + F.col("rn2")
-                    )
-                )
-            ).alias("cos"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        final.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 6).alias("cosine_sim"),
-            "rank",
         )
     )
 

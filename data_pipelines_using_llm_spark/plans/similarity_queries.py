@@ -1084,9 +1084,7 @@ def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     fused, one corpus-scan job per round); every serving artifact is a
     literal-centroid expression over its persisted base."""
     e = load_table(spark, sf_dir, "embeddings")
-    return SIM.knn_ivfpq_selftrained(
-        e, "vec_id", "embedding", QUERY_MOD, K, IVF_KMEANS_NPROBE,
-    )
+    return _ivfpq_row(spark, sf_dir, SIM.ivfpq_train(e, "vec_id", "embedding"))
 
 
 def _knn_ivfpq_oracle(
@@ -1166,10 +1164,8 @@ def knn_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     PQ codes bound the bytes, exact re-rank restores exact ordering
     over each query's top-C survivors.  Trained as :func:`knn_ivfpq`."""
     e = load_table(spark, sf_dir, "embeddings")
-    return SIM.knn_ivfpq_selftrained(
-        e, "vec_id", "embedding", QUERY_MOD, K, IVF_KMEANS_NPROBE,
-        refine_factor=SIM.PQ_REFINE_FACTOR,
-        n_queries=_n_queries_cached(spark, sf_dir),
+    return _ivfpq_row(
+        spark, sf_dir, SIM.ivfpq_train(e, "vec_id", "embedding"), refine=True
     )
 
 
@@ -1264,33 +1260,21 @@ _RESIDUAL_PARTS_CACHE: dict[tuple[str, str], tuple] = {}
 
 def _residual_pq_parts(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """Shared TRAIN stage of the residual-IVFPQ family:
     :func:`SIM.ivfpq_train` with ``residual=True`` (PQ codebooks trained
     on the RESIDUALS ``x − c_cell`` — the standard FAISS ``IndexIVFPQ``
-    training semantics).  Returns ``(e, cells, icents, codes,
-    pqcents)``; cached per (session, sf_dir) so the plain and refined
+    training semantics).  Returns ``(cells, icents, codes, pqcents)``;
+    cached per (session, sf_dir) so the plain and refined
     residual gate rows share one training (the r11-task-5
     de-duplication discipline)."""
     key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _RESIDUAL_PARTS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    e = load_table(spark, sf_dir, "embeddings")
-    parts = (e, *SIM.ivfpq_train(e, "vec_id", "embedding", residual=True))
-    _RESIDUAL_PARTS_CACHE[key] = parts
+    parts = _RESIDUAL_PARTS_CACHE.get(key)
+    if parts is None:
+        e = load_table(spark, sf_dir, "embeddings")
+        parts = SIM.ivfpq_train(e, "vec_id", "embedding", residual=True)
+        _RESIDUAL_PARTS_CACHE[key] = parts
     return parts
-
-
-def _residual_queries(e: DataFrame) -> DataFrame:
-    queries = SIM.normed(e, "vec_id", "embedding").filter(
-        F.col("vec_id") % QUERY_MOD == 0
-    )
-    return queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
 
 
 def knn_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1303,11 +1287,9 @@ def knn_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCALE.md).  Serving reconstructs ``x̂ = c_cell + r̂`` from three
     broadcast-size lookup tables (coarse term, ADC partials, centroid×
     codeword cross terms) — the float corpus is still never read at
-    serve time (operators/similarity.py::ivfpq_residual_serve)."""
-    e, cells, icents, codes, pqcents = _residual_pq_parts(spark, sf_dir)
-    return SIM.ivfpq_residual_serve(
-        _residual_queries(e), cells, icents, codes, pqcents,
-        K, IVF_KMEANS_NPROBE,
+    serve time (operators/similarity.py::ivfpq_serve, ``residual=True``)."""
+    return _ivfpq_row(
+        spark, sf_dir, _residual_pq_parts(spark, sf_dir), residual=True
     )
 
 
@@ -1321,15 +1303,9 @@ def knn_ivfpq_residual_refined(
     (SCALE.md); the refine stage is the same size-gated
     :func:`operators.similarity._refine_exact` every refined row
     shares."""
-    ncand = SIM.PQ_REFINE_FACTOR * K
-    e, cells, icents, codes, pqcents = _residual_pq_parts(spark, sf_dir)
-    cands = SIM.ivfpq_residual_serve(
-        _residual_queries(e), cells, icents, codes, pqcents,
-        ncand, IVF_KMEANS_NPROBE,
-    ).select("query_id", "neighbor_id")
-    return SIM._refine_exact(
-        SIM.normed(e, "vec_id", "embedding"), cands, QUERY_MOD, K, ncand,
-        n_queries=_n_queries_cached(spark, sf_dir),
+    return _ivfpq_row(
+        spark, sf_dir, _residual_pq_parts(spark, sf_dir), residual=True,
+        refine=True,
     )
 
 
@@ -1352,14 +1328,7 @@ def knn_ivfpq_residual_stored(
     meta row is asserted inside the seam, so round-trip drift still
     fails this gate; the residual training just happens once per
     session instead of once per gate row)."""
-    cells, icents, codes, pqcents = shared_index_parts(
-        spark, sf_dir, residual=True
-    )
-    e = load_table(spark, sf_dir, "embeddings")
-    return SIM.ivfpq_residual_serve(
-        _residual_queries(e), cells, icents, codes, pqcents,
-        K, IVF_KMEANS_NPROBE,
-    )
+    return _ivfpq_row(spark, sf_dir, residual=True)
 
 
 def _residual_ivfpq_prefix(
@@ -1896,17 +1865,13 @@ def knn_ivfpq_removed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "vec_id"
             ),
         )
-        cells, icents, codes, pqcents = (
+        parts = tuple(
             part.localCheckpoint(eager=True)
             for part in ann_index_load(spark, tdir)
         )
     finally:
         shutil.rmtree(tdir, ignore_errors=True)
-    return SIM.knn_ivfpq(
-        e.join(cells.withColumnRenamed("cell", "kcell"), "vec_id"),
-        "vec_id", "embedding", "kcell", QUERY_MOD, K, IVF_KMEANS_NPROBE,
-        pq=(codes, pqcents), ivf=icents,
-    )
+    return _ivfpq_row(spark, sf_dir, parts)
 
 
 def knn_ivfpq_residual_removed(
@@ -1940,16 +1905,13 @@ def knn_ivfpq_residual_removed(
             ),
         )
         _require_regime(spark, tdir, residual=True)
-        cells, icents, codes, pqcents = (
+        parts = tuple(
             part.localCheckpoint(eager=True)
             for part in ann_index_load(spark, tdir)
         )
     finally:
         shutil.rmtree(tdir, ignore_errors=True)
-    return SIM.ivfpq_residual_serve(
-        _residual_queries(e), cells, icents, codes, pqcents,
-        K, IVF_KMEANS_NPROBE,
-    )
+    return _ivfpq_row(spark, sf_dir, parts, residual=True)
 
 
 def ann_index_load(
@@ -1958,7 +1920,7 @@ def ann_index_load(
     """SERVE-side load of a trained IVFPQ index: resolve the version
     pointer and split the unified artifact back into its four tables —
     ``(cells, icents, codes, pqcents)`` with the exact schemas
-    :func:`SIM.knn_ivfpq` consumes.  Each split is a kind-pushdown
+    :func:`SIM.ivfpq_serve` consumes.  Each split is a kind-pushdown
     parquet scan (the O(corpus) parts stay distributed; only the
     centroid/codebook parts are small enough to broadcast), and the
     float corpus is never read — serving needs it only for the query
@@ -2050,6 +2012,72 @@ def seed_index_dir(
     )
 
 
+def _tenant_label(tenant: str) -> Column:
+    """A corpus row's tenant under the named fixture: ``"label"`` is the
+    balanced one (the embeddings table's ``label`` column), ``"skewed"``
+    the derived skewed one (:func:`_skew_tenant`)."""
+    if tenant == "label":
+        return F.col("label").cast("long")
+    if tenant == "skewed":
+        return _skew_tenant(F.col("vec_id"))
+    raise ValueError(f"unknown tenant fixture {tenant!r}")
+
+
+def _query_block(e: DataFrame, tenant: str | None = None) -> DataFrame:
+    """The registry rows' query block ``(query_id, qv, qnrm)`` over the
+    embeddings ``e`` (``vec_id % QUERY_MOD == 0``).  A filtered row adds
+    each query's ``qlabel`` under the ``tenant`` fixture
+    (:func:`_tenant_label`), and a skewed row also joins its tenant's
+    ``qnprobe`` from the :func:`_skew_nprobe_map` policy."""
+    if tenant is None:
+        return SIM.query_block(SIM.normed(e, "vec_id", "embedding"), QUERY_MOD)
+    base = SIM.normed(
+        e, "vec_id", "embedding", _tenant_label(tenant).alias("qlabel")
+    )
+    queries = SIM.query_block(base, QUERY_MOD, F.col("qlabel"))
+    if tenant == "skewed":
+        queries = queries.join(F.broadcast(_skew_nprobe_map(e)), "qlabel")
+    return queries
+
+
+def _ivfpq_row(
+    spark: SparkSession,
+    sf_dir: str,
+    parts: tuple | None = None,
+    *,
+    residual: bool = False,
+    tenant: str | None = None,
+    refine: bool = False,
+) -> DataFrame:
+    """One ``knn_ivfpq*`` registry row over trained index ``parts``
+    (default: the session-shared artifact of the ``residual`` regime):
+    the :func:`_query_block`, one :func:`SIM.ivfpq_serve`, and for a
+    ``refine`` row the exact re-rank (:func:`SIM._refine_exact`) of each
+    query's top C = PQ_REFINE_FACTOR·k candidates.  A ``tenant`` row
+    filters candidates by the label table — unless the membership part
+    carries ``label`` itself (the partitioned layout)."""
+    cells, icents, codes, pqcents = (
+        parts if parts is not None else shared_index_parts(spark, sf_dir, residual)
+    )
+    e = load_table(spark, sf_dir, "embeddings")
+    labels = None
+    if tenant is not None and "label" not in cells.columns:
+        labels = e.select("vec_id", _tenant_label(tenant).alias("label"))
+    ncand = SIM.PQ_REFINE_FACTOR * K if refine else K
+    out = SIM.ivfpq_serve(
+        _query_block(e, tenant), cells, icents, codes, pqcents, ncand,
+        IVF_KMEANS_NPROBE, labels, residual=residual,
+    )
+    if not refine:
+        return out
+    return SIM._refine_exact(
+        SIM.normed(e, "vec_id", "embedding"),
+        out.select("query_id", "neighbor_id"),
+        QUERY_MOD, K, ncand,
+        n_queries=_n_queries_cached(spark, sf_dir),
+    )
+
+
 def knn_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stored-index serve path under the hash gate: train → persist
     (ONE versioned artifact) → load → serve, asserted hash-identical to
@@ -2064,15 +2092,9 @@ def knn_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     are still parquet-loaded, so round-trip drift still fails this
     gate); the durable production shape is
     ``ann_index_train(..., permanent_dir)`` once, then any number of
-    ``ann_index_load`` + ``SIM.knn_ivfpq`` serves that never retrain —
+    ``ann_index_load`` + ``SIM.ivfpq_serve`` serves that never retrain —
     the serve cost alone is benched as ``knn_ivfpq_stored_serve``."""
-    cells, icents, codes, pqcents = shared_index_parts(spark, sf_dir)
-    e = load_table(spark, sf_dir, "embeddings")
-    return SIM.knn_ivfpq(
-        e.join(cells.withColumnRenamed("cell", "kcell"), "vec_id"),
-        "vec_id", "embedding", "kcell", QUERY_MOD, K, IVF_KMEANS_NPROBE,
-        pq=(codes, pqcents), ivf=icents,
-    )
+    return _ivfpq_row(spark, sf_dir)
 
 
 def knn_ivfpq_tenant(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2090,24 +2112,7 @@ def knn_ivfpq_tenant(spark: SparkSession, sf_dir: str) -> DataFrame:
     label-equality predicate on the candidate CTE — so a filter that
     leaked a foreign-tenant row, dropped a same-tenant row, or
     post-filtered after ranking fails the hash."""
-    cells, icents, codes, pqcents = shared_index_parts(spark, sf_dir)
-    e = load_table(spark, sf_dir, "embeddings")
-    queries = (
-        SIM.normed(e, "vec_id", "embedding")
-        .filter(F.col("vec_id") % QUERY_MOD == 0)
-        .join(e.select("vec_id", "label"), "vec_id")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qnrm"),
-            F.col("label").cast("long").alias("qlabel"),
-        )
-    )
-    labels = e.select("vec_id", F.col("label").cast("long").alias("label"))
-    return SIM.ivfpq_serve(
-        queries, cells, icents, codes, pqcents, K, IVF_KMEANS_NPROBE,
-        labels=labels,
-    )
+    return _ivfpq_row(spark, sf_dir, tenant="label")
 
 
 _TENANT_CAND_PRED = (
@@ -2121,26 +2126,11 @@ def knn_ivfpq_residual_tenant(
 ) -> DataFrame:
     """Metadata-filtered search on the RESIDUAL regime — the filters ×
     encodings matrix closed: the same label-equality pre-filter as
-    :func:`knn_ivfpq_tenant` applied inside
-    :func:`SIM.ivfpq_residual_serve`'s candidate generation, serving
+    :func:`knn_ivfpq_tenant` applied inside the residual
+    :func:`SIM.ivfpq_serve`'s candidate generation, serving
     from the session-shared residual artifact; oracle = the residual
     oracle with the same correlated candidate predicate."""
-    cells, icents, codes, pqcents = shared_index_parts(
-        spark, sf_dir, residual=True
-    )
-    e = load_table(spark, sf_dir, "embeddings")
-    queries = _residual_queries(e).join(
-        e.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").cast("long").alias("qlabel"),
-        ),
-        "query_id",
-    )
-    labels = e.select("vec_id", F.col("label").cast("long").alias("label"))
-    return SIM.ivfpq_residual_serve(
-        queries, cells, icents, codes, pqcents, K, IVF_KMEANS_NPROBE,
-        labels=labels,
-    )
+    return _ivfpq_row(spark, sf_dir, residual=True, tenant="label")
 
 
 def knn_brute_force_tenant(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2152,44 +2142,8 @@ def knn_brute_force_tenant(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured against THIS row
     (tests/test_similarity.py::test_tenant_refined_recall_floor)."""
     e = load_table(spark, sf_dir, "embeddings")
-    base = SIM.normed(e, "vec_id", "embedding").join(
-        e.select("vec_id", F.col("label").cast("long").alias("label")),
-        "vec_id",
-    )
-    queries = base.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-        F.col("label").alias("qlabel"),
-    )
-    scored = (
-        F.broadcast(queries)
-        .join(
-            base,
-            (F.col("vec_id") != F.col("query_id"))
-            & (F.col("label") == F.col("qlabel")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                SIM.dot(F.col("qv"), F.col("v"))
-                / (F.col("qnrm") * F.col("nrm"))
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 6).alias("cosine_sim"),
-            "rank",
-        )
+    return SIM.knn_brute_force(
+        e, "vec_id", "embedding", QUERY_MOD, K, label=_tenant_label("label")
     )
 
 
@@ -2227,29 +2181,7 @@ def knn_ivfpq_tenant_refined(
     size-gated exact-cosine re-rank every refined row shares.  Recall
     vs the exact filtered baseline = candidate recall@C within the
     probed cells — floor-pinned in tests/test_similarity.py."""
-    ncand = SIM.PQ_REFINE_FACTOR * K
-    cells, icents, codes, pqcents = shared_index_parts(spark, sf_dir)
-    e = load_table(spark, sf_dir, "embeddings")
-    queries = (
-        SIM.normed(e, "vec_id", "embedding")
-        .filter(F.col("vec_id") % QUERY_MOD == 0)
-        .join(e.select("vec_id", "label"), "vec_id")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qnrm"),
-            F.col("label").cast("long").alias("qlabel"),
-        )
-    )
-    labels = e.select("vec_id", F.col("label").cast("long").alias("label"))
-    cands = SIM.ivfpq_serve(
-        queries, cells, icents, codes, pqcents, ncand, IVF_KMEANS_NPROBE,
-        labels=labels,
-    ).select("query_id", "neighbor_id")
-    return SIM._refine_exact(
-        SIM.normed(e, "vec_id", "embedding"), cands, QUERY_MOD, K, ncand,
-        n_queries=_n_queries_cached(spark, sf_dir),
-    )
+    return _ivfpq_row(spark, sf_dir, tenant="label", refine=True)
 
 
 # ---- skewed-tenant filtered search (r14) -----------------------------
@@ -2345,26 +2277,7 @@ def knn_ivfpq_tenant_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
     policy inline (correlated count vs total in the probe bound), so a
     leaked foreign-tenant row, an under-filled cold query, or a
     hot-tenant full scan all fail the hash."""
-    cells, icents, codes, pqcents = shared_index_parts(spark, sf_dir)
-    e = load_table(spark, sf_dir, "embeddings")
-    labels = e.select(
-        "vec_id", _skew_tenant(F.col("vec_id")).alias("label")
-    )
-    queries = (
-        SIM.normed(e, "vec_id", "embedding")
-        .filter(F.col("vec_id") % QUERY_MOD == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qnrm"),
-            _skew_tenant(F.col("vec_id")).alias("qlabel"),
-        )
-        .join(F.broadcast(_skew_nprobe_map(e)), "qlabel")
-    )
-    return SIM.ivfpq_serve(
-        queries, cells, icents, codes, pqcents, K, IVF_KMEANS_NPROBE,
-        labels=labels,
-    )
+    return _ivfpq_row(spark, sf_dir, tenant="skewed")
 
 
 def knn_ivfpq_residual_tenant_skewed(
@@ -2374,27 +2287,12 @@ def knn_ivfpq_residual_tenant_skewed(
     encodings × skew cell of the matrix: same data-derived
     per-tenant-class probe depth as :func:`knn_ivfpq_tenant_skewed`
     (hot stays cell-pruned, cold probes every cell to fill k), served
-    through :func:`SIM.ivfpq_residual_serve` from the session-shared
+    through the residual :func:`SIM.ivfpq_serve` from the session-shared
     residual artifact.  Oracle = the residual oracle with the skewed
     candidate predicate AND the policy probe bound — the policy is
     verified under reconstruction-cosine arithmetic, not just raw
     ADC."""
-    cells, icents, codes, pqcents = shared_index_parts(
-        spark, sf_dir, residual=True
-    )
-    e = load_table(spark, sf_dir, "embeddings")
-    labels = e.select(
-        "vec_id", _skew_tenant(F.col("vec_id")).alias("label")
-    )
-    queries = (
-        _residual_queries(e)
-        .withColumn("qlabel", _skew_tenant(F.col("query_id")))
-        .join(F.broadcast(_skew_nprobe_map(e)), "qlabel")
-    )
-    return SIM.ivfpq_residual_serve(
-        queries, cells, icents, codes, pqcents, K, IVF_KMEANS_NPROBE,
-        labels=labels,
-    )
+    return _ivfpq_row(spark, sf_dir, residual=True, tenant="skewed")
 
 
 def knn_brute_force_tenant_skewed(
@@ -2406,43 +2304,8 @@ def knn_brute_force_tenant_skewed(
     recall floors are pinned against THIS row
     (tests/test_similarity.py::test_tenant_skewed_per_class_recall)."""
     e = load_table(spark, sf_dir, "embeddings")
-    base = SIM.normed(e, "vec_id", "embedding").withColumn(
-        "label", _skew_tenant(F.col("vec_id"))
-    )
-    queries = base.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-        F.col("label").alias("qlabel"),
-    )
-    scored = (
-        F.broadcast(queries)
-        .join(
-            base,
-            (F.col("vec_id") != F.col("query_id"))
-            & (F.col("label") == F.col("qlabel")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                SIM.dot(F.col("qv"), F.col("v"))
-                / (F.col("qnrm") * F.col("nrm"))
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 6).alias("cosine_sim"),
-            "rank",
-        )
+    return SIM.knn_brute_force(
+        e, "vec_id", "embedding", QUERY_MOD, K, label=_tenant_label("skewed")
     )
 
 
@@ -2511,23 +2374,9 @@ def knn_ivfpq_tenant_partitioned(
     extra corpus-sized joins.  See
     :func:`_tenant_partitioned_membership` for the layout contract
     and SCALE.md for the measured crossover vs the join path."""
+    _cells, *rest = shared_index_parts(spark, sf_dir)
     mem = _tenant_partitioned_membership(spark, sf_dir)
-    _cells, icents, codes, pqcents = shared_index_parts(spark, sf_dir)
-    e = load_table(spark, sf_dir, "embeddings")
-    queries = (
-        SIM.normed(e, "vec_id", "embedding")
-        .filter(F.col("vec_id") % QUERY_MOD == 0)
-        .join(e.select("vec_id", "label"), "vec_id")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qnrm"),
-            F.col("label").cast("long").alias("qlabel"),
-        )
-    )
-    return SIM.ivfpq_serve(
-        queries, mem, icents, codes, pqcents, K, IVF_KMEANS_NPROBE
-    )
+    return _ivfpq_row(spark, sf_dir, (mem, *rest), tenant="label")
 
 
 def knn_ivfpq_tenant_skewed_refined(
@@ -2548,31 +2397,7 @@ def knn_ivfpq_tenant_skewed_refined(
     is documented in SCALE.md.  The HOT tenant gets the usual refined
     recall bounded by cell coverage.  Oracle = the refined oracle
     with the skewed candidate predicate AND the policy probe bound."""
-    ncand = SIM.PQ_REFINE_FACTOR * K
-    cells, icents, codes, pqcents = shared_index_parts(spark, sf_dir)
-    e = load_table(spark, sf_dir, "embeddings")
-    labels = e.select(
-        "vec_id", _skew_tenant(F.col("vec_id")).alias("label")
-    )
-    queries = (
-        SIM.normed(e, "vec_id", "embedding")
-        .filter(F.col("vec_id") % QUERY_MOD == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qnrm"),
-            _skew_tenant(F.col("vec_id")).alias("qlabel"),
-        )
-        .join(F.broadcast(_skew_nprobe_map(e)), "qlabel")
-    )
-    cands = SIM.ivfpq_serve(
-        queries, cells, icents, codes, pqcents, ncand, IVF_KMEANS_NPROBE,
-        labels=labels,
-    ).select("query_id", "neighbor_id")
-    return SIM._refine_exact(
-        SIM.normed(e, "vec_id", "embedding"), cands, QUERY_MOD, K, ncand,
-        n_queries=_n_queries_cached(spark, sf_dir),
-    )
+    return _ivfpq_row(spark, sf_dir, tenant="skewed", refine=True)
 
 
 KNN_BRUTE_FORCE_TENANT_SKEWED_ORACLE = f"""
@@ -2609,14 +2434,7 @@ def knn_ivfpq_refined_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the query a production deployment actually runs per batch:
     load once, refine-serve many.  Artifacts from the session-shared
     round trip (:func:`shared_index_parts`)."""
-    cells, icents, codes, pqcents = shared_index_parts(spark, sf_dir)
-    e = load_table(spark, sf_dir, "embeddings")
-    return SIM.knn_ivfpq_refined(
-        e.join(cells.withColumnRenamed("cell", "kcell"), "vec_id"),
-        "vec_id", "embedding", "kcell", QUERY_MOD, K, IVF_KMEANS_NPROBE,
-        pq=(codes, pqcents), ivf=icents,
-        n_queries=_n_queries_cached(spark, sf_dir),
-    )
+    return _ivfpq_row(spark, sf_dir, refine=True)
 
 
 def ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2718,17 +2536,13 @@ def knn_ivfpq_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         ann_index_train(spark, sf_dir, tdir, source=train)
         ann_index_extend(spark, tdir, extra)
-        cells, icents, codes, pqcents = (
+        parts = tuple(
             part.localCheckpoint(eager=True)
             for part in ann_index_load(spark, tdir)
         )
     finally:
         shutil.rmtree(tdir, ignore_errors=True)
-    return SIM.knn_ivfpq(
-        e.join(cells.withColumnRenamed("cell", "kcell"), "vec_id"),
-        "vec_id", "embedding", "kcell", QUERY_MOD, K, IVF_KMEANS_NPROBE,
-        pq=(codes, pqcents), ivf=icents,
-    )
+    return _ivfpq_row(spark, sf_dir, parts)
 
 
 def _knn_ivfpq_extended_oracle(
@@ -3066,13 +2880,9 @@ def knn_ivfpq_residual_extended(
     (:func:`_extended_index_parts`, r12 verdict task 1); the raw
     ``knn_ivfpq_extended`` stays self-contained as the add-path
     anchor."""
-    e = load_table(spark, sf_dir, "embeddings")
-    cells, icents, codes, pqcents = _extended_index_parts(
-        spark, sf_dir, residual=True
-    )
-    return SIM.ivfpq_residual_serve(
-        _residual_queries(e), cells, icents, codes, pqcents,
-        K, IVF_KMEANS_NPROBE,
+    return _ivfpq_row(
+        spark, sf_dir, _extended_index_parts(spark, sf_dir, residual=True),
+        residual=True,
     )
 
 

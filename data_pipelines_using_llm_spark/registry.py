@@ -117,15 +117,32 @@ def _verified_counts() -> dict[str, int]:
     return counts
 
 
-# Queries whose VERIFICATION MODE was materially upgraded (e.g. rows-only
-# -> full hash gate): their past green rows verified a weaker contract, so
-# treat them as never-verified until the new gate earns a green row.
-# Prune an entry once a round's CORRECTNESS artifact shows it hash-green.
+# Queries whose plans or VERIFICATION MODE changed materially (e.g. a
+# rewritten serve path, rows-only -> full hash gate): their past green rows
+# verified other code or a weaker contract, so treat them as never-verified
+# — first in the 50-row verification window — until they earn a green row
+# again.  Prune an entry once a round's CORRECTNESS artifact shows it
+# hash-green.
 _REVERIFY: frozenset[str] = frozenset(
-    # (pruned r7: knn_arrow, important_parts and dedup_semantic all earned
-    # hash-green rows in CORRECTNESS_r06.json under their upgraded gates,
-    # as approx_user_reach did in r05 — rotation returns to pure
-    # least-verified order.)
+    {
+        # the single IVFPQ serve and the shared kNN query/top-k helpers
+        # (operators/similarity.py::ivfpq_serve, _top_k, query_block)
+        "knn_brute_force", "knn_arrow", "knn_lsh", "knn_ivf",
+        "knn_ivf_kmeans", "knn_ivf_int8", "knn_int8", "knn_pq",
+        "knn_pq_refined", "knn_ivfpq", "knn_ivfpq_refined",
+        "knn_ivfpq_stored", "knn_ivfpq_extended", "knn_ivfpq_residual",
+        "knn_ivfpq_residual_refined", "knn_ivfpq_residual_stored",
+        "knn_ivfpq_residual_extended", "knn_ivfpq_removed",
+        "knn_ivfpq_tenant", "knn_brute_force_tenant",
+        "knn_ivfpq_tenant_refined", "knn_ivfpq_residual_tenant",
+        "knn_ivfpq_tenant_skewed", "knn_brute_force_tenant_skewed",
+        "knn_ivfpq_residual_tenant_skewed",
+        "knn_ivfpq_tenant_skewed_refined", "knn_ivfpq_tenant_partitioned",
+        "knn_ivfpq_residual_removed", "knn_ivfpq_refined_stored",
+        "ann_index_stats", "stream_knn_serve", "stream_knn_residual_serve",
+        "stream_knn_tenant_serve", "stream_knn_residual_tenant_serve",
+        "hybrid_rrf_search",
+    }
 )
 
 

@@ -663,8 +663,8 @@ def run_stream_knn(
     are immutable, so the cache can never go stale).
     The serve dispatch is ENCODING-AWARE (r13): each new version's
     meta row is read alongside its parts, and a ``residual`` artifact
-    is served through :func:`SIM.ivfpq_residual_serve` instead of the
-    raw ADC math — so the production drift loop (drift detected →
+    is served with :func:`SIM.ivfpq_serve`'s ``residual=True``
+    reconstruction arithmetic instead of the raw ADC math — so the production drift loop (drift detected →
     ``ann_index_train(residual=True)`` committed as the next snapshot,
     see scripts/ann_maintain.py) swaps BOTH the version and the
     encoding regime under the live stream, and a residual index can
@@ -751,10 +751,9 @@ def run_stream_knn(
                 ),
                 "query_id",
             )
-        serve = SIM.ivfpq_residual_serve if residual else SIM.ivfpq_serve
-        serve(
+        SIM.ivfpq_serve(
             queries, cells, icents, codes, pqcents, K, IVF_KMEANS_NPROBE,
-            labels=labels,
+            labels, residual=residual,
         ).write.mode("append").parquet(out_dir)
 
     query = (
@@ -799,7 +798,7 @@ def stream_knn_residual_serve(
     """Online serving from a RESIDUAL index — the same stream as
     :func:`stream_knn_serve` pointed at a residual-regime artifact, so
     the ENCODING-AWARE dispatch in :func:`run_stream_knn` (per-version
-    meta read → :func:`SIM.ivfpq_residual_serve`) is itself hash-gated:
+    meta read → ``SIM.ivfpq_serve(residual=True)``) is itself hash-gated:
     the row shares ``knn_ivfpq_residual``'s oracle verbatim, and a
     stream that served the residual snapshot with raw ADC arithmetic —
     the pre-r13 behavior — would hash-mismatch every batch.  Batching
@@ -834,7 +833,7 @@ def stream_knn_residual_tenant_serve(
     filtering + residual encoding + streaming in one gated row —
     arriving queries carry their tenant, each micro-batch re-resolves
     the versioned RESIDUAL snapshot, reads its meta row, and serves
-    through :func:`SIM.ivfpq_residual_serve` with the label pre-filter
+    through the residual :func:`SIM.ivfpq_serve` with the label pre-filter
     inside candidate generation.  Shares ``knn_ivfpq_residual_tenant``'s
     oracle verbatim — a stream that dropped the filter, or served the
     residual snapshot with raw ADC arithmetic, fails the hash."""

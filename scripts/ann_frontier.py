@@ -31,7 +31,6 @@ def main() -> None:
     reps = 3
 
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     spark = (
         SparkSession.builder.master("local[32]")
@@ -153,17 +152,38 @@ def main() -> None:
             for part in SIM.ivfpq_train(e, "vec_id", "embedding", residual)
         ]
 
-    _, icents, codes, pqcents = train(False)
-    pq = (codes, pqcents)
+    raw = train(False)
+    pq = tuple(raw[2:])
     mk_pq = lambda: SIM.knn_pq(  # noqa: E731
         e, "vec_id", "embedding", SQ.QUERY_MOD, SQ.K, pq=pq
     )
     rows.append(("pq m=4 (ADC, full scan)", timed(mk_pq), recall(mk_pq()), 1.0))
-    for nprobe in (4, 8):
-        mk = lambda: SIM.knn_ivfpq(  # noqa: E731
-            labeled, "vec_id", "embedding", "kcell", SQ.QUERY_MOD, SQ.K,
-            nprobe, pq=pq, ivf=icents,
+
+    # IVFPQ serves (raw and residual, optionally refined) all go through
+    # the one serve, ``SIM.ivfpq_serve``; the refined variants re-rank
+    # C = factor*k candidates exactly, so recall@k becomes the candidate
+    # recall@C — the recall dial raw PQ lacks on this corpus.
+    base_n = SIM.normed(e, "vec_id", "embedding")
+    queries = SIM.query_block(base_n, SQ.QUERY_MOD)
+
+    def ivfpq(parts, residual: bool, nprobe: int, factor: int | None = None):
+        ncand = SQ.K if factor is None else factor * SQ.K
+        out = SIM.ivfpq_serve(
+            queries, *parts, ncand, nprobe, residual=residual
         )
+        if factor is None:
+            return out
+        return SIM._refine_exact(
+            base_n,
+            out.select("query_id", "neighbor_id"),
+            SQ.QUERY_MOD,
+            SQ.K,
+            ncand,
+            n_queries=len(truth),
+        )
+
+    for nprobe in (4, 8):
+        mk = lambda: ivfpq(raw, False, nprobe)  # noqa: E731
         rows.append(
             (
                 f"ivfpq m=4 nprobe={nprobe}",
@@ -172,10 +192,6 @@ def main() -> None:
                 scan_frac(nprobe),
             )
         )
-
-    # Refined variants (r10): PQ/IVFPQ candidates at C = factor*k, exact
-    # re-rank on top — recall@k becomes the candidate recall@C, so the
-    # refine factor is the recall dial raw PQ lacks on this corpus.
     for factor in (2, 8, 32):
         mk = lambda: SIM.knn_pq_refined(  # noqa: E731
             e, "vec_id", "embedding", SQ.QUERY_MOD, SQ.K,
@@ -185,10 +201,7 @@ def main() -> None:
             (f"pq_refined m=4 C={factor}k", timed(mk), recall(mk()), 1.0)
         )
     for factor in (2, 8, 32):
-        mk = lambda: SIM.knn_ivfpq_refined(  # noqa: E731
-            labeled, "vec_id", "embedding", "kcell", SQ.QUERY_MOD, SQ.K,
-            8, refine_factor=factor, pq=pq, ivf=icents,
-        )
+        mk = lambda: ivfpq(raw, False, 8, factor)  # noqa: E731
         rows.append(
             (
                 f"ivfpq_refined m=4 nprobe=8 C={factor}k",
@@ -202,20 +215,9 @@ def main() -> None:
     # the standard FAISS IndexIVFPQ semantics.  Same coarse quantizer;
     # codebooks trained on residuals (train cost excluded from serve
     # timings like the rest of the PQ family).
-    cells_r, icents_r, codes_r, pqcents_r = train(True)
-    queries = (
-        SIM.normed(e, "vec_id", "embedding")
-        .filter(F.col("vec_id") % SQ.QUERY_MOD == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qnrm"),
-        )
-    )
+    res = train(True)
     for nprobe in (4, 8):
-        mk = lambda: SIM.ivfpq_residual_serve(  # noqa: E731
-            queries, cells_r, icents_r, codes_r, pqcents_r, SQ.K, nprobe
-        )
+        mk = lambda: ivfpq(res, True, nprobe)  # noqa: E731
         rows.append(
             (
                 f"ivfpq_residual m=4 nprobe={nprobe}",
@@ -224,19 +226,8 @@ def main() -> None:
                 scan_frac(nprobe),
             )
         )
-    base_n = SIM.normed(e, "vec_id", "embedding")
     for factor in (2, 8, 32):
-        ncand = factor * SQ.K
-        mk = lambda: SIM._refine_exact(  # noqa: E731
-            base_n,
-            SIM.ivfpq_residual_serve(
-                queries, cells_r, icents_r, codes_r, pqcents_r, ncand, 8
-            ).select("query_id", "neighbor_id"),
-            SQ.QUERY_MOD,
-            SQ.K,
-            ncand,
-            n_queries=len(truth),
-        )
+        mk = lambda: ivfpq(res, True, 8, factor)  # noqa: E731
         rows.append(
             (
                 f"ivfpq_residual_refined m=4 nprobe=8 C={factor}k",

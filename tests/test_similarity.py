@@ -168,12 +168,12 @@ def test_ann_stored_index_serve_is_row_identical(spark, tmp_path):
     assert icents.count() <= 10 and icents.count() > 0
     assert pqcents.count() <= SIM.PQ_M * SIM.PQ_K
     e = load_table(spark, sf, "embeddings")
+    queries = SIM.query_block(SIM.normed(e, "vec_id", "embedding"), SQ.QUERY_MOD)
     stored = {
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine_sim"])
-        for r in SIM.knn_ivfpq(
-            e.join(cells.withColumnRenamed("cell", "kcell"), "vec_id"),
-            "vec_id", "embedding", "kcell", SQ.QUERY_MOD, SQ.K,
-            SQ.IVF_KMEANS_NPROBE, pq=(codes, pqcents), ivf=icents,
+        for r in SIM.ivfpq_serve(
+            queries, cells, icents, codes, pqcents, SQ.K,
+            SQ.IVF_KMEANS_NPROBE,
         ).collect()
     }
     inplane = {
@@ -1004,6 +1004,46 @@ def test_tenant_partitioned_layout_prunes(spark):
     assert a == b and len(a) > 0
 
 
+def test_residual_serve_filters_label_partitioned_membership(spark, tmp_path):
+    """Both encoding regimes share one tenant filter: a RESIDUAL serve
+    over a label-carrying membership (the partitionBy("label") layout
+    of _tenant_partitioned_membership, residual parts) must return only
+    same-tenant neighbours, and the same rows as the label-table join
+    (knn_ivfpq_residual_tenant)."""
+    from data_pipelines_using_llm_spark.operators import similarity as SIM
+    from data_pipelines_using_llm_spark.sources.tables import load_table
+
+    cells, icents, codes, pqcents = SQ.shared_index_parts(
+        spark, SF_DIR, residual=True
+    )
+    e = load_table(spark, SF_DIR, "embeddings")
+    labels = e.select("vec_id", F.col("label").cast("long").alias("label"))
+    mdir = str(tmp_path / "membership")
+    cells.join(labels, "vec_id").write.partitionBy("label").parquet(mdir)
+    mem = spark.read.parquet(mdir).select(
+        "vec_id", "cell", F.col("label").cast("long").alias("label")
+    )
+    served = SIM.ivfpq_serve(
+        SQ._query_block(e, "label"), mem, icents, codes, pqcents, SQ.K,
+        SQ.IVF_KMEANS_NPROBE, residual=True,
+    ).collect()
+    label_of = {r["vec_id"]: r["label"] for r in labels.collect()}
+    foreign = [
+        r for r in served
+        if label_of[r["neighbor_id"]] != label_of[r["query_id"]]
+    ]
+    assert served and not foreign, foreign[:5]
+
+    def keyed(rows) -> dict:
+        return {
+            (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine_sim"])
+            for r in rows
+        }
+
+    joined = SQ.knn_ivfpq_residual_tenant(spark, SF_DIR).collect()
+    assert keyed(served) == keyed(joined)
+
+
 def _load_ann_maintain():
     import importlib.util
 
@@ -1281,7 +1321,7 @@ def test_ivfpq_training_rejects_unseedable_corpus(spark, tmp_path, corpus):
                 spark, SF_DIR, tdir, source=bad, residual=residual
             )
     with pytest.raises(ValueError, match="no seed vectors"):
-        SIM.knn_ivfpq_selftrained(bad, "vec_id", "embedding")
+        SIM.ivfpq_train(bad, "vec_id", "embedding")
 
 
 @pytest.mark.parametrize("residual", [False, True])

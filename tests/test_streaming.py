@@ -775,11 +775,11 @@ def test_full_maintenance_loop_drift_retrain_recover_live_swap(
             F.col("v").alias("qv"),
             F.col("nrm").alias("qnrm"),
         )
-        serve = SIM.ivfpq_residual_serve if residual else SIM.ivfpq_serve
         return {
             (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine_sim"])
-            for r in serve(
-                queries, *parts, SQ.K, SQ.IVF_KMEANS_NPROBE
+            for r in SIM.ivfpq_serve(
+                queries, *parts, SQ.K, SQ.IVF_KMEANS_NPROBE,
+                residual=residual,
             ).collect()
         }
 
