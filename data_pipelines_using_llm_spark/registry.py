@@ -125,23 +125,20 @@ def _verified_counts() -> dict[str, int]:
 # hash-green.
 _REVERIFY: frozenset[str] = frozenset(
     {
-        # the single IVFPQ serve and the shared kNN query/top-k helpers
-        # (operators/similarity.py::ivfpq_serve, _top_k, query_block)
-        "knn_brute_force", "knn_arrow", "knn_lsh", "knn_ivf",
-        "knn_ivf_kmeans", "knn_ivf_int8", "knn_int8", "knn_pq",
-        "knn_pq_refined", "knn_ivfpq", "knn_ivfpq_refined",
-        "knn_ivfpq_stored", "knn_ivfpq_extended", "knn_ivfpq_residual",
+        # rows that reach the session artifact store or a scratch dir
+        # (operators/caching.py::session_artifact / scratch_dir), or the
+        # checkpoint-free ann_index_extend / ann_index_remove
+        "knn_pq_refined", "knn_ivfpq_refined", "knn_ivfpq_stored",
+        "knn_ivfpq_refined_stored", "knn_ivfpq_extended",
+        "knn_ivfpq_removed", "knn_ivfpq_residual",
         "knn_ivfpq_residual_refined", "knn_ivfpq_residual_stored",
-        "knn_ivfpq_residual_extended", "knn_ivfpq_removed",
-        "knn_ivfpq_tenant", "knn_brute_force_tenant",
-        "knn_ivfpq_tenant_refined", "knn_ivfpq_residual_tenant",
-        "knn_ivfpq_tenant_skewed", "knn_brute_force_tenant_skewed",
+        "knn_ivfpq_residual_extended", "knn_ivfpq_residual_removed",
+        "knn_ivfpq_tenant", "knn_ivfpq_tenant_refined",
+        "knn_ivfpq_residual_tenant", "knn_ivfpq_tenant_skewed",
         "knn_ivfpq_residual_tenant_skewed",
         "knn_ivfpq_tenant_skewed_refined", "knn_ivfpq_tenant_partitioned",
-        "knn_ivfpq_residual_removed", "knn_ivfpq_refined_stored",
         "ann_index_stats", "stream_knn_serve", "stream_knn_residual_serve",
         "stream_knn_tenant_serve", "stream_knn_residual_tenant_serve",
-        "hybrid_rrf_search",
     }
 )
 

@@ -846,54 +846,45 @@ def _stream_knn_serve_impl(
     spark: SparkSession, sf_dir: str, residual: bool, tenant: bool = False
 ) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
+    from data_pipelines_using_llm_spark.operators.caching import scratch_dir
     from data_pipelines_using_llm_spark.plans.similarity_queries import (
         QUERY_MOD,
         seed_index_dir,
     )
 
-    tdir = tempfile.mkdtemp(prefix="stream_ann_index_")
+    tdir = scratch_dir("stream_ann_index_")
     # the sf dir holds every table and a file source wants a directory:
     # stage a symlink-only dir holding just the embeddings file(s)
-    src_dir = tempfile.mkdtemp(prefix="stream_knn_src_")
-    out_dir = tempfile.mkdtemp(prefix="stream_knn_out_")
-    chk = tempfile.mkdtemp(prefix="stream_knn_chk_")
-    try:
-        # session-shared training committed as this stream's artifact
-        # (byte-compatible with ann_index_train's snapshot)
-        seed_index_dir(spark, sf_dir, tdir, residual=residual)
-        emb_path = os.path.join(sf_dir, "embeddings.parquet")
-        if os.path.isdir(emb_path):  # multi-file table: one link per part
-            leaves = [
-                os.path.join(emb_path, f)
-                for f in sorted(os.listdir(emb_path))
-                if f.endswith(".parquet")
-            ]
-        else:
-            leaves = [emb_path]
-        for i, leaf in enumerate(leaves):
-            os.symlink(leaf, os.path.join(src_dir, f"part-{i:05d}.parquet"))
-        labels = None
-        if tenant:
-            from data_pipelines_using_llm_spark.sources.tables import (
-                load_table,
-            )
+    src_dir = scratch_dir("stream_knn_src_")
+    out_dir = scratch_dir("stream_knn_out_")
+    chk = scratch_dir("stream_knn_chk_")
+    # session-shared training committed as this stream's artifact
+    # (byte-compatible with ann_index_train's snapshot)
+    seed_index_dir(spark, sf_dir, tdir, residual=residual)
+    emb_path = os.path.join(sf_dir, "embeddings.parquet")
+    if os.path.isdir(emb_path):  # multi-file table: one link per part
+        leaves = [
+            os.path.join(emb_path, f)
+            for f in sorted(os.listdir(emb_path))
+            if f.endswith(".parquet")
+        ]
+    else:
+        leaves = [emb_path]
+    for i, leaf in enumerate(leaves):
+        os.symlink(leaf, os.path.join(src_dir, f"part-{i:05d}.parquet"))
+    labels = None
+    if tenant:
+        from data_pipelines_using_llm_spark.sources.tables import load_table
 
-            labels = load_table(spark, sf_dir, "embeddings").select(
-                "vec_id", F.col("label").cast("long").alias("label")
-            )
-        run_stream_knn(
-            spark, src_dir, tdir, out_dir, chk, query_mod=QUERY_MOD,
-            labels=labels,
+        labels = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", F.col("label").cast("long").alias("label")
         )
-        return spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tdir, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(chk, ignore_errors=True)
-        shutil.rmtree(src_dir, ignore_errors=True)
+    run_stream_knn(
+        spark, src_dir, tdir, out_dir, chk, query_mod=QUERY_MOD,
+        labels=labels,
+    )
+    return spark.read.parquet(out_dir)
 
 
 def _stream_knn_oracle() -> str:

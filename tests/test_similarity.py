@@ -1330,9 +1330,65 @@ def test_shared_index_rejects_wrong_encoding_regime(
 ):
     """An artifact whose meta row reports the other encoding regime must
     raise ``ValueError`` (a bare ``assert`` vanishes under ``python -O``)."""
-    monkeypatch.setattr(SQ, "_SHARED_INDEX_CACHE", {})
+    from data_pipelines_using_llm_spark.operators import caching
+
+    monkeypatch.setattr(caching, "_ARTIFACTS", {})
     monkeypatch.setattr(
         SQ, "ann_index_meta", lambda *a, **k: {"residual": not residual}
     )
     with pytest.raises(ValueError, match="encoding regime"):
         SQ.shared_index_parts(spark, SF_DIR, residual=residual)
+
+
+def test_shared_index_rebuilds_when_embeddings_change(spark, tmp_path):
+    """The session store fingerprints its inputs: after the embeddings
+    file is rewritten, the shared index must be retrained on the new
+    corpus, not handed back from the old one."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "embeddings.parquet")
+    shutil.copyfile(f"{SF_DIR}/embeddings.parquet", path)
+    assert SQ.shared_index_parts(spark, str(tmp_path))[0].count() > 0
+
+    table = pq.read_table(path)
+    ids = sorted(table.column("vec_id").to_pylist())
+    cut = ids[len(ids) - len(ids) // 10]  # drop the highest-id tenth
+    subset = table.filter(pc.less(table.column("vec_id"), cut))
+    pq.write_table(subset, path)
+
+    cells = SQ.shared_index_parts(spark, str(tmp_path))[0]
+    assert cells.count() == subset.num_rows < table.num_rows
+
+
+def test_ann_maintenance_leaves_no_residue(spark, tmp_path):
+    """Once the session artifacts exist, the removal anchor and an
+    extend/remove round on an index hold nothing past
+    ``release_barriers()``: no persisted RDD and no scratch directory."""
+    import os
+
+    from data_pipelines_using_llm_spark.operators import caching
+    from data_pipelines_using_llm_spark.sources.tables import load_table
+
+    SQ.knn_ivfpq_removed(spark, SF_DIR).collect()
+    caching.release_barriers()
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+
+    assert SQ.knn_ivfpq_removed(spark, SF_DIR).collect()
+    tdir = str(tmp_path / "idx")
+    SQ.seed_index_dir(spark, SF_DIR, tdir)
+    e = load_table(spark, SF_DIR, "embeddings")
+    new = e.filter(F.col("vec_id") < 20).select(
+        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
+    )
+    SQ.ann_index_extend(spark, tdir, new)
+    SQ.ann_index_remove(spark, tdir, new.select("vec_id"))
+    assert SQ.ann_index_load(spark, tdir)[0].count() == e.count()
+    caching.release_barriers()
+
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+    root = caching._session_root()
+    assert [n for n in os.listdir(root) if not n.startswith("artifact_")] == []
