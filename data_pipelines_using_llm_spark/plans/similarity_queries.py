@@ -53,14 +53,28 @@ def _n_queries_cached(spark: SparkSession, sf_dir: str) -> int:
 _TO_D = "list_transform({col}, x -> CAST(x AS DOUBLE))"
 
 
+def _sql_dot_n(a: str, b: str, dim: int) -> str:
+    """Sequential-fold dot product over the first ``dim`` positions."""
+    return (
+        f"list_reduce(list_prepend(0.0, "
+        f"list_transform(range(1, {dim + 1}), i -> ({a})[i] * ({b})[i])), "
+        f"(acc, x) -> acc + x)"
+    )
+
+
+def _sql_d2_n(a: str, b: str, dim: int) -> str:
+    return (
+        f"list_reduce(list_prepend(0.0, "
+        f"list_transform(range(1, {dim + 1}), "
+        f"i -> (({a})[i] - ({b})[i]) * (({a})[i] - ({b})[i]))), "
+        f"(acc, x) -> acc + x)"
+    )
+
+
 def _sql_dot(a: str, b: str) -> str:
     """Sequential left-fold dot product — same op order as Spark's
     ``aggregate(zip_with(...))``, hence bit-identical doubles."""
-    return (
-        f"list_reduce(list_prepend(0.0, "
-        f"list_transform(range(1, {SIM.DIM + 1}), i -> ({a})[i] * ({b})[i])), "
-        f"(acc, x) -> acc + x)"
-    )
+    return _sql_dot_n(a, b, SIM.DIM)
 
 
 def _sql_plane(plane: list[int]) -> str:
@@ -95,6 +109,342 @@ def _sql_banded() -> str:
         for t in range(SIM.N_TABLES)
     )
     return f"banded AS (\n{selects}\n)"
+
+
+def _sql_subdot(full: str, m: str, sub: str) -> str:
+    """Sequential-fold dot product of subspace ``m`` of the full vector
+    ``full`` with the PQ_SUBDIM-wide vector ``sub``."""
+    sd = SIM.PQ_SUBDIM
+    return (
+        f"list_reduce(list_prepend(0.0, "
+        f"list_transform(range(1, {sd + 1}), i -> {full}[{m} * {sd} + i] * {sub}[i])), "
+        f"(acc, x) -> acc + x)"
+    )
+
+
+def _sql_fold_m(col: str) -> str:
+    """Sequential fold of ``col`` over a group's subspaces in ``m`` order."""
+    return (
+        f"list_reduce(list_prepend(0.0, array_agg({col} ORDER BY m)), "
+        f"(acc, x) -> acc + x)"
+    )
+
+
+# ---- the k-means / IVF / IVFPQ oracle builder ----
+#
+# One SQL statement of the algorithm of Jégou et al. (TPAMI 2011): a
+# coarse k-means quantizer, a product quantizer over the raw vectors or
+# their cell residuals, and ADC (asymmetric distance) serving with an
+# optional exact re-rank.  It takes only constants from
+# operators/similarity.py and calls none of its functions, so each hash
+# gate compares two independent statements of the algorithm.  The CTEs
+# that later CTEs reference are MATERIALIZED: inlined, DuckDB would
+# recompute the Lloyd chain at every reference.
+
+KMEANS_ITERS = 2  # Lloyd rounds of every coarse k-means oracle
+_EXTENDED_TRAIN = "vec_id % 2 = 0"  # the *_extended rows' training slice
+
+
+def _mean(name: str, src: str, key: str, dim: int) -> str:
+    """CTE ``name`` (key, cv): per ``key`` group of ``src``, the mean of
+    its ``v`` lists.  Each position is summed as an exact decimal, so the
+    doubles do not depend on summation order.  Every centroid and
+    codebook update in these oracles is this one CTE."""
+    return f"""{name} AS MATERIALIZED (
+    SELECT {key}, array_agg(s / n ORDER BY pos) AS cv FROM (
+        SELECT {key}, t.i AS pos,
+               CAST(sum(CAST(v[t.i] AS DECIMAL(28,10))) AS DOUBLE) AS s,
+               count(*) AS n
+        FROM {src}, range(1, {dim + 1}) t(i)
+        GROUP BY {key}, t.i
+    )
+    GROUP BY {key}
+)"""
+
+
+def _argmin(name: str, rows: str, cents: str, dim: int) -> str:
+    """CTE ``name`` (vec_id, v, cid, d2): each of ``rows``' vectors with
+    its nearest ``cents`` centroid by exact squared distance, the lowest
+    cid on a tie."""
+    return f"""{name} AS MATERIALIZED (
+    SELECT vec_id, v, cid, d2 FROM (
+        SELECT vec_id, v, cid, d2,
+               row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
+        FROM (SELECT b.vec_id, b.v, c.cid, {_sql_d2_n('b.v', 'c.cv', dim)} AS d2
+              FROM {rows} b CROSS JOIN {cents} c)
+    ) WHERE rn = 1
+)"""
+
+
+def _lloyd(
+    p: str, src: str, dim: int, k: int, rounds: int, train: str | None
+) -> str:
+    """Lloyd's k-means over ``src``'s (vec_id, v) rows, unrolled into
+    CTEs named ``{p}*``.  The seeds are the training rows with the ``k``
+    lowest ids, and each round is an :func:`_argmin` then a
+    :func:`_mean`.  Round ``rounds + 1`` is the final assignment, and
+    its mean is the stored centroid table ``{p}cent`` (cid, cv): the
+    re-derivation the trainer applies to cells and codebooks alike.
+
+    With a ``train`` predicate only the matching rows train, and every
+    other row is assigned against ``{p}cent`` (the add path).  Either
+    way ``{p}asg`` (vec_id, v, cid, d2) assigns every ``src`` row."""
+    rows, ctes = src, []
+    if train:
+        rows = f"{p}train"
+        ctes.append(
+            f"{rows} AS MATERIALIZED (SELECT vec_id, v FROM {src} WHERE {train})"
+        )
+    ctes.append(
+        f"{p}c0 AS MATERIALIZED (SELECT vec_id AS cid, v AS cv FROM {rows} "
+        f"WHERE vec_id < {k})"
+    )
+    prev = f"{p}c0"
+    for it in range(1, rounds + 2):
+        cent = f"{p}c{it}" if it <= rounds else f"{p}cent"
+        ctes.append(_argmin(f"{p}a{it}", rows, prev, dim))
+        ctes.append(_mean(cent, f"{p}a{it}", "cid", dim))
+        prev = cent
+    final = f"SELECT * FROM {p}a{rounds + 1}"
+    if train:
+        held = f"(SELECT vec_id, v FROM {src} WHERE NOT ({train}))"
+        ctes.append(_argmin(f"{p}held", held, prev, dim))
+        final += f"\n    UNION ALL\n    SELECT * FROM {p}held"
+    ctes.append(f"{p}asg AS MATERIALIZED (\n    {final}\n)")
+    return ",\n".join(ctes)
+
+
+_IVF_HEAD = f"""WITH {_SQL_BASE},
+q AS MATERIALIZED (
+    SELECT vec_id AS query_id, v AS qv, nrm AS qnrm
+    FROM n WHERE vec_id % {QUERY_MOD} = 0
+)"""
+
+
+def _cells(cents: str, key: str) -> str:
+    """``cents_n`` (cell, cv, cnrm) over the centroid table ``cents``
+    keyed by ``key``, and ``probes``: every query's cells ranked by
+    cosine to their centroids (``crank``)."""
+    return f"""cents_n AS MATERIALIZED (
+    SELECT {key} AS cell, cv, sqrt({_sql_dot('cv', 'cv')}) AS cnrm
+    FROM {cents}
+),
+probes AS MATERIALIZED (
+    SELECT query_id, qv, qnrm, cell,
+           row_number() OVER (
+               PARTITION BY query_id
+               ORDER BY {_sql_dot('qv', 'cv')} / (qnrm * cnrm) DESC, cell
+           ) AS crank
+    FROM q CROSS JOIN cents_n
+)"""
+
+
+def _coarse(train: str | None = None) -> str:
+    """The coarse half: KMEANS_ITERS Lloyd rounds from IVF_CELLS seeds,
+    ``lbl`` (vec_id, v, nrm, cell) giving every row its final cell, and
+    the :func:`_cells` CTEs over the stored centroids."""
+    return f"""{_lloyd("k", "base", SIM.DIM, SIM.IVF_CELLS, KMEANS_ITERS, train)},
+lbl AS MATERIALIZED (
+    SELECT n.vec_id, n.v, n.nrm, a.cid AS cell
+    FROM n JOIN kasg a ON a.vec_id = n.vec_id
+),
+{_cells("kcent", "cid")}"""
+
+
+def _pq(src: str, train: str | None) -> str:
+    """The product quantizer over ``src``'s (vec_id, v) rows: per
+    subspace, PQ_ITERS Lloyd rounds from PQ_K seeds.  ``codes`` (vec_id,
+    m, code) is the compressed corpus and ``pcentn`` (m, code, cv, cn2)
+    the stored codebooks with each codeword's squared norm."""
+    sd = SIM.PQ_SUBDIM
+    ctes = []
+    for mi in range(SIM.PQ_M):
+        ctes.append(
+            f"""sub{mi} AS MATERIALIZED (
+    SELECT vec_id,
+           list_transform(range({mi * sd + 1}, {(mi + 1) * sd + 1}), i -> v[i]) AS v
+    FROM {src}
+)"""
+        )
+        ctes.append(_lloyd(f"p{mi}", f"sub{mi}", sd, SIM.PQ_K, SIM.PQ_ITERS, train))
+    codes = "\n    UNION ALL\n    ".join(
+        f"SELECT vec_id, {mi} AS m, cid AS code FROM p{mi}asg"
+        for mi in range(SIM.PQ_M)
+    )
+    books = "\n    UNION ALL\n    ".join(
+        f"SELECT {mi} AS m, cid AS code, cv, {_sql_dot_n('cv', 'cv', sd)} AS cn2 "
+        f"FROM p{mi}cent"
+        for mi in range(SIM.PQ_M)
+    )
+    ctes.append(f"codes AS MATERIALIZED (\n    {codes}\n)")
+    ctes.append(f"pcentn AS MATERIALIZED (\n    {books}\n)")
+    return ",\n".join(ctes)
+
+
+def _ivfpq_ctes(
+    *, ivf: bool = True, residual: bool = False, train: str | None = None
+) -> str:
+    """The training CTEs of an IVFPQ index under one ``WITH``: the
+    :func:`_coarse` half when ``ivf``; for a ``residual`` index the rows
+    ``resid`` = x − c_cell of each vector minus its cell's centroid;
+    then the :func:`_pq` half over ``resid`` or the raw ``base``."""
+    ctes = [_IVF_HEAD]
+    if ivf:
+        ctes.append(_coarse(train))
+    if residual:
+        ctes.append(
+            f"""resid AS MATERIALIZED (
+    SELECT l.vec_id,
+           list_transform(range(1, {SIM.DIM + 1}), i -> l.v[i] - c.cv[i]) AS v
+    FROM lbl l JOIN cents_n c ON c.cell = l.cell
+)"""
+        )
+    ctes.append(_pq("resid" if residual else "base", train))
+    return ",\n".join(ctes)
+
+
+def _sql_tenant(tenant: str, x: str) -> str:
+    """The SQL statement of :func:`_tenant_label` for vec_id ``x``."""
+    if tenant == "label":
+        return f"(SELECT e.label FROM embeddings e WHERE e.vec_id = {x})"
+    return f"({_SKEW_SQL.format(x=x)})"
+
+
+def _ranked(name: str, scored: str) -> str:
+    """CTE ``name``: ``scored``'s (query_id, neighbor_id, cos) rows with
+    their per-query ``rank`` by cosine, the lowest id on a tie."""
+    return f"""{name} AS (
+    SELECT query_id, neighbor_id, cos,
+           row_number() OVER (PARTITION BY query_id
+                              ORDER BY cos DESC, neighbor_id) AS rank
+    FROM {scored}
+)"""
+
+
+_TOP_K = f"""SELECT query_id, neighbor_id, round(cos, 6) AS cosine_sim,
+       CAST(rank AS INT) AS rank
+FROM ranked WHERE rank <= {K}"""
+
+
+def _ivfpq_oracle(
+    *,
+    ivf: bool = True,
+    residual: bool = False,
+    tenant: str | None = None,
+    refine: bool = False,
+    anchor: str | None = None,
+) -> str:
+    """The oracle of every ``knn_pq*`` / ``knn_ivfpq*`` row, keyed like
+    :func:`_ivfpq_row`.  :func:`_ivfpq_ctes` trains the index
+    (``ivf=False``: PQ only), on the even ids for ``anchor="extended"``.
+    The candidates are every other vector, or with ``ivf`` the members
+    of each query's IVF_KMEANS_NPROBE nearest cells.  A ``tenant`` row
+    keeps the query's tenant only, and a ``"skewed"`` one probes every
+    cell for a tenant under _SKEW_HOT_SHARE of the corpus;
+    ``anchor="removed"`` drops the removed slice.  Candidates are
+    scored by ADC: the lookup table ``lut`` of query × codeword partial
+    dots, and for a ``residual`` index the reconstruction cosine
+    (q·c + q·r̂) / (‖q‖·sqrt(‖c‖² + 2·c·r̂ + ‖r̂‖²)) with the centroid ×
+    codeword cross terms ``ccross``.  A ``refine`` row re-ranks each
+    query's top C = PQ_REFINE_FACTOR·k by exact cosine."""
+    train = _EXTENDED_TRAIN if anchor == "extended" else None
+    ctes = [_ivfpq_ctes(ivf=ivf, residual=residual, train=train)]
+    if ivf:
+        bound, pred = str(IVF_KMEANS_NPROBE), ""
+        if tenant is not None:
+            pred = (
+                f" AND {_sql_tenant(tenant, 'c.vec_id')}"
+                f" = {_sql_tenant(tenant, 'p.query_id')}"
+            )
+        if tenant == "skewed":
+            bound = (
+                "(CASE WHEN (SELECT count(*) FROM embeddings et WHERE "
+                f"{_sql_tenant(tenant, 'et.vec_id')}"
+                f" = {_sql_tenant(tenant, 'p.query_id')})"
+                f" >= {_SKEW_HOT_SHARE} * (SELECT count(*) FROM embeddings)"
+                f" THEN {IVF_KMEANS_NPROBE} ELSE {SIM.IVF_CELLS} END)"
+            )
+        if anchor == "removed":
+            pred += f" AND NOT (c.vec_id % {REMOVE_MOD} = {REMOVE_RES})"
+        ctes.append(
+            f"""cand AS MATERIALIZED (
+    SELECT p.query_id, c.vec_id, c.cell
+    FROM probes p JOIN lbl c ON c.cell = p.cell
+    WHERE p.crank <= {bound} AND c.vec_id != p.query_id{pred}
+)"""
+        )
+    else:
+        ctes.append(
+            """cand AS MATERIALIZED (
+    SELECT q.query_id, b.vec_id
+    FROM q JOIN base b ON b.vec_id != q.query_id
+)"""
+        )
+    ctes.append(
+        f"""lut AS MATERIALIZED (
+    SELECT q.query_id, q.qnrm, c.m, c.code,
+           {_sql_subdot('q.qv', 'c.m', 'c.cv')} AS partial, c.cn2
+    FROM q CROSS JOIN pcentn c
+)"""
+    )
+    crs, cross, cell, crs_sum, join = "", "", "", "", ""
+    score = "g.adc / (g.qnrm * sqrt(g.rn2))"
+    if residual:
+        ctes.append(
+            f"""ccross AS MATERIALIZED (
+    SELECT cn.cell, p.m, p.code,
+           {_sql_subdot('cn.cv', 'p.m', 'p.cv')} AS crs
+    FROM cents_n cn CROSS JOIN pcentn p
+),
+qc AS MATERIALIZED (
+    SELECT q.query_id, c.cell, {_sql_dot('q.qv', 'c.cv')} AS qc,
+           {_sql_dot('c.cv', 'c.cv')} AS cn2c
+    FROM q CROSS JOIN cents_n c
+)"""
+        )
+        crs, cell = ", cx.crs", ", cell"
+        cross = (
+            "\n    JOIN ccross cx"
+            " ON cx.cell = cd.cell AND cx.m = co.m AND cx.code = co.code"
+        )
+        crs_sum = f"\n           {_sql_fold_m('crs')} AS crs,"
+        join = "\n    JOIN qc qq ON qq.query_id = g.query_id AND qq.cell = g.cell"
+        score = "(qq.qc + g.adc) / (g.qnrm * sqrt(qq.cn2c + 2.0 * g.crs + g.rn2))"
+    ctes.append(
+        f"""sp AS (
+    SELECT cd.*, l.qnrm, co.m, l.partial, l.cn2{crs}
+    FROM cand cd
+    JOIN codes co ON co.vec_id = cd.vec_id
+    JOIN lut l ON l.query_id = cd.query_id AND l.m = co.m AND l.code = co.code{cross}
+),
+pagg AS (
+    SELECT query_id, vec_id{cell},
+           {_sql_fold_m('partial')} AS adc,
+           {_sql_fold_m('cn2')} AS rn2,{crs_sum}
+           min(qnrm) AS qnrm
+    FROM sp GROUP BY query_id, vec_id{cell}
+),
+adc AS (
+    SELECT g.query_id, g.vec_id AS neighbor_id, {score} AS cos
+    FROM pagg g{join}
+)"""
+    )
+    scored = "adc"
+    if refine:
+        ctes.append(_ranked("adc_ranked", "adc"))
+        ctes.append(
+            f"""exact AS (
+    SELECT cd.query_id, cd.neighbor_id,
+           {_sql_dot('q.qv', 'c.v')} / (q.qnrm * c.nrm) AS cos
+    FROM adc_ranked cd
+    JOIN n c ON c.vec_id = cd.neighbor_id
+    JOIN q ON q.query_id = cd.query_id
+    WHERE cd.rank <= {SIM.PQ_REFINE_FACTOR * K}
+)"""
+        )
+        scored = "exact"
+    ctes.append(_ranked("ranked", scored))
+    return "\n" + ",\n".join(ctes) + f"\n{_TOP_K}\n"
 
 
 def knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -257,51 +607,34 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _knn_ivf_oracle() -> str:
+    """IVF oracle over the metadata ``label`` cells: their means, then
+    the :func:`_ivf_exact_oracle` probe and exact-cosine tail."""
+    return _ivf_exact_oracle(
+        f"""lbl AS MATERIALIZED (
+    SELECT n.vec_id, n.v, n.nrm, e.label AS cell
+    FROM n JOIN embeddings e ON e.vec_id = n.vec_id
+),
+{_mean("cents", "lbl", "cell", SIM.DIM)},
+{_cells("cents", "cell")}""",
+        NPROBE,
+    )
+
+
+def _ivf_exact_oracle(cells: str, nprobe: int) -> str:
+    """The float IVF oracle over the ``cells`` CTEs (``lbl``, ``probes``):
+    exact cosine against the members of each query's ``nprobe`` nearest
+    cells."""
     return f"""
-WITH {_SQL_BASE},
-lbl AS (SELECT n.vec_id, n.v, n.nrm, e.label AS cell
-        FROM n JOIN embeddings e ON e.vec_id = n.vec_id),
-comp AS (
-    SELECT cell, t.i AS pos, v[t.i] AS x
-    FROM lbl, range(1, {SIM.DIM + 1}) t(i)
-),
-sums AS (
-    SELECT cell, pos,
-           CAST(sum(CAST(x AS DECIMAL(28,10))) AS DOUBLE) AS s,
-           count(*) AS cnt
-    FROM comp GROUP BY cell, pos
-),
-cents AS (
-    SELECT cell, array_agg(s / cnt ORDER BY pos) AS cv FROM sums GROUP BY cell
-),
-cents_n AS (
-    SELECT cell, cv, sqrt({_sql_dot('cv', 'cv')}) AS cnrm FROM cents
-),
-q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n
-      WHERE vec_id % {QUERY_MOD} = 0),
-probes AS (
-    SELECT query_id, qv, qnrm, cell,
-           row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY {_sql_dot('qv', 'cv')} / (qnrm * cnrm) DESC, cell
-           ) AS crank
-    FROM q CROSS JOIN cents_n
-),
+{_IVF_HEAD},
+{cells},
 scored AS (
     SELECT p.query_id, c.vec_id AS neighbor_id,
            {_sql_dot('p.qv', 'c.v')} / (p.qnrm * c.nrm) AS cos
     FROM probes p JOIN lbl c ON c.cell = p.cell
-    WHERE p.crank <= {NPROBE} AND c.vec_id != p.query_id
+    WHERE p.crank <= {nprobe} AND c.vec_id != p.query_id
 ),
-ranked AS (
-    SELECT query_id, neighbor_id, cos,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cos DESC, neighbor_id) AS rank
-    FROM scored
-)
-SELECT query_id, neighbor_id, round(cos, 6) AS cosine_sim,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {K}
+{_ranked("ranked", "scored")}
+{_TOP_K}
 """
 
 
@@ -376,122 +709,10 @@ def _kmeans_cells(e: DataFrame) -> DataFrame:
     )
 
 
-def _kmeans_lbl_prefix(k: int = 10, iters: int = 2) -> str:
-    """K-means assignment oracle prefix — everything through the ``lbl``
-    CTE (vec_id, v, nrm, cell).  Shared by the IVF probe oracles (via
-    :func:`_ivf_kmeans_prefix`) and the semantic-dedup oracle so the
-    quantizer definition cannot drift between them."""
-    return f"""
-WITH {_SQL_BASE},
-{_kmeans_lbl_body(k, iters)}"""
-
-
-def _kmeans_lbl_body(k: int = 10, iters: int = 2) -> str:
-    """CTE chain of :func:`_kmeans_lbl_prefix` WITHOUT the ``WITH base``
-    header — composable with other CTE families (the IVFPQ oracle needs
-    both this and :func:`_pq_prefix` under one ``WITH``)."""
-    ctes = [f"c0 AS (SELECT vec_id AS cid, v AS cv FROM base WHERE vec_id < {k})"]
-    prev = "c0"
-    for it in range(1, iters + 1):
-        ctes.append(
-            f"""a{it} AS (
-    SELECT vec_id, v, cid FROM (
-        SELECT vec_id, v, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-        FROM (SELECT b.vec_id, b.v, c.cid, {_sql_d2('b.v', 'c.cv')} AS d2
-              FROM base b CROSS JOIN {prev} c)
-    ) WHERE rn = 1
-)"""
-        )
-        ctes.append(
-            f"""s{it} AS (
-    SELECT cid, t.i AS pos,
-           CAST(sum(CAST(v[t.i] AS DECIMAL(28,10))) AS DOUBLE) AS s,
-           count(*) AS n
-    FROM a{it}, range(1, {SIM.DIM + 1}) t(i)
-    GROUP BY cid, t.i
-)"""
-        )
-        ctes.append(
-            f"c{it} AS (SELECT cid, array_agg(s / n ORDER BY pos) AS cv "
-            f"FROM s{it} GROUP BY cid)"
-        )
-        prev = f"c{it}"
-    kmeans_ctes = ",\n".join(ctes)
-    return f"""{kmeans_ctes},
-asg AS (
-    SELECT vec_id, cid AS cell FROM (
-        SELECT b.vec_id, c.cid,
-               row_number() OVER (PARTITION BY b.vec_id
-                                  ORDER BY {_sql_d2('b.v', 'c.cv')}, c.cid) AS rn
-        FROM base b CROSS JOIN {prev} c
-    ) WHERE rn = 1
-),
-lbl AS (SELECT n.vec_id, n.v, n.nrm, a.cell
-        FROM n JOIN asg a ON a.vec_id = n.vec_id)"""
-
-
-def _ivf_kmeans_prefix(k: int = 10, iters: int = 2) -> str:
-    """Shared oracle prefix: :func:`_kmeans_lbl_prefix` + cell centroids
-    + float probe ranking — everything up through the ``probes`` CTE.
-    Consumed by both the float-scored (``knn_ivf_kmeans``) and
-    int8-scored (``knn_ivf_int8``) oracles."""
-    return f"""{_kmeans_lbl_prefix(k, iters)},
-{_ivf_probe_body()}"""
-
-
-def _ivf_probe_body() -> str:
-    """Cell centroids + float probe ranking CTEs (everything between
-    ``lbl`` and ``probes``), composable under an existing ``WITH`` —
-    shared by :func:`_ivf_kmeans_prefix` and the IVFPQ oracle."""
-    return f"""comp AS (
-    SELECT cell, t.i AS pos, v[t.i] AS x
-    FROM lbl, range(1, {SIM.DIM + 1}) t(i)
-),
-sums AS (
-    SELECT cell, pos,
-           CAST(sum(CAST(x AS DECIMAL(28,10))) AS DOUBLE) AS s,
-           count(*) AS cnt
-    FROM comp GROUP BY cell, pos
-),
-cents AS (
-    SELECT cell, array_agg(s / cnt ORDER BY pos) AS cv FROM sums GROUP BY cell
-),
-cents_n AS (
-    SELECT cell, cv, sqrt({_sql_dot('cv', 'cv')}) AS cnrm FROM cents
-),
-q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n
-      WHERE vec_id % {QUERY_MOD} = 0),
-probes AS (
-    SELECT query_id, qv, qnrm, cell,
-           row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY {_sql_dot('qv', 'cv')} / (qnrm * cnrm) DESC, cell
-           ) AS crank
-    FROM q CROSS JOIN cents_n
-)"""
-
-
-def _knn_ivf_kmeans_oracle(k: int = 10, iters: int = 2) -> str:
-    """IVF oracle over k-means cells: the ``_kmeans_oracle`` assignment
-    CTEs feed the ``_knn_ivf_oracle`` probe/score/rank structure."""
-    return f"""{_ivf_kmeans_prefix(k, iters)},
-scored AS (
-    SELECT p.query_id, c.vec_id AS neighbor_id,
-           {_sql_dot('p.qv', 'c.v')} / (p.qnrm * c.nrm) AS cos
-    FROM probes p JOIN lbl c ON c.cell = p.cell
-    WHERE p.crank <= {IVF_KMEANS_NPROBE} AND c.vec_id != p.query_id
-),
-ranked AS (
-    SELECT query_id, neighbor_id, cos,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cos DESC, neighbor_id) AS rank
-    FROM scored
-)
-SELECT query_id, neighbor_id, round(cos, 6) AS cosine_sim,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {K}
-"""
+def _knn_ivf_kmeans_oracle() -> str:
+    """IVF oracle over k-means cells: the builder's coarse half
+    (:func:`_coarse`) under the :func:`_ivf_exact_oracle` tail."""
+    return _ivf_exact_oracle(_coarse(), IVF_KMEANS_NPROBE)
 
 
 def knn_ivf_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -506,10 +727,13 @@ def knn_ivf_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _knn_ivf_int8_oracle(k: int = 10, iters: int = 2) -> str:
-    """Same quantizer prefix as ``_knn_ivf_kmeans_oracle``; candidate
-    scoring swaps the float fold for exact int8 integer dot products."""
-    return f"""{_ivf_kmeans_prefix(k, iters)},
+def _knn_ivf_int8_oracle() -> str:
+    """The builder's coarse half (:func:`_coarse`), as in
+    ``_knn_ivf_kmeans_oracle``; candidate scoring swaps the float fold
+    for exact int8 integer dot products."""
+    return f"""
+{_IVF_HEAD},
+{_coarse()},
 sc8 AS (
     SELECT vec_id, v,
            CASE WHEN amax > 0 THEN amax / {SIM.INT8_LEVELS} ELSE 1.0 END AS scale
@@ -522,31 +746,21 @@ q8 AS (
            list_transform(v, x -> CAST(round(x / scale) AS BIGINT)) AS qc
     FROM sc8
 ),
-n8 AS (
+n8 AS MATERIALIZED (
     SELECT vec_id, qc, sqrt(CAST({_sql_idot('qc', 'qc')} AS DOUBLE)) AS qnrm8
     FROM q8
-),
-lbl8 AS (
-    SELECT l.vec_id, n8.qc, n8.qnrm8, l.cell
-    FROM lbl l JOIN n8 ON n8.vec_id = l.vec_id
 ),
 scored AS (
     SELECT p.query_id, c.vec_id AS neighbor_id,
            CAST({_sql_idot('qq.qc', 'c.qc')} AS DOUBLE) / (qq.qnrm8 * c.qnrm8) AS cos
     FROM probes p
     JOIN n8 qq ON qq.vec_id = p.query_id
-    JOIN lbl8 c ON c.cell = p.cell
+    JOIN lbl l ON l.cell = p.cell
+    JOIN n8 c ON c.vec_id = l.vec_id
     WHERE p.crank <= {IVF_KMEANS_NPROBE} AND c.vec_id != p.query_id
 ),
-ranked AS (
-    SELECT query_id, neighbor_id, cos,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cos DESC, neighbor_id) AS rank
-    FROM scored
-)
-SELECT query_id, neighbor_id, round(cos, 6) AS cosine_sim,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {K}
+{_ranked("ranked", "scored")}
+{_TOP_K}
 """
 
 
@@ -575,10 +789,12 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dedup_semantic_oracle(k: int = 10, iters: int = 2) -> str:
-    """Same k-means assignment prefix as the IVF oracles; the pair scan
-    and keep rule mirror operators/similarity.py::semantic_dedup."""
-    return f"""{_kmeans_lbl_prefix(k, iters)},
+def _dedup_semantic_oracle() -> str:
+    """The builder's coarse half (:func:`_coarse`); the pair scan and
+    keep rule mirror operators/similarity.py::semantic_dedup."""
+    return f"""
+{_IVF_HEAD},
+{_coarse()},
 sd_pairs AS (
     SELECT b.vec_id AS vid, a.vec_id AS partner
     FROM lbl a JOIN lbl b ON a.cell = b.cell AND a.vec_id < b.vec_id
@@ -716,58 +932,14 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.kmeans_assign(e, "vec_id", "embedding", k=10, iters=2)
 
 
-def _sql_d2(a: str, b: str) -> str:
-    return (
-        f"list_reduce(list_prepend(0.0, "
-        f"list_transform(range(1, {SIM.DIM + 1}), "
-        f"i -> (({a})[i] - ({b})[i]) * (({a})[i] - ({b})[i]))), "
-        f"(acc, x) -> acc + x)"
-    )
-
-
-def _kmeans_oracle(k: int = 10, iters: int = 2) -> str:
-    ctes = [
-        f"base AS (SELECT vec_id, {_TO_D.format(col='embedding')} AS v FROM embeddings)",
-        f"c0 AS (SELECT vec_id AS cid, v AS cv FROM base WHERE vec_id < {k})",
-    ]
-    prev = "c0"
-    for it in range(1, iters + 1):
-        ctes.append(
-            f"""a{it} AS (
-    SELECT vec_id, v, cid FROM (
-        SELECT vec_id, v, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-        FROM (SELECT b.vec_id, b.v, c.cid, {_sql_d2('b.v', 'c.cv')} AS d2
-              FROM base b CROSS JOIN {prev} c)
-    ) WHERE rn = 1
-)"""
-        )
-        ctes.append(
-            f"""s{it} AS (
-    SELECT cid, t.i AS pos,
-           CAST(sum(CAST(v[t.i] AS DECIMAL(28,10))) AS DOUBLE) AS s,
-           count(*) AS n
-    FROM a{it}, range(1, {SIM.DIM + 1}) t(i)
-    GROUP BY cid, t.i
-)"""
-        )
-        ctes.append(
-            f"c{it} AS (SELECT cid, array_agg(s / n ORDER BY pos) AS cv "
-            f"FROM s{it} GROUP BY cid)"
-        )
-        prev = f"c{it}"
-    joined = ",\n".join(ctes)
+def _kmeans_oracle() -> str:
+    """The builder's Lloyd rounds (:func:`_lloyd`); the final
+    assignment carries each vector's distance to its centroid."""
     return f"""
-WITH {joined},
-scored AS (
-    SELECT b.vec_id, c.cid, {_sql_d2('b.v', 'c.cv')} AS d2
-    FROM base b CROSS JOIN {prev} c
-)
+WITH {_SQL_BASE},
+{_lloyd("k", "base", SIM.DIM, SIM.IVF_CELLS, KMEANS_ITERS, None)}
 SELECT vec_id, cid AS cluster_id, round(sqrt(d2), 6) AS dist
-FROM (SELECT vec_id, cid, d2,
-             row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-      FROM scored)
-WHERE rn = 1
+FROM kasg
 """
 
 
@@ -845,162 +1017,6 @@ def _pq_parts(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     return codes, pqcents
 
 
-def _sql_dot_n(a: str, b: str, dim: int) -> str:
-    """Sequential-fold dot product over the first ``dim`` positions."""
-    return (
-        f"list_reduce(list_prepend(0.0, "
-        f"list_transform(range(1, {dim + 1}), i -> ({a})[i] * ({b})[i])), "
-        f"(acc, x) -> acc + x)"
-    )
-
-
-def _sql_d2_n(a: str, b: str, dim: int) -> str:
-    return (
-        f"list_reduce(list_prepend(0.0, "
-        f"list_transform(range(1, {dim + 1}), "
-        f"i -> (({a})[i] - ({b})[i]) * (({a})[i] - ({b})[i]))), "
-        f"(acc, x) -> acc + x)"
-    )
-
-
-def _pq_prefix(m: int, k: int, iters: int, src: str = "base") -> str:
-    """Per-subspace k-means unrolled (same CTE pattern as
-    :func:`_kmeans_lbl_prefix`, parameterized by subspace), then the
-    code table, final-assignment sub-codebooks, and codeword norms.
-    ``src`` names the (vec_id, v) CTE the subspaces slice — ``base``
-    (raw vectors; every pre-existing oracle, byte-identical) or
-    ``resid`` (cell-centered residuals; the residual-IVFPQ family)."""
-    sd = SIM.DIM // m
-    ctes = []
-    for mi in range(m):
-        lo = mi * sd + 1
-        ctes.append(
-            f"sub{mi} AS (SELECT vec_id, "
-            f"list_transform(range({lo}, {lo + sd}), i -> v[i]) AS sv "
-            f"FROM {src})"
-        )
-        ctes.append(
-            f"p{mi}c0 AS (SELECT vec_id AS cid, sv AS cv FROM sub{mi} "
-            f"WHERE vec_id < {k})"
-        )
-        prev = f"p{mi}c0"
-        for it in range(1, iters + 1):
-            ctes.append(
-                f"""p{mi}a{it} AS (
-    SELECT vec_id, sv, cid FROM (
-        SELECT vec_id, sv, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-        FROM (SELECT b.vec_id, b.sv, c.cid, {_sql_d2_n('b.sv', 'c.cv', sd)} AS d2
-              FROM sub{mi} b CROSS JOIN {prev} c)
-    ) WHERE rn = 1
-)"""
-            )
-            ctes.append(
-                f"""p{mi}s{it} AS (
-    SELECT cid, t.i AS pos,
-           CAST(sum(CAST(sv[t.i] AS DECIMAL(28,10))) AS DOUBLE) AS s,
-           count(*) AS n
-    FROM p{mi}a{it}, range(1, {sd + 1}) t(i)
-    GROUP BY cid, t.i
-)"""
-            )
-            ctes.append(
-                f"p{mi}c{it} AS (SELECT cid, array_agg(s / n ORDER BY pos) AS cv "
-                f"FROM p{mi}s{it} GROUP BY cid)"
-            )
-            prev = f"p{mi}c{it}"
-        ctes.append(
-            f"""p{mi}asg AS (
-    SELECT vec_id, cid AS code FROM (
-        SELECT b.vec_id, c.cid,
-               row_number() OVER (PARTITION BY b.vec_id
-                                  ORDER BY {_sql_d2_n('b.sv', 'c.cv', sd)}, c.cid) AS rn
-        FROM sub{mi} b CROSS JOIN {prev} c
-    ) WHERE rn = 1
-)"""
-        )
-    codes_sel = "\nUNION ALL\n".join(
-        f"SELECT vec_id, {mi} AS m, code FROM p{mi}asg" for mi in range(m)
-    )
-    subs_sel = "\nUNION ALL\n".join(
-        f"SELECT vec_id, {mi} AS m, sv FROM sub{mi}" for mi in range(m)
-    )
-    ctes.append(f"codes AS (\n{codes_sel}\n)")
-    ctes.append(f"subs AS (\n{subs_sel}\n)")
-    ctes.append(
-        f"""pcomp AS (
-    SELECT c.m, c.code, t.i AS pos, s.sv[t.i] AS x
-    FROM codes c
-    JOIN subs s ON s.vec_id = c.vec_id AND s.m = c.m,
-         range(1, {sd + 1}) t(i)
-)"""
-    )
-    ctes.append(
-        """psums AS (
-    SELECT m, code, pos,
-           CAST(sum(CAST(x AS DECIMAL(28,10))) AS DOUBLE) AS s,
-           count(*) AS n
-    FROM pcomp GROUP BY m, code, pos
-)"""
-    )
-    ctes.append(
-        "pcents AS (SELECT m, code, array_agg(s / n ORDER BY pos) AS cv "
-        "FROM psums GROUP BY m, code)"
-    )
-    ctes.append(
-        f"pcentn AS (SELECT m, code, cv, {_sql_dot_n('cv', 'cv', sd)} AS cn2 "
-        f"FROM pcents)"
-    )
-    return ",\n".join(ctes)
-
-
-def _knn_pq_oracle(
-    m: int = SIM.PQ_M, kcodes: int = SIM.PQ_K, iters: int = SIM.PQ_ITERS
-) -> str:
-    sd = SIM.DIM // m
-    return f"""
-WITH {_SQL_BASE},
-{_pq_prefix(m, kcodes, iters)},
-q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n
-      WHERE vec_id % {QUERY_MOD} = 0),
-lut AS (
-    SELECT q.query_id, q.qnrm, c.m, c.code,
-           list_reduce(list_prepend(0.0,
-               list_transform(range(1, {sd + 1}),
-                   i -> q.qv[c.m * {sd} + i] * c.cv[i])),
-               (acc, x) -> acc + x) AS partial,
-           c.cn2
-    FROM q CROSS JOIN pcentn c
-),
-sp AS (
-    SELECT l.query_id, c.vec_id, l.qnrm, l.m, l.partial, l.cn2
-    FROM codes c JOIN lut l ON l.m = c.m AND l.code = c.code
-    WHERE c.vec_id != l.query_id
-),
-pagg AS (
-    SELECT query_id, vec_id,
-           list_reduce(list_prepend(0.0, array_agg(partial ORDER BY m)),
-                       (acc, x) -> acc + x) AS adc,
-           list_reduce(list_prepend(0.0, array_agg(cn2 ORDER BY m)),
-                       (acc, x) -> acc + x) AS rn2,
-           min(qnrm) AS qnrm
-    FROM sp GROUP BY query_id, vec_id
-),
-ranked AS (
-    SELECT query_id, vec_id AS neighbor_id,
-           adc / (qnrm * sqrt(rn2)) AS cos,
-           row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY adc / (qnrm * sqrt(rn2)) DESC, vec_id
-           ) AS rank
-    FROM pagg
-)
-SELECT query_id, neighbor_id, round(cos, 6) AS cosine_sim,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {K}
-"""
-
-
 def knn_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ ADC candidates + exact re-rank — FAISS ``IndexRefineFlat``
     over ``IndexPQ``: the ADC scan proposes top-C (C = 8·k) per query,
@@ -1016,75 +1032,6 @@ def knn_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _knn_pq_refined_oracle(
-    m: int = SIM.PQ_M,
-    kcodes: int = SIM.PQ_K,
-    iters: int = SIM.PQ_ITERS,
-    refine_factor: int = SIM.PQ_REFINE_FACTOR,
-) -> str:
-    """The PQ-candidate CTE family (same ``_pq_prefix`` as the knn_pq
-    oracle, ranked to C = refine_factor·k) composed with the exact
-    cosine re-rank the knn_brute_force oracle expresses — the SQL
-    statement of IndexRefineFlat-over-IndexPQ."""
-    sd = SIM.DIM // m
-    ncand = refine_factor * K
-    return f"""
-WITH {_SQL_BASE},
-{_pq_prefix(m, kcodes, iters)},
-q AS MATERIALIZED (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n
-      WHERE vec_id % {QUERY_MOD} = 0),
-lut AS (
-    SELECT q.query_id, q.qnrm, c.m, c.code,
-           list_reduce(list_prepend(0.0,
-               list_transform(range(1, {sd + 1}),
-                   i -> q.qv[c.m * {sd} + i] * c.cv[i])),
-               (acc, x) -> acc + x) AS partial,
-           c.cn2
-    FROM q CROSS JOIN pcentn c
-),
-sp AS (
-    SELECT l.query_id, c.vec_id, l.qnrm, l.m, l.partial, l.cn2
-    FROM codes c JOIN lut l ON l.m = c.m AND l.code = c.code
-    WHERE c.vec_id != l.query_id
-),
-pagg AS (
-    SELECT query_id, vec_id,
-           list_reduce(list_prepend(0.0, array_agg(partial ORDER BY m)),
-                       (acc, x) -> acc + x) AS adc,
-           list_reduce(list_prepend(0.0, array_agg(cn2 ORDER BY m)),
-                       (acc, x) -> acc + x) AS rn2,
-           min(qnrm) AS qnrm
-    FROM sp GROUP BY query_id, vec_id
-),
-cand AS (
-    SELECT query_id, vec_id AS neighbor_id FROM (
-        SELECT query_id, vec_id,
-               row_number() OVER (
-                   PARTITION BY query_id
-                   ORDER BY adc / (qnrm * sqrt(rn2)) DESC, vec_id
-               ) AS crank
-        FROM pagg
-    ) WHERE crank <= {ncand}
-),
-exact AS (
-    SELECT cd.query_id, cd.neighbor_id,
-           {_sql_dot('q.qv', 'c.v')} / (q.qnrm * c.nrm) AS cos
-    FROM cand cd
-    JOIN n c ON c.vec_id = cd.neighbor_id
-    JOIN q ON q.query_id = cd.query_id
-),
-ranked AS (
-    SELECT query_id, neighbor_id, cos,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cos DESC, neighbor_id) AS rank
-    FROM exact
-)
-SELECT query_id, neighbor_id, round(cos, 6) AS cosine_sim,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {K}
-"""
-
-
 def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (k-means cells) + PQ codes — the FAISS IVFPQ serving stack:
     probe float, score compressed via the ADC lookup table.  Trained by
@@ -1093,77 +1040,6 @@ def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal-centroid expression over its persisted base."""
     e = load_table(spark, sf_dir, "embeddings")
     return _ivfpq_row(spark, sf_dir, SIM.ivfpq_train(e, "vec_id", "embedding"))
-
-
-def _knn_ivfpq_oracle(
-    k: int = 10,
-    iters: int = 2,
-    m: int = SIM.PQ_M,
-    kcodes: int = SIM.PQ_K,
-    pq_iters: int = SIM.PQ_ITERS,
-    extra_cand_pred: str = "",
-    probe_bound: str | None = None,
-) -> str:
-    """IVFPQ oracle: the k-means cell/probe CTE family and the PQ
-    codebook CTE family composed under one WITH — candidates come from
-    the probed cells, scores from the ADC lookup table.
-    ``extra_cand_pred`` appends a predicate to the candidate CTE (the
-    removed-ids exclusion of ``knn_ivfpq_removed``); ``probe_bound``
-    replaces the scalar probe-depth literal with a SQL expression (the
-    per-tenant-class policy of ``knn_ivfpq_tenant_skewed`` — it may
-    reference ``p``, the probes row).  The defaults leave every
-    existing oracle byte-identical."""
-    sd = SIM.DIM // m
-    if probe_bound is None:
-        probe_bound = str(IVF_KMEANS_NPROBE)
-    return f"""
-WITH {_SQL_BASE},
-{_kmeans_lbl_body(k, iters)},
-{_ivf_probe_body()},
-{_pq_prefix(m, kcodes, pq_iters)},
-cand AS (
-    SELECT p.query_id, c.vec_id
-    FROM probes p JOIN lbl c ON c.cell = p.cell
-    WHERE p.crank <= {probe_bound} AND c.vec_id != p.query_id{extra_cand_pred}
-),
-lut AS (
-    SELECT q.query_id, q.qnrm, c.m, c.code,
-           list_reduce(list_prepend(0.0,
-               list_transform(range(1, {sd + 1}),
-                   i -> q.qv[c.m * {sd} + i] * c.cv[i])),
-               (acc, x) -> acc + x) AS partial,
-           c.cn2
-    FROM q CROSS JOIN pcentn c
-),
-sp AS (
-    SELECT cd.query_id, cd.vec_id, l.qnrm, co.m, l.partial, l.cn2
-    FROM cand cd
-    JOIN codes co ON co.vec_id = cd.vec_id
-    JOIN lut l ON l.query_id = cd.query_id
-             AND l.m = co.m AND l.code = co.code
-),
-pagg AS (
-    SELECT query_id, vec_id,
-           list_reduce(list_prepend(0.0, array_agg(partial ORDER BY m)),
-                       (acc, x) -> acc + x) AS adc,
-           list_reduce(list_prepend(0.0, array_agg(cn2 ORDER BY m)),
-                       (acc, x) -> acc + x) AS rn2,
-           min(qnrm) AS qnrm
-    FROM sp GROUP BY query_id, vec_id
-),
-ranked AS (
-    SELECT query_id, vec_id AS neighbor_id,
-           adc / (qnrm * sqrt(rn2)) AS cos,
-           row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY adc / (qnrm * sqrt(rn2)) DESC, vec_id
-           ) AS rank
-    FROM pagg
-)
-SELECT query_id, neighbor_id, round(cos, 6) AS cosine_sim,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {K}
-"""
 
 
 def knn_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1175,92 +1051,6 @@ def knn_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivfpq_row(
         spark, sf_dir, SIM.ivfpq_train(e, "vec_id", "embedding"), refine=True
     )
-
-
-def _knn_ivfpq_refined_oracle(
-    k: int = 10,
-    iters: int = 2,
-    m: int = SIM.PQ_M,
-    kcodes: int = SIM.PQ_K,
-    pq_iters: int = SIM.PQ_ITERS,
-    refine_factor: int = SIM.PQ_REFINE_FACTOR,
-    extra_cand_pred: str = "",
-    probe_bound: str | None = None,
-) -> str:
-    """The IVFPQ candidate CTE families (cells + codes, ranked to
-    C = refine_factor·k) composed with the exact-cosine re-rank —
-    IndexRefineFlat(IndexIVFPQ) in SQL.  ``extra_cand_pred`` appends a
-    predicate to the candidate CTE (the tenant filter of
-    ``knn_ivfpq_tenant_refined``); ``probe_bound`` replaces the scalar
-    probe-depth literal with a SQL expression (the per-tenant-class
-    policy of ``knn_ivfpq_tenant_skewed_refined``); defaults leave
-    existing oracles byte-identical."""
-    sd = SIM.DIM // m
-    ncand = refine_factor * K
-    if probe_bound is None:
-        probe_bound = str(IVF_KMEANS_NPROBE)
-    return f"""
-WITH {_SQL_BASE},
-{_kmeans_lbl_body(k, iters)},
-{_ivf_probe_body()},
-{_pq_prefix(m, kcodes, pq_iters)},
-cand0 AS (
-    SELECT p.query_id, c.vec_id
-    FROM probes p JOIN lbl c ON c.cell = p.cell
-    WHERE p.crank <= {probe_bound} AND c.vec_id != p.query_id{extra_cand_pred}
-),
-lut AS (
-    SELECT q.query_id, q.qnrm, c.m, c.code,
-           list_reduce(list_prepend(0.0,
-               list_transform(range(1, {sd + 1}),
-                   i -> q.qv[c.m * {sd} + i] * c.cv[i])),
-               (acc, x) -> acc + x) AS partial,
-           c.cn2
-    FROM q CROSS JOIN pcentn c
-),
-sp AS (
-    SELECT cd.query_id, cd.vec_id, l.qnrm, co.m, l.partial, l.cn2
-    FROM cand0 cd
-    JOIN codes co ON co.vec_id = cd.vec_id
-    JOIN lut l ON l.query_id = cd.query_id
-             AND l.m = co.m AND l.code = co.code
-),
-pagg AS (
-    SELECT query_id, vec_id,
-           list_reduce(list_prepend(0.0, array_agg(partial ORDER BY m)),
-                       (acc, x) -> acc + x) AS adc,
-           list_reduce(list_prepend(0.0, array_agg(cn2 ORDER BY m)),
-                       (acc, x) -> acc + x) AS rn2,
-           min(qnrm) AS qnrm
-    FROM sp GROUP BY query_id, vec_id
-),
-cand AS (
-    SELECT query_id, vec_id AS neighbor_id FROM (
-        SELECT query_id, vec_id,
-               row_number() OVER (
-                   PARTITION BY query_id
-                   ORDER BY adc / (qnrm * sqrt(rn2)) DESC, vec_id
-               ) AS crank
-        FROM pagg
-    ) WHERE crank <= {ncand}
-),
-exact AS (
-    SELECT cd.query_id, cd.neighbor_id,
-           {_sql_dot('q.qv', 'c.v')} / (q.qnrm * c.nrm) AS cos
-    FROM cand cd
-    JOIN n c ON c.vec_id = cd.neighbor_id
-    JOIN q ON q.query_id = cd.query_id
-),
-ranked AS (
-    SELECT query_id, neighbor_id, cos,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cos DESC, neighbor_id) AS rank
-    FROM exact
-)
-SELECT query_id, neighbor_id, round(cos, 6) AS cosine_sim,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {K}
-"""
 
 
 def knn_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1312,178 +1102,6 @@ def knn_ivfpq_residual_stored(
     fails this gate; the residual training just happens once per
     session instead of once per gate row)."""
     return _ivfpq_row(spark, sf_dir, residual=True)
-
-
-def _residual_ivfpq_prefix(
-    k: int = 10,
-    iters: int = 2,
-    m: int = SIM.PQ_M,
-    kcodes: int = SIM.PQ_K,
-    pq_iters: int = SIM.PQ_ITERS,
-    extra_cand_pred: str = "",
-    probe_bound: str | None = None,
-) -> str:
-    """Shared oracle prefix of the residual-IVFPQ family: coarse
-    k-means + cell centroids + probes, the residual CTE
-    (``v[i] - cv[i]``, mirroring pq_residuals' zip_with), PQ training
-    CTEs over the residual source, the three serve-side lookup tables
-    (coarse term ``qc``, cell norm ``cinfo``, centroid×codeword cross
-    term ``ccross``), and the per-(query, vector) fold ``pagg`` —
-    everything up to the scoring expression both residual oracles
-    state.  ``extra_cand_pred`` appends a predicate to the candidate
-    CTE (the removed-ids exclusion of ``knn_ivfpq_residual_removed``,
-    mirroring the raw family's ``_knn_ivfpq_oracle`` hook);
-    ``probe_bound`` replaces the scalar probe-depth literal (the
-    per-tenant-class policy hook, as in ``_knn_ivfpq_oracle``).  The
-    defaults leave every existing oracle byte-identical."""
-    sd = SIM.DIM // m
-    if probe_bound is None:
-        probe_bound = str(IVF_KMEANS_NPROBE)
-    return f"""{_kmeans_lbl_body(k, iters)},
-{_ivf_probe_body()},
-resid AS (
-    SELECT l.vec_id,
-           list_transform(range(1, {SIM.DIM + 1}), i -> l.v[i] - c.cv[i]) AS v
-    FROM lbl l JOIN cents_n c ON c.cell = l.cell
-),
-{_pq_prefix(m, kcodes, pq_iters, src="resid")},
-qc AS (
-    SELECT q.query_id, c.cell, {_sql_dot('q.qv', 'c.cv')} AS qc
-    FROM q CROSS JOIN cents_n c
-),
-cinfo AS (SELECT cell, {_sql_dot('cv', 'cv')} AS cn2c FROM cents_n),
-ccross AS (
-    SELECT cn.cell, p.m, p.code,
-           list_reduce(list_prepend(0.0,
-               list_transform(range(1, {sd + 1}),
-                   i -> cn.cv[p.m * {sd} + i] * p.cv[i])),
-               (acc, x) -> acc + x) AS crs
-    FROM cents_n cn CROSS JOIN pcentn p
-),
-cand AS (
-    SELECT p.query_id, c.vec_id, c.cell
-    FROM probes p JOIN lbl c ON c.cell = p.cell
-    WHERE p.crank <= {probe_bound} AND c.vec_id != p.query_id{extra_cand_pred}
-),
-lut AS (
-    SELECT q.query_id, q.qnrm, c.m, c.code,
-           list_reduce(list_prepend(0.0,
-               list_transform(range(1, {sd + 1}),
-                   i -> q.qv[c.m * {sd} + i] * c.cv[i])),
-               (acc, x) -> acc + x) AS partial,
-           c.cn2
-    FROM q CROSS JOIN pcentn c
-),
-sp AS (
-    SELECT cd.query_id, cd.vec_id, cd.cell, l.qnrm,
-           co.m, l.partial, l.cn2, cx.crs
-    FROM cand cd
-    JOIN codes co ON co.vec_id = cd.vec_id
-    JOIN lut l ON l.query_id = cd.query_id
-             AND l.m = co.m AND l.code = co.code
-    JOIN ccross cx ON cx.cell = cd.cell
-                  AND cx.m = co.m AND cx.code = co.code
-),
-pagg AS (
-    SELECT query_id, vec_id, cell,
-           list_reduce(list_prepend(0.0, array_agg(partial ORDER BY m)),
-                       (acc, x) -> acc + x) AS adc,
-           list_reduce(list_prepend(0.0, array_agg(cn2 ORDER BY m)),
-                       (acc, x) -> acc + x) AS rn2,
-           list_reduce(list_prepend(0.0, array_agg(crs ORDER BY m)),
-                       (acc, x) -> acc + x) AS crs,
-           min(qnrm) AS qnrm
-    FROM sp GROUP BY query_id, vec_id, cell
-)"""
-
-
-_RESIDUAL_SCORE = (
-    "(qq.qc + g.adc) / (g.qnrm * sqrt(ci.cn2c + 2.0 * g.crs + g.rn2))"
-)
-
-
-def _knn_ivfpq_residual_oracle(
-    k: int = 10,
-    iters: int = 2,
-    m: int = SIM.PQ_M,
-    kcodes: int = SIM.PQ_K,
-    pq_iters: int = SIM.PQ_ITERS,
-    extra_cand_pred: str = "",
-    probe_bound: str | None = None,
-) -> str:
-    """Residual-IVFPQ oracle: the shared residual prefix, then the
-    reconstruction-cosine ranking ``(q·c + q·r̂) /
-    (‖q‖·sqrt(‖c‖² + 2·c·r̂ + ‖r̂‖²))``.  ``extra_cand_pred`` threads
-    the candidate-exclusion predicate of
-    ``knn_ivfpq_residual_removed`` through to the prefix's ``cand``
-    CTE; ``probe_bound`` the per-tenant-class probe policy of
-    ``knn_ivfpq_residual_tenant_skewed``; defaults leave the oracle
-    byte-identical."""
-    return f"""
-WITH {_SQL_BASE},
-{_residual_ivfpq_prefix(k, iters, m, kcodes, pq_iters, extra_cand_pred,
-                        probe_bound)},
-ranked AS (
-    SELECT g.query_id, g.vec_id AS neighbor_id,
-           {_RESIDUAL_SCORE} AS cos,
-           row_number() OVER (
-               PARTITION BY g.query_id
-               ORDER BY {_RESIDUAL_SCORE} DESC, g.vec_id
-           ) AS rank
-    FROM pagg g
-    JOIN qc qq ON qq.query_id = g.query_id AND qq.cell = g.cell
-    JOIN cinfo ci ON ci.cell = g.cell
-)
-SELECT query_id, neighbor_id, round(cos, 6) AS cosine_sim,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {K}
-"""
-
-
-def _knn_ivfpq_residual_refined_oracle(
-    k: int = 10,
-    iters: int = 2,
-    m: int = SIM.PQ_M,
-    kcodes: int = SIM.PQ_K,
-    pq_iters: int = SIM.PQ_ITERS,
-    refine_factor: int = SIM.PQ_REFINE_FACTOR,
-) -> str:
-    """The residual candidate family ranked to C = refine_factor·k,
-    composed with the exact-cosine re-rank — IndexRefineFlat over the
-    residual IVFPQ."""
-    ncand = refine_factor * K
-    return f"""
-WITH {_SQL_BASE},
-{_residual_ivfpq_prefix(k, iters, m, kcodes, pq_iters)},
-candr AS (
-    SELECT query_id, vec_id AS neighbor_id FROM (
-        SELECT g.query_id, g.vec_id,
-               row_number() OVER (
-                   PARTITION BY g.query_id
-                   ORDER BY {_RESIDUAL_SCORE} DESC, g.vec_id
-               ) AS crank
-        FROM pagg g
-        JOIN qc qq ON qq.query_id = g.query_id AND qq.cell = g.cell
-        JOIN cinfo ci ON ci.cell = g.cell
-    ) WHERE crank <= {ncand}
-),
-exact AS (
-    SELECT cd.query_id, cd.neighbor_id,
-           {_sql_dot('q.qv', 'c.v')} / (q.qnrm * c.nrm) AS cos
-    FROM candr cd
-    JOIN n c ON c.vec_id = cd.neighbor_id
-    JOIN q ON q.query_id = cd.query_id
-),
-ranked AS (
-    SELECT query_id, neighbor_id, cos,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY cos DESC, neighbor_id) AS rank
-    FROM exact
-)
-SELECT query_id, neighbor_id, round(cos, 6) AS cosine_sim,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {K}
-"""
 
 
 def ann_index_train(
@@ -2053,12 +1671,6 @@ def knn_ivfpq_tenant(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivfpq_row(spark, sf_dir, tenant="label")
 
 
-_TENANT_CAND_PRED = (
-    " AND (SELECT e1.label FROM embeddings e1 WHERE e1.vec_id = c.vec_id)"
-    " = (SELECT e2.label FROM embeddings e2 WHERE e2.vec_id = p.query_id)"
-)
-
-
 def knn_ivfpq_residual_tenant(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2139,32 +1751,19 @@ def knn_ivfpq_tenant_refined(
 # the DuckDB oracle states the SAME derivation inline — no fixture
 # table to keep in sync.
 _SKEW_SQL = "CASE WHEN {x} % 7 = 6 AND {x} % 2 = 0 THEN {x} % 3 + 1 ELSE 0 END"
-_SKEW_CAND_PRED = (
-    f" AND ({_SKEW_SQL.format(x='c.vec_id')})"
-    f" = ({_SKEW_SQL.format(x='p.query_id')})"
-)
 # Per-tenant-class probe policy, stated identically on both engines: a
 # tenant holding >= 5% of the corpus keeps the default probe depth
 # (cell pruning still pays there); a cold tenant probes EVERY cell —
 # its full membership is tiny, and the default depth leaves too few
 # same-tenant candidates per probed cell to fill k.
 #
-# _IVF_NCELLS MUST equal the trained index's cell count (SIM.IVF_CELLS,
-# which is also the oracle generators' k default).  If the
-# two drifted, the Spark policy and the oracle's probe bound would
-# still AGREE with each other — the hash gate stays green — while
-# "probe every cell" silently became a partial probe, so the tie is
-# pinned by tests/test_similarity.py::
+# "Every cell" is SIM.IVF_CELLS on both engines, and it MUST equal the
+# trained index's cell count.  If the two drifted, the Spark policy and
+# the oracle's probe bound would still AGREE with each other — the hash
+# gate stays green — while "probe every cell" silently became a partial
+# probe, so the tie is pinned by tests/test_similarity.py::
 # test_skew_full_probe_covers_all_cells against the live artifact.
-_IVF_NCELLS = SIM.IVF_CELLS
 _SKEW_HOT_SHARE = 0.05
-_SKEW_PROBE_BOUND = (
-    "(CASE WHEN (SELECT count(*) FROM embeddings et WHERE "
-    f"({_SKEW_SQL.format(x='et.vec_id')})"
-    f" = ({_SKEW_SQL.format(x='p.query_id')}))"
-    f" >= {_SKEW_HOT_SHARE} * (SELECT count(*) FROM embeddings)"
-    f" THEN {IVF_KMEANS_NPROBE} ELSE {_IVF_NCELLS} END)"
-)
 
 
 def _skew_tenant(col: Column) -> Column:
@@ -2195,7 +1794,7 @@ def _skew_nprobe_map(e: DataFrame) -> DataFrame:
             F.col("pop") >= _SKEW_HOT_SHARE * F.col("total"),
             F.lit(IVF_KMEANS_NPROBE),
         )
-        .otherwise(F.lit(_IVF_NCELLS))
+        .otherwise(F.lit(SIM.IVF_CELLS))
         .alias("qnprobe"),
     )
 
@@ -2405,14 +2004,12 @@ def ann_index_stats_from_parts(
     )
 
 
-def _ann_index_stats_oracle(k: int = 10, iters: int = 2) -> str:
-    """The k-means assignment + PQ code CTE families feeding two plain
-    aggregates — population per cell and the max single-code
-    concentration among its members."""
+def _ann_index_stats_oracle() -> str:
+    """The builder's raw IVFPQ training CTEs (:func:`_ivfpq_ctes`)
+    feeding two plain aggregates — population per cell and the max
+    single-code concentration among its members."""
     return f"""
-WITH {_SQL_BASE},
-{_kmeans_lbl_body(k, iters)},
-{_pq_prefix(SIM.PQ_M, SIM.PQ_K, SIM.PQ_ITERS)},
+{_ivfpq_ctes()},
 nn AS (SELECT count(*) AS n_total FROM lbl),
 pop AS (
     SELECT cell, count(*) AS n_vectors FROM lbl GROUP BY cell
@@ -2466,278 +2063,6 @@ def _half_extended_index(
     return ann_index_load(spark, tdir)
 
 
-def _knn_ivfpq_extended_oracle(
-    k: int = 10,
-    iters: int = 2,
-    m: int = SIM.PQ_M,
-    kcodes: int = SIM.PQ_K,
-    pq_iters: int = SIM.PQ_ITERS,
-) -> str:
-    """The two-regime IVFPQ oracle: k-means + PQ training CTEs
-    restricted to the TRAIN slice (vec_id % 2 = 0) with their final
-    assignments over the train slice only, re-derived centroid/codebook
-    CTEs over the train slice, then EXPLICIT add-path CTEs assigning
-    the held-out vectors against those re-derived artifacts (argmin
-    exact d2, lowest-id tie) — mirroring ivf_assign/pq_assign — and the
-    standard IVFPQ serve tail over the unions.  Self-contained on
-    purpose: parameterizing the shared builders for two assignment
-    targets would risk the eleven existing gated oracles."""
-    sd = SIM.DIM // m
-    tw = "% 2 = 0"  # the train-slice predicate, applied to a vec_id
-    ctes = [
-        f"base_t AS (SELECT * FROM base WHERE vec_id {tw})",
-        f"c0 AS (SELECT vec_id AS cid, v AS cv FROM base_t "
-        f"WHERE vec_id < {k})",
-    ]
-    prev = "c0"
-    for it in range(1, iters + 1):
-        ctes.append(
-            f"""a{it} AS (
-    SELECT vec_id, v, cid FROM (
-        SELECT vec_id, v, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-        FROM (SELECT b.vec_id, b.v, c.cid, {_sql_d2('b.v', 'c.cv')} AS d2
-              FROM base_t b CROSS JOIN {prev} c)
-    ) WHERE rn = 1
-)"""
-        )
-        ctes.append(
-            f"""s{it} AS (
-    SELECT cid, t.i AS pos,
-           CAST(sum(CAST(v[t.i] AS DECIMAL(28,10))) AS DOUBLE) AS s,
-           count(*) AS n
-    FROM a{it}, range(1, {SIM.DIM + 1}) t(i)
-    GROUP BY cid, t.i
-)"""
-        )
-        ctes.append(
-            f"c{it} AS (SELECT cid, array_agg(s / n ORDER BY pos) AS cv "
-            f"FROM s{it} GROUP BY cid)"
-        )
-        prev = f"c{it}"
-    # train-slice final assignment (vs the last Lloyd centroids), the
-    # re-derived stored centroids, then the add-path assignment of the
-    # held-out slice against THOSE
-    ctes.append(
-        f"""asg_t AS (
-    SELECT vec_id, cid AS cell FROM (
-        SELECT b.vec_id, c.cid,
-               row_number() OVER (PARTITION BY b.vec_id
-                                  ORDER BY {_sql_d2('b.v', 'c.cv')}, c.cid) AS rn
-        FROM base_t b CROSS JOIN {prev} c
-    ) WHERE rn = 1
-)"""
-    )
-    ctes.append(
-        """lbl_t AS (SELECT n.vec_id, n.v, n.nrm, a.cell
-        FROM n JOIN asg_t a ON a.vec_id = n.vec_id)"""
-    )
-    ctes.append(
-        f"""comp AS (
-    SELECT cell, t.i AS pos, v[t.i] AS x
-    FROM lbl_t, range(1, {SIM.DIM + 1}) t(i)
-)"""
-    )
-    ctes.append(
-        """sums AS (
-    SELECT cell, pos,
-           CAST(sum(CAST(x AS DECIMAL(28,10))) AS DOUBLE) AS s,
-           count(*) AS cnt
-    FROM comp GROUP BY cell, pos
-)"""
-    )
-    ctes.append(
-        "cents AS (SELECT cell, array_agg(s / cnt ORDER BY pos) AS cv "
-        "FROM sums GROUP BY cell)"
-    )
-    ctes.append(
-        f"cents_n AS (SELECT cell, cv, sqrt({_sql_dot('cv', 'cv')}) AS cnrm "
-        f"FROM cents)"
-    )
-    ctes.append(
-        f"""asg_new AS (
-    SELECT vec_id, cell FROM (
-        SELECT b.vec_id, c.cell,
-               row_number() OVER (PARTITION BY b.vec_id
-                                  ORDER BY {_sql_d2('b.v', 'c.cv')}, c.cell) AS rn
-        FROM base b CROSS JOIN cents_n c
-        WHERE NOT (b.vec_id {tw})
-    ) WHERE rn = 1
-)"""
-    )
-    ctes.append(
-        """lbl AS (
-    SELECT vec_id, v, nrm, cell FROM lbl_t
-    UNION ALL
-    SELECT n.vec_id, n.v, n.nrm, a.cell
-    FROM n JOIN asg_new a ON a.vec_id = n.vec_id
-)"""
-    )
-    # PQ: per-subspace training over the train slice, stored codebooks
-    # re-derived from the train codes, add-path encoding of the rest
-    for mi in range(m):
-        lo = mi * sd + 1
-        ctes.append(
-            f"sub{mi} AS (SELECT vec_id, "
-            f"list_transform(range({lo}, {lo + sd}), i -> v[i]) AS sv "
-            f"FROM base)"
-        )
-        ctes.append(
-            f"p{mi}c0 AS (SELECT vec_id AS cid, sv AS cv FROM sub{mi} "
-            f"WHERE vec_id < {kcodes} AND vec_id {tw})"
-        )
-        prev = f"p{mi}c0"
-        for it in range(1, pq_iters + 1):
-            ctes.append(
-                f"""p{mi}a{it} AS (
-    SELECT vec_id, sv, cid FROM (
-        SELECT vec_id, sv, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-        FROM (SELECT b.vec_id, b.sv, c.cid, {_sql_d2_n('b.sv', 'c.cv', sd)} AS d2
-              FROM sub{mi} b CROSS JOIN {prev} c
-              WHERE b.vec_id {tw})
-    ) WHERE rn = 1
-)"""
-            )
-            ctes.append(
-                f"""p{mi}s{it} AS (
-    SELECT cid, t.i AS pos,
-           CAST(sum(CAST(sv[t.i] AS DECIMAL(28,10))) AS DOUBLE) AS s,
-           count(*) AS n
-    FROM p{mi}a{it}, range(1, {sd + 1}) t(i)
-    GROUP BY cid, t.i
-)"""
-            )
-            ctes.append(
-                f"p{mi}c{it} AS (SELECT cid, array_agg(s / n ORDER BY pos) AS cv "
-                f"FROM p{mi}s{it} GROUP BY cid)"
-            )
-            prev = f"p{mi}c{it}"
-        ctes.append(
-            f"""p{mi}asg AS (
-    SELECT vec_id, cid AS code FROM (
-        SELECT b.vec_id, c.cid,
-               row_number() OVER (PARTITION BY b.vec_id
-                                  ORDER BY {_sql_d2_n('b.sv', 'c.cv', sd)}, c.cid) AS rn
-        FROM sub{mi} b CROSS JOIN {prev} c
-        WHERE b.vec_id {tw}
-    ) WHERE rn = 1
-)"""
-        )
-    codes_sel = "\nUNION ALL\n".join(
-        f"SELECT vec_id, {mi} AS m, code FROM p{mi}asg" for mi in range(m)
-    )
-    subs_sel = "\nUNION ALL\n".join(
-        f"SELECT vec_id, {mi} AS m, sv FROM sub{mi}" for mi in range(m)
-    )
-    ctes.append(f"codes_t AS (\n{codes_sel}\n)")
-    ctes.append(f"subs AS (\n{subs_sel}\n)")
-    ctes.append(
-        f"""pcomp AS (
-    SELECT c.m, c.code, t.i AS pos, s.sv[t.i] AS x
-    FROM codes_t c
-    JOIN subs s ON s.vec_id = c.vec_id AND s.m = c.m,
-         range(1, {sd + 1}) t(i)
-)"""
-    )
-    ctes.append(
-        """psums AS (
-    SELECT m, code, pos,
-           CAST(sum(CAST(x AS DECIMAL(28,10))) AS DOUBLE) AS s,
-           count(*) AS n
-    FROM pcomp GROUP BY m, code, pos
-)"""
-    )
-    ctes.append(
-        "pcents AS (SELECT m, code, array_agg(s / n ORDER BY pos) AS cv "
-        "FROM psums GROUP BY m, code)"
-    )
-    ctes.append(
-        f"pcentn AS (SELECT m, code, cv, {_sql_dot_n('cv', 'cv', sd)} AS cn2 "
-        f"FROM pcents)"
-    )
-    ctes.append(
-        f"""codes_new AS (
-    SELECT vec_id, m, code FROM (
-        SELECT b.vec_id, c.m, c.code,
-               row_number() OVER (PARTITION BY b.vec_id, c.m
-                                  ORDER BY {_sql_d2_n('b.sv', 'c.cv', sd)}, c.code) AS rn
-        FROM subs b JOIN pcents c ON c.m = b.m
-        WHERE NOT (b.vec_id {tw})
-    ) WHERE rn = 1
-)"""
-    )
-    ctes.append(
-        """codes AS (
-    SELECT vec_id, m, code FROM codes_t
-    UNION ALL
-    SELECT vec_id, m, code FROM codes_new
-)"""
-    )
-    # serve tail — identical to _knn_ivfpq_oracle's
-    ctes.append(
-        f"""q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n
-      WHERE vec_id % {QUERY_MOD} = 0)"""
-    )
-    ctes.append(
-        f"""probes AS (
-    SELECT query_id, cell,
-           row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY {_sql_dot('qv', 'cv')} / (qnrm * cnrm) DESC, cell
-           ) AS crank
-    FROM q CROSS JOIN cents_n
-)"""
-    )
-    joined = ",\n".join(ctes)
-    return f"""
-WITH {_SQL_BASE},
-{joined},
-cand AS (
-    SELECT p.query_id, c.vec_id
-    FROM probes p JOIN lbl c ON c.cell = p.cell
-    WHERE p.crank <= {IVF_KMEANS_NPROBE} AND c.vec_id != p.query_id
-),
-lut AS (
-    SELECT q.query_id, q.qnrm, c.m, c.code,
-           list_reduce(list_prepend(0.0,
-               list_transform(range(1, {sd + 1}),
-                   i -> q.qv[c.m * {sd} + i] * c.cv[i])),
-               (acc, x) -> acc + x) AS partial,
-           c.cn2
-    FROM q CROSS JOIN pcentn c
-),
-sp AS (
-    SELECT cd.query_id, cd.vec_id, l.qnrm, co.m, l.partial, l.cn2
-    FROM cand cd
-    JOIN codes co ON co.vec_id = cd.vec_id
-    JOIN lut l ON l.query_id = cd.query_id
-             AND l.m = co.m AND l.code = co.code
-),
-pagg AS (
-    SELECT query_id, vec_id,
-           list_reduce(list_prepend(0.0, array_agg(partial ORDER BY m)),
-                       (acc, x) -> acc + x) AS adc,
-           list_reduce(list_prepend(0.0, array_agg(cn2 ORDER BY m)),
-                       (acc, x) -> acc + x) AS rn2,
-           min(qnrm) AS qnrm
-    FROM sp GROUP BY query_id, vec_id
-),
-ranked AS (
-    SELECT query_id, vec_id AS neighbor_id,
-           adc / (qnrm * sqrt(rn2)) AS cos,
-           row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY adc / (qnrm * sqrt(rn2)) DESC, vec_id
-           ) AS rank
-    FROM pagg
-)
-SELECT query_id, neighbor_id, round(cos, 6) AS cosine_sim,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {K}
-"""
-
-
 def knn_ivfpq_residual_extended(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2763,315 +2088,6 @@ def knn_ivfpq_residual_extended(
         lambda tdir: _half_extended_index(spark, sf_dir, tdir, residual=True),
     )
     return _ivfpq_row(spark, sf_dir, parts, residual=True)
-
-
-def _knn_ivfpq_residual_extended_oracle(
-    k: int = 10,
-    iters: int = 2,
-    m: int = SIM.PQ_M,
-    kcodes: int = SIM.PQ_K,
-    pq_iters: int = SIM.PQ_ITERS,
-) -> str:
-    """The two-regime RESIDUAL oracle — the `_knn_ivfpq_extended_oracle`
-    structure with the PQ families moved onto residual vectors: coarse
-    k-means over the train slice, re-derived stored centroids, add-path
-    cell assignment of the held-out slice, then residuals PER REGIME
-    (train rows against their last-Lloyd cells, added rows against
-    their stored-centroid cells — both subtracting the re-derived
-    ``cents_n``, exactly what pq_residuals computes on each side),
-    per-subspace residual k-means over the train slice, stored-codebook
-    encoding of the added residuals, and the residual reconstruction
-    serve tail.  Self-contained like its raw sibling."""
-    sd = SIM.DIM // m
-    tw = "% 2 = 0"  # the train-slice predicate, applied to a vec_id
-    ctes = [
-        f"base_t AS (SELECT * FROM base WHERE vec_id {tw})",
-        f"c0 AS (SELECT vec_id AS cid, v AS cv FROM base_t "
-        f"WHERE vec_id < {k})",
-    ]
-    prev = "c0"
-    for it in range(1, iters + 1):
-        ctes.append(
-            f"""a{it} AS (
-    SELECT vec_id, v, cid FROM (
-        SELECT vec_id, v, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-        FROM (SELECT b.vec_id, b.v, c.cid, {_sql_d2('b.v', 'c.cv')} AS d2
-              FROM base_t b CROSS JOIN {prev} c)
-    ) WHERE rn = 1
-)"""
-        )
-        ctes.append(
-            f"""s{it} AS (
-    SELECT cid, t.i AS pos,
-           CAST(sum(CAST(v[t.i] AS DECIMAL(28,10))) AS DOUBLE) AS s,
-           count(*) AS n
-    FROM a{it}, range(1, {SIM.DIM + 1}) t(i)
-    GROUP BY cid, t.i
-)"""
-        )
-        ctes.append(
-            f"c{it} AS (SELECT cid, array_agg(s / n ORDER BY pos) AS cv "
-            f"FROM s{it} GROUP BY cid)"
-        )
-        prev = f"c{it}"
-    ctes.append(
-        f"""asg_t AS (
-    SELECT vec_id, cid AS cell FROM (
-        SELECT b.vec_id, c.cid,
-               row_number() OVER (PARTITION BY b.vec_id
-                                  ORDER BY {_sql_d2('b.v', 'c.cv')}, c.cid) AS rn
-        FROM base_t b CROSS JOIN {prev} c
-    ) WHERE rn = 1
-)"""
-    )
-    ctes.append(
-        """lbl_t AS (SELECT n.vec_id, n.v, n.nrm, a.cell
-        FROM n JOIN asg_t a ON a.vec_id = n.vec_id)"""
-    )
-    ctes.append(
-        f"""comp AS (
-    SELECT cell, t.i AS pos, v[t.i] AS x
-    FROM lbl_t, range(1, {SIM.DIM + 1}) t(i)
-)"""
-    )
-    ctes.append(
-        """sums AS (
-    SELECT cell, pos,
-           CAST(sum(CAST(x AS DECIMAL(28,10))) AS DOUBLE) AS s,
-           count(*) AS cnt
-    FROM comp GROUP BY cell, pos
-)"""
-    )
-    ctes.append(
-        "cents AS (SELECT cell, array_agg(s / cnt ORDER BY pos) AS cv "
-        "FROM sums GROUP BY cell)"
-    )
-    ctes.append(
-        f"cents_n AS (SELECT cell, cv, sqrt({_sql_dot('cv', 'cv')}) AS cnrm "
-        f"FROM cents)"
-    )
-    ctes.append(
-        f"""asg_new AS (
-    SELECT vec_id, cell FROM (
-        SELECT b.vec_id, c.cell,
-               row_number() OVER (PARTITION BY b.vec_id
-                                  ORDER BY {_sql_d2('b.v', 'c.cv')}, c.cell) AS rn
-        FROM base b CROSS JOIN cents_n c
-        WHERE NOT (b.vec_id {tw})
-    ) WHERE rn = 1
-)"""
-    )
-    ctes.append(
-        """lbl AS (
-    SELECT vec_id, v, nrm, cell FROM lbl_t
-    UNION ALL
-    SELECT n.vec_id, n.v, n.nrm, a.cell
-    FROM n JOIN asg_new a ON a.vec_id = n.vec_id
-)"""
-    )
-    # residuals per regime: each row minus the re-derived centroid of
-    # ITS cell (train rows: last-Lloyd cell; added rows: stored-centroid
-    # cell) — both sides of pq_residuals' zip_with
-    ctes.append(
-        f"""resid AS (
-    SELECT l.vec_id,
-           list_transform(range(1, {SIM.DIM + 1}), i -> l.v[i] - c.cv[i]) AS v
-    FROM lbl l JOIN cents_n c ON c.cell = l.cell
-)"""
-    )
-    # PQ: per-subspace RESIDUAL training over the train slice, stored
-    # codebooks re-derived from the train codes, add-path encoding of
-    # the held-out residuals
-    for mi in range(m):
-        lo = mi * sd + 1
-        ctes.append(
-            f"sub{mi} AS (SELECT vec_id, "
-            f"list_transform(range({lo}, {lo + sd}), i -> v[i]) AS sv "
-            f"FROM resid)"
-        )
-        ctes.append(
-            f"p{mi}c0 AS (SELECT vec_id AS cid, sv AS cv FROM sub{mi} "
-            f"WHERE vec_id < {kcodes} AND vec_id {tw})"
-        )
-        prev = f"p{mi}c0"
-        for it in range(1, pq_iters + 1):
-            ctes.append(
-                f"""p{mi}a{it} AS (
-    SELECT vec_id, sv, cid FROM (
-        SELECT vec_id, sv, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-        FROM (SELECT b.vec_id, b.sv, c.cid, {_sql_d2_n('b.sv', 'c.cv', sd)} AS d2
-              FROM sub{mi} b CROSS JOIN {prev} c
-              WHERE b.vec_id {tw})
-    ) WHERE rn = 1
-)"""
-            )
-            ctes.append(
-                f"""p{mi}s{it} AS (
-    SELECT cid, t.i AS pos,
-           CAST(sum(CAST(sv[t.i] AS DECIMAL(28,10))) AS DOUBLE) AS s,
-           count(*) AS n
-    FROM p{mi}a{it}, range(1, {sd + 1}) t(i)
-    GROUP BY cid, t.i
-)"""
-            )
-            ctes.append(
-                f"p{mi}c{it} AS (SELECT cid, array_agg(s / n ORDER BY pos) AS cv "
-                f"FROM p{mi}s{it} GROUP BY cid)"
-            )
-            prev = f"p{mi}c{it}"
-        ctes.append(
-            f"""p{mi}asg AS (
-    SELECT vec_id, cid AS code FROM (
-        SELECT b.vec_id, c.cid,
-               row_number() OVER (PARTITION BY b.vec_id
-                                  ORDER BY {_sql_d2_n('b.sv', 'c.cv', sd)}, c.cid) AS rn
-        FROM sub{mi} b CROSS JOIN {prev} c
-        WHERE b.vec_id {tw}
-    ) WHERE rn = 1
-)"""
-        )
-    codes_sel = "\nUNION ALL\n".join(
-        f"SELECT vec_id, {mi} AS m, code FROM p{mi}asg" for mi in range(m)
-    )
-    subs_sel = "\nUNION ALL\n".join(
-        f"SELECT vec_id, {mi} AS m, sv FROM sub{mi}" for mi in range(m)
-    )
-    ctes.append(f"codes_t AS (\n{codes_sel}\n)")
-    ctes.append(f"subs AS (\n{subs_sel}\n)")
-    ctes.append(
-        f"""pcomp AS (
-    SELECT c.m, c.code, t.i AS pos, s.sv[t.i] AS x
-    FROM codes_t c
-    JOIN subs s ON s.vec_id = c.vec_id AND s.m = c.m,
-         range(1, {sd + 1}) t(i)
-)"""
-    )
-    ctes.append(
-        """psums AS (
-    SELECT m, code, pos,
-           CAST(sum(CAST(x AS DECIMAL(28,10))) AS DOUBLE) AS s,
-           count(*) AS n
-    FROM pcomp GROUP BY m, code, pos
-)"""
-    )
-    ctes.append(
-        "pcents AS (SELECT m, code, array_agg(s / n ORDER BY pos) AS cv "
-        "FROM psums GROUP BY m, code)"
-    )
-    ctes.append(
-        f"pcentn AS (SELECT m, code, cv, {_sql_dot_n('cv', 'cv', sd)} AS cn2 "
-        f"FROM pcents)"
-    )
-    ctes.append(
-        f"""codes_new AS (
-    SELECT vec_id, m, code FROM (
-        SELECT b.vec_id, c.m, c.code,
-               row_number() OVER (PARTITION BY b.vec_id, c.m
-                                  ORDER BY {_sql_d2_n('b.sv', 'c.cv', sd)}, c.code) AS rn
-        FROM subs b JOIN pcents c ON c.m = b.m
-        WHERE NOT (b.vec_id {tw})
-    ) WHERE rn = 1
-)"""
-    )
-    ctes.append(
-        """codes AS (
-    SELECT vec_id, m, code FROM codes_t
-    UNION ALL
-    SELECT vec_id, m, code FROM codes_new
-)"""
-    )
-    # residual serve tail — identical arithmetic to
-    # _knn_ivfpq_residual_oracle's
-    ctes.append(
-        f"""q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n
-      WHERE vec_id % {QUERY_MOD} = 0)"""
-    )
-    ctes.append(
-        f"""probes AS (
-    SELECT query_id, cell,
-           row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY {_sql_dot('qv', 'cv')} / (qnrm * cnrm) DESC, cell
-           ) AS crank
-    FROM q CROSS JOIN cents_n
-)"""
-    )
-    ctes.append(
-        f"""qc AS (
-    SELECT q.query_id, c.cell, {_sql_dot('q.qv', 'c.cv')} AS qc
-    FROM q CROSS JOIN cents_n c
-)"""
-    )
-    ctes.append(
-        f"cinfo AS (SELECT cell, {_sql_dot('cv', 'cv')} AS cn2c "
-        f"FROM cents_n)"
-    )
-    ctes.append(
-        f"""ccross AS (
-    SELECT cn.cell, p.m, p.code,
-           list_reduce(list_prepend(0.0,
-               list_transform(range(1, {sd + 1}),
-                   i -> cn.cv[p.m * {sd} + i] * p.cv[i])),
-               (acc, x) -> acc + x) AS crs
-    FROM cents_n cn CROSS JOIN pcentn p
-)"""
-    )
-    joined = ",\n".join(ctes)
-    return f"""
-WITH {_SQL_BASE},
-{joined},
-cand AS (
-    SELECT p.query_id, c.vec_id, c.cell
-    FROM probes p JOIN lbl c ON c.cell = p.cell
-    WHERE p.crank <= {IVF_KMEANS_NPROBE} AND c.vec_id != p.query_id
-),
-lut AS (
-    SELECT q.query_id, q.qnrm, c.m, c.code,
-           list_reduce(list_prepend(0.0,
-               list_transform(range(1, {sd + 1}),
-                   i -> q.qv[c.m * {sd} + i] * c.cv[i])),
-               (acc, x) -> acc + x) AS partial,
-           c.cn2
-    FROM q CROSS JOIN pcentn c
-),
-sp AS (
-    SELECT cd.query_id, cd.vec_id, cd.cell, l.qnrm,
-           co.m, l.partial, l.cn2, cx.crs
-    FROM cand cd
-    JOIN codes co ON co.vec_id = cd.vec_id
-    JOIN lut l ON l.query_id = cd.query_id
-             AND l.m = co.m AND l.code = co.code
-    JOIN ccross cx ON cx.cell = cd.cell
-                  AND cx.m = co.m AND cx.code = co.code
-),
-pagg AS (
-    SELECT query_id, vec_id, cell,
-           list_reduce(list_prepend(0.0, array_agg(partial ORDER BY m)),
-                       (acc, x) -> acc + x) AS adc,
-           list_reduce(list_prepend(0.0, array_agg(cn2 ORDER BY m)),
-                       (acc, x) -> acc + x) AS rn2,
-           list_reduce(list_prepend(0.0, array_agg(crs ORDER BY m)),
-                       (acc, x) -> acc + x) AS crs,
-           min(qnrm) AS qnrm
-    FROM sp GROUP BY query_id, vec_id, cell
-),
-ranked AS (
-    SELECT g.query_id, g.vec_id AS neighbor_id,
-           {_RESIDUAL_SCORE} AS cos,
-           row_number() OVER (
-               PARTITION BY g.query_id
-               ORDER BY {_RESIDUAL_SCORE} DESC, g.vec_id
-           ) AS rank
-    FROM pagg g
-    JOIN qc qq ON qq.query_id = g.query_id AND qq.cell = g.cell
-    JOIN cinfo ci ON ci.cell = g.cell
-)
-SELECT query_id, neighbor_id, round(cos, 6) AS cosine_sim,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {K}
-"""
 
 
 COV_SCALE = 1 << 26  # quantization step for order-free exact sums
@@ -3936,29 +2952,29 @@ QUERIES = {
     ),
     "knn_pq": QuerySpec(
         knn_pq,
-        _knn_pq_oracle(),
+        _ivfpq_oracle(ivf=False),
         "product-quantization ADC top-k (FAISS IndexPQ shape)",
     ),
     "knn_pq_refined": QuerySpec(
         knn_pq_refined,
-        _knn_pq_refined_oracle(),
+        _ivfpq_oracle(ivf=False, refine=True),
         "PQ ADC top-C candidates + exact-cosine re-rank "
         "(FAISS IndexRefineFlat-over-IndexPQ shape)",
     ),
     "knn_ivfpq": QuerySpec(
         knn_ivfpq,
-        _knn_ivfpq_oracle(),
+        _ivfpq_oracle(),
         "IVF cells + PQ codes: probe float, ADC-score compressed (FAISS IVFPQ)",
     ),
     "knn_ivfpq_refined": QuerySpec(
         knn_ivfpq_refined,
-        _knn_ivfpq_refined_oracle(),
+        _ivfpq_oracle(refine=True),
         "the full serving stack: IVF cells bound the scan, PQ codes the "
         "bytes, exact re-rank the ordering (IndexRefineFlat(IndexIVFPQ))",
     ),
     "knn_ivfpq_stored": QuerySpec(
         knn_ivfpq_stored,
-        _knn_ivfpq_oracle(),
+        _ivfpq_oracle(),
         "train -> persist (one versioned index artifact: cells + coarse "
         "centroids + codes + codebooks) -> load -> serve; shares "
         "knn_ivfpq's oracle verbatim, so the stored-index serve path is "
@@ -3966,7 +2982,7 @@ QUERIES = {
     ),
     "knn_ivfpq_extended": QuerySpec(
         knn_ivfpq_extended,
-        _knn_ivfpq_extended_oracle(),
+        _ivfpq_oracle(anchor="extended"),
         "incremental index maintenance (FAISS add()): train on half the "
         "corpus, extend the versioned artifact with the other half "
         "(stored-centroid/codebook assignment, no retraining), serve the "
@@ -3974,21 +2990,21 @@ QUERIES = {
     ),
     "knn_ivfpq_residual": QuerySpec(
         knn_ivfpq_residual,
-        _knn_ivfpq_residual_oracle(),
+        _ivfpq_oracle(residual=True),
         "residual-encoded IVFPQ (standard FAISS semantics: PQ over "
         "x - c_cell) — recall nearly doubles at equal code budget; "
         "serve reconstructs x = c + r from broadcast-size lookup tables",
     ),
     "knn_ivfpq_residual_refined": QuerySpec(
         knn_ivfpq_residual_refined,
-        _knn_ivfpq_residual_refined_oracle(),
+        _ivfpq_oracle(residual=True, refine=True),
         "IndexRefineFlat(residual IVFPQ): residual-ADC candidates to "
         "C = 8k, exact cosine re-rank — the FAISS-default production "
         "serving stack",
     ),
     "knn_ivfpq_residual_stored": QuerySpec(
         knn_ivfpq_residual_stored,
-        _knn_ivfpq_residual_oracle(),
+        _ivfpq_oracle(residual=True),
         "residual index through the versioned artifact: "
         "train(residual=True) -> persist (meta row records the "
         "encoding) -> load -> residual-serve; shares "
@@ -3996,7 +3012,7 @@ QUERIES = {
     ),
     "knn_ivfpq_residual_extended": QuerySpec(
         knn_ivfpq_residual_extended,
-        _knn_ivfpq_residual_extended_oracle(),
+        _ivfpq_oracle(residual=True, anchor="extended"),
         "the residual ADD path: train a residual index on half the "
         "corpus, meta-aware extend with the other half (residuals vs "
         "stored-centroid assignment, stored-codebook encoding), "
@@ -4005,11 +3021,7 @@ QUERIES = {
     ),
     "knn_ivfpq_removed": QuerySpec(
         knn_ivfpq_removed,
-        _knn_ivfpq_oracle(
-            extra_cand_pred=(
-                f" AND NOT (c.vec_id % {REMOVE_MOD} = {REMOVE_RES})"
-            )
-        ),
+        _ivfpq_oracle(anchor="removed"),
         "index deletion (FAISS remove_ids): train on the full corpus, "
         "remove a 10% slice from the versioned artifact (anti-join, no "
         "retraining), serve; oracle = full-corpus IVFPQ with the removed "
@@ -4017,7 +3029,7 @@ QUERIES = {
     ),
     "knn_ivfpq_tenant": QuerySpec(
         knn_ivfpq_tenant,
-        _knn_ivfpq_oracle(extra_cand_pred=_TENANT_CAND_PRED),
+        _ivfpq_oracle(tenant="label"),
         "metadata-filtered (multi-tenant) vector search: each query's "
         "top-k restricted to label-equal corpus vectors, filtered "
         "INSIDE candidate generation so every tenant gets its full k; "
@@ -4032,14 +3044,14 @@ QUERIES = {
     ),
     "knn_ivfpq_tenant_refined": QuerySpec(
         knn_ivfpq_tenant_refined,
-        _knn_ivfpq_refined_oracle(extra_cand_pred=_TENANT_CAND_PRED),
+        _ivfpq_oracle(tenant="label", refine=True),
         "the full filtered production stack: tenant-pure ADC candidates "
         "to C = 8k, exact cosine re-rank — "
         "IndexRefineFlat(filtered IVFPQ)",
     ),
     "knn_ivfpq_residual_tenant": QuerySpec(
         knn_ivfpq_residual_tenant,
-        _knn_ivfpq_residual_oracle(extra_cand_pred=_TENANT_CAND_PRED),
+        _ivfpq_oracle(residual=True, tenant="label"),
         "metadata-filtered search on the residual regime (filters x "
         "encodings matrix closed): label-equality pre-filter inside "
         "residual candidate generation, served from the shared "
@@ -4047,10 +3059,7 @@ QUERIES = {
     ),
     "knn_ivfpq_tenant_skewed": QuerySpec(
         knn_ivfpq_tenant_skewed,
-        _knn_ivfpq_oracle(
-            extra_cand_pred=_SKEW_CAND_PRED,
-            probe_bound=_SKEW_PROBE_BOUND,
-        ),
+        _ivfpq_oracle(tenant="skewed"),
         "filtered search over a SKEWED tenant distribution (hot tenant "
         "~93%, cold ~2.4% each): hot queries stay cell-pruned at the "
         "default probe depth, cold queries probe every cell so they "
@@ -4065,10 +3074,7 @@ QUERIES = {
     ),
     "knn_ivfpq_residual_tenant_skewed": QuerySpec(
         knn_ivfpq_residual_tenant_skewed,
-        _knn_ivfpq_residual_oracle(
-            extra_cand_pred=_SKEW_CAND_PRED,
-            probe_bound=_SKEW_PROBE_BOUND,
-        ),
+        _ivfpq_oracle(residual=True, tenant="skewed"),
         "the skewed per-tenant-class probe policy on the RESIDUAL "
         "regime (encodings x skew closed): hot cell-pruned, cold "
         "full-probe, reconstruction-cosine arithmetic — oracle "
@@ -4076,10 +3082,7 @@ QUERIES = {
     ),
     "knn_ivfpq_tenant_skewed_refined": QuerySpec(
         knn_ivfpq_tenant_skewed_refined,
-        _knn_ivfpq_refined_oracle(
-            extra_cand_pred=_SKEW_CAND_PRED,
-            probe_bound=_SKEW_PROBE_BOUND,
-        ),
+        _ivfpq_oracle(tenant="skewed", refine=True),
         "the production stack for the skewed regime: tenant-pure "
         "candidates at the per-class probe depth to C = 8k, exact "
         "re-rank — a cold tenant's top-k is EXACT while its "
@@ -4089,7 +3092,7 @@ QUERIES = {
     ),
     "knn_ivfpq_tenant_partitioned": QuerySpec(
         knn_ivfpq_tenant_partitioned,
-        _knn_ivfpq_oracle(extra_cand_pred=_TENANT_CAND_PRED),
+        _ivfpq_oracle(tenant="label"),
         "filtered search from the partitionBy(label) index layout: the "
         "tenant rides the membership scan as a partition column — no "
         "label-table join at serve, single-tenant serves prune "
@@ -4098,11 +3101,7 @@ QUERIES = {
     ),
     "knn_ivfpq_residual_removed": QuerySpec(
         knn_ivfpq_residual_removed,
-        _knn_ivfpq_residual_oracle(
-            extra_cand_pred=(
-                f" AND NOT (c.vec_id % {REMOVE_MOD} = {REMOVE_RES})"
-            )
-        ),
+        _ivfpq_oracle(residual=True, anchor="removed"),
         "deletion on a RESIDUAL artifact: seed a full-corpus residual "
         "index, remove the 10% slice, residual-serve; oracle = the "
         "full-corpus residual oracle with removed ids excluded from "
@@ -4111,7 +3110,7 @@ QUERIES = {
     ),
     "knn_ivfpq_refined_stored": QuerySpec(
         knn_ivfpq_refined_stored,
-        _knn_ivfpq_refined_oracle(),
+        _ivfpq_oracle(refine=True),
         "the full production serving stack (IndexRefineFlat(IndexIVFPQ)) "
         "from the LOADED versioned artifact; shares knn_ivfpq_refined's "
         "oracle verbatim",

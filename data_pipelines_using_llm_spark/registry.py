@@ -125,12 +125,12 @@ def _verified_counts() -> dict[str, int]:
 # hash-green.
 _REVERIFY: frozenset[str] = frozenset(
     {
-        # rows that reach the session artifact store or a scratch dir
-        # (operators/caching.py::session_artifact / scratch_dir), or the
-        # checkpoint-free ann_index_extend / ann_index_remove
-        "knn_pq_refined", "knn_ivfpq_refined", "knn_ivfpq_stored",
-        "knn_ivfpq_refined_stored", "knn_ivfpq_extended",
-        "knn_ivfpq_removed", "knn_ivfpq_residual",
+        # rows whose DuckDB oracle is now generated by the one k-means /
+        # IVF / IVFPQ oracle builder in plans/similarity_queries.py
+        "kmeans_clusters", "knn_ivf", "knn_ivf_kmeans", "knn_ivf_int8",
+        "dedup_semantic", "knn_pq", "knn_pq_refined", "knn_ivfpq",
+        "knn_ivfpq_refined", "knn_ivfpq_stored", "knn_ivfpq_refined_stored",
+        "knn_ivfpq_extended", "knn_ivfpq_removed", "knn_ivfpq_residual",
         "knn_ivfpq_residual_refined", "knn_ivfpq_residual_stored",
         "knn_ivfpq_residual_extended", "knn_ivfpq_residual_removed",
         "knn_ivfpq_tenant", "knn_ivfpq_tenant_refined",

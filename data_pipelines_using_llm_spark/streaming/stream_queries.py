@@ -21,6 +21,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from data_pipelines_using_llm_spark.plans.similarity_queries import _ivfpq_oracle
 from data_pipelines_using_llm_spark.registry import QuerySpec
 from data_pipelines_using_llm_spark.streaming.ingest import run_to_table, stream_events
 
@@ -887,51 +888,17 @@ def _stream_knn_serve_impl(
     return spark.read.parquet(out_dir)
 
 
-def _stream_knn_oracle() -> str:
-    from data_pipelines_using_llm_spark.plans.similarity_queries import (
-        _knn_ivfpq_oracle,
-    )
-
-    return _knn_ivfpq_oracle()
-
-
-def _stream_knn_residual_oracle() -> str:
-    from data_pipelines_using_llm_spark.plans.similarity_queries import (
-        _knn_ivfpq_residual_oracle,
-    )
-
-    return _knn_ivfpq_residual_oracle()
-
-
-def _stream_knn_tenant_oracle() -> str:
-    from data_pipelines_using_llm_spark.plans.similarity_queries import (
-        _TENANT_CAND_PRED,
-        _knn_ivfpq_oracle,
-    )
-
-    return _knn_ivfpq_oracle(extra_cand_pred=_TENANT_CAND_PRED)
-
-
-def _stream_knn_residual_tenant_oracle() -> str:
-    from data_pipelines_using_llm_spark.plans.similarity_queries import (
-        _TENANT_CAND_PRED,
-        _knn_ivfpq_residual_oracle,
-    )
-
-    return _knn_ivfpq_residual_oracle(extra_cand_pred=_TENANT_CAND_PRED)
-
-
 QUERIES = {
     "stream_knn_serve": QuerySpec(
         stream_knn_serve,
-        _stream_knn_oracle(),
+        _ivfpq_oracle(),
         "online vector serving: micro-batches of query vectors scored "
         "against the loaded persisted IVFPQ index (batching-invariant, "
         "shares knn_ivfpq's oracle verbatim)",
     ),
     "stream_knn_residual_serve": QuerySpec(
         stream_knn_residual_serve,
-        _stream_knn_residual_oracle(),
+        _ivfpq_oracle(residual=True),
         "online serving from a RESIDUAL artifact: the stream's "
         "per-version meta read must dispatch the reconstruction "
         "arithmetic (shares knn_ivfpq_residual's oracle verbatim — "
@@ -939,7 +906,7 @@ QUERIES = {
     ),
     "stream_knn_tenant_serve": QuerySpec(
         stream_knn_tenant_serve,
-        _stream_knn_tenant_oracle(),
+        _ivfpq_oracle(tenant="label"),
         "the multi-tenant serving deployment composed: filtered + "
         "versioned + streaming — arriving queries carry their tenant, "
         "candidates pre-filtered inside generation per micro-batch "
@@ -947,7 +914,7 @@ QUERIES = {
     ),
     "stream_knn_residual_tenant_serve": QuerySpec(
         stream_knn_residual_tenant_serve,
-        _stream_knn_residual_tenant_oracle(),
+        _ivfpq_oracle(residual=True, tenant="label"),
         "filters x encodings x serving-modes closed: tenant-filtered "
         "streaming serve from a residual snapshot (shares "
         "knn_ivfpq_residual_tenant's oracle verbatim)",

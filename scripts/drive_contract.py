@@ -1,6 +1,6 @@
 """Simulate the driver: import __spark_entry__, smoke entry(), run every
 queries() entry at sf0.01, run oracle_sql() in DuckDB, compare count+cols+values."""
-import sys, hashlib
+import sys, hashlib, time
 sys.path.insert(0, "/root/repo")
 import duckdb
 import __spark_entry__ as E
@@ -39,13 +39,16 @@ for name, fn in sorted(qs.items()):
     if name not in osql:
         print(f"  {name}: rows-only, {len(spdf)} rows")
         continue
+    t0 = time.perf_counter()
     opdf = con.sql(osql[name]).df()
+    oracle_s = time.perf_counter() - t0
     ok_n = len(spdf) == len(opdf)
     ok_c = sorted(spdf.columns) == sorted(opdf.columns)
     ok_h = vhash(spdf) == vhash(opdf)
     status = "OK" if (ok_n and ok_c and ok_h) else "MISMATCH"
     if status != "OK":
         fails += 1
-    print(f"  {name}: {status} rows={len(spdf)}/{len(opdf)} cols={ok_c} hash={ok_h}")
+    print(f"  {name}: {status} rows={len(spdf)}/{len(opdf)} cols={ok_c} hash={ok_h} "
+          f"oracle_s={oracle_s:.2f}")
 print("FAILS:", fails)
 sys.exit(1 if fails else 0)

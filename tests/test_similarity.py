@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from data_pipelines_using_llm_spark.operators import similarity as SIM
 from data_pipelines_using_llm_spark.plans import similarity_queries as SQ
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -867,7 +868,7 @@ def test_tenant_skewed_per_class_recall(spark):
     }
     assert nmap[0] == SQ.IVF_KMEANS_NPROBE  # hot: stays cell-pruned
     assert all(
-        nmap[t] == SQ._IVF_NCELLS for t in nmap if t != 0
+        nmap[t] == SIM.IVF_CELLS for t in nmap if t != 0
     )  # cold: full probe
 
     def _skew(x: int) -> int:
@@ -964,13 +965,13 @@ def test_tenant_skewed_refined_cold_is_exact(spark):
 
 def test_skew_full_probe_covers_all_cells(spark):
     """The skewed policy's 'cold tenants probe EVERY cell' claim is only
-    as good as _IVF_NCELLS matching the trained index's actual cell
-    count — if the trainer's k ever changed while the constant stayed
-    10, the Spark policy and the oracle's probe bound would still agree
+    as good as SIM.IVF_CELLS matching the trained index's actual cell
+    count — if the trained index ever held another number of cells,
+    the Spark policy and the oracle's probe bound would still agree
     with each other (gate stays green) while full-probe silently became
     partial.  Pin the tie against the live session artifact."""
     icents = SQ.shared_index_parts(spark, "/root/testdata/sf0.001")[1]
-    assert icents.count() == SQ._IVF_NCELLS
+    assert icents.count() == SIM.IVF_CELLS
 
 
 def test_tenant_partitioned_layout_prunes(spark):
@@ -1392,3 +1393,75 @@ def test_ann_maintenance_leaves_no_residue(spark, tmp_path):
     assert set(jsc.getPersistentRDDs().keys()) - before == set()
     root = caching._session_root()
     assert [n for n in os.listdir(root) if not n.startswith("artifact_")] == []
+
+
+# (rows, vhash) of each k-means / IVF / IVFPQ oracle at sf0.001 as the
+# copied per-row SQL gave them, before those oracles became builder calls.
+# vhash = scripts/drive_contract.py's order-insensitive value hash.
+_PINNED_ORACLES = {
+    "ann_index_stats": (10, "3133993e02"),
+    "dedup_semantic": (500, "4b3e336568"),
+    "kmeans_clusters": (500, "2f10ea6372"),
+    "knn_ivf": (50, "40e5fc39d6"),
+    "knn_ivf_int8": (50, "6033923fe6"),
+    "knn_ivf_kmeans": (50, "d0e5f816b8"),
+    "knn_ivfpq": (50, "38e10e972c"),
+    "knn_ivfpq_extended": (50, "af8ca3813b"),
+    "knn_ivfpq_refined": (50, "0427fbb38e"),
+    "knn_ivfpq_refined_stored": (50, "0427fbb38e"),
+    "knn_ivfpq_removed": (50, "21dd455c5d"),
+    "knn_ivfpq_residual": (50, "9c3568bd99"),
+    "knn_ivfpq_residual_extended": (50, "f2d91b5791"),
+    "knn_ivfpq_residual_refined": (50, "6dafb0297e"),
+    "knn_ivfpq_residual_removed": (50, "7f7dfb5f73"),
+    "knn_ivfpq_residual_stored": (50, "9c3568bd99"),
+    "knn_ivfpq_residual_tenant": (50, "d1cbe9672d"),
+    "knn_ivfpq_residual_tenant_skewed": (50, "0725e0dd56"),
+    "knn_ivfpq_stored": (50, "38e10e972c"),
+    "knn_ivfpq_tenant": (50, "b6ed6b5930"),
+    "knn_ivfpq_tenant_partitioned": (50, "b6ed6b5930"),
+    "knn_ivfpq_tenant_refined": (50, "912dd1d25f"),
+    "knn_ivfpq_tenant_skewed": (50, "3578d9ec9a"),
+    "knn_ivfpq_tenant_skewed_refined": (50, "73ba403e6c"),
+    "knn_pq": (50, "a7949d466e"),
+    "knn_pq_refined": (50, "28b0307da3"),
+    "stream_knn_residual_serve": (50, "9c3568bd99"),
+    "stream_knn_residual_tenant_serve": (50, "d1cbe9672d"),
+    "stream_knn_serve": (50, "38e10e972c"),
+    "stream_knn_tenant_serve": (50, "b6ed6b5930"),
+}
+_KNN_COLS = ["query_id", "neighbor_id", "cosine_sim", "rank"]
+_PINNED_COLS = {
+    "ann_index_stats": ["cell", "n_vectors", "corpus_share", "max_code_count"],
+    "dedup_semantic": ["vec_id", "cluster_id", "kept", "dup_of"],
+    "kmeans_clusters": ["vec_id", "cluster_id", "dist"],
+}
+
+
+def test_ann_oracles_match_parent_values():
+    """The oracles alone, no Spark: test_oracle.py compares Spark with
+    each oracle, so an edit to the shared mean, Lloyd or serve CTEs that
+    moved both sides together would pass there.  Here every builder
+    oracle must still give the rows, columns and value hash the copied
+    SQL gave before the builder existed."""
+    import hashlib
+
+    from data_pipelines_using_llm_spark.registry import all_queries
+    from tests.oracle_check import duckdb_connection
+
+    con = duckdb_connection(SF_DIR)
+    specs = all_queries()
+    results: dict[str, tuple] = {}  # rows sharing one SQL run it once
+    for name, (rows, vhash) in _PINNED_ORACLES.items():
+        sql = specs[name].oracle
+        if sql not in results:
+            pdf = con.sql(sql).df()
+            recs = sorted(
+                tuple(str(v) for v in r)
+                for r in pdf[sorted(pdf.columns)].itertuples(index=False)
+            )
+            digest = hashlib.md5(str(recs).encode()).hexdigest()[:10]
+            results[sql] = (len(pdf), list(pdf.columns), digest)
+        assert results[sql] == (
+            rows, _PINNED_COLS.get(name, _KNN_COLS), vhash
+        ), name
