@@ -19,11 +19,12 @@ materialize (noop write), on a warmed session.
 
 from __future__ import annotations
 
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:

@@ -43,10 +43,11 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # BSD sysexits.h EX_USAGE — distinct from both decision codes (0/2) and
 # the bare-invocation help code (1)

@@ -1,7 +1,7 @@
 """Simulate the driver: import __spark_entry__, smoke entry(), run every
 queries() entry at sf0.01, run oracle_sql() in DuckDB, compare count+cols+values."""
-import sys, hashlib, time
-sys.path.insert(0, "/root/repo")
+import os, sys, hashlib, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import __spark_entry__ as E
 from pyspark.sql import SparkSession

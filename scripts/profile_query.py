@@ -1,108 +1,45 @@
 #!/usr/bin/env python3
-"""Per-query phase profiler (optimization round instrumentation).
+"""Profile registry rows in one shared session, as the bench runs them.
 
-For each named registry query, in THIS process (one shared session like
-the bench), splits the wall time of a run into:
+Each named row runs once cold and twice warm through
+``telemetry.run_row``, which splits its wall time into ``build`` (the
+``fn(spark, sf_dir)`` call: eager training, driver collects and whole
+streaming runs happen here) and ``execute`` (the noop write), and counts
+the Spark jobs, stages and tasks each part started.  Prints one JSON
+line ``{name: {"cold": record, "warm": record}}``, warm being the faster
+warm run.
 
-- ``build``   — the ``fn(spark, sf_dir)`` call (plan construction; for
-  self-contained ANN rows this includes eager localCheckpoint training)
-- ``analyze`` — ``df.queryExecution.executedPlan`` forcing (Catalyst
-  analysis + optimization + physical planning of the FINAL plan)
-- ``execute`` — the noop write
-- ``jobs``    — Spark job count and summed job execution time during the
-  run (from the status tracker), so (wall - job time) exposes
-  driver-side gaps (planning, scheduling, collect round trips).
-
-Usage: python scripts/profile_query.py q1 q2 ...
+Usage: SPARK_GRAFT_SF_DIR=/path/to/sf0.1 python scripts/profile_query.py q1 q2 ...
 """
 from __future__ import annotations
 
 import json
 import os
 import sys
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main() -> int:
-    names = sys.argv[1:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from data_pipelines_using_llm_spark.operators.caching import (
-        release_barriers,
-    )
+def main(names: list[str]) -> int:
     from data_pipelines_using_llm_spark.registry import all_queries
     from data_pipelines_using_llm_spark.session import get_spark
+    from data_pipelines_using_llm_spark.telemetry import run_row
 
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("profile")
-    # Ad-hoc conf overrides for A/B runs: PROFILE_CONF="k=v;k2=v2"
-    for kv in os.environ.get("PROFILE_CONF", "").split(";"):
-        if "=" in kv:
-            k, v = kv.split("=", 1)
-            spark.conf.set(k.strip(), v.strip())
     registry = all_queries()
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def run_one(name: str) -> dict:
-        fn = registry[name].fn
-        jobs_before = set(tracker.getJobIdsForGroup(None) or [])
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        t1 = time.perf_counter()
-        # force analysis+optimization+physical planning without executing
-        df._jdf.queryExecution().executedPlan()
-        t2 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        t3 = time.perf_counter()
-        jobs_after = set(tracker.getJobIdsForGroup(None) or [])
-        new_jobs = sorted(jobs_after - jobs_before)
-        job_info = []
-        for jid in new_jobs:
-            ji = tracker.getJobInfo(jid)
-            if ji is None:
-                continue
-            n_tasks = 0
-            for sid in ji.stageIds:
-                si = tracker.getStageInfo(sid)
-                if si is not None:
-                    n_tasks += si.numTasks
-            job_info.append({"job": jid, "tasks": n_tasks})
-        release_barriers()
-        try:
-            spark.catalog.clearCache()
-        except Exception:
-            pass
-        return {
-            "build": round(t1 - t0, 3),
-            "analyze": round(t2 - t1, 3),
-            "execute": round(t3 - t2, 3),
-            "wall": round(t3 - t0, 3),
-            "n_jobs": len(new_jobs),
-            "n_tasks": sum(j["tasks"] for j in job_info),
-        }
-
     out = {}
     for name in names:
         if name not in registry:
             print(f"SKIP {name}: not in registry", file=sys.stderr)
             continue
-        cold = run_one(name)
-        warm = run_one(name)
-        warm2 = run_one(name)
-        best = min((warm, warm2), key=lambda r: r["wall"])
-        out[name] = {"cold": cold, "warm": best}
-        print(
-            f"{name}: cold={cold['wall']}s "
-            f"warm={best['wall']}s (build={best['build']} "
-            f"analyze={best['analyze']} exec={best['execute']} "
-            f"jobs={best['n_jobs']} tasks={best['n_tasks']})",
-            flush=True,
-        )
+        fn = registry[name].fn
+        cold = run_row(spark, fn, sf_dir)
+        warm = min((run_row(spark, fn, sf_dir) for _ in range(2)), key=lambda r: r["wall_s"])
+        out[name] = {"cold": cold, "warm": warm}
     print(json.dumps(out))
     return 0
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

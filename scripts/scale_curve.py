@@ -22,10 +22,11 @@ Timings are min-of-2 (see bench.py: shared-host noise).
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, functions as F
 

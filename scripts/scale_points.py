@@ -1,19 +1,19 @@
 #!/usr/bin/env python3
-"""Isolated 3-point scale curves (r8 verdict task 4 / r9 task 6).
+"""Isolated 3-point scale curves.
 
-The bench's in-session scale probe compares sf0.01 vs sf0.1 inside a
-shared, late-session JVM — exactly the measurement the isolation floors
-(BENCH_ISOLATED.json) proved can swing 1.5-3x on session state alone.
-For queries whose probe ratio exceeded 2x per 10x data, this script
-measures the REAL curve: each (query, sf) point runs in its own
-subprocess (fresh JVM, one cold warmup + min-of-2 warm), across
-sf0.001 / sf0.01 / sf0.1.
+A shared, late-session JVM can swing a row's time 1.5-3x on session state
+alone, so each (query, sf) point here runs ``scripts/profile_query.py``
+in its own subprocess (fresh JVM, one cold run + min of 2 warm), across
+sf0.001 / sf0.01 / sf0.1.  The sf0.1 point is the row's fresh-JVM floor
+at bench scale.
 
 A linear operator shows warm-ratio ≈ 10 per decade once data dominates
 fixed overhead; sub-second bases are overhead-dominated and a ratio
 between 1 and ~4 at the small step with ≤ ~10 at the big step is the
 linear signature.  Superlinear terms show up as ratios climbing ACROSS
-decades (r2 > r1 with r2 > 10).
+decades (r2 > r1 with r2 > 10).  Each point also records its warm job
+and stage counts: a job count that grows with sf is a driver loop whose
+length depends on the data.
 
 Usage::
 
@@ -44,24 +44,34 @@ SF_DIRS = {
     "0.1": "/root/testdata/sf0.1",
 }
 
-_CHILD = r"""
-import json, sys, time
-name, sf_dir = sys.argv[1], sys.argv[2]
-from data_pipelines_using_llm_spark.registry import all_queries
-from data_pipelines_using_llm_spark.session import get_spark
 
-spark = get_spark(f"scalepoint-{name}")
-fn = all_queries()[name].fn
-
-def run_once():
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
-
-cold = run_once()
-warm = min(run_once(), run_once())
-print("POINT " + json.dumps({"cold": round(cold, 4), "warm": round(warm, 4)}))
-"""
+def point(name: str, sf_dir: str) -> dict:
+    """One fresh-process profile of ``name`` at ``sf_dir``: cold and warm
+    wall seconds plus the warm run's job and stage counts, or a named
+    error (a crashing or hung point must not abort the sweep)."""
+    try:
+        proc = subprocess.run(
+            [sys.executable, os.path.join(REPO, "scripts", "profile_query.py"), name],
+            capture_output=True,
+            text=True,
+            cwd=REPO,
+            env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir},
+            timeout=900,
+        )
+    except subprocess.TimeoutExpired:
+        return {"error": "timeout after 900s"}
+    try:
+        rec = json.loads(proc.stdout.strip().splitlines()[-1])[name]
+    except (IndexError, KeyError, ValueError):
+        tail = (proc.stderr.strip().splitlines() or ["no output"])[-1]
+        return {"error": f"rc={proc.returncode}: {tail[:300]}"}
+    warm = rec["warm"]
+    return {
+        "cold": rec["cold"]["wall_s"],
+        "warm": warm["wall_s"],
+        "jobs": warm["jobs"],
+        "stages": warm["stages"],
+    }
 
 
 def main(names: list[str]) -> None:
@@ -72,37 +82,8 @@ def main(names: list[str]) -> None:
     except Exception:
         merged = {}
     for name in names:
-        curve: dict[str, dict] = {}
-        for sf, sf_dir in SF_DIRS.items():
-            # Per-point failure isolation (r10 ADVICE): a crashing child
-            # must leave a NAMED error in the curve, not a silent gap,
-            # and a hung point must not abort the sweep and discard the
-            # queries already measured before the merge/write.
-            try:
-                proc = subprocess.run(
-                    [sys.executable, "-c", _CHILD, name, sf_dir],
-                    capture_output=True,
-                    text=True,
-                    cwd=REPO,
-                    timeout=900,
-                )
-            except subprocess.TimeoutExpired:
-                curve[sf] = {"error": "timeout after 900s"}
-                continue
-            got = None
-            for line in proc.stdout.splitlines():
-                if line.startswith("POINT "):
-                    got = json.loads(line[len("POINT "):])
-            if got is None:
-                tail = (proc.stderr.strip().splitlines() or ["no output"])[-1]
-                curve[sf] = {
-                    "error": f"rc={proc.returncode}: {tail[:300]}"
-                }
-            else:
-                curve[sf] = got
-        if {"0.001", "0.01", "0.1"} <= set(curve) and all(
-            "warm" in curve[sf] for sf in ("0.001", "0.01", "0.1")
-        ):
+        curve = {sf: point(name, sf_dir) for sf, sf_dir in SF_DIRS.items()}
+        if all("warm" in curve[sf] for sf in SF_DIRS):
             curve["ratio_001_to_01"] = round(
                 curve["0.01"]["warm"] / curve["0.001"]["warm"], 2
             )

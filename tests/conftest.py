@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-import sys
-
 import pytest
 
 from data_pipelines_using_llm_spark.session import get_spark
@@ -14,26 +12,10 @@ SF001 = "/root/testdata/sf0.01"
 def spark():
     s = get_spark("tests", extra_conf={"spark.sql.shuffle.partitions": "8"})
     yield s
-    # Stop the session at fixture teardown (before the terminal summary
-    # prints) so interpreter-exit JVM teardown cannot race pytest's
-    # buffered stdout: two rounds in a row the recorded run ended at the
-    # last test dot with the "N passed" summary line missing — the exit
-    # code was 0 and every test had passed, but a verification artifact
-    # without the summary line reads as an incomplete run.
+    # One session serves the whole run; stop its JVM once the last test
+    # is done with it.
     try:
         s.stop()
     except Exception:
         pass
 
-
-@pytest.hookimpl(trylast=True)
-def pytest_unconfigure(config):
-    # Flush stdout/stderr after the terminal reporter has written the
-    # final summary: when stdout is a pipe/file (the verification
-    # driver), the summary sits in a block buffer that an abrupt
-    # interpreter/JVM teardown can drop.
-    try:
-        sys.stdout.flush()
-        sys.stderr.flush()
-    except Exception:
-        pass

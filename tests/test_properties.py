@@ -4,6 +4,7 @@ preservation, and the shingle-hash fold."""
 
 from __future__ import annotations
 
+import os
 import re
 
 from hypothesis import HealthCheck, given, settings
@@ -261,7 +262,7 @@ def test_quality_scores_bar():
         [sys.executable, "scripts/quality_scores.py"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert res.returncode == 0, res.stdout[-2000:]
 
@@ -387,20 +388,20 @@ def test_containment_dominates_jaccard(spark, texts, threshold):
         assert c >= threshold
 
 
-def test_bench_flag_classifier_bands():
-    """The mechanical noise-adjudication rule (bench.py::classify_flag)
-    must map each band exactly — a real regression (above the isolated
-    COLD time) can never be classified as noise."""
+def test_bench_flag_verdict_by_counts():
+    """A >1.5x bench flag is judged by its job and stage counts: the same
+    counts as the previous sidecar are host noise, different counts are a
+    plan change, and a previous record without counts cannot clear it."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
-    from bench import classify_flag
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from bench import flag_verdict
 
-    assert classify_flag(1.0, None, None) == "no_floor"
-    assert classify_flag(None, 1.0, 2.0) == "no_floor"
-    assert classify_flag(1.05, 1.0, 3.0) == "below_floor"  # within slack
-    assert classify_flag(1.10, 1.0, 3.0) == "below_floor"  # boundary
-    assert classify_flag(1.2, 1.0, 3.0) == "in_band"
-    assert classify_flag(3.0, 1.0, 3.0) == "in_band"  # boundary = cold
-    assert classify_flag(3.01, 1.0, 3.0) == "above_band"
-    assert classify_flag(1.2, 1.0, None) == "above_band"  # no cold bound
+    rec = {"jobs": 3, "stages": 4, "tasks": 9, "wall_s": 1.0}
+    assert flag_verdict(rec, {**rec, "wall_s": 0.2, "tasks": 12}) == "same_plan"
+    assert flag_verdict(rec, {**rec, "jobs": 2}) == "plan_changed"
+    assert flag_verdict(rec, {**rec, "stages": 5}) == "plan_changed"
+    assert flag_verdict(rec, {}) == "no_counts"
+    assert flag_verdict(rec, None) == "no_counts"
+    assert flag_verdict(rec, {"jobs": 3}) == "no_counts"
+    assert flag_verdict(None, rec) == "no_counts"

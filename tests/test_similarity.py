@@ -3,6 +3,8 @@ covered by test_oracle.py; these assert the queries return real work)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,6 +12,10 @@ from data_pipelines_using_llm_spark.operators import similarity as SIM
 from data_pipelines_using_llm_spark.plans import similarity_queries as SQ
 
 SF_DIR = "/root/testdata/sf0.001"
+
+ANN_MAINTAIN = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts", "ann_maintain.py"
+)
 
 
 def test_brute_force_k_per_query(spark):
@@ -1049,7 +1055,7 @@ def _load_ann_maintain():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "ann_maintain", "/root/repo/scripts/ann_maintain.py"
+        "ann_maintain", ANN_MAINTAIN
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

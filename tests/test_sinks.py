@@ -23,6 +23,10 @@ from data_pipelines_using_llm_spark.sinks import (
     write_table,
 )
 
+ANN_MAINTAIN = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts", "ann_maintain.py"
+)
+
 
 @pytest.fixture()
 def feed(spark):
@@ -834,7 +838,7 @@ def test_ann_maintain_cli_usage_contract():
     import sys
 
     r = subprocess.run(
-        [sys.executable, "/root/repo/scripts/ann_maintain.py"],
+        [sys.executable, ANN_MAINTAIN],
         capture_output=True,
         text=True,
         timeout=60,

@@ -16,6 +16,10 @@ import time
 
 from pyspark.sql import functions as F
 
+ANN_MAINTAIN = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts", "ann_maintain.py"
+)
+
 
 def _write_batch(spark, path: str, rows, mtime: int) -> None:
     df = spark.createDataFrame(rows, "event_id long, ts timestamp, value double")
@@ -681,7 +685,7 @@ def test_full_maintenance_loop_drift_retrain_recover_live_swap(
     )
 
     spec = importlib.util.spec_from_file_location(
-        "ann_maintain", "/root/repo/scripts/ann_maintain.py"
+        "ann_maintain", ANN_MAINTAIN
     )
     am = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(am)
