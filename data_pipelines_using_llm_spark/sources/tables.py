@@ -2,20 +2,27 @@
 
 The reference reads managed Delta tables by name
 (``spark.table(...)`` at ``First experiment/Claude Opus 4.py:349-355``);
-here the "catalog" is a scale-factor directory of parquet files.  Reads go
-through ``spark.read.parquet`` so Catalyst gets vectorized scans with
-predicate pushdown and column pruning for free.
+here the "catalog" is a scale-factor directory of parquet files.  A
+catalog table carries its schema, so its read starts no Spark job; a
+parquet file carries its schema too, in the footer.  :func:`scan_parquet`
+is the one way a catalog or event-stream input is read: it hands the
+footer schema to ``spark.read`` or ``spark.readStream``, so building a
+scan starts no job, and Catalyst still gets vectorized scans with
+predicate pushdown and column pruning.
 """
 
 from __future__ import annotations
 
 import os
 import re
-from functools import lru_cache
 
+import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.streaming import DataStreamReader
+from pyspark.sql.types import LongType, StructField, StructType
 
 TABLE_NAMES = (
     "region",
@@ -31,45 +38,80 @@ TABLE_NAMES = (
 )
 
 
-@lru_cache(maxsize=None)
-def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
-    """Columns stored as parquet TIMESTAMP(NANOS), which Spark's vectorized
-    reader rejects (PARQUET_TYPE_ILLEGAL).  Footer-only read, cached."""
-    try:
-        schema = pq.read_schema(path)
-    except Exception:
-        return ()
-    return tuple(
-        f.name for f in schema if str(f.type) == "timestamp[ns]"
+def footer_schema(path: str) -> tuple[StructType, tuple[str, ...]]:
+    """The Spark schema of the parquet input at ``path`` (one file, or a
+    flat directory of part files), read from every file's footer, and the
+    names of its TIMESTAMP(NANOS) columns.
+
+    Timestamps come out as TIMESTAMP (LTZ): watermarks and the strict
+    ``unix_*`` functions reject TIMESTAMP_NTZ, and with the session
+    timezone pinned to UTC (session.py) the LTZ values equal the file's
+    naive micros.  INT96 columns (Spark's default ``outputTimestampType``)
+    are reported in microseconds, as Spark reads them.  A NANOS column,
+    which Spark's reader rejects as a timestamp, is declared ``LongType``
+    and read as its raw nanoseconds.  One scan reads every file under one
+    schema, so files that disagree (say, ``ts`` in NANOS in one and
+    MICROS in another, which would silently scale one set by 1000x) raise
+    ``ValueError``."""
+    if os.path.isdir(path):
+        # Spark skips the same hidden names (_SUCCESS, .crc files).
+        files = [
+            os.path.join(path, f)
+            for f in sorted(os.listdir(path))
+            if not f.startswith(("_", ".")) and os.path.isfile(os.path.join(path, f))
+        ]
+    else:
+        files = [path]
+    if not files:
+        raise ValueError(f"no parquet files under {path}")
+    schemas = {f: _file_schema(f) for f in files}
+    schema, nanos = schemas[files[0]]
+    for f, (other, _) in schemas.items():
+        if other.simpleString() != schema.simpleString():
+            raise ValueError(
+                f"parquet files under {path} disagree on schema (one scan "
+                f"reads them all under one): {schema.simpleString()} in "
+                f"{files[0]} vs {other.simpleString()} in {f}"
+            )
+    return schema, nanos
+
+
+def _file_schema(path: str) -> tuple[StructType, tuple[str, ...]]:
+    arrow = pq.ParquetFile(path, coerce_int96_timestamp_unit="us").schema_arrow
+    nanos = tuple(
+        a.name for a in arrow if pa.types.is_timestamp(a.type) and a.type.unit == "ns"
     )
+    schema = StructType(
+        [
+            StructField(f.name, LongType(), f.nullable) if f.name in nanos else f
+            for f in from_arrow_schema(arrow)
+        ]
+    )
+    return schema, nanos
+
+
+def scan_parquet(reader: DataFrameReader | DataStreamReader, path: str) -> DataFrame:
+    """Scan the parquet input at ``path`` through ``reader`` (``spark.read``
+    or a configured ``spark.readStream``) under its :func:`footer_schema`.
+    A file source streams a directory, so a stream over one file reads
+    that file's directory filtered to its name.  NANOS columns are
+    truncated to microsecond timestamps — the same truncation DuckDB
+    applies when casting TIMESTAMP_NS to its microsecond TIMESTAMP, so
+    oracle comparisons agree."""
+    schema, nanos = footer_schema(path)
+    if isinstance(reader, DataStreamReader) and not os.path.isdir(path):
+        reader = reader.option("pathGlobFilter", os.path.basename(path))
+        path = os.path.dirname(path)
+    df = reader.schema(schema).parquet(path)
+    for c in nanos:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one table of the scale-factor directory (S5).
-
-    Nanosecond parquet timestamps are read as long (legacy nanosAsLong
-    conf) and truncated to microseconds — the same truncation DuckDB
-    applies when casting TIMESTAMP_NS to its microsecond TIMESTAMP, so
-    oracle comparisons agree.
-    """
-    path = f"{sf_dir}/{name}.parquet"
-    nanos_cols = _nanos_timestamp_cols(path)
-    if nanos_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in nanos_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    # Spark 4 infers parquet micros timestamps without timezone metadata as
-    # TIMESTAMP_NTZ, which strict functions (unix_micros, unix_millis)
-    # reject.  Normalize every NTZ column to TIMESTAMP_LTZ here so no
-    # downstream query can trip on the inference; the session timezone is
-    # pinned UTC (session.py), so the cast is value-preserving.
-    ntz_cols = [
-        f.name for f in df.schema.fields if f.dataType.typeName() == "timestamp_ntz"
-    ]
-    for c in ntz_cols:
-        df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df
+    """Scan one table of the scale-factor directory (S5): the file or flat
+    part-file directory ``<sf_dir>/<name>.parquet``."""
+    return scan_parquet(spark.read, f"{sf_dir}/{name}.parquet")
 
 
 _BYTE_SUFFIXES = {

@@ -9,6 +9,12 @@ batch DataFrame, so the streaming operators stay inside the DuckDB oracle
 gate: the streaming semantics (watermarks, windows, state) are real, and
 on bounded input the results must equal the batch SQL.
 
+Every stream reads its parquet input through
+``sources/tables.py::scan_parquet``: a streaming file source needs a
+declared schema, and it takes the one the batch scan takes, from the
+files' footers (a NANOS ``ts`` is read as long and truncated to
+microseconds).  The input files must exist when the stream starts.
+
 Scale shape: file-source streams partition per file/split exactly like
 batch scans; windowed aggs shuffle once on (group key, window); state is
 per-key in the state store.  Nothing here collects to the driver.
@@ -18,87 +24,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
-
-def _events_stream_schema(nanos: bool) -> StructType:
-    """Streaming file sources require a declared schema, so the ``ts``
-    physical type must be probed from the parquet footer (the batch path,
-    ``sources/tables.py::load_table``, adapts the same way): TIMESTAMP
-    (NANOS) files are read as long under the legacy nanosAsLong conf and
-    truncated to microseconds; TIMESTAMP(MICROS) files (isAdjustedToUTC=
-    false) are read with a declared TIMESTAMP (LTZ) schema — watermarks
-    reject TIMESTAMP_NTZ, and with the session timezone pinned to UTC the
-    LTZ values are identical to the file's naive micros.  Hardcoding either
-    assumption silently scales every event time by 1000× when the data's
-    precision differs — watermarks then sit at ~1970 and append-mode
-    stateful queries emit nothing."""
-    ts_type = LongType() if nanos else TimestampType()
-    return StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", ts_type),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
-
-
-def _probe_ts_precision(sf_dir: str, glob_pat: str = "events.parquet") -> bool:
-    """True iff the files the stream will read store ``ts`` as
-    TIMESTAMP(NANOS).  Probes EVERY file matching the glob, not just one:
-    the stream reads the whole directory under one static schema, so a
-    directory of arriving files with mixed precision cannot be read
-    correctly (one precision would be silently scaled 1000x) — mixed
-    precision fails loudly instead."""
-    import fnmatch
-    import os
-
-    from data_pipelines_using_llm_spark.sources.tables import _nanos_timestamp_cols
-
-    paths = sorted(
-        os.path.join(sf_dir, f)
-        for f in os.listdir(sf_dir)
-        if fnmatch.fnmatch(f, glob_pat)
-    )
-    flags = {p: "ts" in _nanos_timestamp_cols(p) for p in paths}
-    if len(set(flags.values())) > 1:
-        raise ValueError(
-            "mixed ts precision across stream input files (one static "
-            f"schema cannot read both): {flags}"
-        )
-    return any(flags.values())
+from data_pipelines_using_llm_spark.sources.tables import scan_parquet
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table (one file == one batch
     under AvailableNow; in production this is a directory of arriving
-    files or a Kafka topic with the same downstream plan).
-
-    The nanosAsLong conf is session-wide by necessity (the streaming scan
-    reads it at execution, not declaration); the batch reader
-    (``sources/tables.py``) sets the same value, so they never conflict.
-    """
-    nanos = _probe_ts_precision(sf_dir)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    sdf = (
-        spark.readStream.schema(_events_stream_schema(nanos))
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    if nanos:
-        sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return sdf
+    files or a Kafka topic with the same downstream plan)."""
+    return scan_parquet(spark.readStream, f"{sf_dir}/events.parquet")
 
 
 def run_to_table(
@@ -264,16 +198,9 @@ def stream_gold_rollup(
     """
     from data_pipelines_using_llm_spark.sinks.rollup import incremental_rollup
 
-    nanos = _probe_ts_precision(input_dir, "*.parquet")
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    sdf = (
-        spark.readStream.schema(_events_stream_schema(nanos))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
+    sdf = scan_parquet(
+        spark.readStream.option("maxFilesPerTrigger", 1), input_dir
     )
-    if nanos:
-        sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         b = batch_df.select(

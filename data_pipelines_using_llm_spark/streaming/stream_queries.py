@@ -23,6 +23,7 @@ from pyspark.sql.types import (
 
 from data_pipelines_using_llm_spark.plans.similarity_queries import _ivfpq_oracle
 from data_pipelines_using_llm_spark.registry import QuerySpec
+from data_pipelines_using_llm_spark.sources.tables import load_table, scan_parquet
 from data_pipelines_using_llm_spark.streaming.ingest import run_to_table, stream_events
 
 SESSION_GAP_MIN = 30
@@ -635,7 +636,7 @@ FROM flagged WHERE violated_rules <> ''
 
 def run_stream_knn(
     spark: SparkSession,
-    src_dir: str,
+    src: str,
     table_dir: str,
     out_dir: str,
     chk: str,
@@ -645,7 +646,8 @@ def run_stream_knn(
     labels: DataFrame | None = None,
 ) -> None:
     """The online-serving stream over a LIVE versioned index: query
-    vectors arrive as parquet files (one micro-batch per file), and
+    vectors arrive as parquet files at ``src`` (one file, or a directory
+    of arriving files; one micro-batch per file), and
     each micro-batch RE-RESOLVES the index version pointer — one
     ``ann_index_load`` inside ``foreachBatch`` — before serving through
     the pure IVFPQ dataflow (operators/similarity.py::ivfpq_serve).
@@ -681,8 +683,6 @@ def run_stream_knn(
     candidates inside candidate generation exactly as the batch rows
     do, under BOTH encoding regimes, so a mid-stream index swap cannot
     leak a foreign-tenant row."""
-    from pyspark.sql.types import ArrayType, FloatType, IntegerType
-
     from data_pipelines_using_llm_spark.operators import similarity as SIM
     from data_pipelines_using_llm_spark.plans.similarity_queries import (
         IVF_KMEANS_NPROBE,
@@ -694,18 +694,7 @@ def run_stream_knn(
         current_version,
     )
 
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("embedding", ArrayType(FloatType())),
-            StructField("label", IntegerType()),
-        ]
-    )
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    sdf = scan_parquet(spark.readStream.option("maxFilesPerTrigger", "1"), src)
     parts_by_version: dict[int, tuple] = {}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -846,8 +835,6 @@ def stream_knn_residual_tenant_serve(
 def _stream_knn_serve_impl(
     spark: SparkSession, sf_dir: str, residual: bool, tenant: bool = False
 ) -> DataFrame:
-    import os
-
     from data_pipelines_using_llm_spark.operators.caching import scratch_dir
     from data_pipelines_using_llm_spark.plans.similarity_queries import (
         QUERY_MOD,
@@ -855,35 +842,19 @@ def _stream_knn_serve_impl(
     )
 
     tdir = scratch_dir("stream_ann_index_")
-    # the sf dir holds every table and a file source wants a directory:
-    # stage a symlink-only dir holding just the embeddings file(s)
-    src_dir = scratch_dir("stream_knn_src_")
     out_dir = scratch_dir("stream_knn_out_")
     chk = scratch_dir("stream_knn_chk_")
     # session-shared training committed as this stream's artifact
     # (byte-compatible with ann_index_train's snapshot)
     seed_index_dir(spark, sf_dir, tdir, residual=residual)
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    if os.path.isdir(emb_path):  # multi-file table: one link per part
-        leaves = [
-            os.path.join(emb_path, f)
-            for f in sorted(os.listdir(emb_path))
-            if f.endswith(".parquet")
-        ]
-    else:
-        leaves = [emb_path]
-    for i, leaf in enumerate(leaves):
-        os.symlink(leaf, os.path.join(src_dir, f"part-{i:05d}.parquet"))
     labels = None
     if tenant:
-        from data_pipelines_using_llm_spark.sources.tables import load_table
-
         labels = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", F.col("label").cast("long").alias("label")
         )
     run_stream_knn(
-        spark, src_dir, tdir, out_dir, chk, query_mod=QUERY_MOD,
-        labels=labels,
+        spark, f"{sf_dir}/embeddings.parquet", tdir, out_dir, chk,
+        query_mod=QUERY_MOD, labels=labels,
     )
     return spark.read.parquet(out_dir)
 

@@ -125,23 +125,27 @@ def test_streaming_medallion_idempotent_rerun(spark, tmp_path):
 def test_mixed_ts_precision_probe_fails_loudly(tmp_path):
     """A directory where some files store ts as TIMESTAMP(NANOS) and others
     as TIMESTAMP(MICROS) cannot be read under one static stream schema —
-    the probe must reject it instead of silently scaling one set by 1000x."""
+    the footer schema must reject it instead of silently scaling one set
+    by 1000x."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pytest
+    from pyspark.sql.types import LongType, TimestampType
 
-    from data_pipelines_using_llm_spark.streaming.ingest import _probe_ts_precision
+    from data_pipelines_using_llm_spark.sources.tables import footer_schema
 
     t0 = dt.datetime(2024, 1, 1, 10, 0)
     for name, unit in [("events_a.parquet", "ns"), ("events_b.parquet", "us")]:
         tbl = pa.table({"ts": pa.array([t0], type=pa.timestamp(unit))})
         pq.write_table(tbl, str(tmp_path / name), coerce_timestamps=None)
 
-    # uniform subsets are fine, and report their precision
-    assert _probe_ts_precision(str(tmp_path), "events_a.parquet") is True
-    assert _probe_ts_precision(str(tmp_path), "events_b.parquet") is False
-    with pytest.raises(ValueError, match="mixed ts precision"):
-        _probe_ts_precision(str(tmp_path), "events_*.parquet")
+    # uniform inputs are fine, and report their precision
+    schema, nanos = footer_schema(str(tmp_path / "events_a.parquet"))
+    assert schema["ts"].dataType == LongType() and nanos == ("ts",)
+    schema, nanos = footer_schema(str(tmp_path / "events_b.parquet"))
+    assert schema["ts"].dataType == TimestampType() and nanos == ()
+    with pytest.raises(ValueError, match="disagree on schema"):
+        footer_schema(str(tmp_path))
 
 
 def test_transform_with_state_engagement(spark):
