@@ -15,8 +15,15 @@ Cross-engine exactness rules (the whole design):
   ``list_reduce(list_prepend(0.0, list_transform(...)))`` perform the same
   IEEE-754 operations in the same order, so the resulting doubles are
   bit-identical and downstream ranking ties out identically.
-- IVF centroids are means computed as exact DECIMAL sums divided by counts
-  (see functions/exact.py for why: double summation is order-dependent).
+- centroids (IVF cells, k-means clusters, PQ codewords) are means computed
+  by ONE kernel, :func:`_exact_means`: one row per (centroid, position),
+  an exact DECIMAL(28,10) sum cast to double, divided by the count (see
+  functions/exact.py for why: double summation is order-dependent).
+- trained centroids are control-plane state: the Lloyd loop collects them
+  each round and puts them back into the plan as SQL literals — the
+  argmin is one ``array_min(transform(<literal codebook>, ...))`` per
+  family (:func:`_argmin_sql`), and the returned codebooks are
+  ``VALUES`` rows, so no Python worker ever runs.
 - hyperplanes are small-integer vectors from a fixed LCG, shared verbatim
   with the SQL builders in plans/similarity_queries.py.
 
@@ -28,7 +35,7 @@ only shuffles are the LSH-bucket equi-join and the per-query top-k window.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -386,24 +393,24 @@ def knn_lsh(
 
 
 def ivf_centroids(base: DataFrame, cell_col: str) -> DataFrame:
-    """Per-cell mean vector with ORDER-INDEPENDENT exact arithmetic:
-    per-dimension decimal(28,10) sums -> double division, fused into ONE
-    ``groupBy(cell)`` exchange of d-column partials (r14: previously a
-    posexplode fed TWO exchanges — (cell, pos) sums then the collect_list
-    re-assembly — shuffling d rows per vector where one row of d partial
-    sums suffices).  The per-dimension arithmetic (cast-then-sum, s / n
-    double division, position order) is unchanged, so the cells are
-    bit-identical on any partitioning and in the DuckDB oracle.  Assumes
-    fixed-dimension (``DIM``) non-null vectors — the embeddings corpus
-    contract every caller already relies on."""
-    sums = (
-        _spread(base)
-        .filter(F.col("v").isNotNull())  # NULL vectors: no sum, no count
-        .groupBy(F.col(cell_col).alias("cell"))
-        .agg(*_mean_aggs(_try_elem("v"), DIM))
+    """Per-cell mean vector with ORDER-INDEPENDENT exact arithmetic: the
+    one exact-mean kernel (:func:`_exact_means`: one row per (cell,
+    position), ``CAST(sum(CAST(x AS DECIMAL(28,10))) AS DOUBLE) /
+    count(1)``), then one ``sort_array(collect_list(struct(pos, m)))``
+    per cell puts the means back in position order.  The arithmetic is
+    the DuckDB oracle's, so the cells are bit-identical on any
+    partitioning.  Positions run 1..``DIM`` (the embeddings corpus
+    contract); a NULL vector adds nothing and is not counted, a short
+    vector or a NULL element adds NULL to its position's sum but is
+    counted."""
+    means = _exact_means(
+        _spread(base).select(F.col(cell_col).alias("cell"), "v"), ["cell"]
     )
-    return sums.select("cell", _means_array(DIM).alias("cv")).select(
-        "cell", "cv", norm(F.col("cv")).alias("cnrm")
+    return (
+        means.groupBy("cell")
+        .agg(F.sort_array(F.collect_list(F.struct("pos", "m"))).alias("pm"))
+        .select("cell", F.col("pm.m").alias("cv"))
+        .select("cell", "cv", norm(F.col("cv")).alias("cnrm"))
     )
 
 
@@ -489,73 +496,84 @@ def _sql_double_lit(x: float) -> str:
     """Exact SQL double literal: ``repr`` emits the shortest decimal that
     round-trips to the same binary64, and Spark's parser reads it with
     Double.parseDouble (correctly rounded), so the value re-enters the
-    plan bit-identical."""
-    return f"{float(x)!r}D"
+    plan bit-identical.  ``None`` (a position no member reaches) is a
+    typed NULL."""
+    return "CAST(NULL AS DOUBLE)" if x is None else f"{float(x)!r}D"
 
 
 def _sql_vec_lit(xs: list[float]) -> str:
     return "array(" + ",".join(_sql_double_lit(x) for x in xs) + ")"
 
 
-def _least_assign_sql(
-    vexpr: str, cents: list[tuple[int, list[float]]]
-) -> str:
-    """Argmin over LITERAL centroids as ``least`` of (d2, cid) structs —
-    the same (distance, lowest-cid) tie-break as ``min(struct(d2, cid))``
-    over a broadcast centroid table, but evaluated MAP-SIDE with zero
-    joins, zero exchanges: the centroids ride in the expression itself
-    (k·d double literals — codebook-sized at any corpus scale).  ``d2``
-    is the same sequential ``(x-y)²`` left fold as :func:`dist2` (the
-    SQL text parses to the identical ArrayAggregate/ZipWith nodes), so
-    distances are bit-identical to the joined formulation.  Emitted as
-    ONE SQL string because building the k·d-literal tree through py4j
-    Column calls costs seconds of driver round trips per round."""
-
-    def d2(cv: list[float]) -> str:
-        return (
-            f"aggregate(zip_with({vexpr}, {_sql_vec_lit(cv)}, "
-            "(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x)"
-        )
-
-    structs = [
-        f"named_struct('d2', {d2(cv)}, 'cid', CAST({int(cid)} AS BIGINT))"
+def _argmin_sql(vexpr: str, cents: list[tuple[int, list[float]]]) -> str:
+    """Argmin of ``vexpr`` over LITERAL centroids, as ONE SQL string:
+    ``array_min`` over a ``transform`` of the codebook, itself a single
+    literal ``array(named_struct('cid', .., 'cv', array(..)), ..)`` that
+    constant-folds into one value per plan.  Each element maps to
+    ``(d2, cid)``, where ``d2`` is the same sequential ``(x-y)²`` left
+    fold as :func:`dist2`, so the distances are bit-identical to a
+    joined formulation, and ``array_min`` orders the structs exactly as
+    ``min(struct(d2, cid))`` does: the lowest distance, then the lowest
+    cid (a NULL distance, from a short or NULL-holding vector, sorts
+    first).  Evaluated MAP-SIDE with zero joins and zero exchanges: the
+    centroids ride in the expression (k·d literals, codebook-sized at
+    any corpus scale)."""
+    book = ",".join(
+        f"named_struct('cid', CAST({int(cid)} AS BIGINT), 'cv', {_sql_vec_lit(cv)})"
         for cid, cv in cents
-    ]
-    if len(structs) == 1:
-        return structs[0]
-    return "least(" + ",".join(structs) + ")"
-
-
-def _mean_aggs(elem_sql, dim: int) -> list[Column]:
-    """Per-dimension decimal-exact sum aggregates + count — the fused
-    one-exchange form of the posexplode → (key, pos) double shuffle.
-    ``elem_sql(i)`` yields the i-th (1-based) element's SQL expression;
-    sums cast decimal(28,10) BEFORE summing exactly as the exploded
-    form did."""
-    return [
-        F.expr(
-            f"CAST(sum(CAST({elem_sql(i + 1)} AS DECIMAL(28,10))) "
-            "AS DOUBLE)"
-        ).alias(f"_s{i}")
-        for i in range(dim)
-    ] + [F.count(F.lit(1)).alias("_n")]
-
-
-def _try_elem(col: str):
-    """ANSI-safe element accessor for :func:`_mean_aggs` — identical to
-    ``element_at`` on fixed-dimension data (the corpus contract), NULL
-    (excluded from the decimal sum, exactly as the exploded form's
-    missing row) on a shorter vector instead of the ANSI index error."""
-    return lambda i: f"try_element_at({col}, {i})"
-
-
-def _means_array(dim: int) -> Column:
-    """Re-assemble the per-dimension means (s / n, the same double
-    division the exploded form applied per (key, pos) row) in position
-    order."""
-    return F.expr(
-        "array(" + ",".join(f"_s{i} / _n" for i in range(dim)) + ")"
     )
+    return (
+        f"array_min(transform(array({book}), c -> named_struct('d2', "
+        f"aggregate(zip_with({vexpr}, c.cv, (x, y) -> (x - y) * (x - y)), "
+        "0.0D, (acc, x) -> acc + x), 'cid', c.cid)))"
+    )
+
+
+def _exact_means(
+    df: DataFrame, keys: list[str], off: str = "0", width: str = str(DIM)
+) -> DataFrame:
+    """THE exact-mean kernel: ``(keys, pos, m)`` with ``m`` the mean of
+    element ``off + pos`` of ``v`` over the rows of each key, for ``pos``
+    in ``1..width`` (``off`` and ``width`` are SQL over ``df``'s columns,
+    so one pass can mean families of different widths).  Each row
+    explodes into one ``(pos, x)`` row per position (``try_element_at``:
+    NULL past a short vector's end), and each ``(keys, pos)`` group takes
+    ``CAST(sum(CAST(x AS DECIMAL(28,10))) AS DOUBLE) / count(1)`` — an
+    exact, order-free sum, so the mean is the same double on any
+    partitioning and in the DuckDB oracle.  A NULL element adds NULL to
+    its sum (skipped) but counts in ``n``; a NULL vector is dropped."""
+    pos = (
+        f"inline(transform(sequence(1, {width}), p -> named_struct("
+        f"'pos', p, 'x', try_element_at(v, {off} + p))))"
+    )
+    return (
+        df.filter(F.col("v").isNotNull())
+        .select(*keys, F.expr(pos))
+        .groupBy(*keys, "pos")
+        .agg(
+            F.expr(
+                "CAST(sum(CAST(x AS DECIMAL(28,10))) AS DOUBLE) / count(1)"
+            ).alias("m")
+        )
+    )
+
+
+def _codebook_df(
+    spark: SparkSession, keys: list[tuple[str, str]], rows: list[tuple]
+) -> DataFrame:
+    """Trained centroids as SQL-literal rows: ``VALUES`` of each row's
+    ``keys`` (``(name, SQL type)``) and its ``cv`` vector, which Spark
+    plans as one ``LocalTableScan`` — no job to build it, no Python
+    worker, and doubles re-enter bit-identical (:func:`_sql_double_lit`).
+    ``rows`` is ``[(*key_values, cv)]`` and must not be empty."""
+    vals = ",".join(
+        "("
+        + ",".join(f"CAST({k} AS {t})" for k, (_, t) in zip(r[:-1], keys))
+        + f",{_sql_vec_lit(r[-1])})"
+        for r in rows
+    )
+    names = ",".join([n for n, _ in keys] + ["cv"])
+    return spark.sql(f"SELECT * FROM VALUES {vals} AS t({names})")
 
 
 def kmeans_assign(
@@ -574,8 +592,8 @@ def kmeans_assign(
     IVFPQ trainer runs too) collects the k updated mean vectors to the
     driver and embeds them as literals in the next round's argmin
     expression.  A round is ONE job: corpus scan → map-side argmin →
-    map-side partial decimal sums → one k-row exchange → collect; the
-    corpus moves zero times per round.
+    map-side partial decimal sums per (cluster, position) → one
+    k·d-row exchange → collect; the corpus moves zero times per round.
 
     Arithmetic is bit-identical to the joined SQL formulation the oracle
     states: sequential-fold squared distances, (d2, lowest-cid) argmin
@@ -596,7 +614,7 @@ def kmeans_assign(
     cents = sorted((int(r["vec_id"]), list(r["v"])) for r in seed)
     cents, _ = _lloyd_rounds(base, cents, iters, None, 0)
     # final assignment against the last updated centroids — a pure map
-    dc = F.expr(_least_assign_sql("v", cents))
+    dc = F.expr(_argmin_sql("v", cents))
     return base.select(
         "vec_id",
         dc["cid"].alias("cluster_id"),
@@ -633,64 +651,52 @@ def _lloyd_rounds(
     """The literal-centroid Lloyd loop over a (vec_id, v) frame: the
     full-space coarse family ``coarse`` ``[(cid, cv)]`` runs ``iters``
     rounds and the PQ families ``pqc`` ``{mi: [(cid, sub_cv)]}`` (one
-    per ``subdim``-wide subspace) run ``pq_iters`` rounds.  Every
-    family present in a round is evaluated MAP-SIDE in one pass — its
-    argmin against literal centroids (:func:`_least_assign_sql`) — and
-    their decimal partials are grouped under one (family, cid) key
-    (family -1 is coarse, 0..m-1 the subspaces), so a round is ONE
-    corpus-scan job and one collect whatever the family count.
+    per ``subdim``-wide subspace) run ``pq_iters`` rounds.  A round is
+    ONE corpus-scan job and one collect whatever the family count: each
+    row takes every present family's argmin against its literal
+    codebook (:func:`_argmin_sql`) and becomes one ``(fam, cid, off,
+    w)`` row per family (family -1 is coarse over positions 1..d, family
+    mi the subspace at offset mi·subdim), and the one exact-mean kernel
+    (:func:`_exact_means`) groups them by ``(fam, cid, pos)``.  Each
+    centroid's means are put back in position order from the collect.
 
     The groups are disjoint, so each family aggregates exactly the value
     multiset a loop of its own would: cast-decimal(28,10)-then-sum, s/n
     double division, (d2, lowest-cid) tie-break, IEEE round-trip of the
-    collected doubles.  NULL vectors are excluded from sums AND counts
-    (the exploded form's semantics).  Returns the final
-    ``(coarse, pqc)``."""
+    collected doubles.  A centroid no vector picks drops out.  Returns
+    the final ``(coarse, pqc)``."""
     dim = len(coarse[0][1]) if coarse else 0  # fixture dims vary
     for it in range(max(iters, pq_iters)):
         fams = []
         if it < iters:
-            fams.append((-1, "v", coarse))
+            fams.append((-1, "v", coarse, 0, dim))
         if it < pq_iters:
-            fams += [(mi, _sub_sql(mi, subdim), cc) for mi, cc in pqc.items()]
-        width = max(dim if it < iters else 0, subdim if it < pq_iters else 0)
-
-        def elem(i: int) -> str:
-            # family -1 reads position i of the full vector, family mi
-            # position mi·subdim+i up to subdim; beyond a family's width
-            # the CASE yields NULL, which the decimal sum skips
-            whens = []
-            if it < iters:
-                whens.append(f"WHEN fam = -1 THEN try_element_at(v, {i})")
-            if it < pq_iters and i <= subdim:
-                whens.append(
-                    "WHEN fam >= 0 THEN "
-                    f"try_element_at(v, CAST(fam * {subdim} + {i} AS INT))"
-                )
-            return f"CASE {' '.join(whens)} END"
-
+            fams += [
+                (mi, _sub_sql(mi, subdim), cc, mi * subdim, subdim)
+                for mi, cc in pqc.items()
+            ]
         entries = ",".join(
-            f"named_struct('fam', {fam}, 'cid', ({_least_assign_sql(vexpr, cc)}).cid)"
-            for fam, vexpr, cc in fams
+            f"named_struct('fam', {fam}, 'cid', {_argmin_sql(vexpr, cc)}.cid, "
+            f"'off', {off}, 'w', {w})"
+            for fam, vexpr, cc, off, w in fams
         )
-        rows = (
-            src.filter(F.col("v").isNotNull())
-            .select("v", F.expr(f"inline(array({entries}))"))
-            .groupBy("fam", "cid")
-            .agg(*_mean_aggs(elem, width))
-            .select("fam", "cid", _means_array(width).alias("cv"))
-            .collect()
-        )
-        nxt: dict = {fam: [] for fam, _, _ in fams}
+        rows = _exact_means(
+            src.select("v", F.expr(f"inline(array({entries}))")),
+            ["fam", "cid"],
+            "off",
+            "w",
+        ).collect()
+        means: dict = {fam: {} for fam, *_ in fams}
         for r in rows:
-            fam = int(r["fam"])
-            nxt[fam].append(
-                (int(r["cid"]), list(r["cv"])[: dim if fam == -1 else subdim])
-            )
+            means[r["fam"]].setdefault(r["cid"], {})[r["pos"]] = r["m"]
+        nxt = {
+            fam: sorted((cid, [pm[p] for p in sorted(pm)]) for cid, pm in cm.items())
+            for fam, cm in means.items()
+        }
         if it < iters:
-            coarse = sorted(nxt.pop(-1))
+            coarse = nxt.pop(-1)
         if it < pq_iters:
-            pqc = {mi: sorted(v) for mi, v in nxt.items()}
+            pqc = nxt
     return coarse, pqc
 
 
@@ -1199,10 +1205,10 @@ IVF_CELLS = 10  # coarse cells of the IVFPQ trainer
 
 def _pq_codes_arr_sql(cc: dict) -> str:
     """The PQ_M-long array of per-subspace argmin codes as ONE SQL string
-    — map-side against literal codebooks (:func:`_least_assign_sql`), the
+    — map-side against literal codebooks (:func:`_argmin_sql`), the
     joint PQ_M-subspace assignment with zero joins."""
     parts = ",".join(
-        f"({_least_assign_sql(_sub_sql(mi, PQ_SUBDIM), cc[mi])}).cid"
+        f"{_argmin_sql(_sub_sql(mi, PQ_SUBDIM), cc[mi])}.cid"
         for mi in range(PQ_M)
     )
     return f"array({parts})"
@@ -1223,19 +1229,25 @@ def ivfpq_train(
     ids and trained by :func:`_lloyd_rounds` over ONE persisted base
     after ONE seed collect.
 
-    Returns ``(cells, icents, codes, pqcents)`` — every part a lazy
-    projection or in-plan aggregation of that base, with the trained
-    centroids riding in the expressions as literals (no lineage to cut,
-    no eager checkpoint):
+    Returns ``(cells, icents, codes, pqcents)``.  The per-vector parts
+    are lazy projections of that base with the trained centroids riding
+    in the expressions as literals (no lineage to cut, no eager
+    checkpoint); the codebook parts are SQL-literal rows
+    (:func:`_codebook_df`), so writing the index is map-only:
 
     - ``cells`` (vec_id, cell): the final coarse argmin;
     - ``icents`` (cell, cv, cnrm): the cells' means under that
-      assignment (:func:`ivf_centroids`);
+      assignment;
     - ``codes`` (vec_id, m, code): the final per-subspace argmin — the
       compressed corpus, PQ_M·log2(PQ_K) bits per vector;
-    - ``pqcents`` (m, code, cv, cn2): sub-codebooks re-derived from the
-      final assignment by the same decimal-exact means, plus each
-      codeword's exact-fold squared norm.
+    - ``pqcents`` (m, code, cv, cn2): the sub-codebooks' means under
+      the final assignment, plus each codeword's exact-fold squared
+      norm.
+
+    Both means come from one more Lloyd round under the final
+    assignment, collected like every other round (raw: ONE fused round
+    for both; residual: ``icents`` are the cell means the residuals
+    subtract, and one more PQ round gives ``pqcents``).
 
     Regimes.  Raw (``residual=False``): the coarse and PQ families are
     independent, so they run FUSED — one corpus-scan job per round.
@@ -1245,8 +1257,8 @@ def ivfpq_train(
     and the residual becomes a map-side expression that the PQ rounds
     then run over through the same loop (their seeds are the residuals
     of the lowest ids).  ``iters=0`` is the PQ-only trainer
-    (:func:`knn_pq`): no coarse Lloyd round runs, and callers drop the
-    coarse parts.
+    (:func:`knn_pq`): no coarse Lloyd round runs, the coarse parts are
+    the unrefined seeds, and callers drop them.
 
     Raises ``ValueError`` when the corpus has no id below ``IVF_CELLS``
     or below ``PQ_K`` (an empty corpus included): there is nothing to
@@ -1290,33 +1302,32 @@ def ivfpq_train(
             "vec_id",
             F.expr(
                 f"zip_with(v, element_at(map({lookup}), "
-                f"({_least_assign_sql('v', coarse)}).cid), (a, b) -> a - b)"
+                f"{_argmin_sql('v', coarse)}.cid), (a, b) -> a - b)"
             ).alias("v"),
         )
         seed = src.filter(F.col("vec_id") < kcodes).collect()
         _, pqc = _lloyd_rounds(src, None, 0, pq_seeds(seed), PQ_ITERS, subdim)
+        _, pq_means = _lloyd_rounds(src, None, 0, pqc, 1, subdim)
     else:
         coarse, pqc = _lloyd_rounds(
             base, coarse, iters, pq_seeds(seed), PQ_ITERS, subdim
         )
-    cell = F.expr(f"({_least_assign_sql('v', coarse)}).cid").alias("cell")
-    cells = base.select("vec_id", cell)
-    icents = ivf_centroids(base.select("v", cell), "cell")
-    codes_arr = F.expr(_pq_codes_arr_sql(pqc))
-    codes = src.select("vec_id", F.posexplode(codes_arr).alias("m", "code"))
-    sums = (
-        src.filter(F.col("v").isNotNull())
-        .select("v", F.posexplode(codes_arr).alias("m", "code"))
-        .groupBy("m", "code")
-        .agg(
-            *_mean_aggs(
-                lambda i: f"try_element_at(v, CAST(m * {subdim} + {i} AS INT))",
-                subdim,
-            )
+        cell_means, pq_means = _lloyd_rounds(
+            base, coarse, 1 if iters else 0, pqc, 1, subdim
         )
+    cell = F.expr(f"{_argmin_sql('v', coarse)}.cid").alias("cell")
+    cells = base.select("vec_id", cell)
+    spark = base.sparkSession
+    icents = _codebook_df(spark, [("cell", "BIGINT")], cell_means).select(
+        "cell", "cv", norm(F.col("cv")).alias("cnrm")
     )
-    pqcents = sums.select(
-        "m", "code", _means_array(subdim).alias("cv")
+    codes = src.select(
+        "vec_id", F.posexplode(F.expr(_pq_codes_arr_sql(pqc))).alias("m", "code")
+    )
+    pqcents = _codebook_df(
+        spark,
+        [("m", "INT"), ("code", "BIGINT")],
+        [(mi, cid, cv) for mi, cc in sorted(pq_means.items()) for cid, cv in cc],
     ).select("m", "code", "cv", dot(F.col("cv"), F.col("cv")).alias("cn2"))
     return cells, icents, codes, pqcents
 

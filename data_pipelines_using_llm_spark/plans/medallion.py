@@ -19,6 +19,7 @@ from data_pipelines_using_llm_spark.functions.exact import exact_avg
 from data_pipelines_using_llm_spark.operators.cleaning import clean
 from data_pipelines_using_llm_spark.operators.quality import quality_report
 from data_pipelines_using_llm_spark.sinks.writers import write_table
+from data_pipelines_using_llm_spark.sources.tables import scan_parquet
 
 
 @dataclass
@@ -98,7 +99,7 @@ def run_medallion(
     result = PipelineResult(
         bronze_rows=bronze_back.count(),
         silver_rows=silver_back.count(),
-        gold_rows=spark.read.parquet(f"{out_dir}/gold").count(),
+        gold_rows=scan_parquet(spark.read, f"{out_dir}/gold").count(),
         quality=q,
         timings={k: round(v, 4) for k, v in timings.items()},
     )

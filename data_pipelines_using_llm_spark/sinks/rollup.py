@@ -38,6 +38,7 @@ from data_pipelines_using_llm_spark.sinks.writers import (
     _swap_in,
     write_table,
 )
+from data_pipelines_using_llm_spark.sources.tables import scan_parquet
 
 _LEDGER_DIR = "_applied_batches"
 
@@ -136,7 +137,7 @@ def incremental_rollup(
     delta = rollup_batch(batch, keys, sum_cols, typ)
     tmp = path.rstrip("/") + "__tmp_rollup"
     if _has_data_files(path):
-        state = merge_rollups(spark.read.parquet(path), delta, keys)
+        state = merge_rollups(scan_parquet(spark.read, path), delta, keys)
         write_table(state, tmp, mode="overwrite")
         _stage_ledger(path, tmp, batch_id)
         _swap_in(path, tmp)
@@ -156,7 +157,7 @@ def read_rollup(
     spark: SparkSession, path: str, sum_cols: list[str]
 ) -> DataFrame:
     """The finalized (sums-as-double + averages) view of the rollup."""
-    return finalize_rollup(spark.read.parquet(path), sum_cols)
+    return finalize_rollup(scan_parquet(spark.read, path), sum_cols)
 
 
 def incremental_join_view(

@@ -24,6 +24,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_pipelines_using_llm_spark.sources.tables import scan_parquet
+
 POINTER = "_LATEST"
 
 
@@ -110,7 +112,10 @@ def read_version(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
     """Read the live snapshot (default) or a retained historical one —
-    the ``VERSION AS OF`` analogue."""
+    the ``VERSION AS OF`` analogue.  :func:`versioned_write` never
+    partitions, so a snapshot is a flat directory of part files and its
+    footer schema is the table's: the read starts no schema-inference
+    job (``sources/tables.py::scan_parquet``)."""
     v = current_version(table_dir) if version is None else version
     if v is None:
         raise ValueError(f"no versioned table at {table_dir}")
@@ -120,7 +125,7 @@ def read_version(
         raise ValueError(
             f"version {v} not retained at {table_dir} (have {retained})"
         )
-    return spark.read.parquet(snap)
+    return scan_parquet(spark.read, snap)
 
 
 def diff_versions(

@@ -1,6 +1,11 @@
 """Simulate the driver: import __spark_entry__, smoke entry(), run every
-queries() entry at sf0.01, run oracle_sql() in DuckDB, compare count+cols+values."""
-import os, sys, hashlib, time
+queries() entry at sf0.01, run oracle_sql() in DuckDB, compare count+cols+values.
+
+Usage: python scripts/drive_contract.py [ROW_REGEX]
+With ROW_REGEX only the rows whose name it matches (re.search) run, so a
+change to one operator family can re-check its rows quickly; the default
+is every row, which is the full contract."""
+import os, re, sys, hashlib, time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import __spark_entry__ as E
@@ -32,8 +37,13 @@ def vhash(pdf):
 
 from data_pipelines_using_llm_spark.operators.caching import release_barriers
 
+pattern = re.compile(sys.argv[1] if len(sys.argv) > 1 else "")
+rows_run = sorted(n for n in qs if pattern.search(n))
+print(f"ROWS: {len(rows_run)} of {len(qs)} match {pattern.pattern!r}")
+
 fails = 0
-for name, fn in sorted(qs.items()):
+for name in rows_run:
+    fn = qs[name]
     spdf = fn(spark, sf).toPandas()
     release_barriers()
     if name not in osql:

@@ -4,6 +4,7 @@ covered by test_oracle.py; these assert the queries return real work)."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -1329,6 +1330,149 @@ def test_ivfpq_training_rejects_unseedable_corpus(spark, tmp_path, corpus):
             )
     with pytest.raises(ValueError, match="no seed vectors"):
         SIM.ivfpq_train(bad, "vec_id", "embedding")
+
+
+def _ref_d2(v, cv):
+    """Spark's ``aggregate(zip_with(v, cv, (x-y)²))``: a sequential double
+    fold, NULL when a length differs (zip_with pads) or an element is
+    NULL."""
+    if v is None or len(v) != len(cv) or None in v:
+        return None
+    acc = 0.0
+    for x, y in zip(v, cv):
+        acc += (x - y) * (x - y)
+    return acc
+
+
+def _ref_argmin(v, cents):
+    """(d2, lowest cid) with a NULL distance first — ``array_min``'s order."""
+    return min(
+        cents, key=lambda c: ((0, 0.0) if (d := _ref_d2(v, c[1])) is None else (1, d), c[0])
+    )[0]
+
+
+def _ref_means(members, off, width):
+    """Decimal reference of the exact-mean kernel: each element rounded
+    half-up to 10 places, summed exactly, then ``float(s) / n`` with ``n``
+    counting every member (a short vector or NULL element adds no term)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    out = []
+    for p in range(off, off + width):
+        xs = [v[p] for v in members if p < len(v) and v[p] is not None]
+        if not xs:
+            out.append(None)
+            continue
+        # Spark casts a double to DECIMAL from its shortest decimal string
+        s = sum(Decimal(repr(x)).quantize(Decimal("1e-10"), ROUND_HALF_UP) for x in xs)
+        out.append(float(s) / len(members))
+    return out
+
+
+def _kernel_corpus():
+    """64-d vectors with many significant digits around three centres,
+    plus one short vector, one vector with a NULL element and one NULL
+    vector."""
+    import random
+
+    rng = random.Random(7)
+    rows = []
+    for i in range(40):
+        c = (i % 3) * 5.0 - 5.0
+        rows.append((i, [c + rng.uniform(-1, 1) / 3.0 for _ in range(SIM.DIM)]))
+    rows.append((40, [rng.uniform(-1, 1) / 7.0 for _ in range(40)]))  # short
+    holed = [rng.uniform(-1, 1) / 7.0 for _ in range(SIM.DIM)]
+    holed[20] = None
+    rows.append((41, holed))
+    rows.append((42, None))
+    return rows
+
+
+def test_exact_mean_and_argmin_kernels_match_decimal_reference(spark):
+    """The literal argmin and the one exact-mean kernel, against a Python
+    ``decimal`` reference: one Lloyd round of the coarse family and the PQ
+    families (``_lloyd_rounds``), the lazy ``ivf_centroids``, and an exact
+    distance tie in ``kmeans_assign`` going to the lowest cid."""
+    from pyspark.sql.types import (
+        ArrayType, DoubleType, LongType, StructField, StructType,
+    )
+
+    schema = StructType([
+        StructField("vec_id", LongType()),
+        StructField("v", ArrayType(DoubleType())),
+    ])
+    rows = _kernel_corpus()
+    base = spark.createDataFrame(rows, schema)
+    live = [(i, v) for i, v in rows if v is not None]
+    sub = SIM.PQ_SUBDIM
+    coarse = [(i, v) for i, v in rows if i < 3]
+    pqc = {mi: [(i, v[mi * sub:(mi + 1) * sub]) for i, v in rows if i < 4] for mi in range(SIM.PQ_M)}
+
+    got_coarse, got_pq = SIM._lloyd_rounds(base, coarse, 1, pqc, 1, sub)
+
+    def ref(fam_cents, off, width, part):
+        groups: dict = {}
+        for _, v in live:
+            groups.setdefault(_ref_argmin(part(v), fam_cents), []).append(v)
+        return sorted((cid, _ref_means(m, off, width)) for cid, m in groups.items())
+
+    assert got_coarse == ref(coarse, 0, SIM.DIM, lambda v: v)
+    for mi in range(SIM.PQ_M):
+        off = mi * sub
+        assert got_pq[mi] == ref(pqc[mi], off, sub, lambda v, o=off: v[o:o + sub]), mi
+    # the short and the NULL-holding vector both met a NULL distance
+    assert _ref_argmin(rows[40][1], coarse) == _ref_argmin(rows[41][1], coarse) == 0
+
+    labelled = base.select("v", (F.col("vec_id") % 4).alias("cell"))
+    cents = {r["cell"]: r["cv"] for r in SIM.ivf_centroids(labelled, "cell").collect()}
+    want = {}
+    for i, v in live:
+        want.setdefault(i % 4, []).append(v)
+    assert cents == {c: _ref_means(m, 0, SIM.DIM) for c, m in want.items()}
+
+    tie = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [-1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.0, 3.0])],
+        "vec_id long, v array<double>",
+    )
+    got = {
+        r["vec_id"]: r["cluster_id"]
+        for r in SIM.kmeans_assign(tie, "vec_id", "v", k=2, iters=0).collect()
+    }
+    assert got == {0: 0, 1: 1, 2: 0, 3: 0}
+
+
+def test_ann_train_is_fixed_jobs_and_python_free(spark, tmp_path):
+    """Training an index runs a fixed number of Spark jobs, and its
+    codebooks are SQL-literal rows: their plans are a ``LocalTableScan``
+    (no RDD scan, no Python worker), so the artifact write is map-only."""
+    from data_pipelines_using_llm_spark.operators.caching import release_barriers
+    from data_pipelines_using_llm_spark.sources.tables import load_table
+    from data_pipelines_using_llm_spark.telemetry import measure
+
+    release_barriers()  # a base an earlier test left cached would skip its persist
+    counts = []
+    for i in range(2):
+        tdir = str(tmp_path / f"idx{i}")
+        _, c = measure(spark, lambda: SQ.ann_index_train(spark, SF_DIR, tdir))
+        release_barriers()
+        counts.append(c["jobs"])
+    # the seed collect over the spread, persisted base (3 jobs under AQE),
+    # three fused Lloyd rounds (2 each: the shuffle map stage, then the
+    # collect) and the map-only artifact write (1)
+    assert counts == [10, 10], counts
+
+    e = load_table(spark, SF_DIR, "embeddings")
+    for residual in (False, True):
+        _, icents, _, pqcents = SIM.ivfpq_train(e, "vec_id", "embedding", residual)
+        for part in (icents, pqcents):
+            plan = part._jdf.queryExecution().executedPlan().toString()
+            ops = {
+                re.sub(r"^[\s:+-]*(\*\(\d+\)\s*)?", "", line).split()[0]
+                for line in plan.splitlines()
+                if line.strip()
+            }
+            assert ops <= {"LocalTableScan", "Generate", "Project"}, plan
+        release_barriers()
 
 
 @pytest.mark.parametrize("residual", [False, True])

@@ -567,6 +567,33 @@ def test_versioned_write_time_travel_and_retention(spark, tmp_path):
     assert current_version(path) == 4
 
 
+def test_read_version_starts_no_job_and_keeps_inferred_schema(spark, tmp_path):
+    """A snapshot is a flat directory, so ``read_version`` takes its schema
+    from the parquet footers: building the read starts no Spark job, and
+    the schema (arrays, decimals, timestamps, nullability) is the one
+    ``spark.read.parquet`` infers."""
+    from data_pipelines_using_llm_spark.sinks.versioned import (
+        read_version,
+        versioned_write,
+    )
+    from data_pipelines_using_llm_spark.telemetry import measure
+
+    path = str(tmp_path / "vt")
+    df = spark.range(5).selectExpr(
+        "id",
+        "array(CAST(id AS DOUBLE), 0.5D) AS cv",
+        "CAST(id / 3 AS DECIMAL(28,10)) AS amount",
+        "CAST(id AS INT) AS m",
+        "TIMESTAMP'2025-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts",
+        "IF(id = 2, NULL, 'x') AS tag",
+    )
+    v = versioned_write(df, path)
+    back, c = measure(spark, lambda: read_version(spark, path))
+    assert c["jobs"] == 0
+    assert back.schema == spark.read.parquet(f"{path}/v={v}").schema
+    assert sorted(back.collect()) == sorted(df.collect())
+
+
 def test_diff_versions_change_feed(spark, tmp_path):
     """Change feed between snapshots: added/removed/changed keys between
     two retained versions come from one diff of immutable directories."""
