@@ -7,8 +7,8 @@ id — the canonical distributed PageRank step (same dataflow Pregel/GraphX
 lower to, declared here with DataFrame ops so Catalyst/AQE handle skew and
 partitioning).
 
-Determinism discipline: the default per-vertex fold is QUANTIZED
-fixed-point accumulation — each edge contribution ``c = r/deg`` (a
+Determinism discipline: the per-vertex fold is QUANTIZED fixed-point
+accumulation — each edge contribution ``c = r/deg`` (a
 double that is IEEE-identical in any engine) is quantized to
 ``floor(c * 2^50)`` and summed as int64.  Integer addition is exact and
 order-independent, so the fold is simultaneously (a) bit-deterministic
@@ -18,11 +18,8 @@ sort, no in-degree bound on task memory.  The ``2^-50`` quantization
 step costs ≤ ``in_degree * 2^-50`` absolute error per vertex per
 iteration (~1e-11 even at millions of in-edges) — far below any useful
 rank resolution, and the SAME value everywhere, so it is error in the
-metric, never disagreement between engines.  ``fold="plain"`` drops the
-quantization (pure double sum, order-dependent last-ulp noise;
-tested equivalent to ~1e-12); ``fold="sorted"`` is the legacy
-oracle path (``array_sort(collect_list(...))`` + ``aggregate``,
-matching ``array_agg(... ORDER BY src)`` + ``list_reduce`` SQL).
+metric, never disagreement between engines.  The dangling-mass leak
+scalar and the convergence probe use the same fixed-point sum.
 """
 
 from __future__ import annotations
@@ -34,7 +31,7 @@ from data_pipelines_using_llm_spark.operators.caching import barrier
 
 DAMPING = 0.85
 
-# Fixed-point quantum for fold="quantized": exactly representable as a
+# Fixed-point quantum of the rank fold: exactly representable as a
 # double (power of two), so c * QUANT_SCALE and s / QUANT_SCALE are
 # single IEEE operations with identical results in every engine.
 # Headroom: per-dst quantized sums are bounded by the total rank mass,
@@ -49,7 +46,6 @@ def pagerank(
     iters: int = 2,
     damping: float = DAMPING,
     dangling: str = "error",
-    fold: str = "quantized",
     salt: int | None = None,
 ) -> DataFrame:
     """``iters`` rounds of PageRank over directed ``edges``.
@@ -67,8 +63,8 @@ def pagerank(
     bounding per-task rows at out_degree/S.  Cost: an S× bigger
     vertex-side shuffle — pay it when the degree distribution demands
     it, skip it otherwise (default None keeps the 1× plan).  Results
-    are BIT-IDENTICAL either way under the default quantized fold
-    (order-free integer sums), which is what makes the knob safe to
+    are BIT-IDENTICAL either way under the quantized fold (order-free
+    integer sums), which is what makes the knob safe to
     flip per-corpus.
 
     Dangling vertices (out-degree 0, e.g. a pure sink) would silently
@@ -87,17 +83,10 @@ def pagerank(
       so the oracle could mirror it) and redistributed uniformly — the
       standard random-surfer completion; ranks again sum to ~1.
 
-    ``fold`` selects the contribution-sum strategy (module docstring):
-    ``"quantized"`` (default — deterministic AND map-side combinable),
-    ``"plain"`` (pure double sum), ``"sorted"`` (legacy per-dst sorted
-    array fold; in-degree bounds task memory — oracle use only).
-
     Returns (node, r) with ``r`` the raw rank (sums to ~1).
     """
     if dangling not in ("error", "redistribute"):
         raise ValueError(f"dangling must be error|redistribute: {dangling!r}")
-    if fold not in ("quantized", "plain", "sorted"):
-        raise ValueError(f"fold must be quantized|plain|sorted: {fold!r}")
     edges, deg, nodes, sinks, n_df = _pagerank_setup(
         edges, src_col, dst_col, dangling
     )
@@ -106,7 +95,7 @@ def pagerank(
     )
     for _ in range(iters):
         rank = _pagerank_round(
-            rank, edges, deg, nodes, sinks, n_df, damping, dangling, fold, salt
+            rank, edges, deg, nodes, sinks, n_df, damping, dangling, salt
         )
     return rank
 
@@ -157,7 +146,7 @@ def _pagerank_setup(edges, src_col, dst_col, dangling):
 
 
 def _pagerank_round(
-    rank, edges, deg, nodes, sinks, n_df, damping, dangling, fold, salt
+    rank, edges, deg, nodes, sinks, n_df, damping, dangling, salt
 ):
     """ONE damped PageRank round — the loop body shared verbatim by the
     fixed-``iters`` mode and :func:`pagerank_converged`.
@@ -187,64 +176,28 @@ def _pagerank_round(
         contrib = edges.join(rd, "src").select(
             "dst", "src", (F.col("r") / F.col("deg")).alias("c")
         )
-    if fold == "quantized":
-        # fixed-point fold: floor(c·2^50) is IEEE-identical in every
-        # engine, and int64 addition is exact & order-independent —
-        # deterministic AND a plain map-side-partial sum (no per-dst
-        # array).  sum ≤ 2^50 ≪ int64 max at any scale.
-        summed = contrib.groupBy("dst").agg(
-            (
-                F.sum(F.floor(F.col("c") * F.lit(QUANT_SCALE))).cast(
-                    "double"
-                )
-                / F.lit(QUANT_SCALE)
-            ).alias("s")
-        )
-    elif fold == "sorted":
-        # legacy oracle path: sorted fold, bit-identical to the
-        # unrolled SQL's array_agg(... ORDER BY src) + list_reduce
-        summed = contrib.groupBy("dst").agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("src", "c"))),
-                F.lit(0.0),
-                lambda acc, s: acc + s["c"],
-            ).alias("s")
-        )
-    else:
-        # plain map-side-partial double sum — PageRank tolerates
-        # last-ulp summation-order noise
-        summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
+    # fixed-point fold: floor(c·2^50) is IEEE-identical in every
+    # engine, and int64 addition is exact & order-independent —
+    # deterministic AND a plain map-side-partial sum (no per-dst
+    # array).  sum ≤ 2^50 ≪ int64 max at any scale.
+    summed = contrib.groupBy("dst").agg(
+        (
+            F.sum(F.floor(F.col("c") * F.lit(QUANT_SCALE))).cast("double")
+            / F.lit(QUANT_SCALE)
+        ).alias("s")
+    )
     if dangling == "redistribute":
-        sink_ranks = rank.join(sinks, "node", "left_semi")
-        if fold == "quantized":
-            # same fixed-point trick on the leak scalar: exact,
-            # order-independent, no collect_list over the sink set
-            leak = sink_ranks.agg(
-                (
-                    F.coalesce(
-                        F.sum(
-                            F.floor(F.col("r") * F.lit(QUANT_SCALE))
-                        ),
-                        F.lit(0),
-                    ).cast("double")
-                    / F.lit(QUANT_SCALE)
-                ).alias("leak")
-            )
-        elif fold == "sorted":
-            # legacy oracle path: the leak scalar is a SORTED fold
-            # over (node, r) — bit-identical to the oracle's
-            # array_agg(r ORDER BY node) + list_reduce
-            leak = sink_ranks.agg(
-                F.aggregate(
-                    F.array_sort(F.collect_list(F.struct("node", "r"))),
-                    F.lit(0.0),
-                    lambda acc, s: acc + s["r"],
-                ).alias("leak")
-            )
-        else:
-            leak = sink_ranks.agg(
-                F.coalesce(F.sum("r"), F.lit(0.0)).alias("leak")
-            )
+        # same fixed-point trick on the leak scalar: exact,
+        # order-independent, no collect_list over the sink set
+        leak = rank.join(sinks, "node", "left_semi").agg(
+            (
+                F.coalesce(
+                    F.sum(F.floor(F.col("r") * F.lit(QUANT_SCALE))),
+                    F.lit(0),
+                ).cast("double")
+                / F.lit(QUANT_SCALE)
+            ).alias("leak")
+        )
         rank = (
             nodes.join(
                 summed.withColumnRenamed("dst", "node"), "node", "left"
@@ -288,7 +241,6 @@ def pagerank_converged(
     max_rounds: int = 40,
     damping: float = DAMPING,
     dangling: str = "error",
-    fold: str = "quantized",
     salt: int | None = None,
     probe_every: int = 1,
 ) -> tuple[DataFrame, int]:
@@ -318,8 +270,8 @@ def pagerank_converged(
     (registry queries gated against a fixed-depth CTE oracle assert it,
     the trade_k_core_converged discipline).
 
-    Determinism of the EXIT, not just the ranks: under the default
-    quantized fold the ranks are bit-identical cross-engine, and the
+    Determinism of the EXIT, not just the ranks: under the quantized
+    fold the ranks are bit-identical cross-engine, and the
     delta probe is the same fixed-point trick — one exact
     order-independent int64 sum of ``floor(|Δr|·2^50)`` per round (a
     scalar control-plane probe, not data movement) — so the round count
@@ -343,8 +295,6 @@ def pagerank_converged(
     """
     if dangling not in ("error", "redistribute"):
         raise ValueError(f"dangling must be error|redistribute: {dangling!r}")
-    if fold not in ("quantized", "plain", "sorted"):
-        raise ValueError(f"fold must be quantized|plain|sorted: {fold!r}")
     if not 1 <= probe_every <= 4:
         raise ValueError(
             f"probe_every must be in 1..4 (it bounds how far past the "
@@ -370,8 +320,7 @@ def pagerank_converged(
     delta_q = None
     for rnd in range(1, max_rounds + 1):
         nxt = _pagerank_round(
-            rank, edges, deg, nodes, sinks, n_df, damping, dangling,
-            fold, salt,
+            rank, edges, deg, nodes, sinks, n_df, damping, dangling, salt,
         ).localCheckpoint(eager=True)
         if rnd % probe_every and rnd != max_rounds:
             rank = nxt  # unprobed round: lineage cut only, no delta action

@@ -35,6 +35,9 @@ only shuffles are the LSH-bucket equi-join and the per-query top-k window.
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1137,8 +1140,6 @@ def semantic_dedup(
     equi-join shuffles each vector once on its cell id; no all-pairs
     product exists in the plan.
     """
-    import math
-
     n_vecs = df.count()
     if k is None:
         k = max(1, math.ceil(n_vecs / target_cell_size))
@@ -1861,107 +1862,75 @@ def pq_residuals(
 PI_QUANTUM = float(1 << 30)  # order-free matrix-vector fold quantum
 
 
-def _power_iteration_raw(
-    cov: DataFrame,
-    i_col: str = "i",
-    j_col: str = "j",
-    val_col: str = "cov",
-    tol: float = 1e-6,
-    max_iters: int = 100,
-) -> DataFrame:
-    """Dominant eigenpair of a symmetric matrix by power iteration TO A
-    RESIDUAL-NORM FIXPOINT — the production mode the fixed-round registry
-    query (plans/similarity_queries.py::embedding_top_eigvec, PI_ITERS
-    unrolled so the oracle stays CTE-expressible) documents.
-
-    Input is the upper-triangular cell list (``i_col <= j_col``, one row
-    per cell) exactly as embedding_covariance emits; the matrix is
-    mirrored internally.  Returns (dim, loading, eigenvalue) with the
-    same quantized-fold arithmetic as the unrolled query (floor(x*2^30)
-    int64 sums — order-free, engine-deterministic), so after the same
-    number of rounds the two produce IDENTICAL vectors.
-
-    Convergence discipline (matches connected_components and k_core):
-    one scalar ``collect()`` per round reads ``max_d |v_t[d]-v_{t-1}[d]|``
-    — a control-plane probe over a d-row table, not data movement — and
-    the loop exits when it drops below ``tol``; the loud ``max_iters``
-    guard turns non-convergence (e.g. a tied dominant eigenvalue, where
-    power iteration oscillates in the tied subspace) into an error
-    instead of a silently unconverged vector.  Per-round
-    ``localCheckpoint`` on the d-row vector cuts the 2^rounds lineage
-    (the next round references v twice: the fold and the residual).
-
-    Scale: the corpus pass happens UPSTREAM (building ``cov``); here
-    every table is d or d² rows on one partition, so a hundred rounds
-    is control-plane latency, not cluster work.
-    """
-    q = PI_QUANTUM
-    cells = cov.select(
-        F.col(i_col).alias("i"), F.col(j_col).alias("j"),
-        F.col(val_col).cast("double").alias("c"),
-    ).coalesce(1)
-    full = cells.unionAll(
-        cells.filter(F.col("i") != F.col("j")).select(
-            F.col("j").alias("i"), F.col("i").alias("j"), "c"
+def round6(x: float) -> float:
+    """Spark's ``round(double, 6)``: BigDecimal.valueOf(x) (shortest-
+    round-trip decimal — ``repr`` in Python) setScale(6, HALF_UP),
+    back to a correctly-rounded double.  BigDecimal has no signed zero,
+    so a result of zero is +0.0 (mirrors the oracles' ``+ 0.0``)."""
+    r = float(
+        Decimal(repr(float(x))).quantize(
+            Decimal("0.000001"), rounding=ROUND_HALF_UP
         )
-    ).localCheckpoint(eager=True)
-    v = (
-        full.select(F.col("i").alias("d")).distinct()
-        .select("d", F.lit(1.0).alias("x"))
-        .localCheckpoint(eager=True)
     )
-    nn = None
-    delta = None  # stays None if max_iters <= 0 — the raise must not NameError
-    for _ in range(max_iters):
-        w = (
-            full.join(v.select(F.col("d").alias("j"), "x"), "j")
-            .groupBy("i")
-            .agg(
-                (
-                    F.sum(
-                        F.floor(F.col("c") * F.col("x") * F.lit(q)).cast(
-                            "long"
-                        )
-                    ).cast("double")
-                    / F.lit(q)
-                ).alias("w")
+    return 0.0 if r == 0.0 else r
+
+
+def _pi_rounds(
+    cells: list[tuple[int, int, float]], rounds: int, tol: float | None
+) -> tuple[dict, float]:
+    """The power-iteration kernel: w ← C·v, v ← w/sqrt(nn) from an
+    all-ones seed, over the upper-triangle cells ``(i, j, c)`` of a
+    symmetric matrix (mirrored here).  Returns (v: dim → x, nn), where
+    ``sqrt(nn)`` is the eigenvalue estimate ‖C·v‖ of the last round.
+
+    The d×d eigenproblem is control-plane work: the corpus pass happened
+    upstream (embedding_covariance reduces it to d(d+1)/2 cells), so the
+    rounds loop over cells, never over data rows.  Each operation
+    replicates the oracles' unrolled round CTEs: per-term
+    ``floor((c·x)·Q)`` (IEEE double multiply chain; math.floor == SQL
+    floor on long-range values), exact int sums (order-free), the
+    ``sum/Q`` double division, and ``w/sqrt(nn)`` with the
+    correctly-rounded sqrt both engines share — so after the same number
+    of rounds the vector is bit-identical to the oracle's.
+
+    ``tol=None`` runs exactly ``rounds`` rounds (the registry rows, whose
+    oracles unroll that depth).  Otherwise the loop exits at the first
+    round whose ``max_d |v_t[d] − v_{t−1}[d]|`` is below ``tol``, and
+    ``rounds`` rounds without that raise: a tied dominant |eigenvalue|
+    makes the iterate oscillate, and a silently unconverged vector is
+    worse than an error.  A C·v that folds to zero raises ``ValueError``
+    instead of dividing by zero."""
+    full: dict[int, list[tuple[int, float]]] = {}
+    for i, j, c in cells:
+        c = float(c)
+        full.setdefault(i, []).append((j, c))
+        if i != j:
+            full.setdefault(j, []).append((i, c))
+    q = PI_QUANTUM
+    v = {d: 1.0 for d in full}
+    nn, delta = 0.0, None
+    for _ in range(rounds):
+        w = {
+            i: sum(math.floor(c * v[j] * q) for j, c in nbr) / q
+            for i, nbr in full.items()
+        }
+        nn = sum(math.floor(x * x * q) for x in w.values()) / q
+        if nn == 0.0:
+            raise ValueError(
+                "power iteration: C·v folds to zero (an empty or all-zero "
+                "matrix, or an all-ones seed in its null space); there is "
+                "no dominant eigenvector to return"
             )
-        )
-        nn = w.agg(
-            (
-                F.sum(
-                    F.floor(F.col("w") * F.col("w") * F.lit(q)).cast("long")
-                ).cast("double")
-                / F.lit(q)
-            ).alias("nn")
-        )
-        v_new = (
-            w.crossJoin(F.broadcast(nn))
-            .select(
-                F.col("i").alias("d"),
-                (F.col("w") / F.sqrt(F.col("nn"))).alias("x"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        delta = (
-            v_new.join(
-                v.select(F.col("d").alias("d"), F.col("x").alias("x_prev")),
-                "d",
-            )
-            .agg(F.max(F.abs(F.col("x") - F.col("x_prev"))).alias("m"))
-            .collect()[0]["m"]
-        )
-        v = v_new
-        if delta is not None and delta < tol:
-            # UNROUNDED (d, x, nn-as-eigenvalue) — top_m_eigvecs deflates
-            # with these; the public wrapper rounds for reports.
-            return v.crossJoin(F.broadcast(nn)).select(
-                F.col("d").alias("dim"),
-                F.col("x").alias("loading"),
-                F.sqrt(F.col("nn")).alias("eigenvalue"),
-            )
+        rt = math.sqrt(nn)
+        nxt = {d: x / rt for d, x in w.items()}
+        delta = max(abs(nxt[d] - v[d]) for d in nxt)
+        v = nxt
+        if tol is not None and delta < tol:
+            return v, nn
+    if tol is None:
+        return v, nn
     raise RuntimeError(
-        f"power_iteration did not converge within max_iters={max_iters} "
+        f"power_iteration did not converge within max_iters={rounds} "
         f"(last residual {delta!r} >= tol={tol!r}); either a tied "
         "dominant |eigenvalue| (the iterate oscillates — deflate the "
         "tied subspace) or tol is below the fold-quantum noise floor "
@@ -1969,112 +1938,78 @@ def _power_iteration_raw(
     )
 
 
-def power_iteration(
-    cov: DataFrame,
-    i_col: str = "i",
-    j_col: str = "j",
-    val_col: str = "cov",
-    tol: float = 1e-6,
-    max_iters: int = 100,
-) -> DataFrame:
-    """Public report form of :func:`_power_iteration_raw` — identical
-    fixpoint arithmetic, loadings and eigenvalue rounded to 6 (the
-    registry output convention)."""
-    raw = _power_iteration_raw(cov, i_col, j_col, val_col, tol, max_iters)
-    return raw.select(
-        "dim",
-        F.round("loading", 6).alias("loading"),
-        F.round("eigenvalue", 6).alias("eigenvalue"),
-    )
+def eigenpairs(
+    cells: list[tuple[int, int, float]],
+    m: int,
+    rounds: int,
+    tol: float | None = None,
+) -> list[tuple[dict, float]]:
+    """The top-``m`` eigenpairs ``[(v, nn), ...]`` of the symmetric matrix
+    whose upper-triangle cells are ``cells``: :func:`_pi_rounds` for the
+    dominant pair, then HOTELLING DEFLATION ``c − sqrt(nn)·vᵢ·vⱼ`` on the
+    cells (the oracles' left-associated multiply chain, with the
+    UNROUNDED vector: rounding first would put ~1e-6·λ of rank-1 error
+    into every later component) and the kernel again on the remainder.
+    Deflation is symmetric, so subtracting on the i ≤ j cells is exact.
+
+    Rank-exhaustion pre-check: once deflation has removed every
+    component, the remainder's cells fall below the fold quantum
+    (|c·x| < 2^-30 for unit x) and the iterate is quantization noise; a
+    scalar max over the cells names that condition (``ValueError``)
+    before the kernel runs."""
+    pairs: list[tuple[dict, float]] = []
+    for comp in range(1, m + 1):
+        if pairs:
+            v, nn = pairs[-1]
+            rt = math.sqrt(nn)
+            cells = [(i, j, c - rt * v[i] * v[j]) for i, j, c in cells]
+        mx = max((abs(c) for _, _, c in cells), default=0.0)
+        if mx * PI_QUANTUM < 1.0:
+            raise ValueError(
+                f"power iteration: matrix rank exhausted at component "
+                f"{comp} (max |cell| {mx!r} is below the fold quantum); "
+                f"request m < {comp}"
+            )
+        pairs.append(_pi_rounds(cells, rounds, tol))
+    return pairs
+
+
+def eigen_rows(pairs: list[tuple[dict, float]]) -> list[tuple]:
+    """(component, dim, loading, eigenvalue) report rows of
+    :func:`eigenpairs`, loadings and eigenvalue ``sqrt(nn)`` rounded to
+    6 as Spark's ``round`` does (the registry output convention)."""
+    return [
+        (comp, d, round6(x), round6(math.sqrt(nn)))
+        for comp, (v, nn) in enumerate(pairs, 1)
+        for d, x in sorted(v.items())
+    ]
 
 
 def top_m_eigvecs(
-    cov: DataFrame,
-    m: int = 2,
-    i_col: str = "i",
-    j_col: str = "j",
-    val_col: str = "cov",
-    tol: float = 1e-6,
-    max_iters: int = 100,
+    cov: DataFrame, m: int = 2, tol: float = 1e-6, max_iters: int = 100
 ) -> DataFrame:
     """Top-``m`` eigenpairs of a symmetric matrix by residual-converged
-    power iteration + HOTELLING DEFLATION — the production fixpoint
-    counterpart of the unrolled registry query
-    (plans/similarity_queries.py::embedding_top2_eigvecs): after each
-    converged component (v, lambda), the matrix is replaced by
-    ``C <- C - lambda*v*v^T`` (one d^2-row join against the d-row
-    vector) and the iteration restarts, so component k+1 converges to
-    the dominant eigenpair of the deflated remainder.
-
-    Deflation uses the UNROUNDED converged vector (rounding first would
-    inject ~1e-6*lambda of rank-1 error into every later component).
-    Input/output contract matches power_iteration: upper-triangular
-    cells in, (component, dim, loading, eigenvalue) long-format out,
-    rounded to 6 for reporting.  Each deflated matrix is cut with
-    ``localCheckpoint`` — it is referenced 2 x rounds times by the next
-    component's iteration.
-
-    Scale: the corpus pass is upstream (building ``cov``); here every
-    step is d- or d^2-row control-plane work, so m components cost m
-    power-iteration runs of tiny jobs, never another corpus pass.
-    """
+    power iteration + Hotelling deflation (:func:`eigenpairs`), from its
+    upper-triangle ``(i, j, cov)`` cells as embedding_covariance emits
+    them.  The cells are collected once (d(d+1)/2 rows, bounded by the
+    embedding width at any corpus size); every round is driver-side
+    arithmetic.  Long-format (component, dim, loading, eigenvalue) out,
+    rounded to 6."""
     if m < 1:
         raise ValueError(f"top_m_eigvecs: m must be >= 1, got {m}")
-    cur = cov.select(
-        F.col(i_col).alias("i"),
-        F.col(j_col).alias("j"),
-        F.col(val_col).cast("double").alias("cov"),
-    ).coalesce(1)
-    outs = []
-    for comp in range(1, m + 1):
-        # Rank-exhaustion pre-check: once deflation has removed every
-        # component, the remainder's cells quantize to zero inside the
-        # fold (|c·x| < 2^-30 for unit x), w/sqrt(0) goes NaN, and the
-        # residual would never converge — the iteration would burn
-        # max_iters and raise the MISLEADING tied-eigenvalue error.
-        # One d²-row scalar probe names the real condition instead.
-        mx = cur.agg(F.max(F.abs(F.col("cov")))).first()[0]
-        if mx is None or mx * PI_QUANTUM < 1.0:
-            raise ValueError(
-                f"top_m_eigvecs: matrix rank exhausted at component "
-                f"{comp} (deflated max |cell| "
-                f"{0.0 if mx is None else mx!r} is below the fold "
-                f"quantum); request m < {comp}"
-            )
-        eig = _power_iteration_raw(
-            cur, "i", "j", "cov", tol, max_iters
-        ).localCheckpoint(eager=True)
-        outs.append(
-            eig.select(
-                F.lit(comp).cast("int").alias("component"),
-                "dim",
-                F.round("loading", 6).alias("loading"),
-                F.round("eigenvalue", 6).alias("eigenvalue"),
-            )
-        )
-        if comp == m:
-            break
-        vi = eig.select(
-            F.col("dim").alias("i"),
-            F.col("loading").alias("xi"),
-            F.col("eigenvalue").alias("lam"),
-        )
-        vj = eig.select(F.col("dim").alias("j"), F.col("loading").alias("xj"))
-        # upper-triangular representation is preserved: deflation is
-        # symmetric, so subtracting on the i<=j cells is exact.
-        cur = (
-            cur.join(vi, "i")
-            .join(vj, "j")
-            .select(
-                "i",
-                "j",
-                (
-                    F.col("cov") - F.col("lam") * F.col("xi") * F.col("xj")
-                ).alias("cov"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    cells = [
+        tuple(r)
+        for r in cov.select("i", "j", F.col("cov").cast("double")).collect()
+    ]
+    return cov.sparkSession.createDataFrame(
+        eigen_rows(eigenpairs(cells, m, max_iters, tol)),
+        "component int, dim int, loading double, eigenvalue double",
+    )
+
+
+def power_iteration(
+    cov: DataFrame, tol: float = 1e-6, max_iters: int = 100
+) -> DataFrame:
+    """Dominant eigenpair (dim, loading, eigenvalue) of a symmetric
+    matrix to the residual exit: :func:`top_m_eigvecs` with ``m=1``."""
+    return top_m_eigvecs(cov, 1, tol, max_iters).drop("component")

@@ -2236,144 +2236,59 @@ WITH {_COV_CTES}
 
 
 PI_ITERS = 3
-# One fold quantum for the whole PI family: the operator fixpoint
-# (operators/similarity.py) and these unrolled query forms promise
-# identical arithmetic per round — a drifting duplicate constant
-# would silently break that bit-identity.
+# The registry rows and their oracles share the operator's fold quantum
+# (operators/similarity.py::PI_QUANTUM): the rows run the driver-side
+# kernel, the oracles unroll the same rounds as CTEs, and a drifting
+# duplicate constant would silently break their bit-identity.
 PI_Q = SIM.PI_QUANTUM
+
+
+def _cov_cells_collected(spark: SparkSession, sf_dir: str) -> list[tuple]:
+    """ONE corpus-pass job collects the d(d+1)/2 upper-triangle
+    covariance cells (control-plane — bounded by embedding width at any
+    corpus size)."""
+    return [
+        tuple(r)
+        for r in embedding_covariance(spark, sf_dir)
+        .select("i", "j", "cov")
+        .collect()
+    ]
 
 
 def embedding_top_eigvec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominant principal component of the embedding corpus — the d×d
     covariance (one corpus pass, :func:`embedding_covariance`) followed
-    by ``PI_ITERS`` unrolled POWER-ITERATION rounds entirely in the
-    dataflow: w ← C·v, v ← w/‖w‖ from an all-ones seed.  The
-    "PCA without a driver-side eigensolver" pattern: after the corpus
-    collapses to d² cells, each round is a d²-row join + d-row
-    aggregation — free at any corpus size — and the output is the
-    top loading vector plus its eigenvalue (‖C·v‖ of the final round,
-    the power-iteration Rayleigh estimate).  The PRODUCTION fixpoint
-    mode is :func:`operators.similarity.power_iteration` (residual-norm
-    convergence exit + loud max_iters guard, same quantized folds —
-    tested against numpy's dominant eigenpair in
-    tests/test_statistics_props.py); this unrolled form stays at
-    ``PI_ITERS`` rounds so the oracle remains CTE-expressible.
+    by ``PI_ITERS`` POWER-ITERATION rounds on the driver
+    (:func:`operators.similarity.eigenpairs`): w ← C·v, v ← w/‖w‖ from
+    an all-ones seed.  After the corpus collapses to d(d+1)/2 cells the
+    eigenproblem is control-plane arithmetic, free at any corpus size;
+    the output is the top loading vector plus its eigenvalue (‖C·v‖ of
+    the final round, the power-iteration Rayleigh estimate).
+    :func:`operators.similarity.power_iteration` runs the same kernel to
+    a residual-norm exit (tested against numpy's dominant eigenpair in
+    tests/test_statistics_props.py); this row stays at ``PI_ITERS``
+    rounds so the oracle remains CTE-expressible.
 
     Determinism: every Σ_j C_ij·v_j fold and every norm fold quantizes
     to ``floor(x·2^30)`` int64 before summing (order-free, the
     PageRank-fold discipline — a 64-term double sum would differ in the
     last ulp between engines); normalization and the final rounding are
-    single double expressions over identical inputs.  The all-ones
+    single double expressions over identical inputs, so the vector is
+    bit-identical to the oracle's unrolled CTE stack.  The all-ones
     seed fixes the sign deterministically.
-
-    Scale: the only corpus-sized work is inside embedding_covariance
-    (map-side d² partials, persisted once); the iteration tables are d
-    and d² rows on ONE partition — the unpersisted 2^rounds lineage
-    blowup is deliberate here (trivial cached subtrees, one job)
-    where k-core needed per-round barriers (corpus-sized rounds).
     """
-    import math
-
-    # ONE corpus-pass job collects the d² upper-triangle cells
-    # (control-plane — bounded by embedding width at any corpus size);
-    # the PI rounds run driver-side with bit-identical arithmetic
-    # (:func:`_pi_rounds_py`).  r14: the previous unrolled in-dataflow
-    # stacks compiled ~100 AQE stage-jobs of d-row work (~2.8 s warm);
-    # this is one job + microseconds of Python (~1 s warm).
-    cells = [
-        (r["i"], r["j"], r["cov"])
-        for r in embedding_covariance(spark, sf_dir)
-        .select("i", "j", "cov")
-        .collect()
-    ]
-    v, nn = _pi_rounds_py(cells, PI_ITERS)
-    eig = _round6_java(math.sqrt(nn))
+    rows = SIM.eigen_rows(
+        SIM.eigenpairs(_cov_cells_collected(spark, sf_dir), 1, PI_ITERS)
+    )
     return spark.createDataFrame(
-        [(d, _round6_java(x), eig) for d, x in sorted(v.items())],
-        "dim int, loading double, eigenvalue double",
+        [r[1:] for r in rows], "dim int, loading double, eigenvalue double"
     )
-
-
-def _round6_java(x: float) -> float:
-    """Spark's ``round(double, 6)``: BigDecimal.valueOf(x) (shortest-
-    round-trip decimal — ``repr`` in Python) setScale(6, HALF_UP),
-    back to a correctly-rounded double.  BigDecimal has no signed zero,
-    so a result of zero is +0.0 (mirrors the oracles' ``+ 0.0``)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    r = float(
-        Decimal(repr(float(x))).quantize(
-            Decimal("0.000001"), rounding=ROUND_HALF_UP
-        )
-    )
-    return 0.0 if r == 0.0 else r
-
-
-def _pi_rounds_py(
-    cells: list[tuple[int, int, float]], iters: int
-) -> tuple[dict, float]:
-    """Driver-side mirror of the oracles' unrolled PI round CTEs
-    (:func:`_top2_stack_ctes`) over the upper-triangle cell list — the
-    d×d eigenproblem IS control-plane work (the
-    embedding_covariance docstring's production pattern: reduce the
-    corpus to d² accumulators once, eigendecompose d×d on the driver).
-    Each operation replicates the dataflow form exactly: per-term
-    ``floor((c·x)·Q)`` (IEEE double multiply chain, math.floor ==
-    F.floor on long-range values), exact int sums (order-free), the
-    ``sum/Q`` double division, and ``w/sqrt(nn)`` with the correctly-
-    rounded sqrt both engines share — so after the same number of
-    rounds the vector is bit-identical to the unrolled in-dataflow
-    stacks (and to the oracle CTEs).  Returns (v: dim→x, nn)."""
-    import math
-
-    full: dict[int, list[tuple[int, float]]] = {}
-    dims: set[int] = set()
-    for i, j, c in cells:
-        c = float(c)
-        dims.add(i)
-        dims.add(j)
-        full.setdefault(i, []).append((j, c))
-        if i != j:
-            full.setdefault(j, []).append((i, c))
-    q = float(PI_Q)
-    v = {d: 1.0 for d in dims}
-    nn = 0.0
-    for _ in range(iters):
-        w = {}
-        for i, nbr in full.items():
-            s = 0
-            for j, c in nbr:
-                s += math.floor(c * v[j] * q)
-            w[i] = s / q
-        s2 = 0
-        for wi in w.values():
-            s2 += math.floor(wi * wi * q)
-        nn = s2 / q
-        rt = math.sqrt(nn)
-        v = {d: wi / rt for d, wi in w.items()}
-    return v, nn
-
-
-def _top2_pair_py(cells: list[tuple[int, int, float]]):
-    """(v1, nn1, v2, nn2) driver-side: PI_ITERS rounds for the dominant
-    pair, one Hotelling deflation on the upper-triangle cells
-    (``cov − sqrt(nn1)·xᵢ·xⱼ``, the same left-associated multiply chain
-    as the dataflow form), PI_ITERS rounds on the remainder."""
-    import math
-
-    v1, nn1 = _pi_rounds_py(cells, PI_ITERS)
-    rt1 = math.sqrt(nn1)
-    deflated = [
-        (i, j, float(c) - rt1 * v1[i] * v1[j]) for i, j, c in cells
-    ]
-    v2, nn2 = _pi_rounds_py(deflated, PI_ITERS)
-    return v1, nn1, v2, nn2
 
 
 def embedding_top2_eigvecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-2 principal components via DEFLATION (r7 verdict task 7):
-    run the unrolled power iteration for the dominant eigenpair
-    (v₁, λ₁), subtract its rank-1 term from the cell table —
+    ``PI_ITERS`` power-iteration rounds for the dominant eigenpair
+    (v₁, λ₁), subtract its rank-1 term from the cells —
     ``C₂ = C − λ₁·v₁v₁ᵀ``, the Hotelling deflation / one Gram-Schmidt
     step against the found component — and iterate again on C₂ for
     (v₂, λ₂).  Together the two loading vectors are the projection basis
@@ -2385,41 +2300,24 @@ def embedding_top2_eigvecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: the deflated cell value is one multiply-chain over
     engine-identical inputs (``cov − sqrt(nn)·xᵢ·xⱼ``, left-associated
     in both engines), and both components' rounds use the same
-    quantized int64 discipline as :func:`embedding_top_eigvec` — now
-    evaluated driver-side over the collected d² cells
-    (:func:`_top2_pair_py`), bit-identical to the oracle's unrolled
-    CTE stacks.
+    quantized int64 discipline as :func:`embedding_top_eigvec` — the
+    one driver-side kernel (:func:`operators.similarity.eigenpairs`),
+    bit-identical to the oracle's unrolled CTE stacks.
 
     Scale: identical to embedding_top_eigvec — the corpus is touched
     once (embedding_covariance); the deflation and both components'
     rounds are d²-sized control-plane arithmetic.  Residual caveat,
     stated honestly: ``PI_ITERS`` rounds is a Rayleigh ESTIMATE, so the
     deflated matrix carries the estimate's error into component 2 (fine
-    for a report; production chains
-    :func:`operators.similarity.power_iteration` to convergence before
-    deflating — same arithmetic, residual-gated).
+    for a report; :func:`operators.similarity.top_m_eigvecs` runs each
+    component to the residual exit before deflating — same kernel).
     """
-    import math
-
-    # same driver-side discipline as embedding_top_eigvec: one corpus
-    # pass collects the d² cells, both components' rounds + the
-    # deflation run in Python with bit-identical arithmetic
-    cells = [
-        (r["i"], r["j"], r["cov"])
-        for r in embedding_covariance(spark, sf_dir)
-        .select("i", "j", "cov")
-        .collect()
-    ]
-    v1, nn1, v2, nn2 = _top2_pair_py(cells)
-    rows = [
-        (comp, d, _round6_java(x), _round6_java(math.sqrt(nn)))
-        for comp, v, nn in ((1, v1, nn1), (2, v2, nn2))
-        for d, x in sorted(v.items())
-    ]
     return spark.createDataFrame(
-        rows, "component int, dim int, loading double, eigenvalue double"
+        SIM.eigen_rows(
+            SIM.eigenpairs(_cov_cells_collected(spark, sf_dir), 2, PI_ITERS)
+        ),
+        "component int, dim int, loading double, eigenvalue double",
     )
-
 
 
 def _top_eigvec_oracle(iters: int = PI_ITERS) -> str:
@@ -2569,8 +2467,8 @@ def embedding_pca_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Project every embedding onto the top-2 principal components —
     the PCA compression/whitening map itself: per vector,
     ``pc_k = Σ_d (x_d − mean_d) · v_k[d]`` over the centered
-    coordinates, with the loadings from the same unrolled deflation
-    stacks as :func:`embedding_top2_eigvecs`.
+    coordinates, with the loadings from the same power iteration and
+    deflation as :func:`embedding_top2_eigvecs`.
 
     The 100 TB plan shape is the point here: the loadings and the d
     per-dimension means are COLLECTED to the driver (2·d + d scalars —
@@ -2609,7 +2507,7 @@ def _pca_project(e: DataFrame, means: dict, v: dict) -> DataFrame:
 
 def pca_basis_train(spark: SparkSession, sf_dir: str, table_dir: str) -> int:
     """TRAIN step of the PCA train/serve split (r8 task 6): run the
-    covariance pass + deflation stacks ONCE and persist the complete
+    covariance pass + power iteration and deflation ONCE and persist the complete
     basis — d means, 2·d loadings (6dp, the surfaced query output), 2
     eigenvalues — as a versioned artifact (sinks/versioned.py: snapshot
     + atomic pointer flip, the write-the-index-between-train-and-serve
@@ -2669,20 +2567,15 @@ def embedding_pca_projection_stored(
     (versioned artifact) → load → project, asserted hash-identical to
     the in-plan :func:`embedding_pca_projection` by sharing its ORACLE
     verbatim — if the persist/load round trip perturbed one bit of the
-    basis, the gate would catch it.  The artifact directory is
-    ephemeral here (the gate needs no durable state between runs); the
+    basis, the gate would catch it.  The artifact directory is a
+    :func:`scratch_dir` (the gate needs no durable state between runs;
+    the basis is collected before the scan is returned); the
     durable production shape is `pca_basis_train(..., permanent_dir)`
     once, then any number of `pca_basis_load` + `_pca_project` serves
     that never rerun the covariance pass."""
-    import shutil
-    import tempfile
-
-    tdir = tempfile.mkdtemp(prefix="pca_basis_")
-    try:
-        pca_basis_train(spark, sf_dir, tdir)
-        means, v, _lam = pca_basis_load(spark, tdir)
-    finally:
-        shutil.rmtree(tdir, ignore_errors=True)
+    tdir = scratch_dir("pca_basis_")
+    pca_basis_train(spark, sf_dir, tdir)
+    means, v, _lam = pca_basis_load(spark, tdir)
     return _pca_project(
         load_table(spark, sf_dir, "embeddings"), means, v
     )
@@ -2694,16 +2587,13 @@ def _pca_basis(spark: SparkSession, sf_dir: str):
 
     ONE corpus pass: the (i, j, sq, sqi, n) accumulators feed both the
     per-dimension means (diagonal rows) and the covariance cells the
-    power-iteration stacks run on.  Values textually match the oracle's
+    power-iteration kernel runs on.  Values textually match the oracle's
     means/cov CTEs and the surfaced (6dp-rounded) top-2 output — the
     basis IS the published query output, not a higher-precision twin."""
-    import math
-
     # ONE corpus-pass job collects the (i, j, sq, sqi, n) accumulators
     # (d(d+1)/2 rows — control-plane at any corpus size); means, the
-    # covariance cells, and both deflation stacks are then pure Python
-    # with bit-identical arithmetic (r14: previously the in-dataflow
-    # stacks plus per-component collects ran ~100 tiny AQE stage-jobs).
+    # covariance cells and both components are then driver-side
+    # arithmetic, bit-identical to the oracle's CTEs
     scale = float(COV_SCALE)
     acc = _cov_sums(spark, sf_dir).collect()
     # means: the diagonal accumulators, mirroring _cov_means textually
@@ -2717,22 +2607,18 @@ def _pca_basis(spark: SparkSession, sf_dir: str):
         (
             r["i"],
             r["j"],
-            _round6_java(
+            SIM.round6(
                 float(r["sq"]) / scale / float(r["n"])
                 - means[r["i"]] * means[r["j"]]
             ),
         )
         for r in acc
     ]
-    v1, nn1, v2, nn2 = _top2_pair_py(cells)
-    v = {
-        1: {d: _round6_java(x) for d, x in v1.items()},
-        2: {d: _round6_java(x) for d, x in v2.items()},
-    }
-    lam = {
-        1: _round6_java(math.sqrt(nn1)),
-        2: _round6_java(math.sqrt(nn2)),
-    }
+    v: dict = {1: {}, 2: {}}
+    lam: dict = {}
+    for comp, d, x, eig in SIM.eigen_rows(SIM.eigenpairs(cells, 2, PI_ITERS)):
+        v[comp][d] = x
+        lam[comp] = eig
     return means, v, lam
 
 
@@ -3147,7 +3033,8 @@ QUERIES = {
     "embedding_top_eigvec": QuerySpec(
         embedding_top_eigvec,
         _top_eigvec_oracle(),
-        "top principal component via unrolled in-dataflow power iteration",
+        "top principal component via fixed-round driver-side power "
+        "iteration over the collected covariance cells",
     ),
     "embedding_pca_projection": QuerySpec(
         embedding_pca_projection,
@@ -3179,6 +3066,6 @@ QUERIES = {
         embedding_top2_eigvecs,
         _top2_eigvecs_oracle(),
         "top-2 principal components via power iteration + rank-1 "
-        "Hotelling deflation, all in-dataflow",
+        "Hotelling deflation over the collected covariance cells",
     ),
 }

@@ -13,6 +13,7 @@ predicate pushdown and column pruning.
 
 from __future__ import annotations
 
+import json
 import os
 import re
 
@@ -43,10 +44,12 @@ def footer_schema(path: str) -> tuple[StructType, tuple[str, ...]]:
     flat directory of part files), read from every file's footer, and the
     names of its TIMESTAMP(NANOS) columns.
 
-    Timestamps come out as TIMESTAMP (LTZ): watermarks and the strict
-    ``unix_*`` functions reject TIMESTAMP_NTZ, and with the session
-    timezone pinned to UTC (session.py) the LTZ values equal the file's
-    naive micros.  INT96 columns (Spark's default ``outputTimestampType``)
+    A file Spark wrote carries Spark's own schema in its footer, and that
+    schema is used as written (so TIMESTAMP_NTZ stays NTZ).  In any other
+    file (the catalog files pyarrow and DuckDB write) timestamps come out
+    as TIMESTAMP (LTZ): watermarks and the strict ``unix_*`` functions
+    reject TIMESTAMP_NTZ, and with the session timezone pinned to UTC
+    (session.py) the LTZ values equal the file's naive micros.  INT96 columns (Spark's default ``outputTimestampType``)
     are reported in microseconds, as Spark reads them.  A NANOS column,
     which Spark's reader rejects as a timestamp, is declared ``LongType``
     and read as its raw nanoseconds.  One scan reads every file under one
@@ -76,8 +79,17 @@ def footer_schema(path: str) -> tuple[StructType, tuple[str, ...]]:
     return schema, nanos
 
 
+# The key under which Spark's parquet writer stores the row schema.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
 def _file_schema(path: str) -> tuple[StructType, tuple[str, ...]]:
     arrow = pq.ParquetFile(path, coerce_int96_timestamp_unit="us").schema_arrow
+    spark_schema = (arrow.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if spark_schema is not None:
+        # A file Spark wrote: its own schema is the one spark.read.parquet
+        # takes (TIMESTAMP_NTZ survives only there).  Spark writes no NANOS.
+        return StructType.fromJson(json.loads(spark_schema)), ()
     nanos = tuple(
         a.name for a in arrow if pa.types.is_timestamp(a.type) and a.type.unit == "ns"
     )

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from data_pipelines_using_llm_spark.sources.tables import scan_parquet
 
@@ -35,6 +36,19 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scan_parquet(spark.readStream, f"{sf_dir}/events.parquet")
 
 
+def run_available_now(writer: DataStreamWriter, name: str, timeout_sec: int) -> None:
+    """Start ``writer`` under ``Trigger.AvailableNow``, wait until the
+    stream has drained its input, and stop it.  A stream still running
+    after ``timeout_sec`` raises ``TimeoutError`` naming ``name``; the
+    query is stopped on every exit."""
+    query = writer.trigger(availableNow=True).start()
+    try:
+        if not query.awaitTermination(timeout_sec):
+            raise TimeoutError(f"streaming query {name} exceeded {timeout_sec}s")
+    finally:
+        query.stop()
+
+
 def run_to_table(
     sdf: DataFrame,
     spark: SparkSession,
@@ -44,19 +58,11 @@ def run_to_table(
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (AvailableNow) into a
     memory sink and return the materialized result as a batch DataFrame."""
-    query = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        sdf.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        name,
+        timeout_sec,
     )
-    try:
-        finished = query.awaitTermination(timeout_sec)
-        if not finished:
-            raise TimeoutError(f"streaming query {name} exceeded {timeout_sec}s")
-    finally:
-        query.stop()
     return spark.table(name)
 
 
@@ -89,18 +95,11 @@ def stream_silver_upsert(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         idempotent_upsert(spark, batch_df, silver_path, key=["event_id"])
 
-    query = (
-        sdf.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    run_available_now(
+        sdf.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint),
+        "stream_silver_upsert",
+        timeout_sec,
     )
-    try:
-        finished = query.awaitTermination(timeout_sec)
-        if not finished:
-            raise TimeoutError(f"stream_silver_upsert exceeded {timeout_sec}s")
-    finally:
-        query.stop()
 
 
 def stream_quarantine_route(
@@ -151,20 +150,11 @@ def stream_quarantine_route(
         finally:
             flagged.unpersist(blocking=False)
 
-    query = (
-        sdf.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    run_available_now(
+        sdf.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint),
+        "stream_quarantine_route",
+        timeout_sec,
     )
-    try:
-        finished = query.awaitTermination(timeout_sec)
-        if not finished:
-            raise TimeoutError(
-                f"stream_quarantine_route exceeded {timeout_sec}s"
-            )
-    finally:
-        query.stop()
 
 
 def stream_gold_rollup(
@@ -222,15 +212,8 @@ def stream_gold_rollup(
                 "checkpoint commit"
             )
 
-    query = (
-        sdf.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    run_available_now(
+        sdf.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint),
+        "stream_gold_rollup",
+        timeout_sec,
     )
-    try:
-        finished = query.awaitTermination(timeout_sec)
-        if not finished:
-            raise TimeoutError(f"stream_gold_rollup exceeded {timeout_sec}s")
-    finally:
-        query.stop()

@@ -24,7 +24,11 @@ from pyspark.sql.types import (
 from data_pipelines_using_llm_spark.plans.similarity_queries import _ivfpq_oracle
 from data_pipelines_using_llm_spark.registry import QuerySpec
 from data_pipelines_using_llm_spark.sources.tables import load_table, scan_parquet
-from data_pipelines_using_llm_spark.streaming.ingest import run_to_table, stream_events
+from data_pipelines_using_llm_spark.streaming.ingest import (
+    run_available_now,
+    run_to_table,
+    stream_events,
+)
 
 SESSION_GAP_MIN = 30
 
@@ -746,18 +750,11 @@ def run_stream_knn(
             labels, residual=residual,
         ).write.mode("append").parquet(out_dir)
 
-    query = (
-        sdf.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", chk)
-        .start()
+    run_available_now(
+        sdf.writeStream.foreachBatch(sink).option("checkpointLocation", chk),
+        "run_stream_knn",
+        timeout_s,
     )
-    try:
-        finished = query.awaitTermination(timeout_s)
-        if not finished:
-            raise TimeoutError(f"run_stream_knn exceeded {timeout_s}s")
-    finally:
-        query.stop()
 
 
 def stream_knn_serve(spark: SparkSession, sf_dir: str) -> DataFrame:

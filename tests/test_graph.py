@@ -239,26 +239,6 @@ def test_basket_triangles_pack_runs(spark):
     assert int(df["n_triangles"].sum()) % 3 == 0
 
 
-def test_pagerank_fold_modes_agree(spark):
-    """All three fold modes must agree to float-noise tolerance: the
-    default quantized fixed-point fold (deterministic + map-side
-    combinable), the plain double sum (pure production), and the legacy
-    sorted-array fold."""
-    spokes = [2, 3, 4, 5, 6, 7]
-    rows = [(1, s) for s in spokes] + [(s, 1) for s in spokes]
-    rows += [(2, 3), (3, 2), (4, 5), (5, 4)]
-    edges = spark.createDataFrame(rows, "src bigint, dst bigint")
-    a = {r["node"]: r["r"] for r in pagerank(edges, iters=3).collect()}
-    for mode in ("plain", "sorted"):
-        b = {
-            r["node"]: r["r"]
-            for r in pagerank(edges, iters=3, fold=mode).collect()
-        }
-        assert a.keys() == b.keys()
-        for n in a:
-            assert abs(a[n] - b[n]) < 1e-10, (mode, n)
-
-
 def test_revenue_holt_forecast_hand_computed(spark):
     """Holt recursion on a hand-checkable series: seeds (l=y2, b=y2-y1),
     then one smoothing step per remaining day, forecast = l + b."""

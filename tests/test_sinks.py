@@ -594,6 +594,31 @@ def test_read_version_starts_no_job_and_keeps_inferred_schema(spark, tmp_path):
     assert sorted(back.collect()) == sorted(df.collect())
 
 
+def test_read_version_keeps_timestamp_ntz(spark, tmp_path):
+    """A Spark-written TIMESTAMP_NTZ column round-trips through
+    ``versioned_write`` -> ``read_version`` as TIMESTAMP_NTZ: the footer
+    carries Spark's own schema, and the read takes it (the schema is the
+    one ``spark.read.parquet`` infers), not the LTZ mapping used for
+    files other writers made."""
+    from pyspark.sql.types import TimestampNTZType
+
+    from data_pipelines_using_llm_spark.sinks.versioned import (
+        read_version,
+        versioned_write,
+    )
+
+    path = str(tmp_path / "ntz")
+    df = spark.range(3).selectExpr(
+        "id",
+        "TIMESTAMP_NTZ'2025-01-01 10:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts",
+    )
+    v = versioned_write(df, path)
+    back = read_version(spark, path)
+    assert back.schema == spark.read.parquet(f"{path}/v={v}").schema
+    assert isinstance(back.schema["ts"].dataType, TimestampNTZType)
+    assert sorted(back.collect()) == sorted(df.collect())
+
+
 def test_diff_versions_change_feed(spark, tmp_path):
     """Change feed between snapshots: added/removed/changed keys between
     two retained versions come from one diff of immutable directories."""

@@ -311,3 +311,23 @@ def test_top_m_eigvecs_guards(spark):
         top_m_eigvecs(rank1, m=0)
     with pytest.raises(ValueError, match="rank exhausted"):
         top_m_eigvecs(rank1, m=2, max_iters=50)
+
+
+def test_power_iteration_degenerate_input_raises_value_error(spark):
+    """An all-zero matrix and an empty cell set have no dominant
+    eigenvector: ``power_iteration`` must name that with a ValueError
+    (never burn ``max_iters`` into the "did not converge" RuntimeError,
+    never divide by a zero norm)."""
+    import pytest
+
+    from data_pipelines_using_llm_spark.operators.similarity import (
+        power_iteration,
+    )
+
+    zero = spark.createDataFrame(
+        [(0, 0, 0.0), (0, 1, 0.0), (1, 1, 0.0)], "i int, j int, cov double"
+    )
+    empty = spark.createDataFrame([], "i int, j int, cov double")
+    for cov in (zero, empty):
+        with pytest.raises(ValueError, match="rank exhausted"):
+            power_iteration(cov, tol=1e-6, max_iters=20)
