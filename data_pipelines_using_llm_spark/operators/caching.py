@@ -7,12 +7,15 @@ block outlives the returned DataFrame, so long-lived sessions that run
 many queries (the bench loop, the correctness driver) would accumulate
 cached blocks and lean on LRU eviction.
 
-``barrier(df)`` persists and registers the intermediate;
-``release_barriers()`` unpersists everything registered so far.  Entry
+``barrier(df)`` persists and registers the intermediate; ``cut(df)``
+materializes it as an eager ``localCheckpoint``, whose plan is a scan of
+the stored blocks (a lineage cut for iterative loops).
+``release_barriers()`` frees everything registered so far.  Entry
 points that loop over queries (bench.py, scripts/drive_contract.py,
 tests) call ``release_barriers()`` after materializing each result; the
 blocks are non-blocking-unpersisted, so an already-running plan that
-still references one simply recomputes.
+still references one simply recomputes, while one that reads a freed
+cut fails (its blocks are the only copy).
 
 Artifacts written to disk live under one per-process session root,
 removed at interpreter exit:
@@ -37,6 +40,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 
 _TRACKED: list[DataFrame] = []
+_CUTS: list[DataFrame] = []
 _SCRATCH: list[str] = []
 # (applicationId, name) -> (input fingerprint, directory, built value)
 _ARTIFACTS: dict[tuple[str, str], tuple[tuple, str, Any]] = {}
@@ -49,14 +53,42 @@ def barrier(df: DataFrame) -> DataFrame:
     return df.persist()
 
 
+def cut(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` as an eager ``localCheckpoint`` and track it for
+    :func:`free_cut` or :func:`release_barriers`.  The result's plan is a
+    scan of the checkpointed blocks, whatever lineage ``df`` had."""
+    out = df.localCheckpoint(eager=True)
+    _CUTS.append(out)
+    return out
+
+
+def free_cut(df: DataFrame) -> None:
+    """Free the blocks of ``df``, a :func:`cut` that nothing will read
+    again.  ``DataFrame.unpersist`` does not reach them: they belong to
+    the checkpointed RDD under the plan's ``LogicalRDD`` leaf."""
+    _CUTS.remove(df)
+    _drop_blocks(df)
+
+
+def _drop_blocks(df: DataFrame) -> None:
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def release_barriers() -> int:
-    """Unpersist every tracked intermediate and remove every
-    :func:`scratch_dir`; returns how many intermediates were freed."""
+    """Unpersist every tracked intermediate, free every :func:`cut` and
+    remove every :func:`scratch_dir`; returns how many intermediates
+    were freed."""
     n = 0
     while _TRACKED:
         df = _TRACKED.pop()
         try:
             df.unpersist(blocking=False)
+            n += 1
+        except Exception:  # session already stopped — nothing to free
+            pass
+    while _CUTS:
+        try:
+            _drop_blocks(_CUTS.pop())
             n += 1
         except Exception:  # session already stopped — nothing to free
             pass

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from data_pipelines_using_llm_spark.operators.caching import barrier
+from data_pipelines_using_llm_spark.operators.caching import barrier, cut, free_cut
 from data_pipelines_using_llm_spark.operators.text import HASH_MOD, char_hash, tokens
 
 # Fixed MinHash family h_i(x) = (a_i * x + b_i) mod HASH_MOD — constants from
@@ -492,10 +492,12 @@ def connected_components(
     non-increasing, so ``sum(label)`` strictly decreases while anything
     still changes — one cheap agg per round detects convergence and exits
     early (near-dup clusters are tiny cliques/chains, so 2-3 real rounds).
-    Each round's labels are cut from their lineage with ``localCheckpoint``
-    — the new plan references the old labels TWICE (via neighbor_min and
-    via the left join), so without truncation the logical plan doubles per
-    round and Catalyst analysis is O(2^iters).
+    Each round's labels are a :func:`caching.cut` — the new plan
+    references the old labels TWICE (via neighbor_min and via the left
+    join), so without truncation the logical plan doubles per round and
+    Catalyst analysis is O(2^iters).  The superseded round's cut is
+    freed once the next one exists; the returned labels are the one cut
+    left, freed by ``release_barriers``.
     """
     und = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -505,11 +507,10 @@ def connected_components(
         .distinct()
         .persist()
     )
-    labels = (
+    labels = cut(
         und.select(F.col("a").alias("v"))
         .distinct()
         .select("v", F.col("v").alias("label"))
-        .localCheckpoint(eager=True)
     )
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
     converged = False
@@ -519,7 +520,7 @@ def connected_components(
             .groupBy("a")
             .agg(F.min("label").alias("nmin"))
         )
-        labels = (
+        nxt = cut(
             labels.join(neighbor_min, labels.v == neighbor_min.a, "left")
             .select(
                 "v",
@@ -527,8 +528,9 @@ def connected_components(
                     F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
                 ).alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
+        free_cut(labels)
+        labels = nxt
         new_sum = labels.agg(F.sum("label")).collect()[0][0]
         if new_sum == prev_sum:
             converged = True
@@ -536,6 +538,7 @@ def connected_components(
         prev_sum = new_sum
     und.unpersist()
     if not converged:
+        free_cut(labels)
         # The final round still changed labels, so a component with
         # diameter > iters may be split — that would flow into
         # dedup_survivors as silently-kept duplicates.  Fail loudly

@@ -1,4 +1,5 @@
-"""Iterative graph analytics on DataFrames — PageRank.
+"""Iterative graph analytics on DataFrames — PageRank, the k-core peel
+and triangle counts.
 
 The iterative shape on Spark mirrors operators/similarity.py::kmeans_assign:
 each round is one equi-join (rank x edges on src) + one keyed aggregation
@@ -27,7 +28,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_pipelines_using_llm_spark.operators.caching import barrier
+from data_pipelines_using_llm_spark.operators.caching import (
+    barrier,
+    cut,
+    free_cut,
+)
 
 DAMPING = 0.85
 
@@ -83,71 +88,84 @@ def pagerank(
       so the oracle could mirror it) and redistributed uniformly — the
       standard random-surfer completion; ranks again sum to ~1.
 
+    A NULL endpoint is not a vertex: either mode raises ``ValueError``.
+
     Returns (node, r) with ``r`` the raw rank (sums to ~1).
     """
-    if dangling not in ("error", "redistribute"):
-        raise ValueError(f"dangling must be error|redistribute: {dangling!r}")
-    edges, deg, nodes, sinks, n_df = _pagerank_setup(
-        edges, src_col, dst_col, dangling
-    )
-    rank = nodes.crossJoin(F.broadcast(n_df)).select(
-        "node", (F.lit(1.0) / F.col("n")).alias("r")
-    )
+    graph, rank = _pagerank_setup(edges, src_col, dst_col, dangling)
     for _ in range(iters):
-        rank = _pagerank_round(
-            rank, edges, deg, nodes, sinks, n_df, damping, dangling, salt
-        )
+        rank = _pagerank_round(rank, graph, damping, dangling, salt)
     return rank
 
 
+def _qsum(x):
+    """Fixed-point sum of the double column ``x``: ``floor(x·2^50)`` is
+    IEEE-identical in every engine, and int64 addition is exact and
+    order-independent — deterministic AND a plain map-side-partial sum
+    (no per-group array)."""
+    return F.sum(F.floor(x * F.lit(QUANT_SCALE)))
+
+
 def _pagerank_setup(edges, src_col, dst_col, dangling):
-    """Loop-invariant PageRank structure: the corpus-sized edge list is
-    persisted ONCE (the GraphX-style lineage cut — without the barrier
-    each round re-runs the distinct shuffle from scratch), and the
-    VERTEX-sized tables (deg, nodes) are cut with an eager
-    ``localCheckpoint`` (r14): they are referenced by every iteration
+    """Validation, loop-invariant structure and initial ranks, shared by
+    :func:`pagerank` and :func:`pagerank_converged`.
+
+    The corpus-sized edge list is persisted ONCE (the GraphX-style
+    lineage cut — without the barrier each round re-runs the distinct
+    shuffle from scratch), and the VERTEX-sized tables (deg, nodes) are
+    :func:`caching.cut` (r14): they are referenced by every iteration
     AND by the dangling probe / n scalar, and a persist only caches
     execution — the logical plan re-included their full derivation at
     every reference, compounding to a 218 KB / 407-Exchange physical
     plan for a 2-round PageRank (~2.9 s of driver analysis per run,
     plans/r14/supplier_pagerank_before.txt).  Checkpointing the |V|-row
-    tables truncates them to plan leaves at vertex-table cost (the same
-    trade k_core_with_rounds and pagerank_converged already make per
-    round); the edge list stays a persist, referenced linearly."""
+    tables truncates them to plan leaves at vertex-table cost; the edge
+    list stays a persist, referenced linearly.
+
+    One aggregate over the sink set counts the dangling vertices and
+    detects a NULL endpoint (a NULL lands in ``nodes`` and, matching no
+    ``deg`` key, in ``sinks``).  In error mode it is the dangling probe
+    the mode needs anyway; redistribute mode pays it as one extra job.
+
+    Returns ``((edges, deg, nodes, sinks, n_df), r0)``."""
+    if dangling not in ("error", "redistribute"):
+        raise ValueError(f"dangling must be error|redistribute: {dangling!r}")
     edges = barrier(
         edges.select(
             F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
         ).distinct()
     )
-    deg = (
-        edges.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
+    deg = cut(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
+    nodes = cut(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     sinks = nodes.join(
         deg.withColumnRenamed("src", "node"), "node", "left_anti"
     )
-    if dangling == "error":
-        n_dangling = sinks.count()
-        if n_dangling:
-            raise ValueError(
-                f"pagerank: {n_dangling} dangling vertex(es) (out-degree "
-                "0) would leak rank mass; add reverse edges or call with "
-                "dangling='redistribute'"
-            )
+    n_sinks, n_null = sinks.agg(
+        F.count(F.lit(1)), F.count(F.when(F.col("node").isNull(), 1))
+    ).collect()[0]
+    if n_null:
+        raise ValueError(
+            f"pagerank: {src_col}/{dst_col} hold a NULL endpoint; a NULL "
+            "is not a vertex — drop or fill those edges first"
+        )
+    if dangling == "error" and n_sinks:
+        raise ValueError(
+            f"pagerank: {n_sinks} dangling vertex(es) (out-degree "
+            "0) would leak rank mass; add reverse edges or call with "
+            "dangling='redistribute'"
+        )
     n_df = nodes.agg(F.count(F.lit(1)).alias("n"))
-    return edges, deg, nodes, sinks, n_df
+    r0 = nodes.crossJoin(F.broadcast(n_df)).select(
+        "node", (F.lit(1.0) / F.col("n")).alias("r")
+    )
+    return (edges, deg, nodes, sinks, n_df), r0
 
 
-def _pagerank_round(
-    rank, edges, deg, nodes, sinks, n_df, damping, dangling, salt
-):
+def _pagerank_round(rank, graph, damping, dangling, salt):
     """ONE damped PageRank round — the loop body shared verbatim by the
     fixed-``iters`` mode and :func:`pagerank_converged`.
 
@@ -159,78 +177,44 @@ def _pagerank_round(
     partition into chunks (tests/test_graph.py hub-skew fixture).
     The old edges⋈rank⋈deg chain pinned src partitioning across
     two joins, which vetoed the split exactly where it mattered."""
+    edges, deg, nodes, sinks, n_df = graph
     rd = rank.withColumnRenamed("node", "src").join(deg, "src")
+    keys = ["src"]
     if salt:
-        rd_s = rd.withColumn(
+        rd = rd.withColumn(
             "salt",
             F.explode(F.sequence(F.lit(0), F.lit(salt - 1))),
         )
-        e_s = edges.withColumn(
+        edges = edges.withColumn(
             "salt",
             F.pmod(F.xxhash64("dst"), F.lit(salt)).cast("int"),
         )
-        contrib = e_s.join(rd_s, ["src", "salt"]).select(
-            "dst", "src", (F.col("r") / F.col("deg")).alias("c")
-        )
-    else:
-        contrib = edges.join(rd, "src").select(
-            "dst", "src", (F.col("r") / F.col("deg")).alias("c")
-        )
-    # fixed-point fold: floor(c·2^50) is IEEE-identical in every
-    # engine, and int64 addition is exact & order-independent —
-    # deterministic AND a plain map-side-partial sum (no per-dst
-    # array).  sum ≤ 2^50 ≪ int64 max at any scale.
-    summed = contrib.groupBy("dst").agg(
-        (
-            F.sum(F.floor(F.col("c") * F.lit(QUANT_SCALE))).cast("double")
-            / F.lit(QUANT_SCALE)
-        ).alias("s")
+        keys = ["src", "salt"]
+    contrib = edges.join(rd, keys).select(
+        "dst", "src", (F.col("r") / F.col("deg")).alias("c")
     )
+    summed = contrib.groupBy("dst").agg(
+        (_qsum(F.col("c")).cast("double") / F.lit(QUANT_SCALE)).alias("s")
+    )
+    rank_in = nodes.join(
+        summed.withColumnRenamed("dst", "node"), "node", "left"
+    ).crossJoin(F.broadcast(n_df))
+    mass = F.coalesce("s", F.lit(0.0))
     if dangling == "redistribute":
-        # same fixed-point trick on the leak scalar: exact,
+        # the same fixed-point sum on the leak scalar: exact,
         # order-independent, no collect_list over the sink set
         leak = rank.join(sinks, "node", "left_semi").agg(
             (
-                F.coalesce(
-                    F.sum(F.floor(F.col("r") * F.lit(QUANT_SCALE))),
-                    F.lit(0),
-                ).cast("double")
+                F.coalesce(_qsum(F.col("r")), F.lit(0)).cast("double")
                 / F.lit(QUANT_SCALE)
             ).alias("leak")
         )
-        rank = (
-            nodes.join(
-                summed.withColumnRenamed("dst", "node"), "node", "left"
-            )
-            .crossJoin(F.broadcast(n_df))
-            .crossJoin(F.broadcast(leak))
-            .select(
-                "node",
-                (
-                    F.lit(1 - damping) / F.col("n")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("s", F.lit(0.0))
-                        + F.col("leak") / F.col("n")
-                    )
-                ).alias("r"),
-            )
-        )
-    else:
-        rank = (
-            nodes.join(
-                summed.withColumnRenamed("dst", "node"), "node", "left"
-            )
-            .crossJoin(F.broadcast(n_df))
-            .select(
-                "node",
-                (
-                    F.lit(1 - damping) / F.col("n")
-                    + F.lit(damping) * F.coalesce("s", F.lit(0.0))
-                ).alias("r"),
-            )
-        )
-    return rank
+        rank_in = rank_in.crossJoin(F.broadcast(leak))
+        mass = mass + F.col("leak") / F.col("n")
+    return rank_in.select(
+        "node",
+        (F.lit(1 - damping) / F.col("n") + F.lit(damping) * mass).alias("r"),
+    )
 
 
 def pagerank_converged(
@@ -253,8 +237,8 @@ def pagerank_converged(
     (checkpoint + probe) = ~34 driver-synchronous barriers to rank a
     25-node fixture): the L1 delta is evaluated only every
     ``probe_every``-th round (and at ``max_rounds``), so unprobed
-    rounds pay exactly one action — the per-round eager
-    ``localCheckpoint``, which MUST stay unconditional (measured both
+    rounds pay exactly one action — the per-round :func:`caching.cut`,
+    which MUST stay unconditional (measured both
     ways: plan depth >1 between cuts re-inflates analysis enough to
     cost more than the skipped probes save, and depth ~40 OOMs the
     driver outright).  The exit stays deterministic: the loop exits at
@@ -285,68 +269,49 @@ def pagerank_converged(
     driver heap dies long before the data does (measured: OOM at
     default heap near round ~40 on a 25-node fixture with per-round
     persist; the knn_ivfpq train-lineage lesson).  Each round is
-    therefore cut with an eager ``localCheckpoint`` — constant plan
-    depth, one materialization per round (the delta probe needs the
-    data anyway); a dropped round's blocks are reclaimed by Spark's
-    ContextCleaner once unreferenced.  The loop-invariant setup
-    barriers are released on BOTH exits (the k_core_with_rounds rule,
-    r9 ADVICE): the returned rank is its own checkpoint, so nothing
-    this call persisted outlives it.
+    therefore a :func:`caching.cut` — constant plan depth, one
+    materialization per round (the delta probe needs the data anyway) —
+    and the round it supersedes is freed as soon as it is no longer
+    read.  On BOTH exits the setup's persisted edge list and its cuts
+    are freed (the k_core_with_rounds rule, r9 ADVICE): the returned
+    rank is its own checkpoint, the only cut this call leaves behind.
     """
-    if dangling not in ("error", "redistribute"):
-        raise ValueError(f"dangling must be error|redistribute: {dangling!r}")
     if not 1 <= probe_every <= 4:
         raise ValueError(
             f"probe_every must be in 1..4 (it bounds how far past the "
             f"true fixpoint the exit can land): {probe_every}"
         )
-    edges, deg, nodes, sinks, n_df = _pagerank_setup(
-        edges, src_col, dst_col, dangling
-    )
-    # deg/nodes are localCheckpoint leaves since r14 (ContextCleaner
-    # reclaims them); only the persisted edge list needs releasing
-    setup_barriers = (edges,)
+    graph, r0 = _pagerank_setup(edges, src_col, dst_col, dangling)
+    edges, deg, nodes = graph[:3]
 
     def _release_setup() -> None:
-        for b in setup_barriers:
-            b.unpersist(blocking=False)
+        edges.unpersist(blocking=False)
+        free_cut(deg)
+        free_cut(nodes)
 
-    rank = (
-        nodes.crossJoin(F.broadcast(n_df))
-        .select("node", (F.lit(1.0) / F.col("n")).alias("r"))
-        .localCheckpoint(eager=True)
-    )
+    rank = cut(r0)
     tol_q = int(tol * QUANT_SCALE)
-    delta_q = None
     for rnd in range(1, max_rounds + 1):
-        nxt = _pagerank_round(
-            rank, edges, deg, nodes, sinks, n_df, damping, dangling, salt,
-        ).localCheckpoint(eager=True)
-        if rnd % probe_every and rnd != max_rounds:
-            rank = nxt  # unprobed round: lineage cut only, no delta action
-            continue
-        # exact L1 delta vs the previous round: int64 sum of
-        # floor(|Δr|·2^50) — order-free, so the convergence round is
-        # deterministic cross-engine; one scalar control-plane probe
-        # per probed round, not data movement
-        delta_q = nxt.join(
-            rank.select("node", F.col("r").alias("r_prev")), "node"
-        ).agg(
-            F.coalesce(
-                F.sum(
-                    F.floor(
-                        F.abs(F.col("r") - F.col("r_prev"))
-                        * F.lit(QUANT_SCALE)
-                    )
-                ),
-                F.lit(0),
-            ).alias("dq")
-        ).first()["dq"]
+        nxt = cut(_pagerank_round(rank, graph, damping, dangling, salt))
+        probed = rnd % probe_every == 0 or rnd == max_rounds
+        if probed:
+            # exact L1 delta vs the previous round: one order-free
+            # scalar control-plane probe per probed round, so the
+            # convergence round is deterministic cross-engine
+            delta_q = nxt.join(
+                rank.select("node", F.col("r").alias("r_prev")), "node"
+            ).agg(
+                F.coalesce(
+                    _qsum(F.abs(F.col("r") - F.col("r_prev"))), F.lit(0)
+                ).alias("dq")
+            ).first()["dq"]
+        free_cut(rank)
         rank = nxt
-        if delta_q <= tol_q:
+        if probed and delta_q <= tol_q:
             _release_setup()
             return rank, rnd
     _release_setup()
+    free_cut(rank)
     raise RuntimeError(
         f"pagerank_converged: L1 delta {delta_q / QUANT_SCALE:.3g} still "
         f"above tol={tol} after max_rounds={max_rounds} damped rounds; "
@@ -403,7 +368,7 @@ def k_core_with_rounds(
     Each round's plan is the unrolled query's plan verbatim: one
     map-side-combinable degree aggregation + two semi-joins.
 
-    Lineage discipline — eager ``localCheckpoint`` per round, NOT a
+    Lineage discipline — a :func:`caching.cut` per round, NOT a
     persist barrier (r10 measurement): each round references the
     previous edge list three times (degree + two semi-join probes), and
     persist only cuts EXECUTION — the logical plan still grows
@@ -412,27 +377,31 @@ def k_core_with_rounds(
     analysis alone, 30 s warm for a 25-node graph; the same defect
     class that OOMs pagerank_converged at depth ~40).  The checkpoint
     truncates the plan to a scan per round, its materialization doubles
-    as the probe's input, blocks are ContextCleaner-reclaimed once a
-    round's reference drops, and NOTHING this call persists outlives it
-    (r9 ADVICE — no stranded executor storage on either exit path).
+    as the probe's input, each superseded round's cut is freed as soon
+    as the next one exists, and NOTHING this call persists outlives it
+    (r9 ADVICE — no stranded executor storage on either exit path): the
+    returned core is the one cut left, freed by ``release_barriers``.
+
+    A NULL endpoint raises ``ValueError`` (the peel's semi-joins would
+    drop its edge silently); the initial edge count detects it.
     """
-    cur = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=True)
-    n_prev = cur.count()
-    for rnd in range(max_rounds):
-        keep = (
-            cur.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= k)
-            .select("src")
+    cur = cut(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    )
+    n_prev, n_null = cur.agg(
+        F.count(F.lit(1)),
+        F.count(F.when(F.col("src").isNull() | F.col("dst").isNull(), 1)),
+    ).collect()[0]
+    if n_null:
+        free_cut(cur)
+        raise ValueError(
+            f"k_core: {n_null} edge(s) with a NULL {src_col}/{dst_col} "
+            "endpoint; a NULL is not a vertex — drop or fill them first"
         )
-        nxt = (
-            cur.join(keep, "src", "left_semi")
-            .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
-            .select("src", "dst")
-        ).localCheckpoint(eager=True)
+    for rnd in range(max_rounds):
+        nxt = cut(_peel_round(cur, k))
         n = nxt.count()
+        free_cut(cur)
         cur = nxt
         if n == n_prev:
             return (
@@ -443,10 +412,31 @@ def k_core_with_rounds(
                 rnd,
             )
         n_prev = n
+    free_cut(cur)
     raise RuntimeError(
         f"k_core did not converge within max_rounds={max_rounds} (edge "
         "set still shrinking); raise `max_rounds` — rounds are "
         "early-exit, so a generous bound only costs work when needed"
+    )
+
+
+def _peel_round(cur: DataFrame, k: int) -> DataFrame:
+    """ONE k-core peel round over a symmetric (src, dst) edge list: keep
+    the edges whose endpoints both have degree >= k.  One
+    map-side-combinable degree aggregation plus two semi-joins; the
+    caller cuts lineage between rounds (:func:`k_core_with_rounds` with
+    a :func:`caching.cut`, plans/graph_queries.py::trade_k_core with a
+    persist barrier)."""
+    keep = (
+        cur.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .filter(F.col("deg") >= k)
+        .select("src")
+    )
+    return (
+        cur.join(keep, "src", "left_semi")
+        .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
+        .select("src", "dst")
     )
 
 

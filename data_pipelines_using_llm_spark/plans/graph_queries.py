@@ -1,20 +1,36 @@
-"""Graph-analytics query pack — PageRank over the customer↔supplier
-trade network.
+"""Graph-analytics query pack — PageRank, the k-core peel and a triangle
+census.
 
-Nodes are customers (even ids, ``2*custkey``) and suppliers (odd ids,
-``2*suppkey + 1``); an undirected edge links a customer to every supplier
-that shipped one of its orders (orders ⋈ lineitem, distinct pairs, both
-directions materialized so every vertex has out-degree >= 1).  Two
-damped iterations, unrolled into CTEs on the oracle side exactly like
-the k-means oracle (plans/similarity_queries.py::_kmeans_oracle).
+The trade graph links customers (even ids, ``2*custkey``) and suppliers
+(odd ids, ``2*suppkey + 1``): a customer to every supplier that shipped
+one of its orders (orders ⋈ lineitem, distinct pairs).  Two fixture
+graphs (a ring with chords, a clique with a tail) are built on the
+``nation`` table's 25 fixed keys, so their convergence depths are
+constants of the fixture.
+
+Each edge list is stated twice, side by side: as the DataFrame the
+engine runs on and as the DuckDB CTE named ``edges`` its oracle reads.
+Each iterative algorithm then has ONE oracle generator that unrolls the
+engine's rounds into CTEs over that edge CTE: :func:`_pagerank_oracle`
+for the three PageRank rows (operators/graph.py::pagerank, one
+``_pagerank_round`` per CTE pair) and :func:`_k_core_oracle` for the
+three k-core rows (one ``_peel_round`` per CTE pair).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipelines_using_llm_spark.operators.graph import DAMPING, pagerank
+from data_pipelines_using_llm_spark.operators.caching import barrier
+from data_pipelines_using_llm_spark.operators.graph import (
+    DAMPING,
+    _peel_round,
+    k_core_with_rounds,
+    pagerank,
+    pagerank_converged,
+    triangle_counts,
+)
 from data_pipelines_using_llm_spark.registry import QuerySpec
 from data_pipelines_using_llm_spark.sources.tables import load_table
 
@@ -24,13 +40,40 @@ PR_ITERS = 2
 # literal would be DECIMAL); must mirror operators/graph.py::QUANT_SCALE.
 QUANT_SQL = "1125899906842624e0"
 
+KCORE_K = 8
+KCORE_ROUNDS = 2
 
-def supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank centrality of every customer and supplier in the trade
-    graph, normalized so the graph-wide mean is 1.0."""
+CHAIN_K = 2
+CHAIN_CLIQUE_N = 5  # K5 core
+CHAIN_TAIL = 4  # 4-edge tail => 4 shrinking rounds at k=2
+
+RING_PR_TOL = 5e-3
+# r10 verdict task 3 (both remedies applied): the original single-chord
+# ring converged in 17 rounds — 34 driver barriers to rank a 25-node
+# fixture, ~6% of the whole headline bench.  The fixture now carries a
+# second chord family (i -> (6i+3) % 25, all nodes — affine with
+# multiplier 6 so 5i ≡ const has no solution: provably no self-loops,
+# no ring duplicates, and no collision with the first chord family in
+# its i < 12 range), which mixes fast enough to converge in ~6 damped
+# rounds, and the delta probe fires every 3rd round — exit lands at the
+# first PROBED round at-or-past the fixpoint: 6.  Deterministic (damped
+# PageRank contracts in L1), depth still > 1, oracle unrolls exactly
+# the exit depth.  Measured: 12.1 s (r10) -> 4.8 s warm.
+RING_PR_PROBE_EVERY = 3
+RING_PR_ROUNDS = 6  # probed exit depth at tol=5e-3; asserted below
+
+
+# ---------------------------------------------------------------- edges
+
+
+def _trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (``cnode``, ``snode``) trade pairs: a customer node and
+    a supplier node that shipped one of its orders."""
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_suppkey"
+    )
+    return (
         o.join(li, o["o_orderkey"] == li["l_orderkey"])
         .select(
             (F.col("o_custkey") * 2).alias("cnode"),
@@ -38,31 +81,182 @@ def supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    edges = pairs.select(
-        F.col("cnode").alias("src"), F.col("snode").alias("dst")
-    ).union(pairs.select(F.col("snode").alias("src"), F.col("cnode").alias("dst")))
-    pr = pagerank(edges, iters=PR_ITERS, damping=DAMPING)
-    n_df = pr.agg(F.count(F.lit(1)).alias("n"))
-    return pr.crossJoin(F.broadcast(n_df)).select(
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
+
+
+TRADE_PAIRS_SQL = """pairs AS (
+    SELECT DISTINCT o.o_custkey * 2 AS cnode, l.l_suppkey * 2 + 1 AS snode
+    FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+)"""
+
+
+def _both_ways(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """The symmetric (doubled) edge list of the undirected ``(a, b)``
+    pairs: both orientations, so degree(v) = count of ``src = v`` rows
+    and every vertex has out-degree >= 1."""
+    return pairs.select(F.col(a).alias("src"), F.col(b).alias("dst")).union(
+        pairs.select(F.col(b).alias("src"), F.col(a).alias("dst"))
+    )
+
+
+def _both_ways_sql(a: str, b: str) -> str:
+    return f"""edges AS (
+    SELECT {a} AS src, {b} AS dst FROM pairs
+    UNION ALL
+    SELECT {b} AS src, {a} AS dst FROM pairs
+)"""
+
+
+def _trade_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The customer↔supplier trade graph as a doubled (symmetric) edge
+    list, shared by supplier_pagerank, the k-core rows and the fixture
+    tests so the bipartite encoding has ONE definition."""
+    return _both_ways(_trade_pairs(spark, sf_dir), "cnode", "snode")
+
+
+TRADE_EDGES_SQL = TRADE_PAIRS_SQL + ",\n" + _both_ways_sql("cnode", "snode")
+# the directed money-flow graph: customer -> supplier only
+MONEY_FLOW_EDGES_SQL = (
+    TRADE_PAIRS_SQL + ",\nedges AS (SELECT cnode AS src, snode AS dst FROM pairs)"
+)
+
+
+def _nation_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``nation`` table's 25 fixed keys as BIGINT column ``a``."""
+    return load_table(spark, sf_dir, "nation").select(
+        F.col("n_nationkey").cast("bigint").alias("a")
+    )
+
+
+NATION_KEYS_SQL = "keys AS (SELECT CAST(n_nationkey AS BIGINT) AS a FROM nation)"
+
+
+def _ring_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic directed ring-with-chords graph over the 25 nation
+    keys: every node i has the ring edge i→(i+1)%25 (so out-degree ≥ 1
+    everywhere — no dangling mass) and the chord i→(6i+3)%25 (no
+    self-loops or ring duplicates anywhere — see RING_PR_ROUNDS), and
+    nodes 0..11 add a second chord i→(2i+5)%25, giving the non-uniform
+    degree profile a convergence test needs while mixing fast enough to
+    converge in ~6 damped rounds."""
+    n = _nation_keys(spark, sf_dir)
+    ring = n.select(
+        F.col("a").alias("src"), ((F.col("a") + 1) % 25).alias("dst")
+    )
+    chords = n.filter(F.col("a") < 12).select(
+        F.col("a").alias("src"), ((F.col("a") * 2 + 5) % 25).alias("dst")
+    )
+    chords2 = n.select(
+        F.col("a").alias("src"), ((F.col("a") * 6 + 3) % 25).alias("dst")
+    )
+    return ring.union(chords).union(chords2)
+
+
+RING_EDGES_SQL = NATION_KEYS_SQL + """,
+edges AS (
+    SELECT a AS src, (a + 1) % 25 AS dst FROM keys
+    UNION ALL
+    SELECT a AS src, (a * 2 + 5) % 25 AS dst FROM keys WHERE a < 12
+    UNION ALL
+    SELECT a AS src, (a * 6 + 3) % 25 AS dst FROM keys
+)"""
+
+_TAIL_LO = CHAIN_CLIQUE_N - 1
+
+
+def _chain_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic clique-plus-tail graph on the 25 nation keys: a K5
+    clique on nodes {0..4} with a 4-edge tail 4–5–6–7–8 hanging off it,
+    doubled to a symmetric list.  At k=2 the peel removes exactly ONE
+    tail vertex per round (degree-1 ends cascade), so the fixpoint needs
+    4 shrinking rounds — a multi-round convergence case the trade graph
+    (converges in round 1) cannot exercise under the hash gate."""
+    n = _nation_keys(spark, sf_dir)
+    clique = (
+        n.alias("x")
+        .join(n.alias("y"), F.col("x.a") < F.col("y.a"))
+        .filter(F.col("y.a") < CHAIN_CLIQUE_N)
+        .select(F.col("x.a").alias("src"), F.col("y.a").alias("dst"))
+    )
+    tail = n.filter(
+        (F.col("a") >= _TAIL_LO) & (F.col("a") < _TAIL_LO + CHAIN_TAIL)
+    ).select(F.col("a").alias("src"), (F.col("a") + 1).alias("dst"))
+    return _both_ways(clique.union(tail), "src", "dst")
+
+
+CHAIN_EDGES_SQL = NATION_KEYS_SQL + f""",
+pairs AS (
+    SELECT x.a AS src, y.a AS dst
+    FROM keys x JOIN keys y ON x.a < y.a
+    WHERE y.a < {CHAIN_CLIQUE_N}
+    UNION ALL
+    SELECT a AS src, a + 1 AS dst FROM keys
+    WHERE a >= {_TAIL_LO} AND a < {_TAIL_LO + CHAIN_TAIL}
+),
+""" + _both_ways_sql("src", "dst")
+
+
+# -------------------------------------------------------------- reports
+
+
+def _node_keys(col: str, decode: bool) -> list[Column]:
+    """The report's key columns for node id column ``col``: a trade-graph
+    id decodes to (``node_type``, ``node_key``), a fixture id is the
+    plain ``node_key``."""
+    if not decode:
+        return [F.col(col).alias("node_key")]
+    return [
+        F.when(F.col(col) % 2 == 0, F.lit("customer"))
         .otherwise(F.lit("supplier"))
         .alias("node_type"),
-        (F.col("node") / 2).cast("long").alias("node_key"),
+        (F.col(col) / 2).cast("long").alias("node_key"),
+    ]
+
+
+def _node_keys_sql(col: str, decode: bool) -> str:
+    if not decode:
+        return f"{col} AS node_key"
+    return (
+        f"CASE WHEN {col} % 2 = 0 THEN 'customer' ELSE 'supplier' END "
+        f"AS node_type,\n       CAST({col} // 2 AS BIGINT) AS node_key"
+    )
+
+
+def _rank_report(pr: DataFrame, decode: bool) -> DataFrame:
+    """Per-node rank normalized so the graph-wide mean is 1.0."""
+    n_df = pr.agg(F.count(F.lit(1)).alias("n"))
+    return pr.crossJoin(F.broadcast(n_df)).select(
+        *_node_keys("node", decode),
         F.round(F.col("r") * F.col("n"), 6).alias("pr_score"),
     )
 
 
-def _pagerank_oracle(iters: int = PR_ITERS, damping: float = DAMPING) -> str:
+def _core_report(edges: DataFrame, decode: bool = True) -> DataFrame:
+    """Surviving-core report shared by the k-core rows: per-vertex
+    in-core degree of a symmetric edge list."""
+    return (
+        edges.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("core_degree"))
+        .select(*_node_keys("src", decode), "core_degree")
+    )
+
+
+# -------------------------------------------------------------- oracles
+
+
+def _pagerank_oracle(
+    edges_cte: str, rounds: int, *, redistribute: bool = False,
+    decode: bool = True,
+) -> str:
+    """``rounds`` damped PageRank rounds over the ``edges`` CTE that
+    ``edges_cte`` defines, unrolled: ``c{it}`` is the operator's
+    quantized contribution fold (the int64 ``sum(floor(r/deg · 2^50))``)
+    and ``r{it}`` the damped update, MATERIALIZED so each round runs
+    once.  ``redistribute`` adds the sink set and a per-round ``leak{it}``
+    scalar (the same quantized sum of the previous round's rank over the
+    sinks) whose uniform share joins the update.  The report is
+    :func:`_rank_report`'s."""
     ctes = [
-        """pairs AS (
-    SELECT DISTINCT o.o_custkey * 2 AS cnode, l.l_suppkey * 2 + 1 AS snode
-    FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-)""",
-        """edges AS (
-    SELECT cnode AS src, snode AS dst FROM pairs
-    UNION ALL
-    SELECT snode AS src, cnode AS dst FROM pairs
-)""",
+        edges_cte,
         "deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src)",
         """nodes AS (
     SELECT DISTINCT src AS node FROM edges
@@ -72,34 +266,95 @@ def _pagerank_oracle(iters: int = PR_ITERS, damping: float = DAMPING) -> str:
         "nn AS (SELECT count(*) AS n FROM nodes)",
         "r0 AS (SELECT node, 1.0 / n AS r FROM nodes CROSS JOIN nn)",
     ]
-    prev = "r0"
-    for it in range(1, iters + 1):
+    if redistribute:
+        ctes.append(
+            "sinks AS (SELECT node FROM nodes "
+            "WHERE node NOT IN (SELECT src FROM edges))"
+        )
+    for it in range(1, rounds + 1):
         ctes.append(
             f"""c{it} AS (
     SELECT e.dst AS node,
            CAST(sum(CAST(floor(r.r / d.deg * {QUANT_SQL}) AS BIGINT))
                 AS DOUBLE) / {QUANT_SQL} AS s
     FROM edges e
-    JOIN {prev} r ON r.node = e.src
+    JOIN r{it - 1} r ON r.node = e.src
     JOIN deg d ON d.src = e.src
     GROUP BY e.dst
 )"""
         )
+        mass, leak = "coalesce(c.s, 0.0)", ""
+        if redistribute:
+            ctes.append(
+                f"""leak{it} AS (
+    SELECT coalesce(CAST(sum(CAST(floor(r.r * {QUANT_SQL}) AS BIGINT))
+               AS DOUBLE), 0.0) / {QUANT_SQL} AS leak
+    FROM r{it - 1} r JOIN sinks s ON s.node = r.node
+)"""
+            )
+            mass += " + lk.leak / nn.n"
+            leak = f" CROSS JOIN leak{it} lk"
         ctes.append(
-            f"""r{it} AS (
-    SELECT nd.node, {1 - damping!r} / nn.n + {damping!r} * coalesce(c.s, 0.0) AS r
-    FROM nodes nd CROSS JOIN nn LEFT JOIN c{it} c ON c.node = nd.node
+            f"""r{it} AS MATERIALIZED (
+    SELECT nd.node, {1 - DAMPING!r} / nn.n + {DAMPING!r} * ({mass}) AS r
+    FROM nodes nd CROSS JOIN nn{leak}
+    LEFT JOIN c{it} c ON c.node = nd.node
 )"""
         )
-        prev = f"r{it}"
     joined = ",\n".join(ctes)
     return f"""
 WITH {joined}
-SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type,
-       CAST(node // 2 AS BIGINT) AS node_key,
+SELECT {_node_keys_sql("node", decode)},
        round(r * nn.n, 6) AS pr_score
-FROM {prev} CROSS JOIN nn
+FROM r{rounds} CROSS JOIN nn
 """
+
+
+def _k_core_oracle(
+    edges_cte: str, k: int, rounds: int, decode: bool = True
+) -> str:
+    """``rounds`` peel rounds at ``k`` over the symmetric ``edges`` CTE
+    that ``edges_cte`` defines, unrolled: ``k{r}`` keeps the vertices of
+    degree >= k, ``e{r+1}`` the edges whose endpoints both survive (the
+    operator's ``_peel_round``).  The report is :func:`_core_report`'s."""
+    ctes = [edges_cte]
+    prev = "edges"
+    for r in range(rounds):
+        ctes.append(
+            f"""k{r} AS (
+    SELECT src FROM {prev} GROUP BY src HAVING count(*) >= {k}
+),
+e{r + 1} AS (
+    SELECT src, dst FROM {prev}
+    WHERE src IN (SELECT src FROM k{r})
+      AND dst IN (SELECT src FROM k{r})
+)"""
+        )
+        prev = f"e{r + 1}"
+    joined = ",\n".join(ctes)
+    return f"""
+WITH {joined}
+SELECT {_node_keys_sql("src", decode)},
+       count(*) AS core_degree
+FROM {prev}
+GROUP BY src
+"""
+
+
+def _ring_pagerank_oracle(rounds: int = RING_PR_ROUNDS) -> str:
+    return _pagerank_oracle(RING_EDGES_SQL, rounds, decode=False)
+
+
+# -------------------------------------------------------------- queries
+
+
+def supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PageRank centrality of every customer and supplier in the trade
+    graph, normalized so the graph-wide mean is 1.0."""
+    pr = pagerank(
+        _trade_graph_edges(spark, sf_dir), iters=PR_ITERS, damping=DAMPING
+    )
+    return _rank_report(pr, decode=True)
 
 
 def money_flow_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -117,90 +372,48 @@ def money_flow_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed aggregation per round, loop-invariant graph behind a barrier;
     the leak is a one-row broadcast.
     """
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
+    pr = pagerank(
+        _trade_pairs(spark, sf_dir),
+        "cnode",
+        "snode",
+        iters=PR_ITERS,
+        damping=DAMPING,
+        dangling="redistribute",
     )
-    pr = pagerank(edges, iters=PR_ITERS, damping=DAMPING, dangling="redistribute")
-    n_df = pr.agg(F.count(F.lit(1)).alias("n"))
-    return pr.crossJoin(F.broadcast(n_df)).select(
-        F.when(F.col("node") % 2 == 0, F.lit("customer"))
-        .otherwise(F.lit("supplier"))
-        .alias("node_type"),
-        (F.col("node") / 2).cast("long").alias("node_key"),
-        F.round(F.col("r") * F.col("n"), 6).alias("pr_score"),
-    )
+    return _rank_report(pr, decode=True)
 
 
-def _pagerank_redistribute_oracle(
-    iters: int = PR_ITERS, damping: float = DAMPING
-) -> str:
-    """Unrolled redistribute-mode oracle: each round adds a ``leak{it}``
-    scalar CTE (fixed-point quantized sum of the previous round's rank
-    over the sink set — mirroring the operator's
-    ``sum(floor(r * 2^50))`` int64 fold) whose uniform share joins the
-    damped update."""
-    ctes = [
-        """edges AS (
-    SELECT DISTINCT o.o_custkey * 2 AS src, l.l_suppkey * 2 + 1 AS dst
-    FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-)""",
-        "deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src)",
-        """nodes AS (
-    SELECT DISTINCT src AS node FROM edges
-    UNION
-    SELECT DISTINCT dst AS node FROM edges
-)""",
-        """sinks AS (
-    SELECT node FROM nodes WHERE node NOT IN (SELECT src FROM edges)
-)""",
-        "nn AS (SELECT count(*) AS n FROM nodes)",
-        "r0 AS (SELECT node, 1.0 / n AS r FROM nodes CROSS JOIN nn)",
-    ]
-    prev = "r0"
-    for it in range(1, iters + 1):
-        ctes.append(
-            f"""c{it} AS (
-    SELECT e.dst AS node,
-           CAST(sum(CAST(floor(r.r / d.deg * {QUANT_SQL}) AS BIGINT))
-                AS DOUBLE) / {QUANT_SQL} AS s
-    FROM edges e
-    JOIN {prev} r ON r.node = e.src
-    JOIN deg d ON d.src = e.src
-    GROUP BY e.dst
-)"""
+def ring_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PageRank run to CONVERGENCE (L1 delta ≤ 5e-3, quantized-exact
+    probe) on the ring-with-chords fixture graph — the registry row
+    that puts the production convergence-exit mode
+    (:func:`operators.graph.pagerank_converged`) under the cross-engine
+    hash gate, the trade_k_core_converged discipline: the probed exit
+    depth (6 damped rounds at ``probe_every=3`` — far past the
+    fixed-``iters`` queries' 2) is ASSERTED, so the fixture cannot
+    silently degenerate, and the oracle unrolls exactly that many
+    rounds.  The r10 verdict's gate-overhead item is closed from both
+    ends: the denser fixture converges in 6 rounds instead of 17, and
+    the delta probe fires every 3rd round — 8 driver barriers (6
+    per-round lineage cuts + 2 probes; the cuts stay unconditional —
+    measured: letting plan depth grow between probes costs more than
+    it saves) vs the original 34, 12.1 → 4.8 s warm.  Output: per-node
+    rank normalized to graph-mean 1.0, like supplier_pagerank."""
+    pr, rounds = pagerank_converged(
+        _ring_graph_edges(spark, sf_dir),
+        tol=RING_PR_TOL,
+        max_rounds=40,
+        damping=DAMPING,
+        probe_every=RING_PR_PROBE_EVERY,
+    )
+    if rounds != RING_PR_ROUNDS:
+        raise RuntimeError(
+            f"ring_pagerank_converged: PageRank converged in {rounds} "
+            f"rounds but the unrolled oracle is pinned at {RING_PR_ROUNDS} "
+            "— the fixture graph or tolerance changed; re-measure and "
+            "regenerate _ring_pagerank_oracle at the new depth"
         )
-        ctes.append(
-            f"""leak{it} AS (
-    SELECT coalesce(CAST(sum(CAST(floor(r.r * {QUANT_SQL}) AS BIGINT))
-               AS DOUBLE), 0.0) / {QUANT_SQL} AS leak
-    FROM {prev} r JOIN sinks s ON s.node = r.node
-)"""
-        )
-        ctes.append(
-            f"""r{it} AS (
-    SELECT nd.node,
-           {1 - damping!r} / nn.n
-           + {damping!r} * (coalesce(c.s, 0.0) + lk.leak / nn.n) AS r
-    FROM nodes nd CROSS JOIN nn CROSS JOIN leak{it} lk
-    LEFT JOIN c{it} c ON c.node = nd.node
-)"""
-        )
-        prev = f"r{it}"
-    joined = ",\n".join(ctes)
-    return f"""
-WITH {joined}
-SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type,
-       CAST(node // 2 AS BIGINT) AS node_key,
-       round(r * nn.n, 6) AS pr_score
-FROM {prev} CROSS JOIN nn
-"""
+    return _rank_report(pr, decode=False)
 
 
 def basket_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -225,8 +438,6 @@ def basket_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     orientation is a physical optimization whose output is provably
     orientation-invariant.
     """
-    from data_pipelines_using_llm_spark.operators.graph import triangle_counts
-
     arr = (
         load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
@@ -269,50 +480,6 @@ GROUP BY part_id
 """
 
 
-KCORE_K = 8
-KCORE_ROUNDS = 2
-
-
-def _trade_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The customer↔supplier trade graph as a doubled (symmetric) edge
-    list — customers on even ids (2·custkey), suppliers on odd
-    (2·suppkey+1) — shared by trade_k_core, trade_k_core_converged, and
-    the fixture tests so the bipartite encoding has ONE definition."""
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    pairs = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("cnode"),
-            (F.col("l_suppkey") * 2 + 1).alias("snode"),
-        )
-        .distinct()
-    )
-    return pairs.select(
-        F.col("cnode").alias("src"), F.col("snode").alias("dst")
-    ).union(
-        pairs.select(F.col("snode").alias("src"), F.col("cnode").alias("dst"))
-    )
-
-
-def _core_report(edges: DataFrame) -> DataFrame:
-    """Surviving-core report shared by both k-core queries: per-vertex
-    in-core degree with the node id decoded back to (type, key)."""
-    return (
-        edges.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
-        .select(
-            F.when(F.col("src") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier"))
-            .alias("node_type"),
-            (F.col("src") / 2).cast("long").alias("node_key"),
-            "core_degree",
-        )
-    )
-
-
 def trade_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core decomposition of the customer↔supplier trade graph
     (``KCORE_ROUNDS`` unrolled peeling rounds at k=``KCORE_K``; the peel
@@ -339,23 +506,9 @@ def trade_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut pagerank() applies per iteration).
     Output is the surviving vertex set with its in-core degree.
     """
-    from data_pipelines_using_llm_spark.operators.caching import barrier
-
     edges = barrier(_trade_graph_edges(spark, sf_dir))
     for _ in range(KCORE_ROUNDS):
-        keep = (
-            edges.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= KCORE_K)
-            .select("src")
-        )
-        edges = barrier(
-            edges.join(keep, "src", "left_semi")
-            .join(
-                keep.select(F.col("src").alias("dst")), "dst", "left_semi"
-            )
-            .select("src", "dst")
-        )
+        edges = barrier(_peel_round(edges, KCORE_K))
     return _core_report(edges)
 
 
@@ -372,10 +525,6 @@ def trade_k_core_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence-exit mode lands on the oracle-verified core; the
     multi-round peel itself is hash-gated by
     :func:`chain_k_core_converged`."""
-    from data_pipelines_using_llm_spark.operators.graph import (
-        k_core_with_rounds,
-    )
-
     core, rounds = k_core_with_rounds(
         _trade_graph_edges(spark, sf_dir), KCORE_K, max_rounds=30
     )
@@ -390,37 +539,6 @@ def trade_k_core_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _core_report(core)
 
 
-CHAIN_CLIQUE_N = 5  # K5 core
-CHAIN_TAIL = 4  # 4-edge tail => 4 shrinking rounds at k=2
-
-
-def _chain_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic clique-plus-tail graph derived from the ``nation``
-    table's fixed 25 keys: a K5 clique on nodes {0..4} with a 4-edge
-    tail 4–5–6–7–8 hanging off it, doubled to a symmetric list.  At
-    k=2 the peel removes exactly ONE tail vertex per round (degree-1
-    ends cascade), so the fixpoint needs 4 shrinking rounds — a
-    multi-round convergence case the trade graph (converges in round
-    1) cannot exercise under the hash gate."""
-    n = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").cast("bigint").alias("a")
-    )
-    clique = (
-        n.alias("x")
-        .join(n.alias("y"), F.col("x.a") < F.col("y.a"))
-        .filter(F.col("y.a") < CHAIN_CLIQUE_N)
-        .select(F.col("x.a").alias("src"), F.col("y.a").alias("dst"))
-    )
-    tail_lo = CHAIN_CLIQUE_N - 1
-    tail = n.filter(
-        (F.col("a") >= tail_lo) & (F.col("a") < tail_lo + CHAIN_TAIL)
-    ).select(F.col("a").alias("src"), (F.col("a") + 1).alias("dst"))
-    pairs = clique.union(tail)
-    return pairs.union(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-
-
 def chain_k_core_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k=2 core of the clique-plus-tail fixture graph via the
     PRODUCTION fixpoint peel — the registry row that puts a MULTI-ROUND
@@ -430,249 +548,28 @@ def chain_k_core_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the same graph unrolled 5 rounds in CTEs (one past
     convergence).  Output: surviving vertices with in-core degree —
     exactly the K5 clique, every vertex at degree 4."""
-    from data_pipelines_using_llm_spark.operators.graph import (
-        k_core_with_rounds,
-    )
-
     core, rounds = k_core_with_rounds(
-        _chain_graph_edges(spark, sf_dir), 2, max_rounds=10
+        _chain_graph_edges(spark, sf_dir), CHAIN_K, max_rounds=10
     )
     if rounds != CHAIN_TAIL:
         raise RuntimeError(
             f"chain_k_core_converged fixture degenerated: expected "
             f"exactly {CHAIN_TAIL} shrinking rounds, got {rounds}"
         )
-    return (
-        core.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
-        .select(F.col("src").alias("node_key"), "core_degree")
-    )
+    return _core_report(core, decode=False)
 
 
-RING_PR_TOL = 5e-3
-# r10 verdict task 3 (both remedies applied): the original single-chord
-# ring converged in 17 rounds — 34 driver barriers to rank a 25-node
-# fixture, ~6% of the whole headline bench.  The fixture now carries a
-# second chord family (i -> (6i+3) % 25, all nodes — affine with
-# multiplier 6 so 5i ≡ const has no solution: provably no self-loops,
-# no ring duplicates, and no collision with the first chord family in
-# its i < 12 range), which mixes fast enough to converge in ~6 damped
-# rounds, and the delta probe fires every 3rd round — exit lands at the
-# first PROBED round at-or-past the fixpoint: 6.  Deterministic (damped
-# PageRank contracts in L1), depth still > 1, oracle unrolls exactly
-# the exit depth.  Measured: 12.1 s (r10) -> 4.8 s warm.
-RING_PR_PROBE_EVERY = 3
-RING_PR_ROUNDS = 6  # probed exit depth at tol=5e-3; asserted below
-
-
-def _ring_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic directed ring-with-chords graph over the
-    ``nation`` table's fixed 25 keys: every node i has the ring edge
-    i→(i+1)%25 (so out-degree ≥ 1 everywhere — no dangling mass) and
-    the chord i→(6i+3)%25 (no self-loops or ring duplicates anywhere —
-    see RING_PR_ROUNDS), and nodes 0..11 add a second chord
-    i→(2i+5)%25, giving the non-uniform degree profile a convergence
-    test needs while mixing fast enough to converge in ~6 damped
-    rounds.  Fixed at every scale factor, so the convergence round
-    count is a constant of the fixture."""
-    n = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").cast("bigint").alias("a")
-    )
-    ring = n.select(
-        F.col("a").alias("src"), ((F.col("a") + 1) % 25).alias("dst")
-    )
-    chords = n.filter(F.col("a") < 12).select(
-        F.col("a").alias("src"), ((F.col("a") * 2 + 5) % 25).alias("dst")
-    )
-    chords2 = n.select(
-        F.col("a").alias("src"), ((F.col("a") * 6 + 3) % 25).alias("dst")
-    )
-    return ring.union(chords).union(chords2)
-
-
-def ring_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank run to CONVERGENCE (L1 delta ≤ 5e-3, quantized-exact
-    probe) on the ring-with-chords fixture graph — the registry row
-    that puts the production convergence-exit mode
-    (:func:`operators.graph.pagerank_converged`) under the cross-engine
-    hash gate, the trade_k_core_converged discipline: the probed exit
-    depth (6 damped rounds at ``probe_every=3`` — far past the
-    fixed-``iters`` queries' 2) is ASSERTED, so the fixture cannot
-    silently degenerate, and the oracle unrolls exactly that many
-    rounds.  The r10 verdict's gate-overhead item is closed from both
-    ends: the denser fixture converges in 6 rounds instead of 17, and
-    the delta probe fires every 3rd round — 8 driver barriers (6
-    per-round lineage cuts + 2 probes; the cuts stay unconditional —
-    measured: letting plan depth grow between probes costs more than
-    it saves) vs the original 34, 12.1 → 4.8 s warm.  Output: per-node
-    rank normalized to graph-mean 1.0, like supplier_pagerank."""
-    from data_pipelines_using_llm_spark.operators.graph import (
-        pagerank_converged,
-    )
-
-    pr, rounds = pagerank_converged(
-        _ring_graph_edges(spark, sf_dir),
-        tol=RING_PR_TOL,
-        max_rounds=40,
-        damping=DAMPING,
-        probe_every=RING_PR_PROBE_EVERY,
-    )
-    if rounds != RING_PR_ROUNDS:
-        raise RuntimeError(
-            f"ring_pagerank_converged: peel converged in {rounds} rounds "
-            f"but the unrolled oracle is pinned at {RING_PR_ROUNDS} — "
-            "the fixture graph or tolerance changed; re-measure and "
-            "regenerate _ring_pagerank_oracle at the new depth"
-        )
-    n_df = pr.agg(F.count(F.lit(1)).alias("n"))
-    return pr.crossJoin(F.broadcast(n_df)).select(
-        F.col("node").alias("node_key"),
-        F.round(F.col("r") * F.col("n"), 6).alias("pr_score"),
-    )
-
-
-def _ring_pagerank_oracle(
-    rounds: int = RING_PR_ROUNDS, damping: float = DAMPING
-) -> str:
-    ctes = [
-        """keys AS (
-    SELECT CAST(n_nationkey AS BIGINT) AS a FROM nation
-)""",
-        """edges AS (
-    SELECT a AS src, (a + 1) % 25 AS dst FROM keys
-    UNION ALL
-    SELECT a AS src, (a * 2 + 5) % 25 AS dst FROM keys WHERE a < 12
-    UNION ALL
-    SELECT a AS src, (a * 6 + 3) % 25 AS dst FROM keys
-)""",
-        "deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src)",
-        """nodes AS (
-    SELECT DISTINCT src AS node FROM edges
-    UNION
-    SELECT DISTINCT dst AS node FROM edges
-)""",
-        "nn AS (SELECT count(*) AS n FROM nodes)",
-        "r0 AS (SELECT node, 1.0 / n AS r FROM nodes CROSS JOIN nn)",
-    ]
-    prev = "r0"
-    for it in range(1, rounds + 1):
-        ctes.append(
-            f"""c{it} AS (
-    SELECT e.dst AS node,
-           CAST(sum(CAST(floor(r.r / d.deg * {QUANT_SQL}) AS BIGINT))
-                AS DOUBLE) / {QUANT_SQL} AS s
-    FROM edges e
-    JOIN {prev} r ON r.node = e.src
-    JOIN deg d ON d.src = e.src
-    GROUP BY e.dst
-)"""
-        )
-        ctes.append(
-            f"""r{it} AS MATERIALIZED (
-    SELECT nd.node, {1 - damping!r} / nn.n + {damping!r} * coalesce(c.s, 0.0) AS r
-    FROM nodes nd CROSS JOIN nn LEFT JOIN c{it} c ON c.node = nd.node
-)"""
-        )
-        prev = f"r{it}"
-    joined = ",\n".join(ctes)
-    return f"""
-WITH {joined}
-SELECT node AS node_key, round(r * nn.n, 6) AS pr_score
-FROM {prev} CROSS JOIN nn
-"""
-
-
-def _chain_k_core_oracle(rounds: int = CHAIN_TAIL + 1) -> str:
-    parts = [
-        f"""
-WITH keys AS (
-    SELECT CAST(n_nationkey AS BIGINT) AS a FROM nation
-),
-clique AS (
-    SELECT x.a AS src, y.a AS dst
-    FROM keys x JOIN keys y ON x.a < y.a
-    WHERE y.a < {CHAIN_CLIQUE_N}
-),
-tail AS (
-    SELECT a AS src, a + 1 AS dst FROM keys
-    WHERE a >= {CHAIN_CLIQUE_N - 1} AND a < {CHAIN_CLIQUE_N - 1 + CHAIN_TAIL}
-),
-pairs AS (
-    SELECT src, dst FROM clique UNION ALL SELECT src, dst FROM tail
-),
-e0 AS (
-    SELECT src, dst FROM pairs
-    UNION ALL
-    SELECT dst AS src, src AS dst FROM pairs
-)"""
-    ]
-    for r in range(rounds):
-        parts.append(
-            f""",
-k{r} AS (
-    SELECT src FROM e{r} GROUP BY src HAVING count(*) >= 2
-),
-e{r + 1} AS (
-    SELECT src, dst FROM e{r}
-    WHERE src IN (SELECT src FROM k{r})
-      AND dst IN (SELECT src FROM k{r})
-)"""
-        )
-    parts.append(
-        f"""
-SELECT src AS node_key, count(*) AS core_degree
-FROM e{rounds}
-GROUP BY src"""
-    )
-    return "".join(parts)
-
-
-def _k_core_oracle(k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> str:
-    parts = [
-        """
-WITH pairs AS (
-    SELECT DISTINCT o_custkey * 2 AS cnode, l_suppkey * 2 + 1 AS snode
-    FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-),
-e0 AS (
-    SELECT cnode AS src, snode AS dst FROM pairs
-    UNION ALL
-    SELECT snode AS src, cnode AS dst FROM pairs
-)"""
-    ]
-    for r in range(rounds):
-        parts.append(
-            f""",
-k{r} AS (
-    SELECT src FROM e{r} GROUP BY src HAVING count(*) >= {k}
-),
-e{r + 1} AS (
-    SELECT src, dst FROM e{r}
-    WHERE src IN (SELECT src FROM k{r})
-      AND dst IN (SELECT src FROM k{r})
-)"""
-        )
-    parts.append(
-        f"""
-SELECT CASE WHEN src % 2 = 0 THEN 'customer' ELSE 'supplier' END
-           AS node_type,
-       CAST(src // 2 AS BIGINT) AS node_key,
-       count(*) AS core_degree
-FROM e{rounds}
-GROUP BY src"""
-    )
-    return "".join(parts)
-
+_TRADE_K_CORE_ORACLE = _k_core_oracle(TRADE_EDGES_SQL, KCORE_K, KCORE_ROUNDS)
 
 QUERIES = {
     "trade_k_core": QuerySpec(
         trade_k_core,
-        _k_core_oracle(),
+        _TRADE_K_CORE_ORACLE,
         "unrolled k-core peel of the customer-supplier trade graph",
     ),
     "trade_k_core_converged": QuerySpec(
         trade_k_core_converged,
-        _k_core_oracle(),
+        _TRADE_K_CORE_ORACLE,
         "k-core via the peel-until-stable fixpoint mode (oracle: the "
         "unrolled CTE form; convergence-within-depth is CHECKED and "
         "raises a named error if the data ever needs a deeper unroll)",
@@ -680,18 +577,20 @@ QUERIES = {
     "ring_pagerank_converged": QuerySpec(
         ring_pagerank_converged,
         _ring_pagerank_oracle(),
-        "PageRank to convergence (L1<=5e-3, 17 rounds asserted) on the "
-        "ring-with-chords fixture vs a 17-round unrolled oracle",
+        f"PageRank to convergence (L1<=5e-3, probed every "
+        f"{RING_PR_PROBE_EVERY} rounds, exit at round {RING_PR_ROUNDS} "
+        "asserted) on the ring-with-chords fixture vs a "
+        f"{RING_PR_ROUNDS}-round unrolled oracle",
     ),
     "chain_k_core_converged": QuerySpec(
         chain_k_core_converged,
-        _chain_k_core_oracle(),
+        _k_core_oracle(CHAIN_EDGES_SQL, CHAIN_K, CHAIN_TAIL + 1, decode=False),
         "multi-round (4 shrinking rounds, asserted) fixpoint k-core of "
         "the clique-plus-tail fixture graph vs a 5-round unrolled oracle",
     ),
     "supplier_pagerank": QuerySpec(
         supplier_pagerank,
-        _pagerank_oracle(),
+        _pagerank_oracle(TRADE_EDGES_SQL, PR_ITERS),
         "PageRank over the customer-supplier trade graph (2 damped rounds)",
     ),
     "basket_triangles": QuerySpec(
@@ -701,7 +600,7 @@ QUERIES = {
     ),
     "money_flow_pagerank": QuerySpec(
         money_flow_pagerank,
-        _pagerank_redistribute_oracle(),
+        _pagerank_oracle(MONEY_FLOW_EDGES_SQL, PR_ITERS, redistribute=True),
         "PageRank with dangling-mass redistribution over the directed "
         "customer->supplier purchase graph (every supplier is a sink)",
     ),

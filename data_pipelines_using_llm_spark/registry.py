@@ -139,6 +139,16 @@ _REVERIFY: frozenset[str] = frozenset(
         "knn_ivfpq_tenant_skewed_refined", "knn_ivfpq_tenant_partitioned",
         "ann_index_stats", "stream_knn_serve", "stream_knn_residual_serve",
         "stream_knn_tenant_serve", "stream_knn_residual_tenant_serve",
+        # rows served by the one driver-side power-iteration kernel
+        "embedding_top_eigvec", "embedding_top2_eigvecs",
+        "embedding_pca_projection", "embedding_pca_projection_stored",
+        "embedding_pca_whitened", "embedding_outliers",
+        # rows whose oracle is generated by the one PageRank / k-core
+        # generator in plans/graph_queries.py, and the rows that run
+        # operators/dedup.py::connected_components through caching.cut
+        "supplier_pagerank", "money_flow_pagerank", "ring_pagerank_converged",
+        "trade_k_core", "trade_k_core_converged", "chain_k_core_converged",
+        "dedup_components", "dedup_survivors",
     }
 )
 

@@ -26,6 +26,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_pipelines_using_llm_spark.sources.tables import scan_parquet
+
 MANIFEST_SUFFIX = "__manifest"
 
 
@@ -83,7 +85,7 @@ def pruned_scan(
         raise ValueError(
             f"no manifest at {mpath}; run write_manifest(..., ['{col}'])"
         )
-    man = spark.read.parquet(mpath)
+    man = scan_parquet(spark.read, mpath)
     needed = {f"min_{col}", f"max_{col}"}
     if not needed <= set(man.columns):
         raise ValueError(

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_pipelines_using_llm_spark.sources.tables import scan_parquet
+
 
 def write_table(
     df: DataFrame,
@@ -581,7 +583,9 @@ def write_audit_publish(
     before the call.  Auditing the staged READ-BACK (not the input plan)
     means the checks cover what was actually serialized — a
     nondeterministic upstream (e.g. an unseeded sample) cannot pass audit
-    as one dataset and publish as another.
+    as one dataset and publish as another.  The stage is a flat directory
+    Spark wrote, so the read-back takes its schema from the parquet
+    footers and starts no job (``sources/tables.py::scan_parquet``).
 
     Returns the expectation report (one row per rule), materialized
     before the swap so its plan holds no reference to the staged path.
@@ -598,7 +602,7 @@ def write_audit_publish(
     if os.path.exists(stage):
         shutil.rmtree(stage)
     df.write.mode("overwrite").parquet(stage)
-    staged = spark.read.parquet(stage)
+    staged = scan_parquet(spark.read, stage)
     report_rows = expect(staged, rules, max_violation_rate).collect()
     failed = [r for r in report_rows if not r["passed"]]
     if failed:
@@ -679,7 +683,7 @@ def write_audit_publish_split(
                 shutil.rmtree(d)
         df.write.mode("overwrite").parquet(stage)
         flagged = flag_violations(
-            spark.read.parquet(stage), rules, unique_order
+            scan_parquet(spark.read, stage), rules, unique_order
         ).persist()
         try:
             qrows = flagged.filter(F.col("violated_rules") != "")

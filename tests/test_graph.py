@@ -560,3 +560,127 @@ def test_k_core_invariants_on_random_graphs(spark):
         assert all(v >= k for v in deg.values()), (seed, deg)
         again = k_core(core, k, max_rounds=50)
         assert {(r["src"], r["dst"]) for r in again.collect()} == got
+
+
+def _held_rdds(spark) -> set[int]:
+    """Ids of the RDDs that hold cached or checkpointed blocks."""
+    jsc = spark.sparkContext._jsc.sc()
+    return {r.id() for r in jsc.getRDDStorageInfo()}
+
+
+def test_supplier_pagerank_holds_no_blocks_after_release(spark):
+    """``release_barriers`` frees everything a PageRank row stored: the
+    persisted edge list AND the ``deg`` / ``nodes`` lineage cuts, whose
+    checkpointed blocks ``DataFrame.unpersist`` does not reach."""
+    from data_pipelines_using_llm_spark.operators.caching import (
+        release_barriers,
+    )
+
+    release_barriers()
+    before = _held_rdds(spark)
+    assert GQ.supplier_pagerank(spark, "/root/testdata/sf0.001").collect()
+    release_barriers()
+    assert _held_rdds(spark) - before == set()
+
+
+def test_fixpoint_loops_free_superseded_rounds(spark):
+    """The convergence loops free each round's cut once the next round
+    exists: after ``pagerank_converged`` (6 rounds on the ring fixture),
+    ``k_core_with_rounds`` (4 shrinking rounds on the chain fixture) and
+    ``connected_components``, only the returned result still holds
+    blocks, and ``release_barriers`` frees that too."""
+    from data_pipelines_using_llm_spark.operators import caching
+    from data_pipelines_using_llm_spark.operators.dedup import (
+        connected_components,
+    )
+    from data_pipelines_using_llm_spark.operators.graph import (
+        k_core_with_rounds,
+        pagerank_converged,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 6)], "doc_id_a bigint, doc_id_b bigint"
+    )
+    calls = [
+        lambda: pagerank_converged(
+            GQ._ring_graph_edges(spark, sf),
+            tol=GQ.RING_PR_TOL,
+            probe_every=GQ.RING_PR_PROBE_EVERY,
+        )[0],
+        lambda: k_core_with_rounds(GQ._chain_graph_edges(spark, sf), 2)[0],
+        lambda: connected_components(chain),
+    ]
+    for call in calls:
+        caching.release_barriers()
+        before = _held_rdds(spark)
+        out = call()
+        assert out.collect()
+        assert len(_held_rdds(spark) - before) == 1
+        assert len(caching._CUTS) == 1
+        caching.release_barriers()
+        assert _held_rdds(spark) - before == set()
+
+
+@pytest.mark.parametrize(
+    "mode", ["pagerank_error", "pagerank_redistribute", "k_core"]
+)
+def test_null_endpoint_raises_named_error(spark, mode):
+    """A NULL endpoint is not a vertex.  Unchecked, PageRank ranked a
+    NULL node (redistribute-mode ranks summed to 0.45), error mode
+    blamed "1 dangling vertex", and the k-core peel dropped the edge
+    silently; each now raises a ``ValueError`` that names the NULL."""
+    from data_pipelines_using_llm_spark.operators.graph import (
+        k_core_with_rounds,
+    )
+
+    rows = [(1, 2), (2, 1), (2, 3), (3, 2), (3, 1), (1, 3), (3, None)]
+    edges = spark.createDataFrame(rows, "src bigint, dst bigint")
+    with pytest.raises(ValueError, match="NULL"):
+        if mode == "k_core":
+            k_core_with_rounds(edges, 2)
+        else:
+            dangling = mode.split("_")[1]
+            pagerank(edges, iters=2, dangling=dangling).collect()
+
+
+# (rows, vhash) of each graph oracle at sf0.001, as the per-row copied
+# SQL gave them before the one PageRank / k-core generator existed.
+_PINNED_GRAPH_ORACLES = {
+    "supplier_pagerank": (160, "30135dfb67"),
+    "money_flow_pagerank": (160, "f72013f57f"),
+    "ring_pagerank_converged": (25, "743acbe37f"),
+    "trade_k_core": (154, "303d026f0d"),
+    "trade_k_core_converged": (154, "303d026f0d"),
+    "chain_k_core_converged": (5, "9bcffdf277"),
+}
+_GRAPH_ORACLE_COLS = {
+    "supplier_pagerank": ["node_type", "node_key", "pr_score"],
+    "money_flow_pagerank": ["node_type", "node_key", "pr_score"],
+    "ring_pagerank_converged": ["node_key", "pr_score"],
+    "trade_k_core": ["node_type", "node_key", "core_degree"],
+    "trade_k_core_converged": ["node_type", "node_key", "core_degree"],
+    "chain_k_core_converged": ["node_key", "core_degree"],
+}
+
+
+def test_graph_oracles_match_parent_values():
+    """The oracles alone, no Spark: test_oracle.py compares Spark with
+    each oracle, so an edit to the shared round CTEs that moved both
+    sides together would pass there.  Here every generated oracle must
+    still give the rows, columns and value hash the copied SQL gave."""
+    import hashlib
+
+    from tests.oracle_check import duckdb_connection
+
+    con = duckdb_connection("/root/testdata/sf0.001")
+    for name, (rows, vhash) in _PINNED_GRAPH_ORACLES.items():
+        pdf = con.sql(GQ.QUERIES[name].oracle).df()
+        recs = sorted(
+            tuple(str(v) for v in r)
+            for r in pdf[sorted(pdf.columns)].itertuples(index=False)
+        )
+        digest = hashlib.md5(str(recs).encode()).hexdigest()[:10]
+        assert (len(pdf), list(pdf.columns), digest) == (
+            rows, _GRAPH_ORACLE_COLS[name], vhash
+        ), name

@@ -897,3 +897,37 @@ def test_ann_maintain_cli_usage_contract():
     )
     assert r.returncode == 1
     assert "append" in r.stdout and "retrain" in r.stdout
+
+
+def test_audit_and_manifest_read_backs_start_no_job(spark, tmp_path, monkeypatch):
+    """The write-audit-publish stages and the manifest are flat
+    directories Spark wrote, so each read-back takes its schema from the
+    parquet footers: building it starts no Spark job, and the schema is
+    the one ``spark.read.parquet`` infers."""
+    from data_pipelines_using_llm_spark.operators import expectations as EX
+    from data_pipelines_using_llm_spark.sinks import manifest, writers
+    from data_pipelines_using_llm_spark.sources.tables import scan_parquet
+    from data_pipelines_using_llm_spark.telemetry import measure
+
+    reads = []
+
+    def measured_scan(reader, path):
+        df, c = measure(spark, lambda: scan_parquet(reader, path))
+        reads.append((os.path.basename(path), c["jobs"]))
+        assert df.schema == spark.read.parquet(path).schema
+        return df
+
+    monkeypatch.setattr(writers, "scan_parquet", measured_scan)
+    monkeypatch.setattr(manifest, "scan_parquet", measured_scan)
+    df = spark.createDataFrame(
+        [(1, 10.0, "a"), (2, 500.0, "b")], "id bigint, v double, t string"
+    )
+    rules = [EX.in_range("v", 0, 1000)]
+    wap = str(tmp_path / "wap")
+    writers.write_audit_publish(df, wap, rules)
+    writers.write_audit_publish_split(
+        df, str(tmp_path / "live"), str(tmp_path / "dead"), rules
+    )
+    manifest.write_manifest(spark, wap, ["v"])
+    assert manifest.pruned_scan(spark, wap, "v", 0, 20).count() == 1
+    assert reads == [("wap__stage", 0), ("live__stage", 0), ("wap__manifest", 0)]
