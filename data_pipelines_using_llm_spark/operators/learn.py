@@ -29,22 +29,11 @@ Determinism (the hash-gate discipline used module-wide):
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# The only tokens a generated Cramer expression may contain: the moment
-# names (n, s12, sy3, ...), products, sums, differences, parentheses.
-# Anything else (attribute access, calls, subscripts, names with
-# capitals/underscores) is rejected BEFORE eval — the strings are built
-# purely from d and fixed moment names today, and this guard keeps the
-# eval from silently becoming code execution if anyone later
-# interpolates column names or user input into them (r11 ADVICE).
-_CRAMER_TOKEN_RE = re.compile(r"^[a-z0-9*+()\-]+$")
-
 GRAD_Q = float(2**30)  # gradient quantization step (order-free int sums)
-OLS_Q = float(2**24)  # label-moment quantization for the one-pass OLS
+OLS_Q = float(2**24)  # label-moment quantization of ols_fit_gauss
 
 
 def hard_sigmoid(z: Column) -> Column:
@@ -128,67 +117,10 @@ def linear_classifier_train(
 _INT_TYPES = ("tinyint", "smallint", "int", "bigint")
 
 
-def det_expr(names: list[list[str]]) -> str:
-    """Determinant of a matrix of SCALAR NAMES as one expression string
-    with a FIXED shape — cofactor expansion along the first row, 2x2
-    base ``(a*d-b*c)``, alternating ``-``/``+`` left-to-right.  The
-    string is the cross-engine contract: Python ``eval`` (the driver
-    solve) and DuckDB (the oracle SQL) parse standard ``* + -``
-    precedence into the IDENTICAL operation tree, and every operation
-    is an IEEE-754 double op in both — so the determinant is
-    bit-identical wherever the string is evaluated.  This is the
-    d-feature generalization of the hand-written det3 the d=2 oracle
-    states (same tree at n=3)."""
-    n = len(names)
-    if n == 1:
-        return names[0][0]
-    if n == 2:
-        (a, b), (c, d) = names
-        return f"({a}*{d}-{b}*{c})"
-    terms = []
-    for j in range(n):
-        minor = [
-            [row[k] for k in range(n) if k != j] for row in names[1:]
-        ]
-        sign = "-" if j % 2 else "+"
-        terms.append(f"{sign}{names[0][j]}*{det_expr(minor)}")
-    return "(" + "".join(terms).lstrip("+") + ")"
-
-
-def cramer_exprs(d: int) -> tuple[str, list[str]]:
-    """``(denominator, [numerator_0..numerator_d])`` expression strings
-    for the (d+1)x(d+1) normal-equation solve over the canonical moment
-    names — ``n``, ``s{j}`` (Σxj), ``s{j}{k}`` (Σxj·xk, j<=k), ``sy``
-    (Σy), ``sy{j}`` (Σxj·y).  Numerator i is the Gram matrix with
-    column i replaced by the y-moment vector (Cramer's rule).  Shared
-    by the driver solve and the SQL-oracle generator so both engines
-    state the same arithmetic (see :func:`det_expr`)."""
-
-    def gram(j: int, k: int) -> str:
-        if j == 0 and k == 0:
-            return "n"
-        if j == 0 or k == 0:
-            return f"s{max(j, k)}"
-        lo, hi = sorted((j, k))
-        return f"s{lo}{hi}"
-
-    def ymom(j: int) -> str:
-        return "sy" if j == 0 else f"sy{j}"
-
-    base = [[gram(j, k) for k in range(d + 1)] for j in range(d + 1)]
-    nums = []
-    for i in range(d + 1):
-        m = [
-            [ymom(j) if k == i else base[j][k] for k in range(d + 1)]
-            for j in range(d + 1)
-        ]
-        nums.append(det_expr(m))
-    return det_expr(base), nums
-
-
 def _gram_name(j: int, k: int) -> str:
-    """Canonical moment name for Gram entry (j, k) — the same naming
-    :func:`cramer_exprs` states: ``n``, ``s{j}``, ``s{lo}{hi}``."""
+    """Canonical moment name for Gram entry (j, k): ``n``, ``s{j}``,
+    ``s{lo}{hi}`` — the names the driver solve and the SQL oracle's
+    elimination CTEs (plans/statistics.py) both read."""
     if j == 0 and k == 0:
         return "n"
     if j == 0 or k == 0:
@@ -204,12 +136,21 @@ def _ymom_name(j: int) -> str:
 def _ols_moments(
     df: DataFrame, feature_cols: list[str], label_col: str
 ) -> dict[str, float]:
-    """The shared ONE-PASS moment collection of both OLS solvers:
-    exact-int64 X^T X, quantized order-free X^T y, with the enforced
-    input contracts (integer dtypes, loud NULL rejection, n·max|x|² <
-    2^62 headroom — see :func:`ols_fit_one_pass`).  Returns the moment
+    """The ONE-PASS moment collection of :func:`ols_fit_gauss`:
+    exact-int64 X^T X, quantized order-free X^T y.  Returns the moment
     scope keyed by the canonical names (:func:`_gram_name` /
-    :func:`_ymom_name`)."""
+    :func:`_ymom_name`).
+
+    Input contracts, ENFORCED (r10 ADVICE — silent moment skew is the
+    failure mode):
+    - features must be INTEGER-typed columns (no silent ``cast('long')``
+      truncation of fractional features);
+    - NULL feature/label rows raise (``count(*)`` counts them while
+      ``sum()`` skips their contributions, making the moments mutually
+      inconsistent — the coefficients would skew with no error);
+    - the exact-int64 headroom is checked from the same pass's
+      ``max(|xj|)``: ``n·max|xj|·max|xk|`` must stay ≲ 2^62;
+    - an empty input raises."""
     d = len(feature_cols)
     dtypes = dict(df.dtypes)
     bad = [c for c in feature_cols if dtypes.get(c) not in _INT_TYPES]
@@ -270,12 +211,16 @@ def _ols_moments(
 def ols_fit_gauss(
     df: DataFrame, feature_cols: list[str], label_col: str
 ) -> list[float]:
-    """Closed-form least squares for WIDE designs (d up to
-    :data:`GAUSS_MAX_D`) — the path past :func:`ols_fit_one_pass`'s
-    d ≤ 4 boundary, whose cofactor expansion grows factorially: same
-    one-pass moments (:func:`_ols_moments`), then a FIXED-PIVOT
-    Gauss–Jordan elimination of the (d+1)×(d+1) normal equations on
-    the driver.
+    """Closed-form least squares ``y ~ b0 + Σ bj·xj`` for 1 ≤ d ≤
+    :data:`GAUSS_MAX_D` INTEGER-typed features, fit in ONE corpus scan —
+    the classic distributed-ML primitive: accumulate the
+    normal-equation moments (X^T X and X^T y) as map-side-combinable
+    sums (:func:`_ols_moments`, which states the input contracts), then
+    solve the (d+1)×(d+1) system by a FIXED-PIVOT Gauss–Jordan
+    elimination on the driver and never touch the rows again.  At
+    100 TB the cost is one scan producing O(d²) scalars.  Returns
+    ``[b0, b1..bd]``; for wider models use gradient descent
+    (:func:`linear_classifier_train`).
 
     Determinism, the cross-engine contract (r11 verdict optional
     task 8): the elimination applies its updates in a FIXED schedule —
@@ -352,67 +297,3 @@ GAUSS_MAX_D = 9
 # sit > 1e-3 of their own diagonals), tight enough that a numerically
 # collinear design cannot slip through.
 GAUSS_PIVOT_RTOL = 1e-12
-
-
-def ols_fit_one_pass(
-    df: DataFrame, feature_cols: list[str], label_col: str
-) -> list[float]:
-    """Closed-form least squares ``y ~ b0 + Σ bj·xj`` for d (1..4)
-    INTEGER-typed features, fit in ONE corpus scan — the classic
-    distributed-ML primitive: accumulate the normal-equation moments
-    (X^T X and X^T y) as map-side-combinable sums, solve the
-    (d+1)x(d+1) system on the driver, and never touch the rows again.
-    At 100 TB the cost is one scan producing O(d²) scalars.
-
-    Determinism, the hash-gate discipline: the X^T X entries are sums
-    of products of integers — EXACT int64, no quantization needed; the
-    X^T y moments quantize the double label (``Σ floor(xj·y·2^24)`` —
-    exact, order-free); the Cramer solve casts the integer moments to
-    double and evaluates the :func:`cramer_exprs` expression strings —
-    the SAME strings the SQL oracle embeds — so both engines produce
-    bit-identical coefficients.  (Integer determinants would overflow
-    int64 at scale, which is why the solve is double-space on BOTH
-    sides; d is capped at 4 because cofactor expansion grows
-    factorially — for wider models use the fixed-pivot Gauss–Jordan
-    path, :func:`ols_fit_gauss` (closed-form through d=8), or gradient
-    descent, :func:`linear_classifier_train`.)
-
-    Input contracts, ENFORCED (r10 ADVICE — silent moment skew is the
-    failure mode):
-    - features must be INTEGER-typed columns (no silent ``cast('long')``
-      truncation of fractional features);
-    - NULL feature/label rows raise (``count(*)`` counts them while
-      ``sum()`` skips their contributions, making the moments mutually
-      inconsistent — the coefficients would skew with no error);
-    - the exact-int64 headroom is checked from the same pass's
-      ``max(|xj|)``: ``n·max|xj|·max|xk|`` must stay ≲ 2^62.
-
-    Returns ``[b0, b1..bd]``.  Raises on a singular system (collinear
-    features), d outside 1..4, or an empty input.
-    """
-    d = len(feature_cols)
-    if not 1 <= d <= 4:
-        raise ValueError(
-            "ols_fit_one_pass solves the (d+1)x(d+1) normal equations "
-            f"for 1 <= d <= 4 integer feature columns, got {feature_cols}"
-        )
-    scope = _ols_moments(df, feature_cols, label_col)
-    den_expr, num_exprs = cramer_exprs(d)
-    for e in (den_expr, *num_exprs):
-        if not _CRAMER_TOKEN_RE.fullmatch(e):
-            raise ValueError(
-                "ols_fit_one_pass: generated Cramer expression contains "
-                f"tokens outside the [a-z0-9*+()-] whitelist: {e!r}"
-            )
-    # eval of the shared expression strings IS the determinism contract:
-    # Python and DuckDB parse them into the identical IEEE double tree
-    den = eval(den_expr, {"__builtins__": {}}, scope)  # noqa: S307
-    if den == 0.0:
-        raise ValueError(
-            "ols_fit_one_pass: singular normal equations (collinear or "
-            "constant features)"
-        )
-    return [
-        eval(ne, {"__builtins__": {}}, scope) / den  # noqa: S307
-        for ne in num_exprs
-    ]

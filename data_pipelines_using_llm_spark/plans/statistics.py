@@ -21,9 +21,12 @@ across 1000 executors.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_pipelines_using_llm_spark.operators import learn as LN
 from data_pipelines_using_llm_spark.operators.split import LEHMER_A, LEHMER_M
 from data_pipelines_using_llm_spark.registry import QuerySpec
 from data_pipelines_using_llm_spark.sources.tables import load_table
@@ -228,18 +231,18 @@ def user_value_ewma_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     order — each round is one grouped sort-fold over ONE chunk's events
     joined full-outer with the carried state, so per-key task memory is
     bounded by the key's activity within a single chunk, never its
-    lifetime.  The carry is cut with an eager ``localCheckpoint`` per
-    round (r13 verdict task 5 — the graph-fixpoint lineage discipline,
-    NOT a persist barrier: persist caches blocks but leaves the logical
-    plan nested, so a multi-year corpus would stack one unanalyzed
-    full-outer segment per week and the final plan's analysis would
-    grow with the calendar; the checkpoint keeps plan depth CONSTANT —
-    one chunk join over a materialized carry, whatever the span, as
-    asserted on a ~3-year fixture in
-    tests/test_graph.py::test_ewma_chunked_plan_depth_bounded).  Round
-    N+1 therefore starts from materialized state instead of re-deriving
-    N rounds of lineage — exactly what streaming ``transformWithState``
-    does incrementally, expressed as batch.
+    lifetime.  The carry is cut (``caching.cut``, an eager
+    ``localCheckpoint``) per round (r13 verdict task 5 — the
+    graph-fixpoint lineage discipline, NOT a persist barrier: persist
+    caches blocks but leaves the logical plan nested, so a multi-year
+    corpus would stack one unanalyzed full-outer segment per week and
+    the final plan's analysis would grow with the calendar; the
+    checkpoint keeps plan depth CONSTANT — one chunk join over a
+    materialized carry, whatever the span, as asserted on a ~3-year
+    fixture in tests/test_graph.py::test_ewma_chunked_plan_depth_bounded).
+    Round N+1 therefore starts from materialized state instead of
+    re-deriving N rounds of lineage — exactly what streaming
+    ``transformWithState`` does incrementally, expressed as batch.
 
     Bit-equality with the unchunked fold (same oracle, and asserted
     exactly in tests/test_graph.py): a left fold over a concatenation is
@@ -248,6 +251,8 @@ def user_value_ewma_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries (week of ts) respect the (ts, event_id) sort order, so
     the float operations happen in the identical sequence.
     """
+    from data_pipelines_using_llm_spark.operators.caching import cut, free_cut
+
     e = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull()
         & F.col("ts").isNotNull()
@@ -309,15 +314,13 @@ def user_value_ewma_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("state"),
             )
         # eager lineage CUT, not a persist: keeps the final plan one
-        # segment deep however many weeks the calendar spans.
-        # Lifetime: each round's cut drops every reference to the
-        # PREVIOUS carry's checkpointed RDD, so Spark's ContextCleaner
-        # frees intermediate carries as GC runs (bench.py forces a GC
-        # every 10 queries); only the final carry's blocks live as long
-        # as the returned frame — the same contract as every
-        # localCheckpoint-returning row (the graph fixpoints' pattern,
-        # which this replaces barrier() to match).
-        carry = folded.localCheckpoint(eager=True)
+        # segment deep however many weeks the calendar spans.  Once the
+        # new carry is cut nothing reads the previous one, so its
+        # blocks are freed at once; the final carry's go with the
+        # row's release_barriers (the graph fixpoints' pattern).
+        prev, carry = carry, cut(folded)
+        if prev is not None:
+            free_cut(prev)
     if carry is None:  # no qualifying events at all
         return spark.createDataFrame(
             [], "user_id bigint, n_events int, ewma_value double"
@@ -1787,232 +1790,104 @@ GROUP BY r.event_type, n, k
 """
 
 
-def event_value_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multiple linear regression ``value ~ hour + dow`` fit in ONE
-    corpus scan — closed-form normal equations
-    (operators/learn.py::ols_fit_one_pass): nine map-side-combinable
-    moments (X^T X exact int64 — the features are small integers;
-    X^T y quantized order-free), a 3x3 Cramer solve on the driver, and
-    the oracle re-derives the identical coefficients from the same
-    moments with the same term order — the whole fit, solve included,
-    sits under the hash gate.  The one-pass-moments discipline is this
-    pack's power-sum trick generalized from simple to MULTIPLE
-    regression (value_trend_slope is the 1-feature special case)."""
-    from data_pipelines_using_llm_spark.operators import learn as LN
+# The design of each OLS row: one (term, alias, Spark SQL, DuckDB SQL)
+# per feature, and its row filter (the same SQL in both engines).  The
+# Spark side is an expression string, not a Column, because a Column
+# needs a live session and these tables are built at import.
+# dayofweek is offset +1 in DuckDB to Spark's 1 = Sunday; weekofyear is
+# ISO in both engines.
+_OLS_CALENDAR = [
+    ("hour", "h", "hour(ts)", "hour(ts)"),
+    ("dow", "dw", "dayofweek(ts)", "dayofweek(ts) + 1"),
+    ("dom", "dom", "dayofmonth(ts)", "day(ts)"),
+    ("minute", "mi", "minute(ts)", "minute(ts)"),
+    ("second", "ss", "second(ts)", "CAST(date_part('second', ts) AS BIGINT)"),
+]
+# The 9-feature row adds the ISO week (a STEP function of day-of-month
+# in the single-month corpus — linearly independent, unlike month /
+# quarter / day-of-year, which are constant or exactly collinear there)
+# and three entity-derived integers: user_id, user_id % 7 (independent
+# of user_id because the 0..14 range wraps) and the event-type length.
+_OLS_ENTITY = [
+    ("week", "wk", "weekofyear(ts)", "weekofyear(ts)"),
+    ("user_id", "uid", "user_id", "user_id"),
+    ("user_mod7", "u7", "user_id % 7", "user_id % 7"),
+    ("type_len", "tl", "length(event_type)", "length(event_type)"),
+]
+_OLS_WHERE = "value IS NOT NULL AND ts IS NOT NULL"
+_OLS_ROWS = {
+    "event_value_ols_trend": (
+        _OLS_CALENDAR[:2],
+        _OLS_WHERE,
+        "multiple regression value ~ hour + dow: one-pass normal-equation "
+        "moments + fixed-pivot Gauss-Jordan solve, fit hash-gated end to end",
+    ),
+    "event_value_ols_3feat": (
+        _OLS_CALENDAR[:3],
+        _OLS_WHERE,
+        "multiple regression value ~ hour + dow + day-of-month: 14 "
+        "one-pass moments, 4x4 fixed-pivot elimination",
+    ),
+    "event_value_ols_5feat": (
+        _OLS_CALENDAR,
+        _OLS_WHERE,
+        "wide regression value ~ hour + dow + dom + minute + second: "
+        "6x6 fixed-pivot Gauss-Jordan, one oracle CTE per pivot stating "
+        "the identical update tree",
+    ),
+    "event_value_ols_9feat": (
+        _OLS_CALENDAR + _OLS_ENTITY,
+        _OLS_WHERE + " AND user_id IS NOT NULL AND event_type IS NOT NULL",
+        "wide regression over 9 features (calendar + ISO week + "
+        "entity-derived integers) at the GAUSS_MAX_D boundary: "
+        "77 one-pass moments, 10x10 fixed-pivot elimination, "
+        "bit-identical trajectories both engines",
+    ),
+}
 
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull() & F.col("ts").isNotNull()
-    )
-    feats = ev.select(
-        F.hour("ts").alias("h"),
-        F.dayofweek("ts").alias("dw"),
+
+def _ols_row(
+    spark: SparkSession, sf_dir: str, design: list, where: str
+) -> DataFrame:
+    """Multiple linear regression ``value ~ b0 + Σ bj·xj`` over the
+    ``events`` rows that pass ``where``, fit in ONE corpus scan
+    (operators/learn.py::ols_fit_gauss): map-side-combinable
+    normal-equation moments (X^T X exact int64 — the features are small
+    integers; X^T y quantized order-free), then the fixed-pivot
+    Gauss–Jordan elimination on the driver.  :func:`_ols_oracle` states
+    the same moments and the same elimination schedule, so the whole
+    fit, solve included, sits under the hash gate.  The one-pass-moments
+    discipline is this pack's power-sum trick generalized from simple to
+    MULTIPLE regression (value_trend_slope is the 1-feature case)."""
+    feats = load_table(spark, sf_dir, "events").filter(where).select(
+        *(F.expr(expr).alias(alias) for _, alias, expr, _ in design),
         "value",
     )
-    b0, b1, b2 = LN.ols_fit_one_pass(feats, ["h", "dw"], "value")
+    b = LN.ols_fit_gauss(feats, [alias for _, alias, _, _ in design], "value")
+    terms = ["intercept"] + [term for term, *_ in design]
     return spark.createDataFrame(
-        [("intercept", b0), ("hour", b1), ("dow", b2)],
-        "term string, coef double",
+        list(zip(terms, b)), "term string, coef double"
     ).select("term", F.round("coef", 6).alias("coef"))
 
 
-_OLS_Q_SQL = repr(float(2**24))
-
-EVENT_VALUE_OLS_ORACLE = f"""
-WITH feats AS (
-    SELECT hour(ts) AS h, dayofweek(ts) + 1 AS dw, value
-    FROM events
-    WHERE value IS NOT NULL AND ts IS NOT NULL
-),
-mom AS (
-    SELECT CAST(count(*) AS DOUBLE) AS n,
-           CAST(sum(h) AS DOUBLE) AS s1,
-           CAST(sum(dw) AS DOUBLE) AS s2,
-           CAST(sum(h * h) AS DOUBLE) AS s11,
-           CAST(sum(h * dw) AS DOUBLE) AS s12,
-           CAST(sum(dw * dw) AS DOUBLE) AS s22,
-           CAST(sum(CAST(floor(value * {_OLS_Q_SQL}) AS BIGINT))
-                AS DOUBLE) / {_OLS_Q_SQL} AS sy,
-           CAST(sum(CAST(floor(CAST(h AS DOUBLE) * value * {_OLS_Q_SQL})
-                         AS BIGINT)) AS DOUBLE) / {_OLS_Q_SQL} AS sy1,
-           CAST(sum(CAST(floor(CAST(dw AS DOUBLE) * value * {_OLS_Q_SQL})
-                         AS BIGINT)) AS DOUBLE) / {_OLS_Q_SQL} AS sy2
-    FROM feats
-),
-solved AS (
-    SELECT
-        (sy * (s11 * s22 - s12 * s12) - s1 * (sy1 * s22 - s12 * sy2)
-         + s2 * (sy1 * s12 - s11 * sy2))
-        / (n * (s11 * s22 - s12 * s12) - s1 * (s1 * s22 - s12 * s2)
-           + s2 * (s1 * s12 - s11 * s2)) AS b0,
-        (n * (sy1 * s22 - s12 * sy2) - sy * (s1 * s22 - s12 * s2)
-         + s2 * (s1 * sy2 - sy1 * s2))
-        / (n * (s11 * s22 - s12 * s12) - s1 * (s1 * s22 - s12 * s2)
-           + s2 * (s1 * s12 - s11 * s2)) AS b1,
-        (n * (s11 * sy2 - sy1 * s12) - s1 * (s1 * sy2 - sy1 * s2)
-         + sy * (s1 * s12 - s11 * s2))
-        / (n * (s11 * s22 - s12 * s12) - s1 * (s1 * s22 - s12 * s2)
-           + s2 * (s1 * s12 - s11 * s2)) AS b2
-    FROM mom
-)
-SELECT 'intercept' AS term, round(b0, 6) AS coef FROM solved
-UNION ALL SELECT 'hour', round(b1, 6) FROM solved
-UNION ALL SELECT 'dow', round(b2, 6) FROM solved
-"""
-
-
-def event_value_ols_3feat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``value ~ hour + dow + day-of-month`` — the d=3 instance of the
-    generalized one-pass OLS (operators/learn.py::ols_fit_one_pass,
-    r10 verdict task 5): 14 map-side-combinable moments in one scan
-    (X^T X exact int64 — the features are small calendar integers with
-    ~1e16-row headroom under the enforced n·max|x|² < 2^62 guard;
-    X^T y quantized order-free), then a 4x4 Cramer solve on the driver
-    whose numerator/denominator expression STRINGS are generated once
-    (learn.cramer_exprs) and embedded verbatim in the oracle — Python
-    and DuckDB evaluate the identical IEEE tree, so the whole fit,
-    solve included, sits under the hash gate."""
-    from data_pipelines_using_llm_spark.operators import learn as LN
-
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull() & F.col("ts").isNotNull()
-    )
-    feats = ev.select(
-        F.hour("ts").alias("h"),
-        F.dayofweek("ts").alias("dw"),
-        F.dayofmonth("ts").alias("dom"),
-        "value",
-    )
-    b0, b1, b2, b3 = LN.ols_fit_one_pass(feats, ["h", "dw", "dom"], "value")
-    return spark.createDataFrame(
-        [("intercept", b0), ("hour", b1), ("dow", b2), ("dom", b3)],
-        "term string, coef double",
-    ).select("term", F.round("coef", 6).alias("coef"))
-
-
-def _event_value_ols_3feat_oracle() -> str:
-    """The d=3 normal-equation oracle: the moment CTE mirrors the Spark
-    aggregation (exact int64 X^T X, quantized X^T y), and the solve
-    embeds the SAME cramer_exprs strings the driver evaluates."""
-    from data_pipelines_using_llm_spark.operators.learn import cramer_exprs
-
-    den, nums = cramer_exprs(3)
-    q = _OLS_Q_SQL
-    xs = {"1": "h", "2": "dw", "3": "dom"}
-    mom = [
-        "CAST(count(*) AS DOUBLE) AS n",
-        f"CAST(sum(CAST(floor(value * {q}) AS BIGINT)) AS DOUBLE)"
-        f" / {q} AS sy",
-    ]
-    for j in ("1", "2", "3"):
-        mom.append(f"CAST(sum({xs[j]}) AS DOUBLE) AS s{j}")
-        mom.append(
-            f"CAST(sum(CAST(floor(CAST({xs[j]} AS DOUBLE) * value * {q}) "
-            f"AS BIGINT)) AS DOUBLE) / {q} AS sy{j}"
-        )
-        for k in ("1", "2", "3"):
-            if k >= j:
-                mom.append(
-                    f"CAST(sum({xs[j]} * {xs[k]}) AS DOUBLE) AS s{j}{k}"
-                )
-    bcols = ",\n        ".join(
-        f"{num} / {den} AS b{i}" for i, num in enumerate(nums)
-    )
-    moms = ",\n           ".join(mom)
+def _ols_oracle(design: list, where: str) -> str:
+    """The oracle of an :func:`_ols_row`: the moment CTE mirrors the
+    Spark aggregation, the elimination CTEs state
+    learn.ols_fit_gauss's fixed schedule verbatim."""
+    feats = ", ".join(f"{sql} AS {alias}" for _, alias, _, sql in design)
     return f"""
 WITH feats AS (
-    SELECT hour(ts) AS h, dayofweek(ts) + 1 AS dw, day(ts) AS dom, value
+    SELECT {feats}, value
     FROM events
-    WHERE value IS NOT NULL AND ts IS NOT NULL
+    WHERE {where}
 ),
 mom AS (
-    SELECT {moms}
+    SELECT {_wide_ols_moments_sql([alias for _, alias, _, _ in design])}
     FROM feats
 ),
-solved AS (
-    SELECT {bcols}
-    FROM mom
-)
-SELECT 'intercept' AS term, round(b0, 6) AS coef FROM solved
-UNION ALL SELECT 'hour', round(b1, 6) FROM solved
-UNION ALL SELECT 'dow', round(b2, 6) FROM solved
-UNION ALL SELECT 'dom', round(b3, 6) FROM solved
+{_gauss_solve_ctes(len(design))}
+{_wide_ols_term_selects(["intercept"] + [term for term, *_ in design])}
 """
-
-
-def event_value_ols_5feat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``value ~ hour + dow + day-of-month + minute + second`` — the
-    d=5 instance that lifts the Cramer solver's d ≤ 4 boundary (r11
-    verdict optional task 8): 27 map-side-combinable moments in one
-    scan, then a FIXED-PIVOT Gauss–Jordan elimination of the 6×6
-    normal equations on the driver
-    (operators/learn.py::ols_fit_gauss), whose per-step update
-    expressions the oracle states verbatim as one CTE per pivot —
-    Python and DuckDB walk bit-identical IEEE trajectories, so the
-    whole wide fit, elimination included, sits under the hash gate."""
-    from data_pipelines_using_llm_spark.operators import learn as LN
-
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull() & F.col("ts").isNotNull()
-    )
-    feats = ev.select(
-        F.hour("ts").alias("h"),
-        F.dayofweek("ts").alias("dw"),
-        F.dayofmonth("ts").alias("dom"),
-        F.minute("ts").alias("mi"),
-        F.second("ts").alias("ss"),
-        "value",
-    )
-    b = LN.ols_fit_gauss(feats, ["h", "dw", "dom", "mi", "ss"], "value")
-    terms = ["intercept", "hour", "dow", "dom", "minute", "second"]
-    return spark.createDataFrame(
-        list(zip(terms, b)), "term string, coef double"
-    ).select("term", F.round("coef", 6).alias("coef"))
-
-
-def event_value_ols_9feat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``value ~ 9 features`` — the d=9 instance at the lifted
-    :data:`LN.GAUSS_MAX_D` boundary (r12 verdict optional task 8):
-    five calendar features (hour/dow/day-of-month/minute/second), the
-    ISO week (a STEP function of day-of-month in the single-month
-    corpus — linearly independent, unlike month/quarter/day-of-year
-    which are constant or exactly collinear there), and three
-    entity-derived integers (user_id, user_id % 7 — independent of
-    user_id because the 0..14 range wraps — and the event-type string
-    length).  77 map-side-combinable moments in ONE scan, then the
-    10×10 fixed-pivot Gauss–Jordan on the driver; the oracle states
-    the same moments and the same elimination schedule
-    (one CTE per pivot), so the full d=9 trajectory hash-gates
-    cross-engine.  d=10+ is the documented vector-fold boundary
-    (operators/learn.py::GAUSS_MAX_D)."""
-    from data_pipelines_using_llm_spark.operators import learn as LN
-
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull()
-        & F.col("ts").isNotNull()
-        & F.col("user_id").isNotNull()
-        & F.col("event_type").isNotNull()
-    )
-    feats = ev.select(
-        F.hour("ts").alias("h"),
-        F.dayofweek("ts").alias("dw"),
-        F.dayofmonth("ts").alias("dom"),
-        F.minute("ts").alias("mi"),
-        F.second("ts").alias("ss"),
-        F.weekofyear("ts").alias("wk"),
-        F.col("user_id").alias("uid"),
-        (F.col("user_id") % 7).alias("u7"),
-        F.length("event_type").alias("tl"),
-        "value",
-    )
-    cols = ["h", "dw", "dom", "mi", "ss", "wk", "uid", "u7", "tl"]
-    b = LN.ols_fit_gauss(feats, cols, "value")
-    terms = [
-        "intercept", "hour", "dow", "dom", "minute", "second",
-        "week", "user_id", "user_mod7", "type_len",
-    ]
-    return spark.createDataFrame(
-        list(zip(terms, b)), "term string, coef double"
-    ).select("term", F.round("coef", 6).alias("coef"))
 
 
 def _gauss_solve_ctes(d: int) -> str:
@@ -2024,19 +1899,14 @@ def _gauss_solve_ctes(d: int) -> str:
     pre-step-values semantics the Python loops implement (f = a_ik/a_kk
     is a division of identical doubles, so recomputing it per j yields
     the same bits as Python's hoisted factor)."""
-    from data_pipelines_using_llm_spark.operators.learn import (
-        _gram_name,
-        _ymom_name,
-    )
-
     n1 = d + 1
     g0 = ",\n           ".join(
         [
-            f"{_gram_name(i, j)} AS a{i}_{j}"
+            f"{LN._gram_name(i, j)} AS a{i}_{j}"
             for i in range(n1)
             for j in range(n1)
         ]
-        + [f"{_ymom_name(i)} AS y{i}" for i in range(n1)]
+        + [f"{LN._ymom_name(i)} AS y{i}" for i in range(n1)]
     )
     ctes = [f"g0 AS (\n    SELECT {g0}\n    FROM mom\n)"]
     prev = "g0"
@@ -2062,26 +1932,25 @@ def _gauss_solve_ctes(d: int) -> str:
     return ",\n".join(ctes)
 
 
-def _wide_ols_moments_sql(xs: dict[int, str]) -> str:
-    """The one-pass moment SELECT body shared by every wide-OLS oracle:
-    exact int64 X^T X entries, quantized order-free X^T y — the SQL
-    statement of operators/learn.py::_ols_moments over feature aliases
-    ``xs[1..d]``."""
-    q = _OLS_Q_SQL
-    d = len(xs)
+def _wide_ols_moments_sql(xs: list[str]) -> str:
+    """The one-pass moment SELECT body of :func:`_ols_oracle`: exact
+    int64 X^T X entries, quantized order-free X^T y — the SQL statement
+    of operators/learn.py::_ols_moments over the feature aliases
+    ``xs``."""
+    q = repr(LN.OLS_Q)
     mom = [
         "CAST(count(*) AS DOUBLE) AS n",
         f"CAST(sum(CAST(floor(value * {q}) AS BIGINT)) AS DOUBLE)"
         f" / {q} AS sy",
     ]
-    for j in range(1, d + 1):
-        mom.append(f"CAST(sum({xs[j]}) AS DOUBLE) AS s{j}")
+    for j, xj in enumerate(xs, 1):
+        mom.append(f"CAST(sum({xj}) AS DOUBLE) AS s{j}")
         mom.append(
-            f"CAST(sum(CAST(floor(CAST({xs[j]} AS DOUBLE) * value * {q}) "
+            f"CAST(sum(CAST(floor(CAST({xj} AS DOUBLE) * value * {q}) "
             f"AS BIGINT)) AS DOUBLE) / {q} AS sy{j}"
         )
-        for k in range(j, d + 1):
-            mom.append(f"CAST(sum({xs[j]} * {xs[k]}) AS DOUBLE) AS s{j}{k}")
+        for k, xk in enumerate(xs[j - 1:], j):
+            mom.append(f"CAST(sum({xj} * {xk}) AS DOUBLE) AS s{j}{k}")
     return ",\n           ".join(mom)
 
 
@@ -2094,92 +1963,15 @@ def _wide_ols_term_selects(terms: list[str]) -> str:
     )
 
 
-def _event_value_ols_5feat_oracle() -> str:
-    """The d=5 wide-OLS oracle: the moment CTE mirrors the Spark
-    aggregation (exact int64 X^T X, quantized X^T y), the elimination
-    CTEs state learn.ols_fit_gauss's fixed schedule verbatim."""
-    xs = {1: "h", 2: "dw", 3: "dom", 4: "mi", 5: "ss"}
-    terms = ["intercept", "hour", "dow", "dom", "minute", "second"]
-    return f"""
-WITH feats AS (
-    SELECT hour(ts) AS h, dayofweek(ts) + 1 AS dw, day(ts) AS dom,
-           minute(ts) AS mi, CAST(date_part('second', ts) AS BIGINT) AS ss,
-           value
-    FROM events
-    WHERE value IS NOT NULL AND ts IS NOT NULL
-),
-mom AS (
-    SELECT {_wide_ols_moments_sql(xs)}
-    FROM feats
-),
-{_gauss_solve_ctes(5)}
-{_wide_ols_term_selects(terms)}
-"""
-
-
-def _event_value_ols_9feat_oracle() -> str:
-    """The d=9 wide-OLS oracle at the lifted GAUSS_MAX_D boundary: the
-    same generated moment body and per-pivot elimination CTEs as the
-    d=5 row, over the 9-feature design (calendar + ISO week +
-    entity-derived integers).  dayofweek is offset +1 to Spark's
-    1=Sunday convention; weekofyear is ISO in both engines."""
-    xs = {
-        1: "h", 2: "dw", 3: "dom", 4: "mi", 5: "ss",
-        6: "wk", 7: "uid", 8: "u7", 9: "tl",
-    }
-    terms = [
-        "intercept", "hour", "dow", "dom", "minute", "second",
-        "week", "user_id", "user_mod7", "type_len",
-    ]
-    return f"""
-WITH feats AS (
-    SELECT hour(ts) AS h, dayofweek(ts) + 1 AS dw, day(ts) AS dom,
-           minute(ts) AS mi, CAST(date_part('second', ts) AS BIGINT) AS ss,
-           weekofyear(ts) AS wk, user_id AS uid, user_id % 7 AS u7,
-           length(event_type) AS tl,
-           value
-    FROM events
-    WHERE value IS NOT NULL AND ts IS NOT NULL
-      AND user_id IS NOT NULL AND event_type IS NOT NULL
-),
-mom AS (
-    SELECT {_wide_ols_moments_sql(xs)}
-    FROM feats
-),
-{_gauss_solve_ctes(9)}
-{_wide_ols_term_selects(terms)}
-"""
-
-
 QUERIES: dict[str, QuerySpec] = {
-    "event_value_ols_trend": QuerySpec(
-        event_value_ols_trend,
-        EVENT_VALUE_OLS_ORACLE,
-        "multiple regression value ~ hour + dow: one-pass normal-equation "
-        "moments + Cramer solve, fit hash-gated end to end",
-    ),
-    "event_value_ols_3feat": QuerySpec(
-        event_value_ols_3feat,
-        _event_value_ols_3feat_oracle(),
-        "multiple regression value ~ hour + dow + day-of-month: the d=3 "
-        "generalized one-pass OLS, generated 4x4 Cramer solve shared "
-        "verbatim between driver and oracle",
-    ),
-    "event_value_ols_5feat": QuerySpec(
-        event_value_ols_5feat,
-        _event_value_ols_5feat_oracle(),
-        "wide regression value ~ hour + dow + dom + minute + second: "
-        "d=5 past the Cramer boundary via fixed-pivot Gauss-Jordan, "
-        "one oracle CTE per pivot stating the identical update tree",
-    ),
-    "event_value_ols_9feat": QuerySpec(
-        event_value_ols_9feat,
-        _event_value_ols_9feat_oracle(),
-        "wide regression over 9 features (calendar + ISO week + "
-        "entity-derived integers) at the lifted GAUSS_MAX_D boundary: "
-        "77 one-pass moments, 10x10 fixed-pivot elimination, "
-        "bit-identical trajectories both engines",
-    ),
+    **{
+        name: QuerySpec(
+            partial(_ols_row, design=design, where=where),
+            _ols_oracle(design, where),
+            doc,
+        )
+        for name, (design, where, doc) in _OLS_ROWS.items()
+    },
     "value_hour_correlation": QuerySpec(
         value_hour_correlation,
         VALUE_HOUR_CORRELATION_ORACLE,

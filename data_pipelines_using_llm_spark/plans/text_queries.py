@@ -199,12 +199,13 @@ def doc_lang_classifier_distilled(
     identical CLF_STEPS-step CTE chain).  Output: per-document student
     score, student verdict, teacher verdict."""
     from data_pipelines_using_llm_spark.operators import learn as LN
+    from data_pipelines_using_llm_spark.operators.caching import cut
 
     # materialize features ONCE (eager checkpoint): the regex-heavy
     # tokenization must not re-run on every GD pass — training then
     # costs 12 cheap numeric aggregations over the numeric frame, the
     # standard featurize-then-iterate split (measured 11.5 s → ~2 s)
-    feats = _clf_features(spark, sf_dir).localCheckpoint(eager=True)
+    feats = cut(_clf_features(spark, sf_dir))
     w = LN.linear_classifier_train(
         feats, CLF_FEATURES, "y", steps=CLF_STEPS, lr=CLF_LR,
         checkpoint_input=False,  # feats IS the barrier — reused for scoring

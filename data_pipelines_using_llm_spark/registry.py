@@ -149,6 +149,10 @@ _REVERIFY: frozenset[str] = frozenset(
         "supplier_pagerank", "money_flow_pagerank", "ring_pagerank_converged",
         "trade_k_core", "trade_k_core_converged", "chain_k_core_converged",
         "dedup_components", "dedup_survivors",
+        # rows fit by the one OLS solver, operators/learn.py::ols_fit_gauss,
+        # with the oracle generated by plans/statistics.py::_ols_oracle
+        "event_value_ols_trend", "event_value_ols_3feat",
+        "event_value_ols_5feat", "event_value_ols_9feat",
     }
 )
 

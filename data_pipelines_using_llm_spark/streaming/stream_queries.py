@@ -662,10 +662,11 @@ def run_stream_knn(
     artifact (sinks/versioned.py) makes the re-resolution safe: a batch
     reads the version that was live when it started, never a half
     index.  The POINTER read is the only per-batch filesystem touch:
-    loaded parts are ``localCheckpoint``-cached PER VERSION, so at
+    loaded parts are cut (``caching.cut``) PER VERSION, so at
     100 TB a daily swap re-reads the O(corpus) per-vector parts once
-    per NEW version, not once per micro-batch (cached blocks live for
-    the stream's lifetime, bounded by the number of swaps; a rollback
+    per NEW version, not once per micro-batch (the cut blocks live
+    until the next ``release_barriers``, bounded by the number of
+    swaps; a rollback
     to an already-served version reuses its cached parts — snapshots
     are immutable, so the cache can never go stale).
     The serve dispatch is ENCODING-AWARE (r13): each new version's
@@ -688,6 +689,7 @@ def run_stream_knn(
     do, under BOTH encoding regimes, so a mid-stream index swap cannot
     leak a foreign-tenant row."""
     from data_pipelines_using_llm_spark.operators import similarity as SIM
+    from data_pipelines_using_llm_spark.operators.caching import cut
     from data_pipelines_using_llm_spark.plans.similarity_queries import (
         IVF_KMEANS_NPROBE,
         K,
@@ -713,7 +715,7 @@ def run_stream_knn(
         if cached is None:
             cached = (
                 tuple(
-                    part.localCheckpoint(eager=True)
+                    cut(part)
                     for part in ann_index_load(
                         spark, table_dir, version=live
                     )

@@ -408,116 +408,6 @@ def test_linear_classifier_separates_crafted_labels(spark):
     assert all((r["p"] >= 0.5) == (r["y"] == 1.0) for r in scored), scored
 
 
-def test_ols_one_pass_matches_numpy_lstsq(spark):
-    """The one-pass normal-equation fit must agree with numpy's lstsq
-    on the real events regression to 6dp — the closed-form solve is
-    exact, the quantized label moments cost < 2^-24 per term."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from data_pipelines_using_llm_spark.operators import learn as LN
-    from data_pipelines_using_llm_spark.sources.tables import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.01", "events").filter(
-        F.col("value").isNotNull() & F.col("ts").isNotNull()
-    )
-    feats = ev.select(
-        F.hour("ts").alias("h"), F.dayofweek("ts").alias("dw"), "value"
-    )
-    b = LN.ols_fit_one_pass(feats, ["h", "dw"], "value")
-    rows = feats.collect()
-    X = np.array([[1.0, r["h"], r["dw"]] for r in rows])
-    y = np.array([r["value"] for r in rows])
-    ref, *_ = np.linalg.lstsq(X, y, rcond=None)
-    assert np.allclose(b, ref, atol=1e-5), (b, ref)
-
-
-def test_ols_one_pass_guards(spark):
-    import pytest as _pt
-
-    from data_pipelines_using_llm_spark.operators import learn as LN
-
-    df = spark.createDataFrame(
-        [(1, 2, 1.0), (2, 4, 2.0), (3, 6, 3.0)],
-        "a long, b long, y double",
-    )
-    with _pt.raises(ValueError, match="1 <= d <= 4"):
-        LN.ols_fit_one_pass(df, ["a", "b", "a", "b", "a"], "y")
-    with _pt.raises(ValueError, match="singular"):
-        LN.ols_fit_one_pass(df, ["a", "b"], "y")  # b = 2a, collinear
-    empty = df.filter("a < 0")
-    with _pt.raises(ValueError, match="empty"):
-        LN.ols_fit_one_pass(empty, ["a", "b"], "y")
-    # d=1 is now a valid width: simple regression y = x/1 exactly
-    b0, b1 = LN.ols_fit_one_pass(
-        spark.createDataFrame(
-            [(1, 1.0), (2, 2.0), (3, 3.5)], "a long, y double"
-        ),
-        ["a"],
-        "y",
-    )
-    assert abs(b1 - 1.25) < 1e-6 and abs(b0 + 0.3333333) < 1e-6
-
-
-def test_ols_one_pass_input_contract_guards(spark):
-    """r10 ADVICE: NULL feature/label rows and non-integer feature
-    dtypes must raise loudly (count(*) vs sum() moment skew; silent
-    cast truncation), and the exact-int64 headroom is enforced from the
-    same pass's max(|x|)."""
-    import pytest as _pt
-
-    from data_pipelines_using_llm_spark.operators import learn as LN
-
-    nullly = spark.createDataFrame(
-        [(1, 2, 1.0), (None, 4, 2.0), (3, None, 3.0), (4, 5, None)],
-        "a long, b long, y double",
-    )
-    with _pt.raises(ValueError, match="NULL features"):
-        LN.ols_fit_one_pass(nullly, ["a", "b"], "y")
-    frac = spark.createDataFrame(
-        [(1.5, 2, 1.0), (2.5, 4, 2.0)], "a double, b long, y double"
-    )
-    with _pt.raises(ValueError, match="integer-typed"):
-        LN.ols_fit_one_pass(frac, ["a", "b"], "y")
-    # n·max|x|² just past 2^62 while every moment still fits int64
-    # (Σa² ≈ 2^62 < 2^63): the guard, not an engine overflow, must fire.
-    # Outright in-flight overflows are loud too (Spark ANSI), but this
-    # window is where exactness would silently erode without the guard.
-    huge = spark.createDataFrame(
-        [(1 << 30, 1, 1.0), ((1 << 30) + 1, 2, 2.0),
-         ((1 << 30) + 2, 4, 3.0), ((1 << 30) + 7, 5, 4.0)],
-        "a long, b long, y double",
-    )
-    with _pt.raises(ValueError, match="headroom"):
-        LN.ols_fit_one_pass(huge, ["a", "b"], "y")
-
-
-def test_ols_one_pass_d3_matches_numpy_lstsq(spark):
-    """The generalized d=3 fit (4x4 generated Cramer solve) must agree
-    with numpy lstsq on the real events regression."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from data_pipelines_using_llm_spark.operators import learn as LN
-    from data_pipelines_using_llm_spark.sources.tables import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.01", "events").filter(
-        F.col("value").isNotNull() & F.col("ts").isNotNull()
-    )
-    feats = ev.select(
-        F.hour("ts").alias("h"),
-        F.dayofweek("ts").alias("dw"),
-        F.dayofmonth("ts").alias("dom"),
-        "value",
-    )
-    b = LN.ols_fit_one_pass(feats, ["h", "dw", "dom"], "value")
-    rows = feats.collect()
-    X = np.array([[1.0, r["h"], r["dw"], r["dom"]] for r in rows])
-    y = np.array([r["value"] for r in rows])
-    ref, *_ = np.linalg.lstsq(X, y, rcond=None)
-    assert np.allclose(b, ref, atol=1e-5), (b, ref)
-
-
 def test_linear_classifier_releases_its_input_persist(spark):
     """r11 ADVICE: the trainer's default input materialization must be
     RELEASED after the final gradient step — repeated trainings in one
@@ -540,32 +430,15 @@ def test_linear_classifier_releases_its_input_persist(spark):
     assert not leaked, leaked
 
 
-def test_cramer_exprs_stay_inside_the_eval_whitelist():
-    """r11 ADVICE: every generated Cramer expression must match the
-    [a-z0-9*+()-] token whitelist the solver enforces before eval — and
-    the whitelist must actually reject code-shaped strings."""
-    from data_pipelines_using_llm_spark.operators import learn as LN
-
-    for d in range(1, 5):
-        den, nums = LN.cramer_exprs(d)
-        for e in (den, *nums):
-            assert LN._CRAMER_TOKEN_RE.fullmatch(e), e
-    for bad in (
-        "__import__('os').system('rm -rf /')",
-        "n.s1",
-        "s1[0]",
-        "n ",
-        "lambda: 1",
-        "A*b",
-    ):
-        assert not LN._CRAMER_TOKEN_RE.fullmatch(bad), bad
-
-
 def test_ols_gauss_agrees_with_numpy_and_caps(spark):
-    """The d=5 fixed-pivot Gauss-Jordan fit must agree with numpy lstsq
-    (the elimination is exact algebra over the same moments), reject
-    collinear designs via the zero-pivot guard, and enforce the shared
-    input contracts (integer dtypes) like the Cramer path."""
+    """The fixed-pivot Gauss-Jordan fit must agree with numpy lstsq on
+    the real events regression at d = 2, 3 and 5 (the elimination is
+    exact algebra over the same moments; the quantized label moments
+    cost < 2^-24 per term) and fit a d=1 line exactly.  It must reject
+    a collinear design via the pivot guard, d past GAUSS_MAX_D, and
+    every input whose moments would silently skew (r10 ADVICE): an
+    empty input, NULL features or label, a fractional feature dtype
+    and a design past the exact-int64 headroom."""
     import numpy as np
     import pytest as _pt
     from pyspark.sql import functions as F
@@ -584,23 +457,51 @@ def test_ols_gauss_agrees_with_numpy_and_caps(spark):
         F.second("ts").alias("ss"),
         "value",
     )
-    cols = ["h", "dw", "dom", "mi", "ss"]
-    b = LN.ols_fit_gauss(feats, cols, "value")
     rows = feats.collect()
-    X = np.array([[1.0] + [float(r[c]) for c in cols] for r in rows])
     y = np.array([r["value"] for r in rows])
-    ref, *_ = np.linalg.lstsq(X, y, rcond=None)
-    assert np.allclose(b, ref, atol=1e-5), (b, ref)
+    for d in (2, 3, 5):
+        cols = ["h", "dw", "dom", "mi", "ss"][:d]
+        b = LN.ols_fit_gauss(feats, cols, "value")
+        X = np.array([[1.0] + [float(r[c]) for c in cols] for r in rows])
+        ref, *_ = np.linalg.lstsq(X, y, rcond=None)
+        assert np.allclose(b, ref, atol=1e-5), (d, b, ref)
+    b0, b1 = LN.ols_fit_gauss(
+        spark.createDataFrame(
+            [(1, 1.0), (2, 2.0), (3, 3.5)], "a long, y double"
+        ),
+        ["a"],
+        "y",
+    )
+    assert abs(b1 - 1.25) < 1e-6 and abs(b0 + 0.3333333) < 1e-6
     df = spark.createDataFrame(
         [(1, 2, 1.0), (2, 4, 2.0), (3, 6, 3.0)], "a long, b long, y double"
     )
-    with _pt.raises(ValueError, match="pivot|collinear"):
-        LN.ols_fit_gauss(df, ["a", "b"], "y")  # b = 2a
-    with _pt.raises(ValueError, match="1 <= d"):
-        LN.ols_fit_gauss(df, ["a"] * 10, "y")  # past GAUSS_MAX_D = 9
-    fr = spark.createDataFrame([(1.5, 1.0)], "a double, y double")
-    with _pt.raises(ValueError, match="integer-typed"):
-        LN.ols_fit_gauss(fr, ["a"], "y")
+    nullly = spark.createDataFrame(
+        [(1, 2, 1.0), (None, 4, 2.0), (3, None, 3.0), (4, 5, None)],
+        "a long, b long, y double",
+    )
+    frac = spark.createDataFrame(
+        [(1.5, 2, 1.0), (2.5, 4, 2.0)], "a double, b long, y double"
+    )
+    # n·max|x|² just past 2^62 while every moment still fits int64
+    # (Σa² ≈ 2^62 < 2^63): the guard, not an engine overflow, must fire.
+    # Outright in-flight overflows are loud too (Spark ANSI), but this
+    # window is where exactness would silently erode without the guard.
+    huge = spark.createDataFrame(
+        [(1 << 30, 1, 1.0), ((1 << 30) + 1, 2, 2.0),
+         ((1 << 30) + 2, 4, 3.0), ((1 << 30) + 7, 5, 4.0)],
+        "a long, b long, y double",
+    )
+    for frame, cols, match in [
+        (df, ["a", "b"], "pivot|collinear"),  # b = 2a
+        (df, ["a"] * 10, "1 <= d"),  # past GAUSS_MAX_D = 9
+        (df.filter("a < 0"), ["a", "b"], "empty"),
+        (nullly, ["a", "b"], "NULL features"),
+        (frac, ["a", "b"], "integer-typed"),
+        (huge, ["a", "b"], "headroom"),
+    ]:
+        with _pt.raises(ValueError, match=match):
+            LN.ols_fit_gauss(frame, cols, "y")
 
 
 def test_ols_gauss_rejects_nearly_collinear_design(spark):
@@ -682,3 +583,43 @@ def test_ols_gauss_pivot_gate_is_per_column(spark):
     )
     with _pt.raises(ValueError, match="near-zero pivot"):
         LN.ols_fit_gauss(dup, ["a", "c", "b"], "y")
+
+
+# The rows each OLS oracle gave at sf0.001 before the four rows shared
+# one generated Gauss-Jordan oracle (the trend and 3-feature rows were
+# then solved by Cramer's rule).
+_PINNED_OLS_ROWS = {
+    "event_value_ols_trend": [
+        ("intercept", 53.234793), ("hour", -0.284344), ("dow", 0.025139),
+    ],
+    "event_value_ols_3feat": [
+        ("intercept", 55.818481), ("hour", -0.291049), ("dow", -0.022174),
+        ("dom", -0.154503),
+    ],
+    "event_value_ols_5feat": [
+        ("intercept", 52.784711), ("hour", -0.295959), ("dow", 0.025812),
+        ("dom", -0.154888), ("minute", -0.03332), ("second", 0.128896),
+    ],
+    "event_value_ols_9feat": [
+        ("intercept", 44.368931), ("hour", -0.291937), ("dow", 0.307469),
+        ("dom", -1.103093), ("minute", -0.023151), ("second", 0.124566),
+        ("week", 6.737256), ("user_id", -0.09505), ("user_mod7", 0.551051),
+        ("type_len", 0.543541),
+    ],
+}
+
+
+def test_ols_rows_match_parent_values():
+    """The oracles alone, no Spark: test_oracle.py compares Spark with
+    each oracle, so an edit to the shared moment or elimination SQL that
+    moved both sides together would pass there.  Here every generated
+    oracle must still give the rows the earlier oracles gave."""
+    from data_pipelines_using_llm_spark.plans.statistics import QUERIES
+    from tests.oracle_check import duckdb_connection
+
+    con = duckdb_connection("/root/testdata/sf0.001")
+    for name, rows in _PINNED_OLS_ROWS.items():
+        pdf = con.sql(QUERIES[name].oracle).df()
+        assert list(pdf.columns) == ["term", "coef"], name
+        got = sorted(pdf.itertuples(index=False, name=None))
+        assert got == sorted(rows), name

@@ -4,6 +4,7 @@ as the regression signal."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_pipelines_using_llm_spark.telemetry import measure, run_row
@@ -71,3 +72,22 @@ def test_measure_counts_streaming_batches(spark, tmp_path):
     assert last_batch == 1  # one file per trigger: two batches
     assert c["jobs"] >= 2
     assert c["jobs"] > len(set(tracker.getJobIdsForGroup(None)) - before)
+
+
+@pytest.mark.parametrize(
+    "name", ["doc_lang_classifier_distilled", "user_value_ewma_chunked"]
+)
+def test_row_holds_no_blocks_after_run_row(spark, name):
+    """Both rows cut their intermediates through ``caching.cut``, so the
+    release at the end of ``run_row`` frees every block they stored:
+    the classifier's features and every weekly EWMA carry."""
+    from data_pipelines_using_llm_spark.operators.caching import (
+        release_barriers,
+    )
+    from data_pipelines_using_llm_spark.registry import all_queries
+
+    jsc = spark.sparkContext._jsc.sc()
+    release_barriers()
+    before = {r.id() for r in jsc.getRDDStorageInfo()}
+    run_row(spark, all_queries()[name].fn, "/root/testdata/sf0.001")
+    assert {r.id() for r in jsc.getRDDStorageInfo()} - before == set()
