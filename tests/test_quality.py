@@ -430,15 +430,121 @@ def test_linear_classifier_releases_its_input_persist(spark):
     assert not leaked, leaked
 
 
+def test_ols_one_pass_matches_numpy_lstsq(spark):
+    """The one-pass normal-equation fit must agree with numpy's lstsq
+    on the real events regression to 6dp — the closed-form solve is
+    exact, the quantized label moments cost < 2^-24 per term."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from data_pipelines_using_llm_spark.operators import learn as LN
+    from data_pipelines_using_llm_spark.sources.tables import load_table
+
+    ev = load_table(spark, "/root/testdata/sf0.01", "events").filter(
+        F.col("value").isNotNull() & F.col("ts").isNotNull()
+    )
+    feats = ev.select(
+        F.hour("ts").alias("h"), F.dayofweek("ts").alias("dw"), "value"
+    )
+    b = LN.ols_fit_gauss(feats, ["h", "dw"], "value")
+    rows = feats.collect()
+    X = np.array([[1.0, r["h"], r["dw"]] for r in rows])
+    y = np.array([r["value"] for r in rows])
+    ref, *_ = np.linalg.lstsq(X, y, rcond=None)
+    assert np.allclose(b, ref, atol=1e-5), (b, ref)
+
+
+def test_ols_one_pass_guards(spark):
+    import pytest as _pt
+
+    from data_pipelines_using_llm_spark.operators import learn as LN
+
+    df = spark.createDataFrame(
+        [(1, 2, 1.0), (2, 4, 2.0), (3, 6, 3.0)],
+        "a long, b long, y double",
+    )
+    with _pt.raises(ValueError, match="1 <= d"):
+        LN.ols_fit_gauss(df, ["a", "b"] * 5, "y")  # past GAUSS_MAX_D = 9
+    with _pt.raises(ValueError, match="pivot|collinear"):
+        LN.ols_fit_gauss(df, ["a", "b"], "y")  # b = 2a, collinear
+    empty = df.filter("a < 0")
+    with _pt.raises(ValueError, match="empty"):
+        LN.ols_fit_gauss(empty, ["a", "b"], "y")
+    # d=1 simple regression: y = 1.25·a − 1/3 exactly
+    b0, b1 = LN.ols_fit_gauss(
+        spark.createDataFrame(
+            [(1, 1.0), (2, 2.0), (3, 3.5)], "a long, y double"
+        ),
+        ["a"],
+        "y",
+    )
+    assert abs(b1 - 1.25) < 1e-6 and abs(b0 + 0.3333333) < 1e-6
+
+
+def test_ols_one_pass_input_contract_guards(spark):
+    """r10 ADVICE: NULL feature/label rows and non-integer feature
+    dtypes must raise loudly (count(*) vs sum() moment skew; silent
+    cast truncation), and the exact-int64 headroom is enforced from the
+    same pass's max(|x|)."""
+    import pytest as _pt
+
+    from data_pipelines_using_llm_spark.operators import learn as LN
+
+    nullly = spark.createDataFrame(
+        [(1, 2, 1.0), (None, 4, 2.0), (3, None, 3.0), (4, 5, None)],
+        "a long, b long, y double",
+    )
+    with _pt.raises(ValueError, match="NULL features"):
+        LN.ols_fit_gauss(nullly, ["a", "b"], "y")
+    frac = spark.createDataFrame(
+        [(1.5, 2, 1.0), (2.5, 4, 2.0)], "a double, b long, y double"
+    )
+    with _pt.raises(ValueError, match="integer-typed"):
+        LN.ols_fit_gauss(frac, ["a", "b"], "y")
+    # n·max|x|² just past 2^62 while every moment still fits int64
+    # (Σa² ≈ 2^62 < 2^63): the guard, not an engine overflow, must fire.
+    # Outright in-flight overflows are loud too (Spark ANSI), but this
+    # window is where exactness would silently erode without the guard.
+    huge = spark.createDataFrame(
+        [(1 << 30, 1, 1.0), ((1 << 30) + 1, 2, 2.0),
+         ((1 << 30) + 2, 4, 3.0), ((1 << 30) + 7, 5, 4.0)],
+        "a long, b long, y double",
+    )
+    with _pt.raises(ValueError, match="headroom"):
+        LN.ols_fit_gauss(huge, ["a", "b"], "y")
+
+
+def test_ols_one_pass_d3_matches_numpy_lstsq(spark):
+    """The d=3 fit must agree with numpy lstsq on the real events
+    regression."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from data_pipelines_using_llm_spark.operators import learn as LN
+    from data_pipelines_using_llm_spark.sources.tables import load_table
+
+    ev = load_table(spark, "/root/testdata/sf0.01", "events").filter(
+        F.col("value").isNotNull() & F.col("ts").isNotNull()
+    )
+    feats = ev.select(
+        F.hour("ts").alias("h"),
+        F.dayofweek("ts").alias("dw"),
+        F.dayofmonth("ts").alias("dom"),
+        "value",
+    )
+    b = LN.ols_fit_gauss(feats, ["h", "dw", "dom"], "value")
+    rows = feats.collect()
+    X = np.array([[1.0, r["h"], r["dw"], r["dom"]] for r in rows])
+    y = np.array([r["value"] for r in rows])
+    ref, *_ = np.linalg.lstsq(X, y, rcond=None)
+    assert np.allclose(b, ref, atol=1e-5), (b, ref)
+
+
 def test_ols_gauss_agrees_with_numpy_and_caps(spark):
-    """The fixed-pivot Gauss-Jordan fit must agree with numpy lstsq on
-    the real events regression at d = 2, 3 and 5 (the elimination is
-    exact algebra over the same moments; the quantized label moments
-    cost < 2^-24 per term) and fit a d=1 line exactly.  It must reject
-    a collinear design via the pivot guard, d past GAUSS_MAX_D, and
-    every input whose moments would silently skew (r10 ADVICE): an
-    empty input, NULL features or label, a fractional feature dtype
-    and a design past the exact-int64 headroom."""
+    """The d=5 fixed-pivot Gauss-Jordan fit must agree with numpy lstsq
+    (the elimination is exact algebra over the same moments), reject
+    collinear designs via the pivot guard, and enforce the input
+    contracts (integer dtypes)."""
     import numpy as np
     import pytest as _pt
     from pyspark.sql import functions as F
@@ -457,51 +563,23 @@ def test_ols_gauss_agrees_with_numpy_and_caps(spark):
         F.second("ts").alias("ss"),
         "value",
     )
+    cols = ["h", "dw", "dom", "mi", "ss"]
+    b = LN.ols_fit_gauss(feats, cols, "value")
     rows = feats.collect()
+    X = np.array([[1.0] + [float(r[c]) for c in cols] for r in rows])
     y = np.array([r["value"] for r in rows])
-    for d in (2, 3, 5):
-        cols = ["h", "dw", "dom", "mi", "ss"][:d]
-        b = LN.ols_fit_gauss(feats, cols, "value")
-        X = np.array([[1.0] + [float(r[c]) for c in cols] for r in rows])
-        ref, *_ = np.linalg.lstsq(X, y, rcond=None)
-        assert np.allclose(b, ref, atol=1e-5), (d, b, ref)
-    b0, b1 = LN.ols_fit_gauss(
-        spark.createDataFrame(
-            [(1, 1.0), (2, 2.0), (3, 3.5)], "a long, y double"
-        ),
-        ["a"],
-        "y",
-    )
-    assert abs(b1 - 1.25) < 1e-6 and abs(b0 + 0.3333333) < 1e-6
+    ref, *_ = np.linalg.lstsq(X, y, rcond=None)
+    assert np.allclose(b, ref, atol=1e-5), (b, ref)
     df = spark.createDataFrame(
         [(1, 2, 1.0), (2, 4, 2.0), (3, 6, 3.0)], "a long, b long, y double"
     )
-    nullly = spark.createDataFrame(
-        [(1, 2, 1.0), (None, 4, 2.0), (3, None, 3.0), (4, 5, None)],
-        "a long, b long, y double",
-    )
-    frac = spark.createDataFrame(
-        [(1.5, 2, 1.0), (2.5, 4, 2.0)], "a double, b long, y double"
-    )
-    # n·max|x|² just past 2^62 while every moment still fits int64
-    # (Σa² ≈ 2^62 < 2^63): the guard, not an engine overflow, must fire.
-    # Outright in-flight overflows are loud too (Spark ANSI), but this
-    # window is where exactness would silently erode without the guard.
-    huge = spark.createDataFrame(
-        [(1 << 30, 1, 1.0), ((1 << 30) + 1, 2, 2.0),
-         ((1 << 30) + 2, 4, 3.0), ((1 << 30) + 7, 5, 4.0)],
-        "a long, b long, y double",
-    )
-    for frame, cols, match in [
-        (df, ["a", "b"], "pivot|collinear"),  # b = 2a
-        (df, ["a"] * 10, "1 <= d"),  # past GAUSS_MAX_D = 9
-        (df.filter("a < 0"), ["a", "b"], "empty"),
-        (nullly, ["a", "b"], "NULL features"),
-        (frac, ["a", "b"], "integer-typed"),
-        (huge, ["a", "b"], "headroom"),
-    ]:
-        with _pt.raises(ValueError, match=match):
-            LN.ols_fit_gauss(frame, cols, "y")
+    with _pt.raises(ValueError, match="pivot|collinear"):
+        LN.ols_fit_gauss(df, ["a", "b"], "y")  # b = 2a
+    with _pt.raises(ValueError, match="1 <= d"):
+        LN.ols_fit_gauss(df, ["a"] * 10, "y")  # past GAUSS_MAX_D = 9
+    fr = spark.createDataFrame([(1.5, 1.0)], "a double, y double")
+    with _pt.raises(ValueError, match="integer-typed"):
+        LN.ols_fit_gauss(fr, ["a"], "y")
 
 
 def test_ols_gauss_rejects_nearly_collinear_design(spark):
