@@ -10,6 +10,14 @@ cached blocks and lean on LRU eviction.
 ``barrier(df)`` persists and registers the intermediate; ``cut(df)``
 materializes it as an eager ``localCheckpoint``, whose plan is a scan of
 the stored blocks (a lineage cut for iterative loops).
+``observed_cut(df, *probe)`` is a cut that also reads the named
+aggregate ``probe`` columns through ``DataFrame.observe``, in the job
+that materializes it, so a count or a sum over the cut costs no second
+job.  ``fixpoint(init, step, max_rounds, error)`` is the one round loop
+of the engine (PageRank to convergence, the k-core peel, connected
+components, the chunked EWMA carry): each round is one observed cut of
+``step(state)``, the round it supersedes is freed at once, and the loop
+stops at the first cut whose observation holds a true ``done``.
 ``release_barriers()`` frees everything registered so far.  Entry
 points that loop over queries (bench.py, scripts/drive_contract.py,
 tests) call ``release_barriers()`` after materializing each result; the
@@ -37,7 +45,7 @@ import shutil
 import tempfile
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 _TRACKED: list[DataFrame] = []
 _CUTS: list[DataFrame] = []
@@ -72,6 +80,53 @@ def free_cut(df: DataFrame) -> None:
 
 def _drop_blocks(df: DataFrame) -> None:
     df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def observed_cut(df: DataFrame, *probe) -> tuple[DataFrame, dict]:
+    """:func:`cut` of ``df`` and the values of the named aggregate
+    ``probe`` columns over its rows, read in the same job through
+    ``DataFrame.observe`` (``{}`` without a probe).  An empty cut
+    observes a count of 0 and a NULL (``None``) sum, so a probe
+    ``coalesce``s its sums."""
+    if not probe:
+        return cut(df), {}
+    obs = Observation()
+    return cut(df.observe(obs, *probe)), obs.get
+
+
+def fixpoint(
+    init: tuple[DataFrame, dict], step: Callable, max_rounds: int, error: str
+) -> tuple[DataFrame, int]:
+    """Iterate ``step`` from ``init`` until an observed ``done``.
+
+    ``init`` is a cut and its observation, as :func:`observed_cut`
+    returns them.  Round ``rnd`` (1, 2, ...) builds ``(plan, probe) =
+    step(state, seen, rnd)`` from the last round's cut and observation
+    and replaces ``state`` by ``observed_cut(plan, *probe)``, freeing
+    the superseded cut: one materialization per round, whose plan is a
+    scan of the previous one, so plan depth stays constant however many
+    rounds run.  The loop stops at the first cut, ``init`` included,
+    whose observation holds a true ``done`` column, and returns that
+    cut with the number of rounds run.  A round without a probe
+    observes nothing and never stops the loop.
+
+    If round ``max_rounds`` is not done, the last cut is freed and a
+    ``RuntimeError`` raised with the caller's ``error`` and the last
+    round's observation: a loop that has not converged fails loudly
+    instead of returning a truncated result.  Rounds stop early, so a
+    generous ``max_rounds`` only costs work when it is needed."""
+    state, seen = init
+    rnd = 0
+    while not seen.get("done"):
+        if rnd == max_rounds:
+            free_cut(state)
+            raise RuntimeError(f"{error}; the last round observed {seen}")
+        rnd += 1
+        plan, probe = step(state, seen, rnd)
+        nxt, seen = observed_cut(plan, *probe)
+        free_cut(state)
+        state = nxt
+    return state, rnd
 
 
 def release_barriers() -> int:

@@ -19,7 +19,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from data_pipelines_using_llm_spark.operators.caching import barrier, cut, free_cut
+from data_pipelines_using_llm_spark.operators.caching import (
+    barrier,
+    fixpoint,
+    observed_cut,
+)
 from data_pipelines_using_llm_spark.operators.text import HASH_MOD, char_hash, tokens
 
 # Fixed MinHash family h_i(x) = (a_i * x + b_i) mod HASH_MOD — constants from
@@ -490,14 +494,21 @@ def connected_components(
 
     ``iters`` is an UPPER BOUND, not a fixed cost: labels are per-vertex
     non-increasing, so ``sum(label)`` strictly decreases while anything
-    still changes — one cheap agg per round detects convergence and exits
-    early (near-dup clusters are tiny cliques/chains, so 2-3 real rounds).
-    Each round's labels are a :func:`caching.cut` — the new plan
+    still changes, and a round that keeps the sum changed nothing (near-dup
+    clusters are tiny cliques/chains, so 2-3 real rounds).  The loop is
+    :func:`caching.fixpoint`: each round's labels are one
+    :func:`caching.cut` that observes the sum, so the exit test starts
+    no job of its own.  The cut matters beyond the probe — the new plan
     references the old labels TWICE (via neighbor_min and via the left
     join), so without truncation the logical plan doubles per round and
     Catalyst analysis is O(2^iters).  The superseded round's cut is
     freed once the next one exists; the returned labels are the one cut
     left, freed by ``release_barriers``.
+
+    A last round that still changed labels may leave a component of
+    diameter > ``iters`` split, which would flow into dedup_survivors
+    as silently-kept duplicates, so it raises instead of returning a
+    latent wrong answer.
     """
     und = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -507,47 +518,37 @@ def connected_components(
         .distinct()
         .persist()
     )
-    labels = cut(
-        und.select(F.col("a").alias("v"))
-        .distinct()
-        .select("v", F.col("v").alias("label"))
-    )
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    converged = False
-    for _ in range(iters):
+    total = F.coalesce(F.sum("label"), F.lit(0))
+
+    def spread(labels, seen, _rnd):
         neighbor_min = (
             und.join(labels, und.b == labels.v)
             .groupBy("a")
             .agg(F.min("label").alias("nmin"))
         )
-        nxt = cut(
-            labels.join(neighbor_min, labels.v == neighbor_min.a, "left")
-            .select(
-                "v",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("label"),
-            )
+        nxt = labels.join(neighbor_min, labels.v == neighbor_min.a, "left").select(
+            "v",
+            F.least(
+                F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
+            ).alias("label"),
         )
-        free_cut(labels)
-        labels = nxt
-        new_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if new_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = new_sum
-    und.unpersist()
-    if not converged:
-        free_cut(labels)
-        # The final round still changed labels, so a component with
-        # diameter > iters may be split — that would flow into
-        # dedup_survivors as silently-kept duplicates.  Fail loudly
-        # instead of returning a latent wrong answer.
-        raise RuntimeError(
+        return nxt, [total.alias("s"), (total == seen["s"]).alias("done")]
+
+    try:
+        labels, _rounds = fixpoint(
+            observed_cut(
+                und.select(F.col("a").alias("v"))
+                .distinct()
+                .select("v", F.col("v").alias("label")),
+                total.alias("s"),
+            ),
+            spread,
+            iters,
             f"connected_components did not converge within iters={iters} "
-            "rounds (labels still changing); raise `iters` — rounds are "
-            "early-exit, so a generous bound only costs work when needed"
+            "rounds (labels still changing); raise `iters`",
         )
+    finally:
+        und.unpersist()
     return labels.select(F.col("v").alias("doc_id"), F.col("label").alias("component_id"))
 
 

@@ -30,8 +30,9 @@ from pyspark.sql import functions as F
 
 from data_pipelines_using_llm_spark.operators.caching import (
     barrier,
-    cut,
+    fixpoint,
     free_cut,
+    observed_cut,
 )
 
 DAMPING = 0.85
@@ -77,12 +78,12 @@ def pagerank(
     ranks stop summing to ~1.  The docstring contract is therefore
     enforced in code, selected by ``dangling``:
 
-    - ``"error"`` (default): one cheap control-plane aggregate (dst
-      anti-join src, count) raises ``ValueError`` if any vertex has
-      out-degree 0 — callers that guarantee out-degree >= 1 by
-      construction (e.g. both directions of an undirected graph, as
-      plans/graph_queries.py::supplier_pagerank does) pay one tiny job
-      and keep exact deterministic ranks.
+    - ``"error"`` (default): raises ``ValueError`` if any vertex has
+      out-degree 0, counted as ``|nodes| − |deg|`` from the setup cuts'
+      observations (no job of its own) — callers that guarantee
+      out-degree >= 1 by construction (e.g. both directions of an
+      undirected graph, as plans/graph_queries.py::supplier_pagerank
+      does) keep exact deterministic ranks.
     - ``"redistribute"``: per iteration, the rank mass sitting on
       dangling vertices is summed (one scalar broadcast, exact decimal
       so the oracle could mirror it) and redistributed uniformly — the
@@ -113,21 +114,23 @@ def _pagerank_setup(edges, src_col, dst_col, dangling):
     The corpus-sized edge list is persisted ONCE (the GraphX-style
     lineage cut — without the barrier each round re-runs the distinct
     shuffle from scratch), and the VERTEX-sized tables (deg, nodes) are
-    :func:`caching.cut` (r14): they are referenced by every iteration
-    AND by the dangling probe / n scalar, and a persist only caches
-    execution — the logical plan re-included their full derivation at
-    every reference, compounding to a 218 KB / 407-Exchange physical
-    plan for a 2-round PageRank (~2.9 s of driver analysis per run,
-    plans/r14/supplier_pagerank_before.txt).  Checkpointing the |V|-row
-    tables truncates them to plan leaves at vertex-table cost; the edge
-    list stays a persist, referenced linearly.
+    :func:`caching.cut` (r14): they are referenced by every iteration,
+    and a persist only caches execution — the logical plan re-included
+    their full derivation at every reference, compounding to a 218 KB /
+    407-Exchange physical plan for a 2-round PageRank (~2.9 s of driver
+    analysis per run, plans/r14/supplier_pagerank_before.txt).
+    Checkpointing the |V|-row tables truncates them to plan leaves at
+    vertex-table cost; the edge list stays a persist, referenced
+    linearly.
 
-    One aggregate over the sink set counts the dangling vertices and
-    detects a NULL endpoint (a NULL lands in ``nodes`` and, matching no
-    ``deg`` key, in ``sinks``).  In error mode it is the dangling probe
-    the mode needs anyway; redistribute mode pays it as one extra job.
+    The validation and the vertex count ride those two cuts as
+    observations (:func:`caching.observed_cut`), so they start no job of
+    their own.  A NULL endpoint lands in ``nodes`` and is counted there;
+    once none is present every ``deg`` key is a vertex, so the sinks
+    number ``|nodes| − |deg|``.  ``n = |nodes|`` enters every round as a
+    literal.
 
-    Returns ``((edges, deg, nodes, sinks, n_df), r0)``."""
+    Returns ``((edges, deg, nodes, sinks, n), r0)``."""
     if dangling not in ("error", "redistribute"):
         raise ValueError(f"dangling must be error|redistribute: {dangling!r}")
     edges = barrier(
@@ -135,39 +138,43 @@ def _pagerank_setup(edges, src_col, dst_col, dangling):
             F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
         ).distinct()
     )
-    deg = cut(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
-    nodes = cut(
+    count = F.count(F.lit(1)).alias("n")
+    deg, n_deg = observed_cut(
+        edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), count
+    )
+    nodes, seen = observed_cut(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
+        .distinct(),
+        count,
+        F.count(F.when(F.col("node").isNull(), 1)).alias("n_null"),
     )
-    sinks = nodes.join(
-        deg.withColumnRenamed("src", "node"), "node", "left_anti"
-    )
-    n_sinks, n_null = sinks.agg(
-        F.count(F.lit(1)), F.count(F.when(F.col("node").isNull(), 1))
-    ).collect()[0]
-    if n_null:
+    if seen["n_null"]:
         raise ValueError(
             f"pagerank: {src_col}/{dst_col} hold a NULL endpoint; a NULL "
             "is not a vertex — drop or fill those edges first"
         )
+    n_sinks = seen["n"] - n_deg["n"]
+    # an empty graph has no row to rank; 1 keeps the folded ``1/n`` finite
+    n = max(seen["n"], 1)
     if dangling == "error" and n_sinks:
         raise ValueError(
             f"pagerank: {n_sinks} dangling vertex(es) (out-degree "
             "0) would leak rank mass; add reverse edges or call with "
             "dangling='redistribute'"
         )
-    n_df = nodes.agg(F.count(F.lit(1)).alias("n"))
-    r0 = nodes.crossJoin(F.broadcast(n_df)).select(
-        "node", (F.lit(1.0) / F.col("n")).alias("r")
-    )
-    return (edges, deg, nodes, sinks, n_df), r0
+    sinks = nodes.join(deg.withColumnRenamed("src", "node"), "node", "left_anti")
+    r0 = nodes.select("node", (F.lit(1.0) / F.lit(n)).alias("r"))
+    return (edges, deg, nodes, sinks, n), r0
 
 
-def _pagerank_round(rank, graph, damping, dangling, salt):
+def _pagerank_round(rank, graph, damping, dangling, salt, carry_prev=False):
     """ONE damped PageRank round — the loop body shared verbatim by the
-    fixed-``iters`` mode and :func:`pagerank_converged`.
+    fixed-``iters`` mode and :func:`pagerank_converged`.  With
+    ``carry_prev`` the output also carries the input rank as ``r_prev``:
+    ``rank`` (one row per vertex, like ``nodes``) then stands in for
+    ``nodes`` as the vertex side of the fold's join, so the carry costs
+    no extra join.
 
     Pre-join the two VERTEX-sized tables (rank, degree) before
     touching the edge list: the corpus-sized join then happens
@@ -177,7 +184,7 @@ def _pagerank_round(rank, graph, damping, dangling, salt):
     partition into chunks (tests/test_graph.py hub-skew fixture).
     The old edges⋈rank⋈deg chain pinned src partitioning across
     two joins, which vetoed the split exactly where it mattered."""
-    edges, deg, nodes, sinks, n_df = graph
+    edges, deg, nodes, sinks, n = graph
     rd = rank.withColumnRenamed("node", "src").join(deg, "src")
     keys = ["src"]
     if salt:
@@ -196,9 +203,8 @@ def _pagerank_round(rank, graph, damping, dangling, salt):
     summed = contrib.groupBy("dst").agg(
         (_qsum(F.col("c")).cast("double") / F.lit(QUANT_SCALE)).alias("s")
     )
-    rank_in = nodes.join(
-        summed.withColumnRenamed("dst", "node"), "node", "left"
-    ).crossJoin(F.broadcast(n_df))
+    base = rank.select("node", F.col("r").alias("r_prev")) if carry_prev else nodes
+    rank_in = base.join(summed.withColumnRenamed("dst", "node"), "node", "left")
     mass = F.coalesce("s", F.lit(0.0))
     if dangling == "redistribute":
         # the same fixed-point sum on the leak scalar: exact,
@@ -210,10 +216,11 @@ def _pagerank_round(rank, graph, damping, dangling, salt):
             ).alias("leak")
         )
         rank_in = rank_in.crossJoin(F.broadcast(leak))
-        mass = mass + F.col("leak") / F.col("n")
+        mass = mass + F.col("leak") / F.lit(n)
     return rank_in.select(
         "node",
-        (F.lit(1 - damping) / F.col("n") + F.lit(damping) * mass).alias("r"),
+        (F.lit(1 - damping) / F.lit(n) + F.lit(damping) * mass).alias("r"),
+        *(["r_prev"] if carry_prev else []),
     )
 
 
@@ -233,21 +240,14 @@ def pagerank_converged(
     until the L1 rank delta ``Σ|r_t − r_{t−1}|`` drops to ``tol``, with
     a loud ``max_rounds`` guard instead of silent truncation.
 
-    ``probe_every`` amortizes the gate cost (r10 verdict: 17 rounds x
-    (checkpoint + probe) = ~34 driver-synchronous barriers to rank a
-    25-node fixture): the L1 delta is evaluated only every
-    ``probe_every``-th round (and at ``max_rounds``), so unprobed
-    rounds pay exactly one action — the per-round :func:`caching.cut`,
-    which MUST stay unconditional (measured both
-    ways: plan depth >1 between cuts re-inflates analysis enough to
-    cost more than the skipped probes save, and depth ~40 OOMs the
-    driver outright).  The exit stays deterministic: the loop exits at
-    the first PROBED round whose delta ≤ tol, a pure function of the
-    graph and ``probe_every`` (damped PageRank contracts in L1, so a
-    probed round past the true fixpoint still satisfies the
-    tolerance), at most ``probe_every − 1`` rounds past the true
-    fixpoint.  The returned round count is that probed round — the
-    unrolled-oracle depth that reproduces the returned ranks exactly.
+    The L1 delta is evaluated only every ``probe_every``-th round (and
+    at ``max_rounds``), so ``probe_every`` fixes which rounds may exit.
+    The exit stays
+    deterministic: the loop exits at the first PROBED round whose delta
+    ≤ tol, a pure function of the graph and ``probe_every`` (damped
+    PageRank contracts in L1, so a probed round past the true fixpoint
+    still satisfies the tolerance), at most ``probe_every − 1`` rounds
+    past the true fixpoint.
 
     Returns ``(rank, rounds)`` — rounds is how many damped rounds ran,
     i.e. the unrolled-oracle depth that reproduces these exact ranks
@@ -255,26 +255,22 @@ def pagerank_converged(
     the trade_k_core_converged discipline).
 
     Determinism of the EXIT, not just the ranks: under the quantized
-    fold the ranks are bit-identical cross-engine, and the
-    delta probe is the same fixed-point trick — one exact
-    order-independent int64 sum of ``floor(|Δr|·2^50)`` per round (a
-    scalar control-plane probe, not data movement) — so the round count
-    is a pure function of the graph, never of partitioning or
-    summation order.
+    fold the ranks are bit-identical cross-engine, and the delta is the
+    same fixed-point trick — one exact order-independent int64 sum of
+    ``floor(|Δr|·2^50)`` — so the round count is a pure function of the
+    graph, never of partitioning or summation order.
 
-    Lineage discipline — STRONGER than a persist barrier here: a
-    convergence loop can legitimately run dozens of rounds, and persist
-    caches data but leaves the LOGICAL plan growing round over round,
-    so Catalyst re-analyzes an ever-deeper tree each iteration and the
-    driver heap dies long before the data does (measured: OOM at
-    default heap near round ~40 on a 25-node fixture with per-round
-    persist; the knn_ivfpq train-lineage lesson).  Each round is
-    therefore a :func:`caching.cut` — constant plan depth, one
-    materialization per round (the delta probe needs the data anyway) —
-    and the round it supersedes is freed as soon as it is no longer
-    read.  On BOTH exits the setup's persisted edge list and its cuts
-    are freed (the k_core_with_rounds rule, r9 ADVICE): the returned
-    rank is its own checkpoint, the only cut this call leaves behind.
+    The loop is :func:`caching.fixpoint`: every round is one
+    :func:`caching.cut` (constant plan depth — per-round persist let
+    the logical plan grow until the driver heap died near round ~40 on
+    a 25-node fixture; cutting only every few rounds measured slower
+    than the cuts it skips), and nothing else.  A probed round carries
+    the previous rank as ``r_prev`` (:func:`_pagerank_round`), so the
+    delta is an observation on the round's own cut; unprobed rounds
+    keep the plain round's plan.  On BOTH exits the setup's persisted
+    edge list and its cuts are freed (the k_core_with_rounds rule, r9
+    ADVICE): the returned rank is a projection of its own checkpoint,
+    the only cut this call leaves behind.
     """
     if not 1 <= probe_every <= 4:
         raise ValueError(
@@ -282,42 +278,28 @@ def pagerank_converged(
             f"true fixpoint the exit can land): {probe_every}"
         )
     graph, r0 = _pagerank_setup(edges, src_col, dst_col, dangling)
-    edges, deg, nodes = graph[:3]
-
-    def _release_setup() -> None:
-        edges.unpersist(blocking=False)
-        free_cut(deg)
-        free_cut(nodes)
-
-    rank = cut(r0)
     tol_q = int(tol * QUANT_SCALE)
-    for rnd in range(1, max_rounds + 1):
-        nxt = cut(_pagerank_round(rank, graph, damping, dangling, salt))
+    dq = F.coalesce(_qsum(F.abs(F.col("r") - F.col("r_prev"))), F.lit(0))
+
+    def step(rank, _seen, rnd):
         probed = rnd % probe_every == 0 or rnd == max_rounds
-        if probed:
-            # exact L1 delta vs the previous round: one order-free
-            # scalar control-plane probe per probed round, so the
-            # convergence round is deterministic cross-engine
-            delta_q = nxt.join(
-                rank.select("node", F.col("r").alias("r_prev")), "node"
-            ).agg(
-                F.coalesce(
-                    _qsum(F.abs(F.col("r") - F.col("r_prev"))), F.lit(0)
-                ).alias("dq")
-            ).first()["dq"]
-        free_cut(rank)
-        rank = nxt
-        if probed and delta_q <= tol_q:
-            _release_setup()
-            return rank, rnd
-    _release_setup()
-    free_cut(rank)
-    raise RuntimeError(
-        f"pagerank_converged: L1 delta {delta_q / QUANT_SCALE:.3g} still "
-        f"above tol={tol} after max_rounds={max_rounds} damped rounds; "
-        "raise max_rounds or loosen tol — rounds are early-exit, so a "
-        "generous bound only costs work when needed"
-    )
+        nxt = _pagerank_round(rank, graph, damping, dangling, salt, probed)
+        return nxt, [dq.alias("dq"), (dq <= tol_q).alias("done")] if probed else []
+
+    try:
+        rank, rounds = fixpoint(
+            observed_cut(r0),
+            step,
+            max_rounds,
+            f"pagerank_converged: L1 delta (dq, in units of 2^-50) still "
+            f"above tol={tol} after max_rounds={max_rounds} damped rounds; "
+            "raise max_rounds or loosen tol",
+        )
+    finally:
+        graph[0].unpersist(blocking=False)
+        free_cut(graph[1])
+        free_cut(graph[2])
+    return rank.select("node", "r"), rounds
 
 
 def k_core(
@@ -361,72 +343,67 @@ def k_core_with_rounds(
 
     Convergence discipline (matches connected_components,
     operators/dedup.py): the peel is monotone — the edge set only
-    shrinks — so one scalar ``count()`` per round (a control-plane
-    probe, not data movement) detects the fixpoint exactly; rounds are
-    early-exit, and the loud ``max_rounds`` guard turns a
+    shrinks — so a round that keeps the edge count removed nothing.
+    The loop is :func:`caching.fixpoint`: each round is one
+    :func:`caching.cut` whose observed edge count is compared with the
+    previous round's, so the exit test starts no job of its own; rounds
+    are early-exit, and the loud ``max_rounds`` guard turns a
     never-converging loop into an error instead of silent truncation.
     Each round's plan is the unrolled query's plan verbatim: one
     map-side-combinable degree aggregation + two semi-joins.
 
-    Lineage discipline — a :func:`caching.cut` per round, NOT a
-    persist barrier (r10 measurement): each round references the
-    previous edge list three times (degree + two semi-join probes), and
-    persist only cuts EXECUTION — the logical plan still grows
-    3^rounds, so Catalyst re-ANALYZES an exponentially deeper tree each
-    round (measured: the 5-round fixture peel spent ~6 s/round on
-    analysis alone, 30 s warm for a 25-node graph; the same defect
-    class that OOMs pagerank_converged at depth ~40).  The checkpoint
-    truncates the plan to a scan per round, its materialization doubles
-    as the probe's input, each superseded round's cut is freed as soon
+    Lineage discipline — a cut per round, NOT a persist barrier (r10
+    measurement): each round references the previous edge list three
+    times (degree + two semi-join probes), and persist only cuts
+    EXECUTION — the logical plan still grows 3^rounds, so Catalyst
+    re-ANALYZES an exponentially deeper tree each round (measured: the
+    5-round fixture peel spent ~6 s/round on analysis alone, 30 s warm
+    for a 25-node graph).  Each superseded round's cut is freed as soon
     as the next one exists, and NOTHING this call persists outlives it
     (r9 ADVICE — no stranded executor storage on either exit path): the
     returned core is the one cut left, freed by ``release_barriers``.
 
     A NULL endpoint raises ``ValueError`` (the peel's semi-joins would
-    drop its edge silently); the initial edge count detects it.
+    drop its edge silently); the initial cut's observation counts it.
     """
-    cur = cut(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    n = F.count(F.lit(1))
+    cur, seen = observed_cut(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
+        n.alias("n"),
+        F.count(
+            F.when(F.col("src").isNull() | F.col("dst").isNull(), 1)
+        ).alias("n_null"),
     )
-    n_prev, n_null = cur.agg(
-        F.count(F.lit(1)),
-        F.count(F.when(F.col("src").isNull() | F.col("dst").isNull(), 1)),
-    ).collect()[0]
-    if n_null:
+    if seen["n_null"]:
         free_cut(cur)
         raise ValueError(
-            f"k_core: {n_null} edge(s) with a NULL {src_col}/{dst_col} "
-            "endpoint; a NULL is not a vertex — drop or fill them first"
+            f"k_core: {seen['n_null']} edge(s) with a NULL "
+            f"{src_col}/{dst_col} endpoint; a NULL is not a vertex — drop "
+            "or fill them first"
         )
-    for rnd in range(max_rounds):
-        nxt = cut(_peel_round(cur, k))
-        n = nxt.count()
-        free_cut(cur)
-        cur = nxt
-        if n == n_prev:
-            return (
-                cur.select(
-                    F.col("src").alias(src_col),
-                    F.col("dst").alias(dst_col),
-                ),
-                rnd,
-            )
-        n_prev = n
-    free_cut(cur)
-    raise RuntimeError(
-        f"k_core did not converge within max_rounds={max_rounds} (edge "
-        "set still shrinking); raise `max_rounds` — rounds are "
-        "early-exit, so a generous bound only costs work when needed"
+
+    def peel(cur, seen, _rnd):
+        return _peel_round(cur, k), [n.alias("n"), (n == seen["n"]).alias("done")]
+
+    core, rounds = fixpoint(
+        (cur, seen),
+        peel,
+        max_rounds,
+        f"k_core did not converge within max_rounds={max_rounds} (edge set "
+        "still shrinking); raise `max_rounds`",
     )
+    core = core.select(F.col("src").alias(src_col), F.col("dst").alias(dst_col))
+    # the last round removed nothing: the rounds before it shrank
+    return core, rounds - 1
 
 
 def _peel_round(cur: DataFrame, k: int) -> DataFrame:
     """ONE k-core peel round over a symmetric (src, dst) edge list: keep
     the edges whose endpoints both have degree >= k.  One
     map-side-combinable degree aggregation plus two semi-joins; the
-    caller cuts lineage between rounds (:func:`k_core_with_rounds` with
-    a :func:`caching.cut`, plans/graph_queries.py::trade_k_core with a
-    persist barrier)."""
+    caller cuts lineage between rounds (:func:`k_core_with_rounds`
+    through :func:`caching.fixpoint`, plans/graph_queries.py::trade_k_core
+    with a persist barrier)."""
     keep = (
         cur.groupBy("src")
         .agg(F.count(F.lit(1)).alias("deg"))

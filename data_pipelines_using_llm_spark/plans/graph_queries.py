@@ -394,11 +394,12 @@ def ring_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently degenerate, and the oracle unrolls exactly that many
     rounds.  The r10 verdict's gate-overhead item is closed from both
     ends: the denser fixture converges in 6 rounds instead of 17, and
-    the delta probe fires every 3rd round — 8 driver barriers (6
-    per-round lineage cuts + 2 probes; the cuts stay unconditional —
-    measured: letting plan depth grow between probes costs more than
-    it saves) vs the original 34, 12.1 → 4.8 s warm.  Output: per-node
-    rank normalized to graph-mean 1.0, like supplier_pagerank."""
+    the delta probe fires every 3rd round, 12.1 → 4.8 s warm.  The loop
+    is :func:`operators.caching.fixpoint`: 6 per-round lineage cuts and
+    nothing else, the two probed deltas being observations on their
+    rounds' cuts (46 jobs per ``run_row`` at sf0.001, from 73 when each
+    probe was a job of its own).  Output: per-node rank normalized to
+    graph-mean 1.0, like supplier_pagerank."""
     pr, rounds = pagerank_converged(
         _ring_graph_edges(spark, sf_dir),
         tol=RING_PR_TOL,
@@ -490,8 +491,9 @@ def trade_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected core — the standard "influential subnetwork" / fraud-ring
     peel.  Fixed-round unrolling keeps the oracle expressible as CTEs;
     the PRODUCTION fixpoint mode is :func:`operators.graph.k_core`
-    (peel-until-stable with a scalar edge-count probe per round and a
-    loud max_rounds guard — same per-round plan, tested equal to this
+    (peel-until-stable on :func:`operators.caching.fixpoint`, the edge
+    count observed on each round's cut, and a loud max_rounds guard —
+    same per-round plan, tested equal to this
     unrolled form on the fixture graph in tests/test_graph.py).
 
     Scale: each round is one degree aggregation (map-side combinable on
@@ -514,8 +516,9 @@ def trade_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def trade_k_core_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME k-core decomposition through the PRODUCTION fixpoint
-    path (:func:`operators.graph.k_core`: peel-until-stable, scalar
-    edge-count probe per round, loud max_rounds guard) — registered
+    path (:func:`operators.graph.k_core`: peel-until-stable on
+    :func:`operators.caching.fixpoint`, the edge count observed on each
+    round's cut, loud max_rounds guard) — registered
     under the hash gate against the UNROLLED oracle — valid exactly
     when the peel converges within the oracle's ``KCORE_ROUNDS`` depth,
     so that precondition is now CHECKED, not assumed (r9 ADVICE): if a

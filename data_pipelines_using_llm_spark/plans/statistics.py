@@ -225,24 +225,24 @@ def user_value_ewma_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`user_value_ewma` for keys whose full history cannot sit in
     one task (a power-user key with 10⁸ events OOMs the sorted fold).
 
-    Shape: split the timeline into week chunks (the chunk list is a
-    tiny control-plane collect bounded by the data's time span, same
-    discipline as PageRank's convergence probe), then fold the chunks in
-    order — each round is one grouped sort-fold over ONE chunk's events
-    joined full-outer with the carried state, so per-key task memory is
-    bounded by the key's activity within a single chunk, never its
-    lifetime.  The carry is cut (``caching.cut``, an eager
-    ``localCheckpoint``) per round (r13 verdict task 5 — the
-    graph-fixpoint lineage discipline, NOT a persist barrier: persist
-    caches blocks but leaves the logical plan nested, so a multi-year
-    corpus would stack one unanalyzed full-outer segment per week and
-    the final plan's analysis would grow with the calendar; the
-    checkpoint keeps plan depth CONSTANT — one chunk join over a
-    materialized carry, whatever the span, as asserted on a ~3-year
-    fixture in tests/test_graph.py::test_ewma_chunked_plan_depth_bounded).
-    Round N+1 therefore starts from materialized state instead of
-    re-deriving N rounds of lineage — exactly what streaming
-    ``transformWithState`` does incrementally, expressed as batch.
+    Shape: split the timeline into week chunks (the chunk list and its
+    event counts are a tiny control-plane collect bounded by the data's
+    time span), then fold the chunks in order — each round is one
+    grouped sort-fold over ONE chunk's events joined full-outer with the
+    carried state, so per-key task memory is bounded by the key's
+    activity within a single chunk, never its lifetime.  The rounds run
+    on :func:`caching.fixpoint`: the carry is one cut per round (r13
+    verdict task 5 — the graph-fixpoint lineage discipline, NOT a
+    persist barrier: persist caches blocks but leaves the logical plan
+    nested, so a multi-year corpus would stack one unanalyzed
+    full-outer segment per week and the final plan's analysis would
+    grow with the calendar; the checkpoint keeps plan depth CONSTANT —
+    one chunk join over a materialized carry, whatever the span, as
+    asserted on a ~3-year fixture in
+    tests/test_graph.py::test_ewma_chunked_plan_depth_bounded).  Each
+    cut observes how many events the carry has folded, and the loop is
+    done once that is every event: the last week, unless a fold lost or
+    repeated events, which raises.
 
     Bit-equality with the unchunked fold (same oracle, and asserted
     exactly in tests/test_graph.py): a left fold over a concatenation is
@@ -251,27 +251,33 @@ def user_value_ewma_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries (week of ts) respect the (ts, event_id) sort order, so
     the float operations happen in the identical sequence.
     """
-    from data_pipelines_using_llm_spark.operators.caching import cut, free_cut
+    from data_pipelines_using_llm_spark.operators.caching import (
+        fixpoint,
+        observed_cut,
+    )
 
     e = load_table(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull()
         & F.col("ts").isNotNull()
         & F.col("value").isNotNull()
     )
-    weeks = sorted(
-        r["w"]
-        for r in e.select(F.date_trunc("week", "ts").alias("w"))
-        .distinct()
-        .collect()
-    )
+    week = F.date_trunc("week", "ts")
+    chunks = sorted(tuple(r) for r in e.groupBy(week).count().collect())
+    if not chunks:  # no qualifying events at all
+        return spark.createDataFrame(
+            [], "user_id bigint, n_events int, ewma_value double"
+        )
+    n_total = sum(n for _w, n in chunks)
+    folded = F.coalesce(F.sum("n_ev"), F.lit(0))
+    probe = [folded.alias("n_ev"), (folded == n_total).alias("done")]
 
     step = lambda acc, s: (  # noqa: E731 — shared by both fold branches
         F.lit(EWMA_ALPHA) * s["value"] + F.lit(1 - EWMA_ALPHA) * acc
     )
-    carry: DataFrame | None = None
-    for w in weeks:
+
+    def fold(carry: DataFrame | None, w) -> DataFrame:
         arr = (
-            e.filter(F.date_trunc("week", "ts") == F.lit(w))
+            e.filter(week == F.lit(w))
             .groupBy("user_id")
             .agg(
                 F.array_sort(
@@ -279,52 +285,41 @@ def user_value_ewma_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("seq")
             )
         )
+        first = F.aggregate(
+            F.expr("slice(seq, 2, size(seq) - 1)"),
+            F.element_at(F.col("seq"), 1)["value"],
+            step,
+        )
         if carry is None:
-            folded = arr.select(
+            return arr.select(
                 "user_id",
                 F.size("seq").cast("long").alias("n_ev"),
-                F.aggregate(
-                    F.expr("slice(seq, 2, size(seq) - 1)"),
-                    F.element_at(F.col("seq"), 1)["value"],
-                    step,
-                ).alias("state"),
+                first.alias("state"),
             )
-        else:
-            j = arr.join(carry, "user_id", "full_outer")
-            seeded = F.when(
-                F.col("state").isNotNull(),
-                F.aggregate(F.col("seq"), F.col("state"), step),
-            ).otherwise(
-                F.aggregate(
-                    F.expr("slice(seq, 2, size(seq) - 1)"),
-                    F.element_at(F.col("seq"), 1)["value"],
-                    step,
+        seeded = F.when(
+            F.col("state").isNotNull(),
+            F.aggregate(F.col("seq"), F.col("state"), step),
+        ).otherwise(first)
+        return arr.join(carry, "user_id", "full_outer").select(
+            "user_id",
+            (
+                F.coalesce(F.col("n_ev"), F.lit(0))
+                + F.when(F.col("seq").isNull(), F.lit(0)).otherwise(
+                    F.size("seq").cast("long")
                 )
-            )
-            folded = j.select(
-                "user_id",
-                (
-                    F.coalesce(F.col("n_ev"), F.lit(0))
-                    + F.when(F.col("seq").isNull(), F.lit(0)).otherwise(
-                        F.size("seq").cast("long")
-                    )
-                ).alias("n_ev"),
-                F.when(F.col("seq").isNull(), F.col("state"))
-                .otherwise(seeded)
-                .alias("state"),
-            )
-        # eager lineage CUT, not a persist: keeps the final plan one
-        # segment deep however many weeks the calendar spans.  Once the
-        # new carry is cut nothing reads the previous one, so its
-        # blocks are freed at once; the final carry's go with the
-        # row's release_barriers (the graph fixpoints' pattern).
-        prev, carry = carry, cut(folded)
-        if prev is not None:
-            free_cut(prev)
-    if carry is None:  # no qualifying events at all
-        return spark.createDataFrame(
-            [], "user_id bigint, n_events int, ewma_value double"
+            ).alias("n_ev"),
+            F.when(F.col("seq").isNull(), F.col("state"))
+            .otherwise(seeded)
+            .alias("state"),
         )
+
+    carry, _rounds = fixpoint(
+        observed_cut(fold(None, chunks[0][0]), *probe),
+        lambda carry, _seen, rnd: (fold(carry, chunks[rnd][0]), probe),
+        len(chunks) - 1,
+        f"user_value_ewma_chunked: the carry did not fold all {n_total} "
+        f"events in {len(chunks)} week chunks",
+    )
     return carry.select(
         "user_id",
         F.col("n_ev").cast("int").alias("n_events"),

@@ -153,6 +153,8 @@ _REVERIFY: frozenset[str] = frozenset(
         # with the oracle generated by plans/statistics.py::_ols_oracle
         "event_value_ols_trend", "event_value_ols_3feat",
         "event_value_ols_5feat", "event_value_ols_9feat",
+        # the chunked EWMA carry, now folded on operators/caching.py::fixpoint
+        "user_value_ewma_chunked",
     }
 )
 

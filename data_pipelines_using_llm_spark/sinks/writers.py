@@ -282,12 +282,14 @@ def idempotent_upsert(
         scoped = current.filter(pred)  # partition-pruned scan
         kept = scoped.join(keys, on=key, how="left_anti")
         merged = kept.unionByName(new_data.select(*scoped.columns))
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            write_table(merged, path, mode="overwrite", partition_by=partition_by)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # dynamic overwrite replaces only the partitions ``merged`` holds;
+        # the per-write option leaves the session's conf untouched
+        (
+            merged.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*partition_by)
+            .parquet(path)
+        )
         return
 
     kept = current.join(keys, on=key, how="left_anti")

@@ -98,6 +98,32 @@ def test_components_convergence_guard(spark):
     assert labels == {1}
 
 
+def test_components_read_exit_test_off_each_cut(spark):
+    """Connected components over the sf0.001 MinHash pair graph reads
+    its initial and per-round ``sum(label)`` from an ``observe`` on the
+    label cuts: 13 jobs, where the parent's standalone sum per round
+    took 19, and the same 45 labelled documents."""
+    from data_pipelines_using_llm_spark import telemetry
+    from data_pipelines_using_llm_spark.operators import caching
+    from data_pipelines_using_llm_spark.plans import dedup_queries as DQ
+
+    pairs = caching.cut(
+        DD.minhash_lsh_pairs(
+            DQ._docs(spark, "/root/testdata/sf0.001"),
+            "doc_id",
+            "text",
+            n=DQ.NGRAM_N,
+            threshold=DQ.JACCARD_THRESHOLD,
+        )
+    )
+    try:
+        comp, m = telemetry.measure(spark, lambda: DD.connected_components(pairs))
+        assert comp.count() == 45
+    finally:
+        caching.release_barriers()
+    assert m["jobs"] <= 14, m
+
+
 def test_fuzzy_decontamination_catches_edited_eval_copy(spark):
     """A lightly edited copy of an eval document (doc_id % 20 == 0) must
     be flagged by the MinHash path even though exact shingle membership

@@ -51,6 +51,21 @@ def test_pagerank_dangling_vertex_raises_by_default(spark):
         pagerank(edges, iters=1)
 
 
+def test_pagerank_empty_graph_ranks_nothing(spark):
+    """An empty edge list has no vertex: both dangling modes return no
+    ranks, and the converged mode stops after one round (its delta
+    over no rows is 0), instead of failing on ``1 / |V|``."""
+    from data_pipelines_using_llm_spark.operators.graph import (
+        pagerank_converged,
+    )
+
+    edges = spark.createDataFrame([], "src bigint, dst bigint")
+    for mode in ("error", "redistribute"):
+        assert pagerank(edges, dangling=mode).collect() == []
+        rank, rounds = pagerank_converged(edges, dangling=mode)
+        assert rank.collect() == [] and rounds == 1
+
+
 def test_pagerank_dangling_redistribute_conserves_mass(spark):
     """dangling='redistribute' hands the sink's mass back uniformly:
     ranks must again sum to ~1 on a chain with a sink, every iteration
@@ -620,6 +635,53 @@ def test_fixpoint_loops_free_superseded_rounds(spark):
         assert len(caching._CUTS) == 1
         caching.release_barriers()
         assert _held_rdds(spark) - before == set()
+
+
+@pytest.mark.parametrize(
+    "loop, rounds, max_jobs",
+    [
+        # parent counts: 19, 34 and 70 jobs; each round's exit test and
+        # the setup's validation were jobs of their own
+        ("k_core_trade", 1, 13),
+        ("k_core_chain", 4, 22),
+        ("pagerank_ring", 6, 45),
+    ],
+)
+def test_fixpoint_loops_read_exit_tests_off_their_cuts(
+    spark, loop, rounds, max_jobs
+):
+    """Each convergence loop reads its exit test (and its setup checks)
+    from an ``observe`` on a cut it makes anyway: at sf0.001 the whole
+    call starts no more than ``max_jobs`` Spark jobs, and it still stops
+    after the same number of rounds."""
+    from data_pipelines_using_llm_spark import telemetry
+    from data_pipelines_using_llm_spark.operators import caching
+    from data_pipelines_using_llm_spark.operators.graph import (
+        k_core_with_rounds,
+        pagerank_converged,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    calls = {
+        "k_core_trade": lambda: k_core_with_rounds(
+            GQ._trade_graph_edges(spark, sf), GQ.KCORE_K, max_rounds=30
+        ),
+        "k_core_chain": lambda: k_core_with_rounds(
+            GQ._chain_graph_edges(spark, sf), GQ.CHAIN_K, max_rounds=10
+        ),
+        "pagerank_ring": lambda: pagerank_converged(
+            GQ._ring_graph_edges(spark, sf),
+            tol=GQ.RING_PR_TOL,
+            max_rounds=40,
+            probe_every=GQ.RING_PR_PROBE_EVERY,
+        ),
+    }
+    try:
+        (_out, got), m = telemetry.measure(spark, calls[loop])
+    finally:
+        caching.release_barriers()
+    assert got == rounds
+    assert m["jobs"] <= max_jobs, m
 
 
 @pytest.mark.parametrize(

@@ -185,6 +185,43 @@ def test_partition_scoped_upsert_leaves_other_partitions_untouched(
     assert spark.read.parquet(path).count() == 12
 
 
+def test_partitioned_upsert_leaves_session_conf_alone(
+    spark, feed, tmp_path, monkeypatch
+):
+    """The partition-scoped upsert asks for dynamic overwrite on its own
+    write: the other partition survives, and the session's
+    ``partitionOverwriteMode`` is never set, so a concurrent write on
+    the same session cannot see it flip."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    path = str(tmp_path / "dyn")
+    write_table(feed, path, partition_by=["ingestion_date"])
+    day2 = feed.withColumn("ingestion_date", F.lit(dt.date(2025, 1, 2)))
+    write_table(day2, path, mode="append", partition_by=["ingestion_date"])
+    before = spark.conf.get(key)
+
+    sets = []
+    real_set = RuntimeConfig.set
+    monkeypatch.setattr(
+        RuntimeConfig,
+        "set",
+        lambda self, k, v: (sets.append(k), real_set(self, k, v))[1],
+    )
+    batch = feed.filter("hour(event_time) < 2").withColumn("pm10", F.lit(-1.0))
+    idempotent_upsert(
+        spark, batch, path, key=["event_time"], partition_by=["ingestion_date"]
+    )
+
+    assert key not in sets
+    assert spark.conf.get(key) == before
+    back = spark.read.parquet(path)
+    assert back.filter("ingestion_date = DATE'2025-01-02'").count() == 6
+    day1 = back.filter("ingestion_date = DATE'2025-01-01'")
+    assert day1.count() == 6
+    assert day1.filter("pm10 = -1.0").count() == 2
+
+
 def test_compact_table(spark, feed, tmp_path):
     path = str(tmp_path / "many_files")
     write_table(feed.repartition(6), path)

@@ -805,3 +805,42 @@ def test_full_maintenance_loop_drift_retrain_recover_live_swap(
     assert reference(v_drifted + 1, False, late) != reference(
         v_drifted + 1, True, late
     )
+
+
+def test_stream_join_rows_restore_shuffle_partitions(spark, monkeypatch):
+    """``stream_click_purchase_join`` and ``stream_attributed_hourly``
+    pin ``spark.sql.shuffle.partitions`` to 8 for the first start of
+    their stream, which fixes the join's state-store partitioning, and
+    restore the session value afterwards: after a run, and after a
+    start that fails.  The session is set to 5 first, because the test
+    session already runs at 8."""
+    import pytest
+
+    from data_pipelines_using_llm_spark.streaming import stream_queries as SQ
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    seen = []
+    real_run = SQ.run_to_table
+
+    def spy(df, spark_, name, mode):
+        seen.append(spark_.conf.get(key))
+        return real_run(df, spark_, name, mode)
+
+    def failing(df, spark_, name, mode):
+        seen.append(spark_.conf.get(key))
+        raise RuntimeError("stream start failed")
+
+    spark.conf.set(key, "5")
+    try:
+        for row in (SQ.stream_click_purchase_join, SQ.stream_attributed_hourly):
+            monkeypatch.setattr(SQ, "run_to_table", spy)
+            assert row(spark, "/root/testdata/sf0.001").count() > 0
+            assert spark.conf.get(key) == "5"
+            monkeypatch.setattr(SQ, "run_to_table", failing)
+            with pytest.raises(RuntimeError, match="stream start failed"):
+                row(spark, "/root/testdata/sf0.001")
+            assert spark.conf.get(key) == "5"
+        assert seen == ["8"] * 4
+    finally:
+        spark.conf.set(key, prev)
